@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Results are
@@ -53,7 +54,9 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+        // Only NonFatal: an OOM or other VM error ends the run with a
+        // non-zero exit instead of reading as one more -1.0 query.
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
       val sec = (System.nanoTime() - t0) / 1e9

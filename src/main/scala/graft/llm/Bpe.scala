@@ -1,30 +1,28 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Byte-Pair-Encoding merge learning — the tokenizer-training half of
-  * an LLM data pipeline (Sennrich et al. 2016 shape), restructured for
-  * Spark's execution model.
+/** Byte-Pair-Encoding merge learning and encoding — the tokenizer half
+  * of an LLM data pipeline (Sennrich et al. 2016 shape), restructured
+  * for Spark's execution model.
   *
   * The naive formulation rescans the corpus once per merge — k ≈ 32k
-  * merges × a 100 TB corpus is absurd. The standard distributed trick
-  * makes the corpus cost ONE pass: aggregate to the word histogram
-  * (vocab-sized — hundreds of thousands of rows no matter how many
-  * petabytes feed it, by Heaps' law), then run every merge iteration
-  * against the histogram with pair counts weighted by word frequency.
-  * Each iteration is a vocab-sized aggregate (the argmax pair — ONE
-  * row to the driver) plus a narrow per-row re-tokenization; nothing
-  * corpus-sized moves after the first shuffle.
+  * merges × a 100 TB corpus is absurd. The standard design makes the
+  * corpus cost ONE pass: aggregate to the word histogram (vocab-sized
+  * — hundreds of thousands of rows no matter how many petabytes feed
+  * it, by Heaps' law), then learn every merge against the histogram
+  * with pair counts weighted by word frequency. Learning
+  * ([[learnMerges]]) and encoding ([[encode]]) both run driver-side
+  * over the collected histogram: nothing corpus-sized moves after the
+  * first shuffle, and no merge costs a Spark job.
   *
-  * Merge application is a fold over the token array via the typed
-  * `aggregate` higher-order function — Column lambdas, so corpus
-  * tokens never interpolate into SQL text (no quoting surface), and
-  * the greedy left-to-right non-overlap semantics of classic BPE
-  * ("aaa" + merge(a,a) → [aa, a]) are implemented structurally:
-  * carry a pending token; emit the merged token and clear the
-  * pending slot when (pending, next) matches the merge pair.
+  * Two alphabets, chosen by `byteLevel`: characters (UTF-16 code
+  * units — engine-portable on printable-ASCII text only) or UTF-8
+  * byte atoms ([[byteAtoms]] — portable on any text). Merges apply
+  * with the greedy left-to-right non-overlap semantics of classic
+  * BPE ("aaa" + merge(a,a) → [aa, a], see [[mergeAdjacent]]).
   */
 object Bpe {
 
@@ -90,7 +88,8 @@ object Bpe {
     * projection, no driver involvement, for corpus-scale byte-pair
     * statistics. */
   private def byteSeqs(hist: DataFrame): DataFrame =
-    hist.select(lower(hex(encode(col("word"), "UTF-8"))).as("h"), col("cnt"))
+    hist.select(lower(hex(functions.encode(col("word"), "UTF-8"))).as("h"),
+        col("cnt"))
       .select(expr(
         "transform(sequence(1, length(h) div 2), i -> substring(h, 2*i-1, 2))")
         .as("toks"), col("cnt"))
@@ -105,61 +104,35 @@ object Bpe {
       .orderBy(desc("n"), asc("left"), asc("right"))
       .limit(limit)
 
-  /** Apply ONE merge (l, r) → l+r to every token sequence: greedy
-    * left-to-right, structural fold (no SQL-string interpolation). */
-  private[llm] def applyMerge(toks: Column, l: String, r: String): Column = {
-    val merged = l + r
-    val init = struct(
-      expr("CAST(array() AS array<string>)").as("arr"),
-      lit(null).cast("string").as("pend"))
-    val folded = aggregate(toks, init,
-      (acc, t) =>
-        when(acc("pend").isNull, struct(acc("arr").as("arr"), t.as("pend")))
-          .when(acc("pend") === lit(l) && t === lit(r),
-            struct(concat(acc("arr"), array(lit(merged))).as("arr"),
-              lit(null).cast("string").as("pend")))
-          .otherwise(struct(concat(acc("arr"), array(acc("pend"))).as("arr"),
-            t.as("pend"))),
-      acc => when(acc("pend").isNull, acc("arr"))
-        .otherwise(concat(acc("arr"), array(acc("pend")))))
-    folded
-  }
-
-  /** Learn the top-k BPE merges over the corpus. Returns
-    * (rank, left, right, n) — rank 1 is the first (highest-count)
-    * merge; ties break lexicographically so the result is
-    * deterministic under any partitioning. Stops early when no
-    * adjacent pair remains (every word fully merged).
+  /** Learn the top-k BPE merges over a (word, cnt) histogram (usually
+    * [[wordHistogram]]). Returns (rank, left, right, n) — rank 1 is the
+    * first (highest-count) merge; ties break lexicographically so the
+    * result is deterministic under any partitioning. Stops early when
+    * no adjacent pair remains (every word fully merged). `byteLevel`
+    * picks the alphabet: UTF-8 hex-pair atoms ([[byteAtoms]]; left and
+    * right are then hex runs) or characters.
     *
-    * Iteration state (the tokenized vocab) is localCheckpointed each
-    * round: the table is vocab-sized by construction, and truncating
-    * lineage keeps iteration i's plan O(1) instead of O(i). */
-  def learnMerges(docs: DataFrame, textCol: String, k: Int): DataFrame = {
-    require(k >= 1 && k <= 4096, s"learnMerges: k=$k out of [1, 4096]")
-    val spark = docs.sparkSession
-    var seqs = charSeqs(wordHistogram(docs, textCol)).localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var done = false
-    while (rank <= k && !done) {
-      val top = pairCounts(seqs)
-        .orderBy(desc("n"), asc("left"), asc("right"))
-        .limit(1).collect()
-      top.headOption match {
-        case None => done = true
-        case Some(row) =>
-          val l = row.getString(0); val r = row.getString(1); val n = row.getLong(2)
-          merges += ((rank, l, r, n))
-          val next = seqs.select(applyMerge(col("toks"), l, r).as("toks"),
-            col("cnt")).localCheckpoint(true)
-          seqs.unpersist()
-          seqs = next
-          rank += 1
-      }
-    }
-    seqs.unpersist()
+    * Scale shape: the ONLY corpus-scale object is the histogram
+    * aggregate — one shuffle, however many petabytes feed it. `maxWords`
+    * caps what the driver collects to the most frequent N words
+    * (deterministic ties by word), the standard tokenizer-training
+    * design: HuggingFace tokenizers and SentencePiece both learn merges
+    * single-node over a pre-counted, frequency-floored histogram,
+    * because rare words contribute ~nothing to pair statistics.
+    * Learning then runs the incremental algorithm
+    * ([[incrementalMergesTok]]): O(sites · log P) per merge instead of a
+    * vocab rescan, so 32k merges over a 1M-word histogram is seconds of
+    * driver CPU. A caller that feeds both this and [[encode]] from one
+    * histogram can localCheckpoint it (vocab-sized, cheap at any scale)
+    * so the corpus is aggregated once. */
+  def learnMerges(hist: DataFrame, k: Int, byteLevel: Boolean,
+      maxWords: Int = 1 << 20): DataFrame = {
+    require(k >= 1 && k <= 65536, s"learnMerges: k=$k out of [1, 65536]")
+    val atoms = atomsOf(byteLevel)
+    val words = topWords(hist, maxWords).map { case (w, c) => (atoms(w), c) }.toSeq
+    val spark = hist.sparkSession
     spark.createDataFrame(
-      spark.sparkContext.parallelize(merges.toSeq.map {
+      spark.sparkContext.parallelize(incrementalMergesTok(words, k).map {
         case (rk, l, r, n) => Row(rk, l, r, n)
       }, 1),
       StructType(Seq(
@@ -169,67 +142,29 @@ object Bpe {
         StructField("n", LongType, nullable = false))))
   }
 
-  /** Encode a (word, cnt) histogram with an ordered merge list:
-    * chars, then each merge applied greedily in rank order — exactly
-    * the tokenizer-inference contract implied by [[learnMerges]]
-    * (BPE encodes by replaying merges in learned order). Returns
-    * (word, cnt, toks, n_toks). The scale shape is the point: encode
-    * each DISTINCT word once on the vocab-sized table, then join
-    * token counts back to the corpus — never re-tokenize the corpus
-    * row-by-row. Merge count is capped so the k chained fold
-    * expressions stay a bounded codegen tree. */
-  def encodeHistogram(hist: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    require(merges.length <= 64,
-      s"encodeHistogram: ${merges.length} chained merges would blow the expression tree; " +
-        "encode in batches (checkpoint between) for longer merge lists")
-    val toks0 = expr("filter(split(word, ''), x -> x != '')")
-    val encoded = merges.foldLeft(toks0: Column) {
-      case (c, (l, r)) => applyMerge(c, l, r)
-    }
-    hist.select(col("word"), col("cnt"), encoded.as("toks"))
-      .withColumn("n_toks", size(col("toks")))
-  }
-
-  /** Encode a (word, cnt) histogram at REALISTIC merge counts —
-    * [[encodeHistogram]]'s 64-merge cap is a codegen expression-tree
-    * limit, not an algorithmic one. The histogram collects to the
-    * driver (vocab-sized, the [[learnMergesFast]] argument) and each
-    * DISTINCT word encodes once by replaying the merges in rank
-    * order, with the scan skipping ranks whose pair is absent: after
-    * applying rank r, only ranks > r are ever considered (exact
-    * replay semantics — pairs a later merge re-creates at an
-    * already-passed rank stay unmerged, byte-for-byte the
-    * [[encodeHistogram]] contract on ARBITRARY merge lists, which
-    * LlmSpec property-checks; for lists actually learned by BPE this
-    * also equals the min-rank iteration tokenizers use, since a
-    * learned pair's member tokens always form at earlier ranks).
-    * Output (word, cnt, toks, n_toks), one row per collected word. */
-  def encodeHistogramFast(hist: DataFrame, merges: Seq[(String, String)],
-      maxWords: Int = 1 << 20): DataFrame =
-    encodeHistogramFastWith(hist, merges, maxWords,
-      w => w.map(_.toString).toVector)
-
-  /** [[encodeHistogramFast]] over the BYTE-LEVEL alphabet: each word
-    * starts as its UTF-8 hex-pair atoms ([[byteAtoms]]) — the encode
-    * half of [[learnMergesFastBytes]], OOV-free on any text. */
-  def encodeHistogramFastBytes(hist: DataFrame, merges: Seq[(String, String)],
-      maxWords: Int = 1 << 20): DataFrame =
-    encodeHistogramFastWith(hist, merges, maxWords, byteAtoms)
-
-  private def encodeHistogramFastWith(hist: DataFrame,
-      merges: Seq[(String, String)], maxWords: Int,
-      atoms: String => Vector[String]): DataFrame = {
-    val spark = hist.sparkSession
-    val words = hist.orderBy(desc("cnt"), asc("word")).limit(maxWords)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    // Build the pair→rank map ONCE per histogram — rebuilding the
-    // O(merges) groupBy inside the per-word loop would make the map
+  /** Encode a (word, cnt) histogram with an ordered merge list in the
+    * given alphabet: each DISTINCT word starts as its atoms and the
+    * merges apply greedily in list order — exactly the
+    * tokenizer-inference contract of [[learnMerges]] (BPE encodes by
+    * replaying merges in learned order). The scale shape is the point:
+    * encode each distinct word once on the vocab-sized table (collected
+    * to the driver, capped at `maxWords` like [[learnMerges]]), then
+    * join token counts back to the corpus — never re-tokenize the
+    * corpus row by row. Output (word, cnt, toks, n_toks), one row per
+    * collected word. */
+  def encode(hist: DataFrame, merges: Seq[(String, String)],
+      byteLevel: Boolean, maxWords: Int = 1 << 20): DataFrame = {
+    val atoms = atomsOf(byteLevel)
+    val ms = merges.toIndexedSeq
+    // Build the pair→ranks index ONCE per histogram — rebuilding the
+    // O(merges) groupBy inside the per-word loop would make the index
     // construction alone O(words × merges) at 1M-word / 65k-merge scale.
-    val rankOf = rankIndex(merges)
-    val rows = words.map { case (w, c) =>
-      val toks = encodeWordReplay(atoms(w), merges, rankOf)
+    val ranks = rankIndex(ms)
+    val rows = topWords(hist, maxWords).map { case (w, c) =>
+      val toks = encodeWordReplay(atoms(w), ms, ranks)
       Row(w, c, toks, toks.length)
     }
+    val spark = hist.sparkSession
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
       StructType(Seq(
@@ -239,23 +174,51 @@ object Bpe {
         StructField("n_toks", IntegerType, nullable = false))))
   }
 
-  /** Replay-in-rank-order encode of one token vector: at each step,
-    * the lowest-rank merge ABOVE the cursor whose pair is adjacent
-    * somewhere applies greedily left-to-right (the pending fold), and
-    * the cursor advances to it — a rank never applies twice (a greedy
-    * pass consumes every occurrence and cannot re-create its own
-    * pair) and passed ranks are never revisited. O(applications ·
-    * |toks|) with applications ≤ |toks| − 1. */
-  private[llm] def rankIndex(merges: Seq[(String, String)])
-      : Map[(String, String), Int] =
-    merges.zipWithIndex
-      .groupBy(_._1).map { case (p, xs) => (p, xs.map(_._2).min) }
+  private def atomsOf(byteLevel: Boolean): String => Vector[String] =
+    if (byteLevel) byteAtoms else w => w.map(_.toString).toVector
 
-  private[llm] def encodeWordReplay(init: Vector[String],
-      merges: Seq[(String, String)],
-      rankOfPre: Map[(String, String), Int] = null): Vector[String] = {
-    val rankOf =
-      if (rankOfPre != null) rankOfPre else rankIndex(merges)
+  /** The `maxWords` most frequent (word, cnt) rows, ties by word. */
+  private def topWords(hist: DataFrame, maxWords: Int): Array[(String, Long)] = {
+    require(maxWords >= 1, s"maxWords=$maxWords must be positive")
+    hist.orderBy(desc("cnt"), asc("word")).limit(maxWords)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+  }
+
+  /** Apply ONE merge (l, r) → l+r to a token vector: greedy
+    * left-to-right, carrying a pending token — emit the merged token
+    * and clear the pending slot when (pending, next) matches. */
+  private[llm] def mergeAdjacent(toks: Vector[String], l: String,
+      r: String): Vector[String] = {
+    val merged = l + r
+    val buf = Vector.newBuilder[String]
+    var pend: String = null
+    toks.foreach { t =>
+      if (pend == null) pend = t
+      else if (pend == l && t == r) { buf += merged; pend = null }
+      else { buf += pend; pend = t }
+    }
+    if (pend != null) buf += pend
+    buf.result()
+  }
+
+  /** Every rank (0-based list position) of each pair, ascending — an
+    * arbitrary merge list may name a pair more than once. */
+  private def rankIndex(merges: Seq[(String, String)])
+      : Map[(String, String), Array[Int]] =
+    merges.zipWithIndex.groupBy(_._1)
+      .map { case (p, xs) => (p, xs.map(_._2).sorted.toArray) }
+
+  /** Replay-in-list-order encode of one token vector: at each step the
+    * lowest rank ABOVE the cursor whose pair is adjacent somewhere
+    * applies ([[mergeAdjacent]]) and the cursor advances to it. Ranks
+    * skipped on the way name absent pairs, which list-order
+    * application would leave as no-ops, so the result equals applying
+    * every merge in list order; a greedy pass consumes every
+    * occurrence of its pair, so one rank never applies twice.
+    * O(applications · |toks|) with applications ≤ |toks| − 1. */
+  private def encodeWordReplay(init: Vector[String],
+      merges: IndexedSeq[(String, String)],
+      ranks: Map[(String, String), Array[Int]]): Vector[String] = {
     var toks = init
     var cursor = -1
     var done = false
@@ -263,46 +226,23 @@ object Bpe {
       var best = Int.MaxValue
       var i = 0
       while (i + 1 < toks.length) {
-        rankOf.get((toks(i), toks(i + 1))).foreach { r =>
-          if (r > cursor && r < best) best = r
+        ranks.get((toks(i), toks(i + 1))).foreach { rs =>
+          var j = 0
+          while (j < rs.length && rs(j) <= cursor) j += 1
+          if (j < rs.length && rs(j) < best) best = rs(j)
         }
         i += 1
       }
       if (best == Int.MaxValue) done = true
       else {
         val (l, r) = merges(best)
-        val merged = l + r
-        val buf = Vector.newBuilder[String]
-        var pend: String = null
-        toks.foreach { t =>
-          if (pend == null) pend = t
-          else if (pend == l && t == r) { buf += merged; pend = null }
-          else { buf += pend; pend = t }
-        }
-        if (pend != null) buf += pend
-        toks = buf.result()
+        toks = mergeAdjacent(toks, l, r)
         cursor = best
       }
     }
     toks
   }
 
-  /** DuckDB oracle for [[learnMerges]] with a FIXED k: the greedy
-    * iteration unrolls into k chained CTE rounds — `b{i}` is round i's
-    * argmax pair (same (-n, l, r) tie order as the engine) and `s{i}`
-    * re-tokenizes the vocab by applying that merge greedily
-    * left-to-right via list lambdas. The greedy non-overlap rule is
-    * positional: within each maximal run of consecutive matching pair
-    * positions, keep the 1st, 3rd, 5th… (odd distance from the run's
-    * start — exactly what the engine's pending-token fold selects).
-    * Unrolling sidesteps every recursive-CTE restriction (the round
-    * needs both an aggregate over the working vocab AND a second
-    * reference to it); k=8 keeps the statement ~60 lines. */
-  /** Shared CTE chain for the two BPE oracles: s0 is the char-level
-    * tokenized word histogram (word carried through every round), b_i
-    * is round i's argmax pair, s_i the vocab after applying it. When
-    * `throughK` the chain ends with the FULLY merged s_k (the encode
-    * oracle needs it); the learn oracle stops at b_k. */
   /** Default histogram SQL: printable-ASCII whitespace words of
     * `documents.text` (the [[wordHistogram]] twin). */
   private val docsHistSql: String =
@@ -311,6 +251,20 @@ object Bpe {
       |      FROM documents WHERE regexp_matches(text, '^[\x20-\x7E]*$'))
       |    WHERE length(word) > 0 GROUP BY word""".stripMargin
 
+  /** Shared CTE chain for the BPE oracles: the greedy iteration
+    * unrolls into k chained CTE rounds. s0 is the tokenized word
+    * histogram (word carried through every round), `b{i}` is round i's
+    * argmax pair (same (-n, l, r) tie order as the engine) and `s{i}`
+    * re-tokenizes the vocab by applying that merge greedily
+    * left-to-right via list lambdas. The greedy non-overlap rule is
+    * positional: within each maximal run of consecutive matching pair
+    * positions, keep the 1st, 3rd, 5th… (odd distance from the run's
+    * start — exactly what [[mergeAdjacent]]'s pending-token fold
+    * selects). Unrolling sidesteps every recursive-CTE restriction (the
+    * round needs both an aggregate over the working vocab AND a second
+    * reference to it). When `throughK` the chain ends with the FULLY
+    * merged s_k (the encode oracle needs it); the learn oracle stops at
+    * b_k. */
   private def bpeChainCtes(k: Int, throughK: Boolean,
       histSql: String = docsHistSql, byteLevel: Boolean = false): Seq[String] = {
     // Every s_i is referenced twice (by b_{i+1} and s_{i+1}); DuckDB
@@ -363,6 +317,8 @@ object Bpe {
     }
   }
 
+  /** DuckDB oracle for [[learnMerges]] with a FIXED k over the
+    * `documents` histogram; k=8 keeps the statement ~60 lines. */
   def mergesOracleSql(k: Int): String = {
     require(k >= 1 && k <= 32, s"mergesOracleSql: k=$k out of [1, 32]")
     mergesOracleSqlOver(k, docsHistSql)
@@ -414,99 +370,20 @@ object Bpe {
          |FROM s$k ORDER BY cnt DESC, word LIMIT $limit""".stripMargin
   }
 
-  /** Learn the top-k BPE merges at REALISTIC merge counts — the
-    * production path. Identical output contract to [[learnMerges]]
-    * (same merges, same early-stop; LlmSpec asserts exact equality
-    * against both the naive in-memory reference and the distributed
-    * path on random corpora), but the per-merge cost is driver CPU,
-    * not a Spark job.
-    *
-    * Scale shape: the ONLY corpus-scale object is the word-histogram
-    * aggregate — one shuffle, however many petabytes feed it. The
-    * histogram itself is vocab-sized (Heaps' law), and `maxWords`
-    * caps what the driver collects to the most frequent N words
-    * (deterministic ties by word), which is the standard tokenizer-
-    * training design: HuggingFace tokenizers and SentencePiece both
-    * learn merges single-node over a pre-counted, frequency-floored
-    * histogram, because rare words contribute ~nothing to pair
-    * statistics. Learning then runs the textbook incremental
-    * algorithm ([[incrementalMerges]]): pair counts live in a hash
-    * table with an ordered candidate set, updated by DELTAS at each
-    * merge's match sites — O(sites · log P) per merge instead of a
-    * vocab rescan, so 32k merges over a 1M-word histogram is seconds
-    * of driver CPU where [[learnMerges]] would schedule 32k
-    * sequential Spark jobs. */
-  def learnMergesFast(docs: DataFrame, textCol: String, k: Int,
-      maxWords: Int = 1 << 20): DataFrame =
-    learnMergesFastWith(wordHistogram(docs, textCol), k, maxWords,
-      w => w.map(_.toString).toVector)
-
-  /** [[learnMergesFast]] over a PRE-COMPUTED (word, cnt) histogram —
-    * the learn→encode composition otherwise aggregates the corpus
-    * twice (once inside training, once for the encode input); a
-    * caller that materializes [[wordHistogram]] once (vocab-sized —
-    * localCheckpoint is cheap at any corpus scale) shares the single
-    * pass between both halves. */
-  def learnMergesFastHist(hist: DataFrame, k: Int,
-      maxWords: Int = 1 << 20): DataFrame =
-    learnMergesFastWith(hist, k, maxWords, w => w.map(_.toString).toVector)
-
-  /** [[learnMergesFastBytes]] over a pre-computed histogram — the
-    * byte-level twin of [[learnMergesFastHist]]. */
-  def learnMergesFastBytesHist(hist: DataFrame, k: Int,
-      maxWords: Int = 1 << 20): DataFrame =
-    learnMergesFastWith(hist, k, maxWords, byteAtoms)
-
-  /** [[learnMergesFast]] over the BYTE-LEVEL alphabet: the histogram
-    * words tokenize to their UTF-8 hex-pair atoms ([[byteAtoms]])
-    * before learning, so merge statistics cover ANY text — Korean,
-    * emoji, mixed scripts — with zero OOV and engine-portable
-    * semantics (the hex rendering is identical under every string
-    * model). Same output contract: (rank, left, right, n) with
-    * left/right as hex-atom strings, ties broken lexicographically
-    * (hex strings are ASCII, so every engine agrees). */
-  def learnMergesFastBytes(docs: DataFrame, textCol: String, k: Int,
-      maxWords: Int = 1 << 20): DataFrame =
-    learnMergesFastWith(wordHistogram(docs, textCol), k, maxWords, byteAtoms)
-
-  private def learnMergesFastWith(hist: DataFrame, k: Int,
-      maxWords: Int, atoms: String => Vector[String]): DataFrame = {
-    require(k >= 1 && k <= 65536, s"learnMergesFast: k=$k out of [1, 65536]")
-    require(maxWords >= 1, s"learnMergesFast: maxWords=$maxWords")
-    val spark = hist.sparkSession
-    val words = hist
-      .orderBy(desc("cnt"), asc("word")).limit(maxWords)
-      .collect().map(r => (atoms(r.getString(0)), r.getLong(1))).toSeq
-    val merges = incrementalMergesTok(words, k)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(merges.map {
-        case (rk, l, r, n) => Row(rk, l, r, n)
-      }, 1),
-      StructType(Seq(
-        StructField("rank", IntegerType, nullable = false),
-        StructField("left", StringType, nullable = false),
-        StructField("right", StringType, nullable = false),
-        StructField("n", LongType, nullable = false))))
-  }
-
-  /** Incremental-delta BPE over an in-memory histogram: exact
-    * sequential greedy semantics (argmax by (-n, left, right), greedy
-    * left-to-right non-overlapping application — byte-for-byte the
-    * [[referenceMerges]] contract) at O(match-sites · log P) per
+  /** Incremental-delta BPE over an in-memory histogram of atom
+    * sequences: exact sequential greedy semantics (argmax by (-n, left,
+    * right), greedy left-to-right non-overlapping application — the
+    * textbook rescan-per-merge algorithm's result, which the test
+    * suite's in-memory reference pins) at O(match-sites · log P) per
     * merge. State: per-word token arrays, a pair→count table, a
     * pair→word-set occurrence index, and an ordered candidate set
     * keyed (-n, l, r); each merge re-tokenizes ONLY the words that
     * contain the pair and applies the count deltas of that word's
     * before/after pair multisets. */
-  private[llm] def incrementalMerges(words: Seq[(String, Long)],
-      k: Int): Seq[(Int, String, String, Long)] =
-    incrementalMergesTok(
-      words.map { case (w, c) => (w.map(_.toString).toVector, c) }, k)
-
   private[llm] def incrementalMergesTok(words: Seq[(Vector[String], Long)],
       k: Int): Seq[(Int, String, String, Long)] = {
     import scala.collection.mutable
-    // The learner is single-node by design (see [[learnMergesFast]]),
+    // The learner is single-node by design (see [[learnMerges]]),
     // so its constant factor IS the gate's wall clock at realistic k.
     // r21 shape (identical greedy semantics, pinned by LlmSpec's
     // property check against the naive reference): tokens intern to
@@ -631,34 +508,24 @@ object Bpe {
 
   // ---- tokenizer persistence (the serving boundary) ------------------
 
-  /** Materialize a learned tokenizer under `dir`: the ranked merge
-    * table plus a meta row recording the ALPHABET MODE (byte-level or
-    * char-level) and k — a tokenizer is a frozen artifact by design
-    * (training corpora evolve; the tokenizer must not), so unlike the
-    * ANN index there is no staleness fingerprint: the merge table IS
-    * the contract. Train once over the histogram, write, then every
-    * later session/job encodes through [[encodeWithTokenizer]] with
-    * zero training passes — the 100 TB shape, where one tokenizer
-    * serves every pipeline run for months. The meta mode flag keeps a
-    * byte-level merge table from ever silently decoding through the
-    * char-level replay (hex atoms would never match raw chars — the
-    * output would be all-singleton tokens, a silent quality bug, not
-    * an error). */
-  def writeTokenizer(docs: DataFrame, textCol: String, k: Int, dir: String,
-      byteLevel: Boolean = true, maxWords: Int = 1 << 20): Unit =
-    writeTokenizerHist(wordHistogram(docs, textCol), k, dir, byteLevel,
-      maxWords)
-
-  /** [[writeTokenizer]] over a pre-computed (word, cnt) histogram —
-    * lets the train-then-encode composition share ONE corpus pass
-    * (the [[learnMergesFastHist]] rationale). */
-  def writeTokenizerHist(hist: DataFrame, k: Int, dir: String,
-      byteLevel: Boolean = true, maxWords: Int = 1 << 20): Unit = {
+  /** Train a tokenizer over a (word, cnt) histogram ([[learnMerges]])
+    * and materialize it under `dir`: the ranked merge table plus a meta
+    * row recording the ALPHABET MODE (byte-level or char-level) and k —
+    * a tokenizer is a frozen artifact by design (training corpora
+    * evolve; the tokenizer must not), so unlike the ANN index there is
+    * no staleness fingerprint: the merge table IS the contract. Train
+    * once, write, then every later session/job encodes through
+    * [[encodeWithTokenizer]] with zero training passes — the 100 TB
+    * shape, where one tokenizer serves every pipeline run for months.
+    * The meta mode flag keeps a byte-level merge table from ever
+    * silently decoding through the char-level replay (hex atoms would
+    * never match raw chars — the output would be all-singleton tokens,
+    * a silent quality bug, not an error). */
+  def writeTokenizer(hist: DataFrame, k: Int, dir: String,
+      byteLevel: Boolean, maxWords: Int = 1 << 20): Unit = {
     val spark = hist.sparkSession
-    val merges =
-      if (byteLevel) learnMergesFastBytesHist(hist, k, maxWords)
-      else learnMergesFastHist(hist, k, maxWords)
-    merges.coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
+    learnMerges(hist, k, byteLevel, maxWords)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
     spark.createDataFrame(
         java.util.Arrays.asList(Row(byteLevel, k)),
         StructType(Seq(
@@ -677,52 +544,12 @@ object Bpe {
   }
 
   /** Encode a (word, cnt) histogram through a PERSISTED tokenizer —
-    * the merge table loads (vocab-sized) and the replay encode runs
-    * in the mode the artifact was trained in. Output contract ≡ the
-    * in-memory encode over the same merges. */
+    * the merge table loads (vocab-sized) and [[encode]] runs in the
+    * mode the artifact was trained in. Output contract ≡ the in-memory
+    * encode over the same merges. */
   def encodeWithTokenizer(hist: DataFrame, dir: String,
       maxWords: Int = 1 << 20): DataFrame = {
     val (merges, byteLevel) = loadTokenizer(hist.sparkSession, dir)
-    if (byteLevel) encodeHistogramFastBytes(hist, merges, maxWords)
-    else encodeHistogramFast(hist, merges, maxWords)
-  }
-
-  /** Single-machine reference implementation (test oracle): the
-    * textbook in-memory BPE over a word histogram. */
-  private[llm] def referenceMerges(words: Seq[(String, Long)], k: Int): Seq[(Int, String, String, Long)] =
-    referenceMergesTok(words.map { case (w, c) => (w.map(_.toString).toVector, c) }, k)
-
-  private[llm] def referenceMergesTok(words: Seq[(Vector[String], Long)], k: Int): Seq[(Int, String, String, Long)] = {
-    var seqs: Seq[(Vector[String], Long)] = words
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var cont = true
-    while (rank <= k && cont) {
-      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-      seqs.foreach { case (ts, c) =>
-        ts.sliding(2).foreach {
-          case Seq(a, b) => counts((a, b)) = counts.getOrElse((a, b), 0L) + c
-          case _ =>
-        }
-      }
-      if (counts.isEmpty) cont = false
-      else {
-        val ((l, r), n) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
-        out += ((rank, l, r, n))
-        seqs = seqs.map { case (ts, c) =>
-          val buf = Vector.newBuilder[String]
-          var pend: String = null
-          ts.foreach { t =>
-            if (pend == null) pend = t
-            else if (pend == l && t == r) { buf += (l + r); pend = null }
-            else { buf += pend; pend = t }
-          }
-          if (pend != null) buf += pend
-          (buf.result(), c)
-        }
-        rank += 1
-      }
-    }
-    out.toSeq
+    encode(hist, merges, byteLevel, maxWords)
   }
 }

@@ -68,7 +68,7 @@ object Curation {
     * run is one "word" but many BPE tokens), and sequence budget is
     * THE unit a pretraining pipeline packs by. Compose with the
     * persisted tokenizer: per-word `n_toks` from
-    * [[Bpe.encodeHistogramFastBytes]] broadcast-joined to the
+    * [[Bpe.encode]] (byte-level) broadcast-joined to the
     * corpus's words and summed per doc (the `llm_pipeline_tokens`
     * join shape), then this window over that column. Same scale
     * shape as [[packSequences]]: the running sum is per-shard,

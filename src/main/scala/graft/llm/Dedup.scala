@@ -168,10 +168,10 @@ object Dedup {
         // driver (≤ maxBucket rows — bounded at any corpus size; the
         // ivfCentroids driver-array precedent). A plan-side cumulative
         // window was measured 21–23 s vs ~8 s unbudgeted at sf0.1
-        // (graft.tmp.CjkDiag): it makes `sizes` a SECOND consumer of
-        // the caller's yet-unmaterialized shingle persist and the
-        // window barrier splits the single action into two waves of
-        // corpus scans. The driver histogram instead runs one bounded
+        // (OPTIMIZATION_r21.md, verdict item 2): it makes `sizes` a
+        // SECOND consumer of the caller's yet-unmaterialized shingle
+        // persist and the window barrier splits the single action into
+        // two waves of corpus scans. The driver histogram instead runs one bounded
         // aggregate action (which also materializes the shingle cache
         // for the main action) and the final plan keeps EXACTLY the
         // unbudgeted aggregate→filter shape. Cumulative semantics are

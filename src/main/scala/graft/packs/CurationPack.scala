@@ -64,11 +64,10 @@ object CurationPack extends QueryPack {
     "curation_pack_tokens" -> ((s, dir) => {
       val d = docs(s, dir)
       val hist = graft.llm.Bpe.wordHistogram(d.select(col("text")), "text")
-      val merges = graft.llm.Bpe.learnMergesFastBytes(
-          d.select(col("text")), "text", 8)
+      val merges = graft.llm.Bpe.learnMerges(hist, 8, byteLevel = true)
         .orderBy("rank").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
-      val tok = graft.llm.Bpe.encodeHistogramFastBytes(hist, merges)
+      val tok = graft.llm.Bpe.encode(hist, merges, byteLevel = true)
         .select(col("word"), col("n_toks"))
       val words = d.select(col("doc_id"),
           explode(split(col("text"), "\\s+")).as("word"))

@@ -16,8 +16,8 @@ import graft.llm.Dedup
   */
 object DedupPack extends QueryPack {
 
-  private val K = 8
-  private val BANDS = 4
+  private[graft] val K = 8
+  private[graft] val BANDS = 4
 
   /** Σ bucket² verify budget for the CJK arm (Dedup.lshCandidates
     * r21 scaladoc): the constant Korean phrases dominate enough band
@@ -29,7 +29,7 @@ object DedupPack extends QueryPack {
     * NEVER fires at the driver's scale factors and those results are
     * byte-identical to the unbudgeted algebra — the oracle twin
     * mirrors the s* selection arm for arm either way. */
-  private val CjkVerifyBudget = 2000000L
+  private[graft] val CjkVerifyBudget = 2000000L
 
   /** Spaceless Korean phrases + a one-syllable near-dup plant for the
     * CJK dedup arm — under [[Dedup.cjkSpaced]] each syllable is its
@@ -55,7 +55,7 @@ object DedupPack extends QueryPack {
     * Korean phrase; the shifted copy appends one Hangul syllable
     * (near-dup under codepoint tokenization) except every 50th
     * (verbatim). Mirror of [[corpusCjkSql]]. */
-  private def corpusCjk(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def corpusCjk(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.load(s, dir, "documents")
     val ko = when(col("doc_id") % 2 === 0, lit(cjkPhraseA)).otherwise(lit(cjkPhraseB))
     d.select(col("doc_id").as("id"), concat(col("text"), ko).as("text"))

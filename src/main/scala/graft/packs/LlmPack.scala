@@ -439,8 +439,8 @@ object LlmPack extends QueryPack {
     // The brief's dedup → filter → TOKENIZE chain, literally, in ONE
     // query (r18): strip → corpus line dedup → learn the BPE merges
     // from the cleaned corpus's own histogram (driver-side
-    // learnMergesFast — zero jobs per merge) → encode each DISTINCT
-    // word once (encodeHistogramFast) → join token counts back to the
+    // Bpe.learnMerges — zero jobs per merge) → encode each DISTINCT
+    // word once (Bpe.encode) → join token counts back to the
     // corpus by word → per-source delivery stats (docs, words,
     // tokens). The scale shape is the whole point of the design: the
     // corpus is scanned by strip/dedup and ONE histogram aggregate;
@@ -448,7 +448,7 @@ object LlmPack extends QueryPack {
     // vocab-sized broadcast join.
     // Byte-level tokenizer (r19): the corpus is NO LONGER fenced to
     // printable ASCII — merge learning and encoding run over UTF-8
-    // byte atoms (Bpe.learnMergesFastBytes), which tokenize any
+    // byte atoms (byteLevel = true), which tokenize any
     // script with zero OOV, so the chain now covers the non-ASCII
     // documents the old rlike fence silently dropped.
     "llm_pipeline_tokens" -> ((s, dir) => {
@@ -468,11 +468,10 @@ object LlmPack extends QueryPack {
         .localCheckpoint(true)
       val hist = graft.llm.Bpe.wordHistogram(
         deduped.select(col("clean_text").as("text")), "text")
-      val merges = graft.llm.Bpe.learnMergesFastBytes(
-          deduped.select(col("clean_text").as("text")), "text", 8)
+      val merges = graft.llm.Bpe.learnMerges(hist, 8, byteLevel = true)
         .orderBy("rank").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
-      val tok = graft.llm.Bpe.encodeHistogramFastBytes(hist, merges)
+      val tok = graft.llm.Bpe.encode(hist, merges, byteLevel = true)
         .select(col("word"), col("n_toks"))
       val words = deduped.select(col("doc_id"),
           explode(split(col("clean_text"), "\\s+")).as("word"))
@@ -623,19 +622,19 @@ object LlmPack extends QueryPack {
     // code-point splitting conventions can't diverge across engines.
     "text_bpe_top_pairs" -> ((s, dir) =>
       graft.llm.Bpe.topPairs(docs(s, dir), "text", 20, asciiOnly = true)),
-    // Full BPE merge learning (k=8): each iteration is one vocab-sized
-    // aggregate (argmax pair — a single row to the driver) plus a
-    // narrow fold re-tokenization; localCheckpoint keeps iteration
-    // plans O(1). Oracle: k is a fixed literal, so the greedy
+    // Full BPE merge learning (k=8): ONE histogram aggregate, then the
+    // driver learns every merge over the vocab-sized table
+    // (Bpe.learnMerges). Oracle: k is a fixed literal, so the greedy
     // iteration UNROLLS into k chained DuckDB CTEs (argmax + a
     // list-lambda merge application per round) — see
     // Bpe.mergesOracleSql; LlmSpec additionally property-checks the
-    // distributed path against an in-memory reference BPE.
+    // learner against an in-memory reference BPE.
     "text_bpe_merges" -> ((s, dir) =>
-      graft.llm.Bpe.learnMerges(
-        docs(s, dir).filter(col("text").rlike("^[\\x20-\\x7E]*$")), "text", 8)),
-    // BPE at REALISTIC merge depth (k=256) — the production path
-    // (Bpe.learnMergesFast): the corpus is touched by exactly ONE
+      graft.llm.Bpe.learnMerges(graft.llm.Bpe.wordHistogram(
+        docs(s, dir).filter(col("text").rlike("^[\\x20-\\x7E]*$")), "text"),
+        8, byteLevel = false)),
+    // BPE at REALISTIC merge depth (k=256) — the same learner
+    // (Bpe.learnMerges): the corpus is touched by exactly ONE
     // histogram aggregate, the driver learns every merge over the
     // vocab-sized table with incremental pair-count deltas (no Spark
     // job per merge — the r17 scale ceiling). The synthetic documents
@@ -643,17 +642,16 @@ object LlmPack extends QueryPack {
     // merges, so this gate learns over customer names (1500 distinct
     // digit-rich words — 256 full rounds with pair mass to spare).
     // Oracle: the same 256 greedy rounds unrolled into MATERIALIZED
-    // CTE pairs; LlmSpec property-checks learnMergesFast ≡ the naive
-    // reference ≡ the distributed learnMerges on random corpora.
+    // CTE pairs; LlmSpec property-checks learnMerges ≡ the naive
+    // reference on random corpora.
     "text_bpe_merges_256" -> ((s, dir) =>
-      graft.llm.Bpe.learnMergesFast(
+      graft.llm.Bpe.learnMerges(graft.llm.Bpe.wordHistogram(
         Tables.load(s, dir, "customer").select(col("c_name").as("text")),
-        "text", 256)),
-    // Tokenizer INFERENCE at the same depth (Bpe.encodeHistogramFast):
-    // encodeHistogram's 64-merge codegen cap lifts by encoding each
-    // DISTINCT word driver-side (vocab-sized, the learnMergesFast
-    // argument) with exact replay-in-rank-order semantics; a corpus
-    // then joins token counts by word, never re-tokenizing rows.
+        "text"), 256, byteLevel = false)),
+    // Tokenizer INFERENCE at the same depth (Bpe.encode): each
+    // DISTINCT word encodes driver-side (vocab-sized, the learnMerges
+    // argument) by replaying the merges in rank order; a corpus then
+    // joins token counts by word, never re-tokenizing rows.
     "text_bpe_encode_256" -> ((s, dir) => {
       val d = Tables.load(s, dir, "customer").select(col("c_name").as("text"))
       // ONE corpus pass: the vocab-sized histogram materializes once
@@ -661,11 +659,11 @@ object LlmPack extends QueryPack {
       // learn→encode composition previously aggregated the corpus
       // twice for the same table).
       val hist = graft.llm.Bpe.wordHistogram(d, "text").localCheckpoint(true)
-      val merges = graft.llm.Bpe.learnMergesFastHist(hist, 256)
+      val merges = graft.llm.Bpe.learnMerges(hist, 256, byteLevel = false)
         .orderBy("rank").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       graft.llm.Bpe
-        .encodeHistogramFast(hist, merges)
+        .encode(hist, merges, byteLevel = false)
         .select(col("word"), col("cnt"),
           col("n_toks").cast("long").as("n_toks"),
           expr("toks[0]").as("first_tok"))
@@ -689,8 +687,8 @@ object LlmPack extends QueryPack {
     // printable-ASCII fence existed to dodge — byte atoms make the
     // fence unnecessary.
     "text_bpe_bytes_256" -> ((s, dir) =>
-      graft.llm.Bpe.learnMergesFastBytes(
-        mixedKoreanCorpus(s, dir), "text", 256)),
+      graft.llm.Bpe.learnMerges(graft.llm.Bpe.wordHistogram(
+        mixedKoreanCorpus(s, dir), "text"), 256, byteLevel = true)),
     // Byte-level tokenizer inference at the same depth: each DISTINCT
     // word of the mixed corpus encodes once from its byte atoms with
     // exact replay-in-rank-order semantics; gate emits the 50 most
@@ -700,11 +698,11 @@ object LlmPack extends QueryPack {
       // ONE corpus pass shared by training and encode (the
       // text_bpe_encode_256 rationale).
       val hist = graft.llm.Bpe.wordHistogram(d, "text").localCheckpoint(true)
-      val merges = graft.llm.Bpe.learnMergesFastBytesHist(hist, 256)
+      val merges = graft.llm.Bpe.learnMerges(hist, 256, byteLevel = true)
         .orderBy("rank").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       graft.llm.Bpe
-        .encodeHistogramFastBytes(hist, merges)
+        .encode(hist, merges, byteLevel = true)
         .select(col("word"), col("cnt"),
           col("n_toks").cast("long").as("n_toks"),
           expr("toks[0]").as("first_tok"))
@@ -724,7 +722,7 @@ object LlmPack extends QueryPack {
       // materialized histogram the encode half consumes — the encode
       // itself still goes strictly through the LOADED artifact.
       val hist = graft.llm.Bpe.wordHistogram(d, "text").localCheckpoint(true)
-      graft.llm.Bpe.writeTokenizerHist(hist, 256, tok, byteLevel = true)
+      graft.llm.Bpe.writeTokenizer(hist, 256, tok, byteLevel = true)
       graft.llm.Bpe
         .encodeWithTokenizer(hist, tok)
         .select(col("word"), col("cnt"),
@@ -732,17 +730,20 @@ object LlmPack extends QueryPack {
           expr("toks[0]").as("first_tok"))
         .orderBy(desc("cnt"), asc("word")).limit(50)
     }),
-    // The tokenizer-INFERENCE half (Bpe.encodeHistogram): replay the 8
-    // learned merges in rank order over the word histogram — each
-    // DISTINCT word encodes once (vocab-sized work, never per corpus
-    // row); gate emits the 50 most frequent words' token counts.
+    // The tokenizer-INFERENCE half (Bpe.encode): replay the 8 learned
+    // merges in rank order over the word histogram — each DISTINCT
+    // word encodes once (vocab-sized work, never per corpus row); gate
+    // emits the 50 most frequent words' token counts.
     "text_bpe_encode" -> ((s, dir) => {
       val d = docs(s, dir).filter(col("text").rlike("^[\\x20-\\x7E]*$"))
-      val merges = graft.llm.Bpe.learnMerges(d, "text", 8)
+      // ONE corpus pass shared by training and encode (the
+      // text_bpe_encode_256 rationale).
+      val hist = graft.llm.Bpe.wordHistogram(d, "text").localCheckpoint(true)
+      val merges = graft.llm.Bpe.learnMerges(hist, 8, byteLevel = false)
         .orderBy("rank").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       graft.llm.Bpe
-        .encodeHistogram(graft.llm.Bpe.wordHistogram(d, "text"), merges)
+        .encode(hist, merges, byteLevel = false)
         .select(col("word"), col("cnt"),
           col("n_toks").cast("long").as("n_toks"),
           expr("toks[0]").as("first_tok"))

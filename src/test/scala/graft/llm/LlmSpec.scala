@@ -374,34 +374,36 @@ class LlmSpec extends SparkSpec {
   test("BPE: hand-traced merges on a tiny corpus; greedy overlap semantics") {
     import graft.llm.Bpe
     import spark.implicits._
+    def learn(df: org.apache.spark.sql.DataFrame, k: Int) =
+      Bpe.learnMerges(Bpe.wordHistogram(df, "text"), k, byteLevel = false)
     // corpus: "low low low lower" → hist {low:3, lower:1}
     // pairs: (l,o)=4, (o,w)=4, (w,e)=1, (e,r)=1 → tie (l,o) vs (o,w)
     // breaks lexicographically → merge1 = (l,o) n=4
     // then: [lo,w]×3, [lo,w,e,r]×1 → (lo,w)=4 → merge2 = (lo,w) n=4
     // then: [low]×3, [low,e,r] → (low,e)=1, (e,r)=1 → merge3 = (e,r) n=1
     val docs = Seq((1L, "low low low lower")).toDF("doc_id", "text")
-    val m = Bpe.learnMerges(docs, "text", 5).collect()
+    val m = learn(docs, 5).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(m.take(3).toSeq == Seq((1, "l", "o", 4L), (2, "lo", "w", 4L), (3, "e", "r", 1L)), m.toSeq)
     // greedy left-to-right non-overlap: "aaa" + merge(a,a) → [aa, a],
     // so the second iteration sees (aa, a), not (a, aa)
     val tri = Seq((1L, "aaa")).toDF("doc_id", "text")
-    val mt = Bpe.learnMerges(tri, "text", 2).collect()
+    val mt = learn(tri, 2).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(mt.toSeq == Seq((1, "a", "a", 2L), (2, "aa", "a", 1L)), mt.toSeq)
     // early stop: fully merged vocab yields no further rows
     val one = Seq((1L, "ab")).toDF("doc_id", "text")
-    assert(Bpe.learnMerges(one, "text", 10).count() == 1)
+    assert(learn(one, 10).count() == 1)
   }
 
   test("BPE encode: learned merges replay in rank order; compression is monotone non-increasing") {
     import graft.llm.Bpe
     import spark.implicits._
     val docs = Seq((1L, "low low low lower lowest low")).toDF("doc_id", "text")
-    val merges = Bpe.learnMerges(docs, "text", 4).collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
     val hist = Bpe.wordHistogram(docs, "text")
-    val enc = Bpe.encodeHistogram(hist, merges).collect()
+    val merges = Bpe.learnMerges(hist, 4, byteLevel = false).collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
+    val enc = Bpe.encode(hist, merges, byteLevel = false).collect()
       .map(r => r.getString(0) -> (r.getSeq[String](2), r.getInt(3))).toMap
     // every word re-concatenates to itself (encoding is lossless)
     enc.foreach { case (w, (toks, n)) =>
@@ -411,27 +413,9 @@ class LlmSpec extends SparkSpec {
     // "low" fully merges under its own corpus's first merges
     assert(enc("low")._2 == 1, enc("low"))
     // applying a PREFIX of the merges never yields fewer tokens
-    val encShort = Bpe.encodeHistogram(hist, merges.take(2)).collect()
+    val encShort = Bpe.encode(hist, merges.take(2), byteLevel = false).collect()
       .map(r => r.getString(0) -> r.getInt(3)).toMap
     enc.foreach { case (w, (_, n)) => assert(encShort(w) >= n, w) }
-  }
-
-  test("property: distributed BPE equals the in-memory reference on random corpora") {
-    import graft.llm.Bpe
-    import spark.implicits._
-    val rnd = new scala.util.Random(42)
-    (0 until 3).foreach { trial =>
-      val words = (0 until 30).map { _ =>
-        (0 until (1 + rnd.nextInt(6))).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString
-      }
-      val docs = words.grouped(6).zipWithIndex
-        .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq.toDF("doc_id", "text")
-      val got = Bpe.learnMerges(docs, "text", 6).collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      val hist = words.groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }.toSeq
-      val want = Bpe.referenceMerges(hist, 6)
-      assert(got == want, s"trial $trial: got=$got want=$want")
-    }
   }
 
   test("property: incremental-delta BPE (learnMergesFast path) equals the naive reference on random corpora") {
@@ -447,64 +431,96 @@ class LlmSpec extends SparkSpec {
       }
       val hist = words.groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }.toSeq
       val k = 1 + rnd.nextInt(40)
-      val got = Bpe.incrementalMerges(hist, k)
-      val want = Bpe.referenceMerges(hist, k)
+      val got = Bpe.incrementalMergesTok(BpeReference.chars(hist), k)
+      val want = BpeReference.merges(hist, k)
       assert(got == want, s"trial $trial k=$k: got=$got want=$want")
     }
     // weighted histogram (counts > 1) exercises the cnt multiplier
     val weighted = Seq(("abab", 7L), ("aab", 3L), ("ba", 11L), ("bbb", 2L))
-    assert(Bpe.incrementalMerges(weighted, 10) == Bpe.referenceMerges(weighted, 10))
+    assert(Bpe.incrementalMergesTok(BpeReference.chars(weighted), 10) ==
+      BpeReference.merges(weighted, 10))
   }
 
-  test("property: encodeHistogramFast equals the chained-fold encodeHistogram on arbitrary merge lists") {
+  test("property: encode equals list-order merge application on arbitrary merge lists") {
     import graft.llm.Bpe
     import spark.implicits._
+    def encoded(hist: Seq[(String, Long)], merges: Seq[(String, String)]) =
+      Bpe.encode(hist.toDF("word", "cnt"), merges, byteLevel = false).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2), r.getInt(3)))
+        .sortBy(_._1).toSeq
+    def inOrder(hist: Seq[(String, Long)], merges: Seq[(String, String)]) =
+      hist.map { case (w, c) =>
+        val toks = BpeReference.encodeInOrder(w.map(_.toString).toVector, merges)
+        (w, c, toks, toks.length)
+      }.sortBy(_._1)
     // arbitrary (not learned) lists are the hard case: later merges
-    // can re-create a pair at an already-passed rank, which exact
-    // replay must leave unmerged — the cursor must not look back
+    // can re-create a pair at an already-passed rank, which list-order
+    // application leaves unmerged — the cursor must not look back
     val rnd = new scala.util.Random(1818)
     (0 until 6).foreach { trial =>
       val words = (0 until 25).map { _ =>
         (0 until (1 + rnd.nextInt(7))).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
       }
-      val hist = words.groupBy(identity)
-        .map { case (w, ws) => (w, ws.size.toLong) }.toSeq.toDF("word", "cnt")
+      val hist = words.groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }.toSeq
       val alphabet = Seq("a", "b", "c", "ab", "ba", "bc", "aa", "abc")
       val merges = (0 until (1 + rnd.nextInt(10))).map { _ =>
         (alphabet(rnd.nextInt(alphabet.size)), alphabet(rnd.nextInt(alphabet.size)))
       }
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2), r.getInt(3)))
-        .sortBy(_._1).toSeq
-      val slow = rows(Bpe.encodeHistogram(hist, merges))
-      val fast = rows(Bpe.encodeHistogramFast(hist, merges))
-      assert(fast == slow, s"trial $trial merges=$merges:\nfast=$fast\nslow=$slow")
+      val got = encoded(hist, merges)
+      val want = inOrder(hist, merges)
+      assert(got == want, s"trial $trial merges=$merges:\ngot=$got\nwant=$want")
     }
     // the look-back trap, pinned explicitly: rank1 (ab,c) is absent
     // until rank2 (a,b) creates "ab" — replay leaves [ab, c] unmerged
-    val trap = Seq(("abc", 1L)).toDF("word", "cnt")
-    val trapped = Bpe.encodeHistogramFast(trap, Seq(("ab", "c"), ("a", "b")))
-      .head().getSeq[String](2)
-    assert(trapped == Seq("ab", "c"), trapped)
+    val trap = Seq(("abc", 1L))
+    assert(encoded(trap, Seq(("ab", "c"), ("a", "b"))).head._3 == Seq("ab", "c"))
+    // ...but a pair listed AGAIN after the merge that re-creates it
+    // applies at that later rank
+    val twice = Seq(("ab", "c"), ("a", "b"), ("ab", "c"))
+    assert(encoded(trap, twice) == inOrder(trap, twice))
+    assert(encoded(trap, twice).head._3 == Seq("abc"))
+  }
+
+  test("property: distributed BPE equals the in-memory reference on random corpora") {
+    import graft.llm.Bpe
+    import spark.implicits._
+    // random corpora through the whole DataFrame path: wordHistogram
+    // over documents, then learnMerges over that histogram
+    val rnd = new scala.util.Random(42)
+    (0 until 3).foreach { trial =>
+      val words = (0 until 30).map { _ =>
+        (0 until (1 + rnd.nextInt(6))).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString
+      }
+      val docs = words.grouped(6).zipWithIndex
+        .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq.toDF("doc_id", "text")
+      val got = Bpe.learnMerges(Bpe.wordHistogram(docs, "text"), 6, byteLevel = false).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+      val hist = words.groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }.toSeq
+      val want = BpeReference.merges(hist, 6)
+      assert(got == want, s"trial $trial: got=$got want=$want")
+    }
   }
 
   test("learnMergesFast equals distributed learnMerges end to end (histogram + early stop + maxWords cap)") {
     import graft.llm.Bpe
     import spark.implicits._
-    val docs = Seq((1L, "low low low lower lowest ab ba abab"),
-      (2L, "aaa aab low lower ab")).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    assert(rows(Bpe.learnMergesFast(docs, "text", 12)) ==
-      rows(Bpe.learnMerges(docs, "text", 12)))
+    def learn(df: org.apache.spark.sql.DataFrame, k: Int, maxWords: Int = 1 << 20) =
+      rows(Bpe.learnMerges(Bpe.wordHistogram(df, "text"), k, byteLevel = false, maxWords))
+    def histOf(texts: Seq[String]) = texts.flatMap(_.split("\\s+")).filter(_.nonEmpty)
+      .groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }.toSeq
+    val texts = Seq("low low low lower lowest ab ba abab", "aaa aab low lower ab")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    assert(learn(docs, 12) == BpeReference.merges(histOf(texts), 12))
     // early stop: a fully-mergeable vocab stops at the same rank
     val one = Seq((1L, "ab ab")).toDF("doc_id", "text")
-    assert(rows(Bpe.learnMergesFast(one, "text", 10)) ==
-      rows(Bpe.learnMerges(one, "text", 10)))
+    assert(learn(one, 10) == BpeReference.merges(Seq(("ab", 2L)), 10))
+    assert(learn(one, 10).size == 1)
     // maxWords keeps the most frequent words (deterministic ties):
     // capping at 1 learns only from the modal word
-    val capped = rows(Bpe.learnMergesFast(docs, "text", 3, maxWords = 1))
-    val lowOnly = Bpe.referenceMerges(Seq(("low", 4L)), 3)
+    val capped = learn(docs, 3, maxWords = 1)
+    val lowOnly = BpeReference.merges(Seq(("low", 4L)), 3)
     assert(capped == lowOnly, s"capped=$capped want=$lowOnly")
   }
 
@@ -528,26 +544,27 @@ class LlmSpec extends SparkSpec {
       (2L, "ab 한국어 café café")).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    def learn(df: org.apache.spark.sql.DataFrame, k: Int, byteLevel: Boolean) =
+      rows(Bpe.learnMerges(Bpe.wordHistogram(df, "text"), k, byteLevel))
     val words = "한국어 데이터 한국어 ab ab 데이터 한국어 ab 한국어 café café"
       .split(" ").toSeq
     val hist = words.groupBy(identity)
       .map { case (w, ws) => (Bpe.byteAtoms(w), ws.size.toLong) }.toSeq
-    assert(rows(Bpe.learnMergesFastBytes(docs, "text", 20)) ==
-      Bpe.referenceMergesTok(hist, 20))
+    val learned = learn(docs, 20, byteLevel = true)
+    assert(learned == BpeReference.mergesTok(hist, 20))
     // every learned token is an even-length lowercase hex run
-    rows(Bpe.learnMergesFastBytes(docs, "text", 20)).foreach {
-      case (_, l, r, _) =>
-        Seq(l, r).foreach { t =>
-          assert(t.length % 2 == 0 && t.matches("[0-9a-f]+"), t) }
+    learned.foreach { case (_, l, r, _) =>
+      Seq(l, r).foreach { t =>
+        assert(t.length % 2 == 0 && t.matches("[0-9a-f]+"), t) }
     }
-    // encode: the byte-atom replay over the same merges, per word
-    val merges = Bpe.referenceMergesTok(hist, 20).map { case (_, l, r, _) => (l, r) }
+    // encode: list-order application over the same merges, per word
+    val merges = learned.map { case (_, l, r, _) => (l, r) }
     val histDf = words.groupBy(identity)
       .map { case (w, ws) => (w, ws.size.toLong) }.toSeq.toDF("word", "cnt")
-    val enc = Bpe.encodeHistogramFastBytes(histDf, merges).collect()
+    val enc = Bpe.encode(histDf, merges, byteLevel = true).collect()
       .map(r => (r.getString(0), (r.getSeq[String](2), r.getInt(3)))).toMap
     words.distinct.foreach { w =>
-      val want = Bpe.encodeWordReplay(Bpe.byteAtoms(w), merges)
+      val want = BpeReference.encodeInOrder(Bpe.byteAtoms(w), merges)
       val (got, n) = enc(w)
       assert(got == want && n == want.length, s"$w: got=$got want=$want")
     }
@@ -556,9 +573,9 @@ class LlmSpec extends SparkSpec {
     // safety argument for llm_pipeline_tokens)
     val ascii = Seq((1L, "low low low lower lowest ab ba abab"))
       .toDF("doc_id", "text")
-    val charM = rows(Bpe.learnMergesFast(ascii, "text", 12))
+    val charM = learn(ascii, 12, byteLevel = false)
     def hexed(s: String) = Bpe.byteAtoms(s).mkString
-    val byteM = rows(Bpe.learnMergesFastBytes(ascii, "text", 12))
+    val byteM = learn(ascii, 12, byteLevel = true)
     assert(byteM == charM.map { case (rk, l, r, n) => (rk, hexed(l), hexed(r), n) },
       s"byte=$byteM char=$charM")
   }
@@ -574,21 +591,21 @@ class LlmSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     // byte-level artifact
     val dirB = java.nio.file.Files.createTempDirectory("bpe_tok_b").toString
-    Bpe.writeTokenizer(docs, "text", 20, dirB, byteLevel = true)
+    Bpe.writeTokenizer(hist, 20, dirB, byteLevel = true)
     val (mB, flagB) = Bpe.loadTokenizer(spark, dirB)
     assert(flagB)
-    val wantB = Bpe.learnMergesFastBytes(docs, "text", 20).orderBy("rank")
+    val wantB = Bpe.learnMerges(hist, 20, byteLevel = true).orderBy("rank")
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     assert(mB == wantB)
     assert(enc(Bpe.encodeWithTokenizer(hist, dirB)) ==
-      enc(Bpe.encodeHistogramFastBytes(hist, mB)))
+      enc(Bpe.encode(hist, mB, byteLevel = true)))
     // char-level artifact: the mode flag routes to the char replay
     val dirC = java.nio.file.Files.createTempDirectory("bpe_tok_c").toString
-    Bpe.writeTokenizer(docs, "text", 20, dirC, byteLevel = false)
+    Bpe.writeTokenizer(hist, 20, dirC, byteLevel = false)
     val (mC, flagC) = Bpe.loadTokenizer(spark, dirC)
     assert(!flagC)
     assert(enc(Bpe.encodeWithTokenizer(hist, dirC)) ==
-      enc(Bpe.encodeHistogramFast(hist, mC)))
+      enc(Bpe.encode(hist, mC, byteLevel = false)))
     // the two modes are genuinely different artifacts on mixed text
     assert(mB != mC)
   }

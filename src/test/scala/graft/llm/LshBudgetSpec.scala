@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Gates for the r21 Σ bucket² verify budget in Dedup.lshCandidates:
   * the s* size-class selection must match an in-memory reference of
-  * the same algebra, whole size classes must drop atomically, and a
-  * budget that never binds must be a byte-identical no-op. */
+  * the same algebra, whole size classes must drop atomically, a
+  * budget that never binds must be a byte-identical no-op, and the
+  * budgeted `dedup_minhash_cjk` gate must not bind at the test scale. */
 class LshBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -76,5 +77,20 @@ class LshBudgetSpec extends SparkSpec {
     assert(loose == plain)
     val none = Dedup.lshCandidates(bandsDf, 10000L, 0L).collect()
     assert(none.isEmpty)
+  }
+
+  test("dedup_minhash_cjk's budget never binds at sf0.001: gate == unbudgeted") {
+    import graft.packs.DedupPack
+    assert(DedupPack.CjkVerifyBudget < Long.MaxValue,
+      "the gate must run budgeted for this comparison to mean anything")
+    val gate = graft.SparkEntry.queries("dedup_minhash_cjk")(spark, sf)
+      .collect().map(_.toSeq).toSet
+    val plain = Dedup.withMinhashDupPairs(DedupPack.corpusCjk(spark, sf), "id", "text",
+        DedupPack.K, DedupPack.BANDS, 0.5, cjkAware = true) { pairs =>
+      pairs.collect().map(_.toSeq).toSet
+    }
+    assert(gate.nonEmpty)
+    assert(gate == plain,
+      s"only-gate=${(gate -- plain).take(3)} only-unbudgeted=${(plain -- gate).take(3)}")
   }
 }
