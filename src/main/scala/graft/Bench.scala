@@ -128,9 +128,13 @@ object Bench {
     println(line)
     // The driver captures stdout tails that can truncate the first
     // queries of the JSON line; persist the whole line to a file the
-    // driver (and the judge) can read machine-complete.
-    val out = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
-    java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+    // driver (and the judge) can read machine-complete. The default
+    // path holds a full run only: a subset run writes a file only when
+    // SPARK_GRAFT_BENCH_OUT names one.
+    sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(if (args.isEmpty) Some("BENCH_FULL.json") else None)
+      .foreach(out => java.nio.file.Files.write(java.nio.file.Paths.get(out),
+        (line + "\n").getBytes("UTF-8")))
     // Lossless per-round artifacts. The round number comes from
     // SPARK_GRAFT_ROUND when set (the unambiguous path); otherwise it
     // is inferred as newest CORRECTNESS_r{N}.json + 1 — an inference

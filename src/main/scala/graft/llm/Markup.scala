@@ -150,34 +150,15 @@ object Markup {
       i % 2 === 0 || (i === size(parts) - 1 && size(parts) % 2 === 0)), "")
   }
 
-  /** The pre-split-formulation fence-drop rule, kept as the spec's
-    * semantic reference: [[dropFencedCol]] followed by the chain's
-    * marker-line rule must equal one global pass of this pattern
-    * (MarkupSpec property-checks random fence layouts). Not used in
-    * the production chain. */
-  private[llm] val dropFencedRule: (String, String) =
-    ("(?s)(?m)^```[^\\n]*\\n.*?^```[^\\n]*$", "")
-
-  /** The pre-r21 Column formulation, kept as the equivalence
-    * reference MarkupSpec pins the fused kernel against: one
-    * `regexp_replace` node per rule. */
-  private[llm] def stripMarkdownChain(c: Column,
-      dropFencedCode: Boolean = false): Column = {
-    def fold(acc: Column, rs: Seq[(String, String)]): Column =
-      rs.foldLeft(acc) { case (a, (p, r)) => regexp_replace(a, p, r) }
-    val afterHead = fold(c, rules.take(preFenceRules))
-    val base = if (dropFencedCode) dropFencedCol(afterHead) else afterHead
-    fold(base, rules.drop(preFenceRules))
-  }
-
   /** Markdown/HTML-stripped text. `dropFencedCode` is the corpus
     * decision: false (default) keeps fence content and strips only the
     * marker lines; true drops the whole block.
     *
     * r21 shape (values unchanged — MarkupSpec pins the fused form to
-    * [[stripMarkdownChain]] rule-for-rule, and the DuckDB oracle still
-    * mirrors the ordered rule list): the ~37 `regexp_replace` nodes
-    * fold into ONE codegen'd [[graft.functions.RegexChain]] call that
+    * the per-rule `regexp_replace` chain in `MarkupReference`, and the
+    * DuckDB oracle still mirrors the ordered rule list): the ~37
+    * `regexp_replace` nodes fold into ONE codegen'd
+    * [[graft.functions.RegexChain]] call that
     * applies the SAME compiled `java.util.regex` patterns with
     * `Matcher.replaceAll` — the exact per-node RegExpReplace algorithm
     * — paying one UTF8String↔String conversion per document instead of

@@ -139,15 +139,7 @@ object Wap {
     }
     // 2) … then reclaim data nothing surviving references.
     val doomed = expirePaths.distinct.filterNot(keepPaths.contains)
-    doomed.foreach { p =>
-      val root = Paths.get(p)
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { Files.deleteIfExists(q); () })
-        finally walk.close()
-      }
-    }
+    doomed.foreach(p => graft.core.Scratch.delete(Paths.get(p)))
     (expire.size.toLong, doomed.size.toLong)
   }
 

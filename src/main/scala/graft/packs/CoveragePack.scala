@@ -382,10 +382,6 @@ object CoveragePack extends QueryPack {
     // nested duplicate of a.csv must collapse.
     "files_dedup_listing" -> ((s, dir) => {
       val d = scratch("listing")
-      // scratch dirs persist across runs — clear stale files so the
-      // listing is exactly the fixture set
-      Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-        .filter(p => p != d).forEach(p => Files.deleteIfExists(p))
       Files.writeString(d.resolve("a.csv"), CoveragePack.contentA)
       Files.writeString(d.resolve("b.txt"), CoveragePack.contentB)
       Files.writeString(d.resolve("skip.xlsx"), "not-accepted-in-this-mode")

@@ -1791,7 +1791,7 @@ object LlmPack extends QueryPack {
         javax.imageio.ImageIO.write(bi, fmt, out)
         out.toByteArray
       }
-      val out = java.nio.file.Files.createTempDirectory("graft_binmedia")
+      val out = graft.core.Scratch.dir("graft_binmedia")
       Seq((1, "png", 16, 9), (2, "jpg", 24, 11), (3, "gif", 7, 6))
         .foreach { case (i, f, w, h) =>
           java.nio.file.Files.write(out.resolve(s"m$i.$f"), img(w, h, f)): Unit

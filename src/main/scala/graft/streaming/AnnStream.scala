@@ -41,41 +41,20 @@ object AnnStream {
     * oracle recomputes. */
   def retrieveViaFileSink(spark: SparkSession, sfDir: String, nCentroids: Int,
       lloydIters: Int, k: Int, nprobe: Int): DataFrame = {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_annstream_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val e = ss.read.parquet(s"$sfDir/embeddings.parquet")
+    val g = new StreamGate(spark, "annstream")
+    val e = g.ss.read.parquet(s"$sfDir/embeddings.parquet")
     val corpus = e.select(col("vec_id"), col("embedding").as("ce"))
     val centroids = Ann.ivfCentroids(corpus, nCentroids, lloydIters)
     val assigned = Ann.assignBuckets(corpus, centroids)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def stage(df: DataFrame, name: String, lateMs: Long): Unit = {
-      val tmp = base.resolve(s"stage_$name")
-      df.coalesce(1).write.parquet(tmp.toString)
-      val l = Files.list(tmp)
-      val part = try l.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst.get finally l.close()
-      val dst = in.resolve(s"$name.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() + lateMs))
-    }
     val queries = e.filter(col("vec_id") < 6)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    stage(queries.filter(col("qid") < 3), "b0", 0L)
-    stage(queries.filter(col("qid") >= 3), "b1", 10000L)
-    val schema = ss.read.parquet(in.resolve("b0.parquet").toString).schema
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-    val out = base.resolve("out").toString
-    val q = retrieve(stream, assigned, centroids, out,
-      base.resolve("ckpt").toString, k, nprobe)
-    try q.processAllAvailable() finally {
-      q.stop(); assigned.unpersist(blocking = false): Unit
-    }
-    ss.read.parquet(s"$out/b*")
+    g.stage(g.halves(queries, col("qid") < 3))
+    val stream = g.ss.readStream.schema(g.ss.read.parquet(g.in).schema)
+      .option("maxFilesPerTrigger", "1").parquet(g.in)
+    try g.run(retrieve(stream, assigned, centroids, g.out, g.checkpoint, k, nprobe))
+    finally assigned.unpersist(blocking = false): Unit
+    g.ss.read.parquet(s"${g.keep(g.out)}/b*")
       .select("qid", "vec_id", "cos_x1e4", "rank")
       .orderBy("qid", "rank")
   }

@@ -74,41 +74,21 @@ object DocsStream {
     * driven through a real file-source stream with checkpointing and
     * versioned state. */
   def incrementalDedupViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_docdedup_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val d = ss.read.parquet(s"$sfDir/documents.parquet")
+    val g = new StreamGate(spark, "docdedup")
+    val d = g.ss.read.parquet(s"$sfDir/documents.parquet")
     val batchDocs = d.select((col("doc_id") + 1000000).as("id"),
       when(col("doc_id") % 50 === 0, col("text"))
         .otherwise(concat(col("text"), lit(" zzz9"))).as("text"))
     val half = d.agg(percentile_approx(col("doc_id"), lit(0.5), lit(100)))
       .head().getLong(0) + 1000000L
-    // two staged files → two micro-batches, second strictly newer
-    def stage(df: DataFrame, name: String, lateMs: Long): Unit = {
-      val tmp = base.resolve(s"stage_$name")
-      df.coalesce(1).write.parquet(tmp.toString)
-      val l = Files.list(tmp)
-      val part = try l.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst.get finally l.close()
-      val dst = in.resolve(s"$name.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() + lateMs))
-    }
-    stage(batchDocs.filter(col("id") < half), "b0", 0L)
-    stage(batchDocs.filter(col("id") >= half), "b1", 10000L)
-    val schema = ss.read.parquet(in.resolve("b0.parquet").toString).schema
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-    val state = base.resolve("state").toString
-    val pairs = base.resolve("pairs").toString
-    val q = incrementalDedup(stream,
+    g.stage(g.halves(batchDocs, col("id") < half))
+    val stream = g.ss.readStream.schema(g.ss.read.parquet(g.in).schema)
+      .option("maxFilesPerTrigger", "1").parquet(g.in)
+    val pairs = g.dir("pairs")
+    g.run(incrementalDedup(stream,
       Dedup.minhashState(d.select(col("doc_id").as("id"), col("text")),
         "id", "text"),
-      state, pairs, base.resolve("ckpt").toString)
-    try q.processAllAvailable() finally q.stop()
-    ss.read.parquet(s"$pairs/b*").orderBy("a", "b")
+      g.dir("state"), pairs, g.checkpoint))
+    g.ss.read.parquet(s"${g.keep(pairs)}/b*").orderBy("a", "b")
   }
 }

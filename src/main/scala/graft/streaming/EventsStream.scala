@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -29,55 +29,6 @@ object EventsStream {
   val gateMetrics =
     new scala.collection.concurrent.TrieMap[String, Map[String, Long]]()
 
-  /** Fold a finished query's `recentProgress` ring into the three
-    * deterministic totals: rows ingested across all batches, rows the
-    * watermark dropped, and the state rows REMAINING after the last
-    * stateful batch (what an executor must hold at steady state — the
-    * 100 TB figure). The file sink reports no usable numOutputRows,
-    * and output content is already hash-locked by the correctness
-    * gate, so no output metric is recorded. */
-  /** Deterministically settle a stream before stop(): after
-    * processAllAvailable() returns, a trailing NO-DATA micro-batch
-    * (watermark state eviction) may still be mid-flight — stopping
-    * then would make state_rows_final depend on a race. Poll until no
-    * trigger is active and the progress count holds steady across two
-    * consecutive reads (bounded; a stream that keeps scheduling
-    * batches exits via the deadline and the ring assert below
-    * documents the exposure). */
-  private def quiesce(q: StreamingQuery): Unit = {
-    val deadline = System.nanoTime() + 3000000000L
-    var last = -1
-    var stable = false
-    while (!stable && System.nanoTime() < deadline) {
-      val n = q.recentProgress.length
-      if (n == last && !q.status.isTriggerActive && !q.status.isDataAvailable)
-        stable = true
-      else { last = n; Thread.sleep(100) }
-    }
-  }
-
-  private def recordGateMetrics(name: String, q: StreamingQuery): Unit = {
-    val ps = q.recentProgress.toSeq
-    // recentProgress is a bounded ring (spark.sql.streaming
-    // .numRecentProgressUpdates, default 100): summing it is only
-    // sound while every batch of the run is still present. The gated
-    // fixtures run ~10-40 micro-batches; fail loudly well before the
-    // ring would silently truncate the sums.
-    require(ps.length <= 80,
-      s"$name: ${ps.length} progress entries approaching the 100-entry " +
-        "recentProgress ring — gate sums would silently truncate; raise " +
-        "numRecentProgressUpdates or batch the fixture coarser")
-    val stateRowsFinal = ps.reverse.collectFirst {
-      case p if p.stateOperators.nonEmpty =>
-        p.stateOperators.map(_.numRowsTotal).sum
-    }.getOrElse(0L)
-    gateMetrics(name) = Map(
-      "input_rows" -> ps.map(_.numInputRows).sum,
-      "dropped_by_watermark" ->
-        ps.flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum,
-      "state_rows_final" -> stateRowsFinal)
-  }
-
   /** Windowed per-type counts with a 1-hour watermark — the streaming
     * twin of the batch `events_hourly` query (same plan shape; state
     * pruned by the watermark). */
@@ -104,27 +55,20 @@ object EventsStream {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
 
   /** Correctness gate for [[slidingCounts]]: the fixture plus the two
-    * watermark sentinels (hourlyViaFileSink rationale — Append mode
+    * watermark sentinels ([[StreamGate.sentinels]] — Append mode
     * only emits a window once the watermark passes its END, and
     * sliding windows end up to 2 h past their last event). The oracle
     * is the batch identity "a 2h/1h window at start W counts events
     * with trunc(ts) ∈ {W, W+1h}": each event contributes to exactly
     * two window starts. */
   def slidingViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val (ss, in, base) = stageWithSentinels(spark, sfDir)
-    val out = base.resolve("out").toString
-    val q = slidingCounts(readEvents(ss, in.toString, maxFilesPerTrigger = Some(1)))
-      .select(col("window.start").as("win_start"), col("event_type"),
-        col("n"), col("total_value"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    cleanupStaged(base, in)
-    spark.read.parquet(out)
+    val g = new StreamGate(spark, "stream")
+    g.stage(g.eventsFile(sfDir) +: g.sentinels(sfDir))
+    g.run(g.appendSink(
+      slidingCounts(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1)))
+        .select(col("window.start").as("win_start"), col("event_type"),
+          col("n"), col("total_value"))))
+    spark.read.parquet(g.keep(g.out))
       .filter(col("event_type") =!= "sentinel")
       .select(date_format(col("win_start"), "yyyy-MM-dd HH:00:00").as("win_start"),
         col("event_type"), col("n"))
@@ -153,86 +97,21 @@ object EventsStream {
     * to the batch gap-split twin. Sentinel sessions belong to user −1
     * and are filtered after the batch read-back. */
   def sessionWindowViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val (ss, in, base) = stageWithSentinels(spark, sfDir)
-    val out = base.resolve("out").toString
-    val q = sessionWindowAgg(readEvents(ss, in.toString, maxFilesPerTrigger = Some(1)))
-      .select(col("user_id"),
-        col("session_window.start").as("sess_start"),
-        col("session_window.end").as("sess_end"),
-        col("n_events"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    cleanupStaged(base, in)
-    spark.read.parquet(out)
+    val g = new StreamGate(spark, "stream")
+    g.stage(g.eventsFile(sfDir) +: g.sentinels(sfDir))
+    g.run(g.appendSink(
+      sessionWindowAgg(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1)))
+        .select(col("user_id"),
+          col("session_window.start").as("sess_start"),
+          col("session_window.end").as("sess_end"),
+          col("n_events"))))
+    spark.read.parquet(g.keep(g.out))
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
         date_format(col("sess_start"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("sess_start"),
         date_format(col("sess_end"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("sess_end"),
         col("n_events"))
       .orderBy("user_id", "sess_start")
-  }
-
-  /** Shared gate scaffolding: a cloned 4-partition session, the events
-    * fixture staged into a scratch input dir, and two sentinel
-    * micro-batches 3 h and 6 h past the fixture's max event time (in
-    * the fixture's own physical layout — long nanos or NTZ µs). */
-  private def stageWithSentinels(spark: SparkSession, sfDir: String):
-      (SparkSession, java.nio.file.Path, java.nio.file.Path) = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_stream_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), in.resolve("events.parquet"))
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    val tsIsLong = probe.schema("ts").dataType ==
-      org.apache.spark.sql.types.LongType
-    val maxMicros =
-      if (tsIsLong) probe.agg(max(expr("ts DIV 1000"))).head.getLong(0)
-      else probe.agg(max(unix_micros(col("ts").cast("timestamp")))).head.getLong(0)
-    val hourUs = 3600L * 1000 * 1000
-    Seq(1, 2).foreach { i =>
-      val stage = base.resolve(s"stage$i")
-      val sentUs = maxMicros + 3L * i * hourUs
-      ss.range(1).select(
-        lit(-i.toLong).as("event_id"),
-        (if (tsIsLong) lit(sentUs * 1000L)
-         else timestamp_micros(lit(sentUs)).cast("timestamp_ntz")).as("ts"),
-        lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-        lit(0.0).as("value"), lit("").as("props"))
-        .coalesce(1).write.parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
-        finally listing.close()
-      val dst = in.resolve(s"sentinel$i.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i * 10000L))
-    }
-    (ss, in, base)
-  }
-
-  /** Delete a gate's staged input, checkpoint and sentinel scratch —
-    * everything except the sink dir the caller reads lazily. */
-  private def cleanupStaged(base: java.nio.file.Path, in: java.nio.file.Path): Unit =
-    deleteDirs(Seq(in, base.resolve("ckpt")) ++
-      Seq(1, 2).map(i => base.resolve(s"stage$i")))
-
-  /** Recursive best-effort delete shared by every gate's teardown. */
-  private def deleteDirs(paths: Seq[java.nio.file.Path]): Unit = {
-    import java.nio.file.Files
-    paths.filter(Files.exists(_)).foreach { d =>
-      val walk = Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
   }
 
   /** Streaming ingest dedup: at-least-once sources redeliver events;
@@ -379,16 +258,41 @@ object EventsStream {
     * live inside the plan. */
   private def readEvents(spark: SparkSession, inputDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsIsLong = spark.read.parquet(inputDir).schema("ts").dataType ==
-      org.apache.spark.sql.types.LongType
-    val tsDdl = if (tsIsLong) "ts LONG" else "ts TIMESTAMP_NTZ"
+    val ts = TsLayout.of(spark, inputDir)
     val reader = spark.readStream
-      .schema(s"event_id LONG, $tsDdl, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+      .schema(s"event_id LONG, ${ts.ddl}, user_id LONG, event_type STRING, value DOUBLE, props STRING")
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val raw = reader.parquet(inputDir)
-    if (tsIsLong) raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-    else raw.withColumn("ts", col("ts").cast("timestamp"))
+    reader.parquet(inputDir).withColumn("ts", ts.timestamp)
+  }
+
+  /** Physical layout of an events parquet's `ts`: long nanos (the
+    * driver fixture's TIMESTAMP(NANOS), read under nanosAsLong) or a
+    * standard µs timestamp. [[readEvents]] and every gate that stages
+    * derived event files decide it here, so a derived file always
+    * matches the fixture it streams beside. */
+  private[streaming] final case class TsLayout(isLong: Boolean) {
+    def ddl: String = if (isLong) "ts LONG" else "ts TIMESTAMP_NTZ"
+
+    /** The stored `ts` as a µs TIMESTAMP (sub-µs nanos truncate). */
+    def timestamp: Column =
+      if (isLong) timestamp_micros(expr("ts DIV 1000"))
+      else col("ts").cast("timestamp")
+
+    def micros: Column = unix_micros(timestamp)
+
+    /** µs since the epoch, in this layout. */
+    def fromMicros(us: Column): Column =
+      if (isLong) us * 1000L else timestamp_micros(us).cast("timestamp_ntz")
+  }
+
+  private[streaming] object TsLayout {
+    /** The layout of the parquet at `path`; sets nanosAsLong on `spark`
+      * so a TIMESTAMP(NANOS) column reads at all. */
+    def of(spark: SparkSession, path: String): TsLayout = {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      TsLayout(spark.read.parquet(path).schema("ts").dataType ==
+        org.apache.spark.sql.types.LongType)
+    }
   }
 
   /** The deployable entry: file source → watermarked hourly aggregate →
@@ -410,83 +314,17 @@ object EventsStream {
 
   /** Correctness-gate harness for [[runToFiles]]: run the deployable
     * file-sink pipeline over a staged copy of `<sfDir>/events.parquet`
-    * plus two watermark-advancing sentinel files, each its own
-    * micro-batch (maxFilesPerTrigger=1, mtime-ordered), then batch-read
-    * the sink shaped like the `events_hourly` batch twin.
-    *
-    * Append mode only emits a window once the watermark passes its end;
-    * a single bounded batch would therefore withhold the trailing
-    * windows forever. The sentinels sit 3 h and 6 h past the max real
-    * event time: the second sentinel's batch runs with the watermark
-    * already past every real window, so ALL real windows emit
-    * deterministically — no reliance on no-data batches — while the
-    * sentinels' own windows never close and never reach the sink. */
+    * plus two watermark-advancing sentinel files
+    * ([[StreamGate.sentinels]]), each its own micro-batch
+    * (maxFilesPerTrigger=1, mtime-ordered), then batch-read the sink
+    * shaped like the `events_hourly` batch twin. */
   def hourlyViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_stream_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), in.resolve("events.parquet"))
-    // Cloned session: shares the SparkContext (executors, cache) but
-    // owns its runtime conf, so the gate's stream-specific settings
-    // (state partitioning below, the nanosAsLong probe flag inside
-    // readEvents) never leak into — or race with — the caller's
-    // session. The harness borrows the session; it must not mutate it.
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    val tsIsLong = probe.schema("ts").dataType ==
-      org.apache.spark.sql.types.LongType
-    // Max event time in µs regardless of physical layout (long nanos in
-    // the driver fixture; µs timestamp in regenerated/real data) — the
-    // sentinels are written in the SAME layout so the one declared
-    // stream schema reads fixture and sentinel files alike.
-    val maxMicros =
-      if (tsIsLong) probe.agg(max(expr("ts DIV 1000"))).head.getLong(0)
-      else probe.agg(max(unix_micros(col("ts").cast("timestamp")))).head.getLong(0)
-    val hourUs = 3600L * 1000 * 1000
-    Seq(1, 2).foreach { i =>
-      val stage = base.resolve(s"stage$i")
-      val sentUs = maxMicros + 3L * i * hourUs
-      ss.range(1).select(
-        lit(-i.toLong).as("event_id"),
-        (if (tsIsLong) lit(sentUs * 1000L)
-         else timestamp_micros(lit(sentUs)).cast("timestamp_ntz")).as("ts"),
-        lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-        lit(0.0).as("value"), lit("").as("props"))
-        .coalesce(1).write.parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
-        finally listing.close()
-      val dst = in.resolve(s"sentinel$i.parquet")
-      Files.copy(part, dst)
-      // the file source orders batches by modification time
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i * 10000L))
-    }
-    val out = base.resolve("out").toString
-    // State-store partitioning: the windowed agg keys on (hour, type) —
-    // O(hundreds) of groups at ANY data scale (cardinality grows with
-    // the time span, not the row count) — so inheriting the session's
-    // shuffle partitioning (32 in the bench) makes every micro-batch
-    // commit 32 near-empty state-store deltas + 32 sink files of pure
-    // fixed overhead. Pin the stream to 4 state partitions; a real
-    // deployment sizes this to key cardinality × ingest rate, and the
-    // checkpoint locks it for the query's lifetime either way. Set on
-    // the cloned session only — the stream plans micro-batches
-    // asynchronously after start(), so a set/restore on the shared
-    // session would race every other query on it.
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = runToFiles(ss, in.toString, base.resolve("ckpt").toString, out,
-      maxFilesPerTrigger = Some(1))
-    try q.processAllAvailable() finally q.stop()
-    // the staged input (a full copy of the events fixture), sentinel
-    // scratch and checkpoint are dead once the query stops — only the
-    // sink parquet (read lazily below) survives. Repeated gate/bench
-    // invocations must not accumulate fixture copies in tmp.
-    cleanupStaged(base, in)
+    val g = new StreamGate(spark, "stream")
+    g.stage(g.eventsFile(sfDir) +: g.sentinels(sfDir))
+    g.run(runToFiles(g.ss, g.in, g.checkpoint, g.out, maxFilesPerTrigger = Some(1)))
     // a trailing no-data batch may close the first sentinel's window
     // too — the sentinels are harness scaffolding, not data
-    spark.read.parquet(out)
+    spark.read.parquet(g.keep(g.out))
       .filter(col("event_type") =!= "sentinel")
       .select(date_format(col("hour_start"), "yyyy-MM-dd HH:00:00").as("hour"),
         col("event_type"), col("n"))
@@ -505,30 +343,12 @@ object EventsStream {
     * sink holds exactly one copy of each event and the per-type
     * counts hash-match the plain batch aggregate. */
   def dedupViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_dedup_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), in.resolve("events.parquet"))
-    val dup = in.resolve("events_redelivered.parquet")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), dup)
-    Files.setLastModifiedTime(dup, // mtime orders the micro-batches
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 10000L))
-    val out = base.resolve("out").toString
-    // Same cloned-session + state-partition rationale as
-    // hourlyViaFileSink: conf stays on the clone, caller untouched.
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = dedupEvents(readEvents(ss, in.toString, maxFilesPerTrigger = Some(1)))
-      .select(col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    deleteDirs(Seq(in, base.resolve("ckpt")))
-    spark.read.parquet(out)
+    val g = new StreamGate(spark, "dedup")
+    g.stage(Seq(g.eventsFile(sfDir), g.eventsFile(sfDir)))
+    g.run(g.appendSink(
+      dedupEvents(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1)))
+        .select(col("event_id"), col("event_type"), col("value"))))
+    spark.read.parquet(g.keep(g.out))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"))
       .orderBy("event_type")
@@ -545,55 +365,12 @@ object EventsStream {
     * mode releases every real window. Oracle: the plain batch hourly
     * aggregate over the ORIGINAL (unduplicated) feed. */
   def dedupHourlyViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_deduphourly_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), in.resolve("events.parquet"))
-    val dup = in.resolve("events_redelivered.parquet")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), dup)
-    Files.setLastModifiedTime(dup,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 5000L))
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    val tsIsLong = probe.schema("ts").dataType ==
-      org.apache.spark.sql.types.LongType
-    val maxMicros =
-      if (tsIsLong) probe.agg(max(expr("ts DIV 1000"))).head.getLong(0)
-      else probe.agg(max(unix_micros(col("ts").cast("timestamp")))).head.getLong(0)
-    val hourUs = 3600L * 1000 * 1000
-    Seq(1, 2).foreach { i =>
-      val stage = base.resolve(s"stage$i")
-      val sentUs = maxMicros + 3L * i * hourUs
-      ss.range(1).select(
-        lit(-i.toLong).as("event_id"),
-        (if (tsIsLong) lit(sentUs * 1000L)
-         else timestamp_micros(lit(sentUs)).cast("timestamp_ntz")).as("ts"),
-        lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-        lit(0.0).as("value"), lit("").as("props"))
-        .coalesce(1).write.parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
-        finally listing.close()
-      val dst = in.resolve(s"sentinel$i.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 10000L + i * 10000L))
-    }
-    val out = base.resolve("out").toString
-    val q = hourlyAgg(dedupEvents(readEvents(ss, in.toString,
-        maxFilesPerTrigger = Some(1))))
-      .select(col("window.start").as("hour_start"), col("event_type"), col("n"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    cleanupStaged(base, in)
-    spark.read.parquet(out)
+    val g = new StreamGate(spark, "deduphourly")
+    g.stage(Seq(g.eventsFile(sfDir), g.eventsFile(sfDir)) ++ g.sentinels(sfDir))
+    g.run(g.appendSink(
+      hourlyAgg(dedupEvents(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1))))
+        .select(col("window.start").as("hour_start"), col("event_type"), col("n"))))
+    spark.read.parquet(g.keep(g.out))
       .filter(col("event_type") =!= "sentinel")
       .select(date_format(col("hour_start"), "yyyy-MM-dd HH:00:00").as("hour"),
         col("event_type"), col("n"))
@@ -718,31 +495,13 @@ object EventsStream {
     * absorbed by set semantics. Output (hour, nk, est_users) via the
     * estimator arms shared with kmv_segment_overlap. */
   def kmvStateViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_kmv_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), in.resolve("events.parquet"))
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    val stage = base.resolve("stage")
-    probe.select((col("event_id") + 1000000L).as("event_id"), col("ts"),
-      col("user_id"), col("event_type"), col("value"), col("props"))
-      .coalesce(1).write.parquet(stage.toString)
-    val listing = Files.list(stage)
-    val part = try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
-      finally listing.close()
-    val dst = in.resolve("events_redelivery.parquet")
-    Files.copy(part, dst)
-    Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 10000L))
-    val state = base.resolve("state").toString
-    val q = kmvStreamState(
-      readEvents(ss, in.toString, maxFilesPerTrigger = Some(1)),
-      state, base.resolve("ckpt").toString)
-    try q.processAllAvailable() finally q.stop()
-    finalStateAndCleanup(spark, state, Seq(in, stage, base.resolve("ckpt")))
+    val g = new StreamGate(spark, "kmv")
+    g.stage(Seq(g.eventsFile(sfDir), StreamGate.Frame(g.events(sfDir)
+      .withColumn("event_id", col("event_id") + 1000000L))))
+    val state = g.dir("state")
+    g.run(kmvStreamState(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1)),
+      state, g.checkpoint))
+    spark.read.parquet(g.keep(g.lastVersion(state)))
       .withColumn("nk", size(col("sk")))
       .withColumn("hk", expr("element_at(sk, nk)"))
       .select(col("hour"), col("nk").cast("long").as("nk"),
@@ -813,36 +572,16 @@ object EventsStream {
     * the per-hour key domain (≈5 types) is far under w=1024 and the
     * estimate takes the min over d=3 independently-hashed rows. */
   def cmsStateViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val w = 1024
-    val base = Files.createTempDirectory("graft_cms_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    Seq(0, 1).foreach { p =>
-      val stage = base.resolve(s"stage$p")
-      probe.filter(col("event_id") % 2 === p)
-        .coalesce(1).write.parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst.get finally listing.close()
-      val dst = in.resolve(s"half$p.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() + 10000L + p * 10000L))
-    }
-    val state = base.resolve("state").toString
-    val q = cmsStreamState(
-      readEvents(ss, in.toString, maxFilesPerTrigger = Some(1)),
-      state, base.resolve("ckpt").toString, w)
-    try q.processAllAvailable() finally q.stop()
-    val fin = finalStateAndCleanup(spark, state,
-      Seq(in, base.resolve("stage0"), base.resolve("stage1"), base.resolve("ckpt")))
     import graft.functions.Cms
+    val w = 1024
+    val g = new StreamGate(spark, "cms")
+    g.stage(g.parityHalves(sfDir))
+    val state = g.dir("state")
+    g.run(cmsStreamState(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1)),
+      state, g.checkpoint, w))
     val Seq(b0, b1, b2) = Cms.buckets(col("event_type"), w)
-    fin.select(col("hour"), explode(col("types")).as("event_type"), col("cms"))
+    spark.read.parquet(g.keep(g.lastVersion(state)))
+      .select(col("hour"), explode(col("types")).as("event_type"), col("cms"))
       .select(col("hour"), col("event_type"),
         Cms.estimate(col("cms"), b0, b1, b2).as("n_est"))
       .orderBy("hour", "event_type")
@@ -866,39 +605,15 @@ object EventsStream {
     * (empty flush batches come and go), so the gate sums — the
     * deterministic invariant — rather than asserting shapes. */
   def progressAuditViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_obs_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    Seq(0, 1).foreach { p =>
-      val stage = base.resolve(s"stage$p")
-      probe.filter(col("event_id") % 2 === p)
-        .coalesce(1).write.parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst.get finally listing.close()
-      val dst = in.resolve(s"half$p.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() + 10000L + p * 10000L))
-    }
-    val out = base.resolve("out").toString
-    val q = hourlyCounts(readEvents(ss, in.toString, maxFilesPerTrigger = Some(1)))
-      .select(col("window.start").as("hour_start"), col("event_type"), col("n"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    val rows = try { q.processAllAvailable(); progressRows(q) } finally q.stop()
-    deleteDirs(Seq(in, base.resolve("stage0"), base.resolve("stage1"),
-      base.resolve("ckpt"), base.resolve("out")))
+    val g = new StreamGate(spark, "obs")
+    g.stage(g.parityHalves(sfDir))
+    val q = g.appendSink(
+      hourlyCounts(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1)))
+        .select(col("window.start").as("hour_start"), col("event_type"), col("n")))
+    g.run(q)
+    g.clear()
     import spark.implicits._
-    Seq(("input_rows", rows.map(_._2).sum)).toDF("metric", "value")
+    Seq(("input_rows", progressRows(q).map(_._2).sum)).toDF("metric", "value")
   }
 
   /** §2.11 × stats: streaming anomaly detection over MERGEABLE moment
@@ -949,40 +664,20 @@ object EventsStream {
     * dropped batch or double merge shifts a moment and flips flags or
     * counts. k = 2 (beyond two global standard deviations). */
   def anomalyViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_anom_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    Seq(0, 1).foreach { p =>
-      val stage = base.resolve(s"stage$p")
-      probe.filter(col("event_id") % 2 === p)
-        .coalesce(1).write.parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst.get finally listing.close()
-      val dst = in.resolve(s"half$p.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() + 10000L + p * 10000L))
-    }
-    val state = base.resolve("state").toString
-    val q = momentsStreamState(
-      readEvents(ss, in.toString, maxFilesPerTrigger = Some(1)),
-      state, base.resolve("ckpt").toString)
-    try q.processAllAvailable() finally q.stop()
-    val fin = finalStateAndCleanup(spark, state,
-      Seq(in, base.resolve("stage0"), base.resolve("stage1"), base.resolve("ckpt")))
+    val g = new StreamGate(spark, "anom")
+    g.stage(g.parityHalves(sfDir))
+    val state = g.dir("state")
+    g.run(momentsStreamState(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1)),
+      state, g.checkpoint))
+    val fin = spark.read.parquet(g.keep(g.lastVersion(state)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val g = fin.agg(sum(col("n")).as("gn"), sum(col("s")).as("gs"),
+    val tot = fin.agg(sum(col("n")).as("gn"), sum(col("s")).as("gs"),
       sum(col("q")).as("gq"))
     // All quantities stay ≤ cents² after the integer divisions, so no
     // product can overflow INT64 at any sf (the naive (m·N − S)² form
     // would at sf0.1). Integer-div variance is biased by < 1 cent² —
     // identical bias in both engines, so the flags compare exactly.
-    val out = fin.crossJoin(broadcast(g))
+    val out = fin.crossJoin(broadcast(tot))
       .select(col("hour"), col("n"),
         expr("s DIV n").as("mean_c"),
         expr("gs DIV gn").as("gmean_c"),
@@ -1149,56 +844,28 @@ object EventsStream {
     * like the CUSUM gate; fold continuity makes the final state equal
     * the single-shot Holt over each type's dense series extended to
     * the GLOBAL last hour — which is exactly what the oracle runs. */
-  def holtViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val (ss, in, base) = stageTimeSplit(spark, sfDir)
-    val state = base.resolve("state").toString
-    val q = readEvents(ss, in.toString, maxFilesPerTrigger = Some(1))
-      .writeStream
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        mergeHoltIntoState(b, id, state)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    finalStateAndCleanup(spark, state,
-      Seq(in, base.resolve("stage0"), base.resolve("stage1"), base.resolve("ckpt")))
+  def holtViaFileSink(spark: SparkSession, sfDir: String): DataFrame =
+    hourHalvesState(spark, sfDir, mergeHoltIntoState)
       .select(col("event_type"), col("n_obs"), col("l").as("level_x1e4"),
         col("b").as("trend_x1e4"),
         expr("l + 1L * b").as("fc1_x1e4"), expr("l + 2L * b").as("fc2_x1e4"),
         expr("l + 3L * b").as("fc3_x1e4"))
       .orderBy("event_type")
-  }
 
-  /** Stage the events fixture as TWO files split at the median hour —
-    * shared by the order-dependent-state gates (CUSUM, Holt). */
-  private def stageTimeSplit(spark: SparkSession, sfDir: String):
-      (SparkSession, java.nio.file.Path, java.nio.file.Path) = {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_tsplit_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    val tsCol =
-      if (probe.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts DIV 1000")) else col("ts")
-    val hrCol = (graft.ops.Resample.epochSec(tsCol) / 3600L).cast("long")
-    val r = probe.agg(min(hrCol), max(hrCol)).head()
-    val split = (r.getLong(0) + r.getLong(1) + 1) / 2
-    Seq(0, 1).foreach { p =>
-      val stage = base.resolve(s"stage$p")
-      probe.filter(if (p == 0) hrCol < split else hrCol >= split)
-        .coalesce(1).write.parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst.get finally listing.close()
-      val dst = in.resolve(s"half$p.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() + 10000L + p * 10000L))
-    }
-    (ss, in, base)
+  /** The order-dependent-state gates' run (CUSUM, Holt): the events
+    * fixture as two micro-batches split at the median hour, each
+    * committed by `merge`; returns the final state version. */
+  private def hourHalvesState(spark: SparkSession, sfDir: String,
+      merge: (DataFrame, Long, String) => Unit): DataFrame = {
+    val g = new StreamGate(spark, "tsplit")
+    g.stage(g.hourHalves(sfDir))
+    val state = g.dir("state")
+    g.run(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1))
+      .writeStream
+      .option("checkpointLocation", g.checkpoint)
+      .foreachBatch { (b: DataFrame, id: Long) => merge(b, id, state) }
+      .start())
+    spark.read.parquet(g.keep(g.lastVersion(state)))
   }
 
   /** Correctness gate for [[mergeCusumIntoState]]: the feed splits at
@@ -1207,44 +874,12 @@ object EventsStream {
     * recompute under the same calibrate-then-monitor contract —
     * a replayed/dropped batch or a fold that lost its place shifts
     * (n_obs, n_alarms, max_s, final_s). */
-  def cusumViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val (ss, in, base) = stageTimeSplit(spark, sfDir)
-    val state = base.resolve("state").toString
-    val q = readEvents(ss, in.toString, maxFilesPerTrigger = Some(1))
-      .writeStream
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        mergeCusumIntoState(b, id, state)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    finalStateAndCleanup(spark, state,
-      Seq(in, base.resolve("stage0"), base.resolve("stage1"), base.resolve("ckpt")))
+  def cusumViaFileSink(spark: SparkSession, sfDir: String): DataFrame =
+    hourHalvesState(spark, sfDir, mergeCusumIntoState(_, _, _))
       .select(col("event_type"), col("mu").as("mu_x1e4"), col("n_obs"),
         col("na").as("n_alarms"), col("mx").as("max_s_x1e4"),
         col("s").as("final_s_x1e4"))
       .orderBy("event_type")
-  }
-
-  /** Shared tail of the versioned-state gates: resolve the final state
-    * version, delete the gate's staging dirs plus every superseded
-    * version, and hand the surviving state back on the CALLER's
-    * session (the gate ran on a scratch newSession). */
-  private def finalStateAndCleanup(spark: SparkSession, stateBase: String,
-      scratch: Seq[java.nio.file.Path]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val current = currentStateVersion(spark, stateBase).get
-    val currentName = new org.apache.hadoop.fs.Path(current).getName
-    val oldVersions = {
-      val l = Files.list(Paths.get(stateBase))
-      try {
-        import scala.jdk.CollectionConverters._
-        l.iterator().asScala.toSeq.filter(_.getFileName.toString != currentName)
-      } finally l.close()
-    }
-    deleteDirs(scratch ++ oldVersions)
-    spark.read.parquet(current)
-  }
 
   /** Retire superseded state versions under `stateBase`, keeping the
     * newest `keep` (≥1). The versioned stores ([[materializeLatest]],
@@ -1295,50 +930,16 @@ object EventsStream {
     * combined feed (every row from the shifted batch), matching the
     * window-top-1 oracle over the unioned feed. */
   def latestStateViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_cdc_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), in.resolve("events.parquet"))
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = ss.read.parquet(s"$sfDir/events.parquet")
-    val tsIsLong = probe.schema("ts").dataType ==
-      org.apache.spark.sql.types.LongType
-    // updates feed in the SAME physical layout as the fixture
-    val stage = base.resolve("stage")
-    probe.select(
-      (col("event_id") + 1000000L).as("event_id"),
-      (if (tsIsLong) col("ts") + lit(3600L * 1000 * 1000 * 1000)
-       else (col("ts").cast("timestamp") + expr("INTERVAL 1 HOUR")).cast("timestamp_ntz")).as("ts"),
-      col("user_id"), col("event_type"), (col("value") * 2).as("value"), col("props"))
-      .coalesce(1).write.parquet(stage.toString)
-    val listing = Files.list(stage)
-    val part = try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
-      finally listing.close()
-    val dst = in.resolve("events_updates.parquet")
-    Files.copy(part, dst)
-    Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 10000L))
-    val state = base.resolve("state").toString
-    val q = materializeLatest(
-      readEvents(ss, in.toString, maxFilesPerTrigger = Some(1)),
-      state, base.resolve("ckpt").toString)
-    try q.processAllAvailable() finally q.stop()
-    val current = currentStateVersion(ss, state).get
-    val currentName = new org.apache.hadoop.fs.Path(current).getName
-    // scratch (staged input, checkpoint, superseded state versions) is
-    // dead once the query stops — only the current version (read
-    // lazily below) survives, same contract as the other gates.
-    val oldVersions = {
-      val l = Files.list(Paths.get(state))
-      try {
-        import scala.jdk.CollectionConverters._
-        l.iterator().asScala.toSeq.filter(_.getFileName.toString != currentName)
-      } finally l.close()
-    }
-    deleteDirs(Seq(in, stage, base.resolve("ckpt")) ++ oldVersions)
-    spark.read.parquet(current)
+    val g = new StreamGate(spark, "cdc")
+    val ts = TsLayout.of(g.ss, g.eventsPath(sfDir))
+    g.stage(Seq(g.eventsFile(sfDir), StreamGate.Frame(g.events(sfDir)
+      .withColumn("event_id", col("event_id") + 1000000L)
+      .withColumn("ts", ts.fromMicros(ts.micros + StreamGate.HourMicros))
+      .withColumn("value", col("value") * 2))))
+    val state = g.dir("state")
+    g.run(materializeLatest(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1)),
+      state, g.checkpoint))
+    spark.read.parquet(g.keep(g.lastVersion(state)))
       .select(col("user_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
         col("event_id"), col("value"))
@@ -1356,25 +957,14 @@ object EventsStream {
     * filtered) and never reaches the result. Aggregated per user, the
     * sink must hash-match the batch gap-sessionization twin. */
   def sessionizeEventTimeViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    // Same scaffolding as every other append-mode gate: staged fixture
-    // plus two watermark-advancing sentinel batches (shared helper —
-    // this gate used to hand-roll an identical copy that could drift).
-    val (ss, in, base) = stageWithSentinels(spark, sfDir)
-    import ss.implicits._
-    val out = base.resolve("out").toString
-    val events = readEvents(ss, in.toString, maxFilesPerTrigger = Some(1))
+    val g = new StreamGate(spark, "stream")
+    g.stage(g.eventsFile(sfDir) +: g.sentinels(sfDir))
+    import g.ss.implicits._
+    val events = readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
-    val q = sessionizeEventTime(events)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    cleanupStaged(base, in)
-    spark.read.parquet(out)
+    g.run(g.appendSink(sessionizeEventTime(events).toDF()))
+    spark.read.parquet(g.keep(g.out))
       .filter(col("user_id") >= 0)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"),
@@ -1396,24 +986,16 @@ object EventsStream {
     * are filtered in the gate aggregate, not the query, so they prove
     * the miss path emits. */
   def enrichViaFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val (ss, in, base) = stageWithSentinels(spark, sfDir)
-    val out = base.resolve("out").toString
-    val dim = ss.read.parquet(s"$sfDir/customer.parquet")
+    val g = new StreamGate(spark, "stream")
+    g.stage(g.eventsFile(sfDir) +: g.sentinels(sfDir))
+    val dim = g.ss.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    val q = readEvents(ss, in.toString, maxFilesPerTrigger = Some(1))
-      .join(broadcast(dim), Seq("user_id"), "left")
-      .select(col("event_id"), col("user_id"), col("segment"),
-        col("event_type"), col("value"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try { q.processAllAvailable(); quiesce(q) } finally q.stop()
-    recordGateMetrics("events_stream_enrich", q)
-    cleanupStaged(base, in)
-    spark.read.parquet(out)
+    g.run(g.appendSink(readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1))
+        .join(broadcast(dim), Seq("user_id"), "left")
+        .select(col("event_id"), col("user_id"), col("segment"),
+          col("event_type"), col("value"))),
+      recordAs = Some("events_stream_enrich"))
+    spark.read.parquet(g.keep(g.out))
       .filter(col("user_id") >= 0)
       .groupBy("segment")
       .agg(count(lit(1)).as("n_events"),
@@ -1454,57 +1036,13 @@ object EventsStream {
 
   private def ssJoinGate(spark: SparkSession, sfDir: String, joinType: String,
       sentinels: Boolean, gateName: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_ssjoin_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), in.resolve("events.parquet"))
-    // Cloned session (see hourlyViaFileSink): conf stays off the caller.
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    if (sentinels) {
-      ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val probe = ss.read.parquet(s"$sfDir/events.parquet")
-      val tsIsLong = probe.schema("ts").dataType ==
-        org.apache.spark.sql.types.LongType
-      val maxMicros =
-        if (tsIsLong) probe.agg(max(expr("ts DIV 1000"))).head.getLong(0)
-        else probe.agg(max(unix_micros(col("ts").cast("timestamp")))).head.getLong(0)
-      val hourUs = 3600L * 1000 * 1000
-      Seq(1, 2).foreach { i =>
-        val stage = base.resolve(s"stage$i")
-        val sentUs = maxMicros + 3L * i * hourUs
-        val tsCol =
-          if (tsIsLong) lit(sentUs * 1000L)
-          else timestamp_micros(lit(sentUs)).cast("timestamp_ntz")
-        // one purchase AND one view per sentinel batch
-        ss.range(2).select(
-          (lit(-2L) * col("id") - i).as("event_id"), tsCol.as("ts"),
-          lit(-1L).as("user_id"),
-          when(col("id") === 0, "purchase").otherwise("view").as("event_type"),
-          lit(0.0).as("value"), lit("").as("props"))
-          .coalesce(1).write.parquet(stage.toString)
-        val listing = Files.list(stage)
-        val part = try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
-          finally listing.close()
-        val dst = in.resolve(s"sentinel$i.parquet")
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst, // mtime orders the micro-batches
-          java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i * 10000L))
-      }
-    }
-    val out = base.resolve("out").toString
-    val q = purchaseViewJoin(readEvents(ss, in.toString,
-        maxFilesPerTrigger = if (sentinels) Some(1) else None), joinType = joinType)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try { q.processAllAvailable(); quiesce(q) } finally q.stop()
-    recordGateMetrics(gateName, q)
-    cleanupStaged(base, in)
-    spark.read.parquet(out)
+    val g = new StreamGate(spark, "ssjoin")
+    g.stage(g.eventsFile(sfDir) +:
+      (if (sentinels) g.sentinels(sfDir, Seq("purchase", "view")) else Nil))
+    g.run(g.appendSink(purchaseViewJoin(readEvents(g.ss, g.in,
+        maxFilesPerTrigger = if (sentinels) Some(1) else None), joinType = joinType)),
+      recordAs = Some(gateName))
+    spark.read.parquet(g.keep(g.out))
       .filter(col("user_id") >= 0) // sentinel scaffolding, not data
       .orderBy("user_id", "purchase_id", "view_id")
   }
@@ -1521,17 +1059,6 @@ object EventsStream {
       .option("checkpointLocation", checkpoint)
       .start()
 
-  /** Correctness gate for the [[sessionize]] custom-state operator:
-    * stream the events fixture as ONE micro-batch (single staged file,
-    * no trigger cap) through mapGroupsWithState, so each user's group
-    * sees its whole feed and emits exactly one Session row — per-user
-    * event counts and time spans then mirror the plain batch
-    * aggregate. mapGroupsWithState only supports Update output, which
-    * file sinks reject ([SPARK] UnsupportedOperationChecker), so the
-    * gate drives the documented memory-sink harness; the deployable
-    * file-sink path is gated separately by [[hourlyViaFileSink]] /
-    * [[dedupViaFileSink]]. Timeout disabled (gapMs=0): wall-clock
-    * timers cannot cross the engine/oracle boundary. */
   /** Correctness gate for the complete-mode notices re-rank
     * ([[topUsersByValue]]; reference app/page.tsx:181-192 and
     * admin/page.tsx:147 — the Firestore onSnapshot top-50 list,
@@ -1549,71 +1076,52 @@ object EventsStream {
     * unbounded-key streams use the Update/Append gates above. */
   def topUsersViaMemory(spark: SparkSession, sfDir: String, k: Int = 50)
       : org.apache.spark.sql.DataFrame = {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_rerank_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    // Cloned session (see hourlyViaFileSink): conf and the memory-sink
-    // table registration stay off the caller's session and catalog.
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = ss.read.parquet(s"$sfDir/events.parquet")
-    Seq(0, 1).foreach { i =>
-      val stage = base.resolve(s"stage$i")
-      src.filter(pmod(col("event_id"), lit(2)) === i)
-        .coalesce(1).write.parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
-        finally listing.close()
-      val dst = in.resolve(s"half$i.parquet")
-      Files.copy(part, dst)
-      // the file source orders batches by modification time
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i * 10000L))
-    }
-    val events = readEvents(ss, in.toString, maxFilesPerTrigger = Some(1))
+    val g = new StreamGate(spark, "rerank")
+    g.stage(g.parityHalves(sfDir))
+    val events = readEvents(g.ss, g.in, maxFilesPerTrigger = Some(1))
       .withColumn("value", col("value").cast("decimal(18,2)"))
-    val q = topUsersByValue(events, k).writeStream
+    g.run(topUsersByValue(events, k).writeStream
       .outputMode(OutputMode.Complete())
       .format("memory")
       .queryName("graft_top_users")
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    deleteDirs(Seq(in, base.resolve("ckpt")) ++
-      Seq(0, 1).map(i => base.resolve(s"stage$i")))
+      .option("checkpointLocation", g.checkpoint)
+      .start())
+    g.clear()
     // complete mode: the memory table holds only the LATEST snapshot
-    ss.table("graft_top_users")
+    g.ss.table("graft_top_users")
       .select(col("user_id"),
         round(col("total_value"), 2).cast("double").as("total_value"),
         col("n_events"))
       .orderBy(desc("total_value"), asc("user_id"))
   }
 
+  /** Correctness gate for the [[sessionize]] custom-state operator:
+    * stream the events fixture as ONE micro-batch (single staged file,
+    * no trigger cap) through mapGroupsWithState, so each user's group
+    * sees its whole feed and emits exactly one Session row — per-user
+    * event counts and time spans then mirror the plain batch
+    * aggregate. mapGroupsWithState only supports Update output, which
+    * file sinks reject ([SPARK] UnsupportedOperationChecker), so the
+    * gate drives the documented memory-sink harness; the deployable
+    * file-sink path is gated separately by [[hourlyViaFileSink]] /
+    * [[dedupViaFileSink]]. Timeout disabled (gapMs=0): wall-clock
+    * timers cannot cross the engine/oracle boundary. */
   def sessionizeViaMemory(spark: SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_sess_gate")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    Files.copy(Paths.get(s"$sfDir/events.parquet"), in.resolve("events.parquet"))
-    // Cloned session (see hourlyViaFileSink): conf and the memory-sink
-    // table registration stay off the caller's session and catalog.
-    val ss = spark.newSession()
-    import ss.implicits._
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val events = readEvents(ss, in.toString)
+    val g = new StreamGate(spark, "sess")
+    g.stage(Seq(g.eventsFile(sfDir)))
+    import g.ss.implicits._
+    val events = readEvents(g.ss, g.in)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
-    val q = sessionize(events, gapMs = 0).writeStream
+    g.run(sessionize(events, gapMs = 0).writeStream
       .outputMode(OutputMode.Update())
       .format("memory")
       .queryName("graft_sessions")
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // the memory sink's rows live on the driver (harness contract) —
-    // the staged input and checkpoint are safe to delete immediately
-    deleteDirs(Seq(in, base.resolve("ckpt")))
-    ss.table("graft_sessions")
+      .option("checkpointLocation", g.checkpoint)
+      .start())
+    // the memory sink's rows live on the driver (harness contract)
+    g.clear()
+    g.ss.table("graft_sessions")
       .select(col("user_id"), col("n_events"), col("duration_sec"))
       .orderBy("user_id")
   }

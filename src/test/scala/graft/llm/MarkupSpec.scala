@@ -151,7 +151,7 @@ class MarkupSpec extends SparkSpec {
     val df = docs.toDF("id", "t")
     val got = df.select(col("id"), Markup.dropFencedCol(col("t")).as("c"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    val (oldPat, oldRep) = Markup.dropFencedRule
+    val (oldPat, oldRep) = MarkupReference.dropFencedRule
     val want = df.select(col("id"),
         regexp_replace(regexp_replace(col("t"), oldPat, oldRep),
           "(?m)^```[^\\n]*$", "").as("c"))
@@ -202,7 +202,7 @@ class MarkupSpec extends SparkSpec {
     for (drop <- Seq(false, true)) {
       val got = df.select(Markup.stripMarkdown(col("t"), drop).as("c"))
         .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
-      val want = df.select(Markup.stripMarkdownChain(col("t"), drop).as("c"))
+      val want = df.select(MarkupReference.stripMarkdownChain(col("t"), drop).as("c"))
         .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
       assert(got == want, s"dropFencedCode=$drop diverged")
     }

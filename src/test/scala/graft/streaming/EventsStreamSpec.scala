@@ -442,6 +442,39 @@ class EventsStreamSpec extends SparkSpec {
     assert(full("state_rows_final") < nEvents / 10, full)
   }
 
+  test("gate results read a swept Scratch dir that holds only the sink or the final state version") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def children(d: Path): Seq[String] = {
+      val l = Files.list(d)
+      try l.iterator.asScala.map(_.getFileName.toString).toList.sorted finally l.close()
+    }
+    // the Scratch dir (swept at JVM exit) that every file of `df` lies under
+    def sweptRoot(df: org.apache.spark.sql.DataFrame): (Path, Seq[Path]) = {
+      val files = df.inputFiles.toSeq.map(f => Paths.get(new java.net.URI(f)))
+      assert(files.nonEmpty)
+      val root = graft.core.Scratch.swept.find(d => files.forall(_.startsWith(d)))
+      assert(root.isDefined, s"${files.head} lies under no dir the exit sweep covers")
+      (root.get, files)
+    }
+
+    // append-sink gate: only the sink survives (no in, ckpt or stage*)
+    val hourly = EventsStream.hourlyViaFileSink(spark, sf)
+    assert(hourly.collect().nonEmpty)
+    val (sinkRoot, sinkFiles) = sweptRoot(hourly)
+    assert(children(sinkRoot) == Seq("out"))
+    assert(sinkFiles.forall(_.startsWith(sinkRoot.resolve("out"))))
+
+    // versioned-state gate: only the final version survives
+    val cms = EventsStream.cmsStateViaFileSink(spark, sf)
+    assert(cms.collect().nonEmpty)
+    val (stateRoot, stateFiles) = sweptRoot(cms)
+    assert(children(stateRoot) == Seq("state"))
+    val versions = children(stateRoot.resolve("state"))
+    assert(versions.size == 1 && versions.head.matches("v\\d+"), versions)
+    assert(stateFiles.forall(_.startsWith(stateRoot.resolve("state").resolve(versions.head))))
+  }
+
   test("streaming ingest dedup drops redelivered events within the watermark") {
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[Event]
