@@ -1090,8 +1090,8 @@ object Ann {
     * over sign signatures (four 16-bit bands, pigeonhole-exact at
     * maxBits ≤ 3, hot-band cap). Output (a, b, dist), a < b. */
   def rhpNearDupPairs(corpus: DataFrame, maxBits: Int = 3,
-      maxBucket: Long = 10000L, seed: String = "rhp"): DataFrame =
-    Dedup.bandedHammingPairs(rhpSimhash(corpus, seed), maxBits, maxBucket)
+      seed: String = "rhp"): DataFrame =
+    Dedup.bandedHammingPairs(rhpSimhash(corpus, seed), maxBits)
 
   /** PQ search with the standard exact second stage: ADC shortlists
     * `shortlist` candidates per query from codes alone, then ONLY the

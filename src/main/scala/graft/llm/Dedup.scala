@@ -123,80 +123,22 @@ object Dedup {
     sigs.select(col("id"), explode(array(keys: _*)).as("bk"))
   }
 
-  /** Candidate pairs (a < b) sharing ≥1 band key.
-    *
-    * Skew guard: the self-join cost is Σ bucket², so one hot band key
-    * (boilerplate-heavy corpora hash many docs into the same bucket)
-    * goes quadratic. Band keys with more than `maxBucket` members are
-    * dropped before the join (an inner join against the under-cap key
-    * set — one cheap aggregate + broadcast-able key list). Docs in a
-    * dropped bucket still pair through their other bands; with all
-    * bands saturated they are exact-dup-scale identical and belong to
-    * exact dedup, not MinHash. Default cap 10k ⇒ ≤1e8 comparisons per
-    * degenerate bucket, bounded regardless of corpus size.
-    *
-    * Σ bucket² VERIFY BUDGET (r21, the boilerplate-dominated-bucket
-    * defence): the per-bucket cap bounds the worst single bucket but
-    * not the AGGREGATE — a corpus where constant boilerplate dominates
-    * many band keys (the CJK fixture: two constant phrases → 13M
-    * candidates at 10× data, every bucket under the cap) still goes
-    * quadratic in total. `verifyBudget` bounds Σ bn² over the kept
-    * buckets, keeping SMALLEST buckets first: from the size-class
-    * histogram (group buckets by size bn, ≤ maxBucket rows — tiny at
-    * any corpus size), s* = the largest size whose ascending-cumulative
-    * Σ bn² still fits the budget; buckets with bn ≤ s* survive. Drop
-    * semantics are deterministic and enumeration-order-free (whole
-    * size classes drop, never individual buckets), mirrored arm for
-    * arm by the oracle twins that opt in. Near-dup pairs found through
-    * dropped buckets are lost UNLESS another (rarer) band pairs them —
-    * the documented recall trade every production LSH dedup makes to
-    * bound verify volume. Default Long.MaxValue = off. */
-  def lshCandidates(bandsDf: DataFrame, maxBucket: Long = 10000L,
-      verifyBudget: Long = Long.MaxValue): DataFrame = {
-    // r20: band keys digest to 64-bit before the cap aggregate and the
-    // self-join — the concat_ws band string exists only to define
-    // equality classes, and xxhash64 preserves them (same negligible-
-    // collision contract as the verify stage's digests), so candidates
-    // are unchanged while the hot self-join shuffles/compares longs.
-    val b = bandsDf.select(col("id"), xxhash64(col("bk")).as("bk"))
-    val sizes = b.groupBy("bk").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= maxBucket)
-    val okKeys =
-      if (verifyBudget == Long.MaxValue) sizes.select("bk")
-      else {
-        // s* comes from the size-class histogram COLLECTED to the
-        // driver (≤ maxBucket rows — bounded at any corpus size; the
-        // ivfCentroids driver-array precedent). A plan-side cumulative
-        // window was measured 21–23 s vs ~8 s unbudgeted at sf0.1
-        // (OPTIMIZATION_r21.md, verdict item 2): it makes `sizes` a
-        // SECOND consumer of the caller's yet-unmaterialized shingle
-        // persist and the window barrier splits the single action into
-        // two waves of corpus scans. The driver histogram instead runs one bounded
-        // aggregate action (which also materializes the shingle cache
-        // for the main action) and the final plan keeps EXACTLY the
-        // unbudgeted aggregate→filter shape. Cumulative semantics are
-        // the oracle twin's window verbatim: ascending size classes,
-        // stop at the first class that would overflow the budget.
-        val hist = sizes.groupBy("bn")
-          .agg(sum(col("bn") * col("bn")).as("w2"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        var cum = 0L
-        var sStar = 0L
-        val it = hist.iterator
-        var under = true
-        while (under && it.hasNext) {
-          val (bn, w2) = it.next()
-          if (cum + w2 <= verifyBudget) { cum += w2; sStar = bn }
-          else under = false
-        }
-        sizes.filter(col("bn") <= sStar).select("bk")
-      }
-    val capped = b.join(okKeys, Seq("bk"))
-    val x = capped.as("x"); val y = capped.as("y")
-    x.join(y, col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-      .distinct()
-  }
+  /** Candidate pairs (a < b) sharing ≥1 band key: the capped self-join
+    * of [[Candidates]] (its scaladoc holds the cap-and-budget contract).
+    * `verifyBudget` bounds Σ bn² over the kept buckets; default
+    * Long.MaxValue = off. */
+  def lshCandidates(bandsDf: DataFrame,
+      verifyBudget: Long = Long.MaxValue): DataFrame =
+    Candidates.selfPairs(digestBands(bandsDf), Seq("bk"),
+      verifyBudget = verifyBudget)
+
+  /** r20: band keys digest to 64-bit before the cap aggregate and the
+    * candidate join — the concat_ws band string exists only to define
+    * equality classes, and xxhash64 preserves them (same negligible-
+    * collision contract as the verify stage's digests), so candidates
+    * are unchanged while the hot join shuffles/compares longs. */
+  private def digestBands(bandsDf: DataFrame): DataFrame =
+    bandsDf.select(col("id"), xxhash64(col("bk")).as("bk"))
 
   /** Exact Jaccard over distinct shingle sets, computed only for the
     * given candidate pairs. Output (a, b, jacc).
@@ -273,10 +215,10 @@ object Dedup {
     * only. Rare-first ordering makes those prefix postings the
     * shortest lists in the corpus — join fan-out concentrates where
     * buckets are smallest, the opposite of a hot-key self-join; the
-    * same `maxBucket` cap as [[lshCandidates]] guards the degenerate
-    * token anyway. Verification is the digest-keyed exact [[jaccard]]
-    * restricted to candidates, and the threshold compares the x1e4
-    * integer, so both engines branch on the same value.
+    * [[Candidates]] bucket cap guards the degenerate token anyway.
+    * Verification is the digest-keyed exact [[jaccard]] restricted to
+    * candidates, and the threshold compares the x1e4 integer, so both
+    * engines branch on the same value.
     *
     * `sh` = DISTINCT (id, sh) shingle rows (the [[shingles]] output);
     * prefix length arithmetic is all-integer: ceil(tau*n) =
@@ -285,8 +227,7 @@ object Dedup {
     * the half-up-rounded x1e4 value, which can additionally admit a
     * pair sitting within 0.5e-4 below tau when its sets are huge
     * (>10k shingles) — a reporting-rounding nuance, not a loss. */
-  def prefixFilterPairs(sh: DataFrame, tauX1e4: Long,
-      maxBucket: Long = 10000L): DataFrame = {
+  def prefixFilterPairs(sh: DataFrame, tauX1e4: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // r20: every join/group key below is the 64-bit shingle digest,
     // not the shingle string — the same pre-shuffle digesting the
@@ -307,13 +248,8 @@ object Dedup {
       .filter(col("pos") <=
         col("n") - floor((col("n") * tauX1e4 + 9999L) / 10000L) + 1L)
       .select("id", "shd")
-    val okKeys = pref.groupBy("shd").agg(count(lit(1)).as("pn"))
-      .filter(col("pn") <= maxBucket).select("shd")
-    val capped = pref.join(okKeys, Seq("shd"))
-    val cand = capped.as("x").join(capped.as("y"),
-        col("x.shd") === col("y.shd") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
-    jaccard(cand, sh).filter(col("jacc_x1e4") >= tauX1e4)
+    jaccard(Candidates.selfPairs(pref, Seq("shd")), sh)
+      .filter(col("jacc_x1e4") >= tauX1e4)
   }
 
   /** Asymmetric n-gram CONTAINMENT per candidate pair: |A∩B| / |A|
@@ -443,53 +379,30 @@ object Dedup {
   }
 
   /** MinHash-LSH near-duplicate pairs with verified Jaccard ≥ threshold
-    * (threshold compared on the scaled fixed-point value).
+    * (threshold compared on the scaled fixed-point value), handed to
+    * `use`. Candidates come from [[lshCandidates]]; `verifyBudget` is
+    * its Σ bn² budget (default off).
     *
-    * CACHE LIFECYCLE: the returned plan reads a shingle relation
-    * persisted inside this call (see below); it stays cached after the
-    * caller's action so repeated invocations in a long-lived session
-    * accumulate MEMORY_AND_DISK relations. Release it once the result
-    * is consumed — `spark.catalog.clearCache()` or
-    * `spark.sharedState.cacheManager.uncacheQuery` — the same contract
-    * [[dupClusters]] documents for its label relation. */
-  def minhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, bands: Int = 4, threshold: Double = 0.5,
-      maxBucket: Long = 10000L, cjkAware: Boolean = false,
-      verifyBudget: Long = Long.MaxValue): DataFrame =
-    buildMinhashDupPairs(docs, idCol, textCol, k, bands, threshold, maxBucket,
-      cjkAware, verifyBudget)._1
-
-  /** Leak-free entry point: runs `use` over the dup-pair result, then
-    * RELEASES the internal shingle cache before returning — for
-    * long-lived sessions that would otherwise accumulate a
-    * MEMORY_AND_DISK relation per invocation. The DataFrame handed to
-    * `use` reads the cached relation, so every action on it must
-    * happen inside the callback; the plan must not escape. */
+    * CACHE LIFECYCLE: the pair plan reads a shingle relation persisted
+    * inside this call (the split+explode+distinct scan — the most
+    * expensive subtree — feeds the signature aggregate AND jaccard's
+    * digest join, so it materializes once). It is RELEASED when `use`
+    * returns, so a long-lived session does not accumulate a
+    * MEMORY_AND_DISK relation per invocation. Every action on the
+    * DataFrame handed to `use` must happen inside the callback; the
+    * plan must not escape. */
   def withMinhashDupPairs[T](docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, bands: Int = 4, threshold: Double = 0.5,
-      maxBucket: Long = 10000L, cjkAware: Boolean = false,
-      verifyBudget: Long = Long.MaxValue)(use: DataFrame => T): T = {
-    val (pairs, sh) = buildMinhashDupPairs(docs, idCol, textCol, k, bands,
-      threshold, maxBucket, cjkAware, verifyBudget)
-    try use(pairs)
-    finally sh.unpersist(blocking = true)
-  }
-
-  private def buildMinhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      k: Int, bands: Int, threshold: Double, maxBucket: Long,
       cjkAware: Boolean = false,
-      verifyBudget: Long = Long.MaxValue): (DataFrame, DataFrame) = {
-    // The shingle scan (split+explode+distinct — the most expensive
-    // subtree) feeds the signature aggregate AND jaccard's digest
-    // join. The persist materializes it once and every consumer reads
-    // the cached relation — same pattern as the assignment persist in
-    // Ann.embeddingDupPairs.
+      verifyBudget: Long = Long.MaxValue)(use: DataFrame => T): T = {
     val sh = (if (cjkAware) shinglesCjk(docs, idCol, textCol)
       else shingles(docs, idCol, textCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = lshCandidates(lshBands(minhashSignatures(sh, k), k, bands),
-      maxBucket, verifyBudget)
-    (jaccard(cand, sh).filter(col("jacc_x1e4") >= (threshold * 10000).toLong), sh)
+    try {
+      val cand = lshCandidates(lshBands(minhashSignatures(sh, k), k, bands),
+        verifyBudget)
+      use(jaccard(cand, sh).filter(col("jacc_x1e4") >= (threshold * 10000).toLong))
+    } finally sh.unpersist(blocking = true)
   }
 
   /** Cross-corpus near-dup join — fuzzy DECONTAMINATION: find every
@@ -499,13 +412,14 @@ object Dedup {
     * verbatim overlap; this catches the lightly-edited copies it
     * misses, at the same banded-LSH cost.
     *
-    * Same signature/band algebra as [[minhashDupPairs]] (the hash
+    * Same signature/band algebra as [[withMinhashDupPairs]] (the hash
     * family is deterministic, so signatures computed per side are
     * identical to a union pass), but the candidate join is
     * train-band × eval-band — strictly BIPARTITE, never within a side:
-    * cost is Σ_bk |T_bk|·|E_bk| with each side capped at `maxBucket`,
-    * and the eval side is benchmark-sized (tiny next to the corpus),
-    * so the join fans out only where an eval band actually collides.
+    * cost is Σ_bk |T_bk|·|E_bk| with each side capped on its own
+    * ([[Candidates.crossPairs]]), and the eval side is benchmark-sized
+    * (tiny next to the corpus), so the join fans out only where an
+    * eval band actually collides.
     * Verification is the digest-keyed exact [[jaccard]] over the
     * union shingle relation. Id spaces of the two sides MUST be
     * disjoint (caller contract — shift one side).
@@ -513,25 +427,16 @@ object Dedup {
     * Output (a = train id, b = eval id, jacc_x1e4 ≥ tauX1e4). */
   def crossCorpusPairs(train: DataFrame, eval: DataFrame, idCol: String,
       textCol: String, k: Int = 8, bands: Int = 4, tauX1e4: Long = 5000L,
-      maxBucket: Long = 10000L, cjkAware: Boolean = false): DataFrame = {
+      cjkAware: Boolean = false): DataFrame = {
     def sh0(d: DataFrame) =
       if (cjkAware) shinglesCjk(d, idCol, textCol) else shingles(d, idCol, textCol)
     val shT = sh0(train)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val shE = sh0(eval)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def capped(b0: DataFrame) = {
-      // digest band keys before the cap/join (the lshCandidates r20
-      // idiom): equality classes unchanged, join keys become longs
-      val b = b0.select(col("id"), xxhash64(col("bk")).as("bk"))
-      val ok = b.groupBy("bk").agg(count(lit(1)).as("bn"))
-        .filter(col("bn") <= maxBucket).select("bk")
-      b.join(ok, Seq("bk"))
-    }
-    val bT = capped(lshBands(minhashSignatures(shT, k), k, bands))
-    val bE = capped(lshBands(minhashSignatures(shE, k), k, bands))
-    val cand = bT.as("x").join(bE.as("y"), col("x.bk") === col("y.bk"))
-      .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
+    def bandKeys(s: DataFrame) =
+      digestBands(lshBands(minhashSignatures(s, k), k, bands))
+    val cand = Candidates.crossPairs(bandKeys(shT), bandKeys(shE), Seq("bk"))
     // The result (contaminated pairs — eval-bounded, tiny next to the
     // corpus) materializes once and the shingle caches are released
     // with it: decontamination is a terminal scan, and leaving two
@@ -912,40 +817,26 @@ object Dedup {
     * batch must be disjoint.
     *
     * Output (a, b, est_x1e4): b is always a new doc; for new×new
-    * pairs a < b. Same Σ bucket² cap as [[lshCandidates]], computed
-    * over the UNION's band table (a bucket hot across corpus+batch is
-    * just as quadratic as one hot within a single run). Append
-    * `minhashState(newDocs)` to the state table afterwards — the two
-    * steps share the batch's signature scan under one persist if the
-    * caller caches it. */
+    * pairs a < b. Candidates are [[Candidates.incrementalPairs]]: the
+    * per-bucket cap counts the UNION's band table (a bucket hot across
+    * corpus+batch is just as quadratic as one hot within a single
+    * run); no Σ bn² budget applies. Append `minhashState(newDocs)` to
+    * the state table afterwards — the two steps share the batch's
+    * signature scan under one persist if the caller caches it. */
   def incrementalDupPairs(state: DataFrame, newDocs: DataFrame,
       idCol: String, textCol: String, k: Int = 8, bands: Int = 4,
-      threshold: Double = 0.5, maxBucket: Long = 10000L): DataFrame =
+      threshold: Double = 0.5): DataFrame =
     incrementalDupPairsFromSigs(state,
-      minhashState(newDocs, idCol, textCol, k), k, bands, threshold, maxBucket)
+      minhashState(newDocs, idCol, textCol, k), k, bands, threshold)
 
   /** [[incrementalDupPairs]] with the batch's signatures already in
     * hand — the streaming path computes them once and feeds BOTH this
     * pair search and the state-version append from the same relation. */
   def incrementalDupPairsFromSigs(state: DataFrame, newSigs: DataFrame,
-      k: Int = 8, bands: Int = 4, threshold: Double = 0.5,
-      maxBucket: Long = 10000L): DataFrame = {
+      k: Int = 8, bands: Int = 4, threshold: Double = 0.5): DataFrame = {
     val allSigs = state.unionByName(newSigs)
-    // digest band keys before the cap/join (the lshCandidates r20
-    // idiom): equality classes unchanged, the self-join keys are longs
-    def dg(b: DataFrame) = b.select(col("id"), xxhash64(col("bk")).as("bk"))
-    val oldBands = dg(lshBands(state, k, bands)).withColumn("is_new", lit(false))
-    val newBands = dg(lshBands(newSigs, k, bands)).withColumn("is_new", lit(true))
-    val allBands = oldBands.unionByName(newBands)
-    val ok = allBands.groupBy("bk").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= maxBucket).select("bk")
-    val x = allBands.join(ok, Seq("bk")).as("x")
-    val y = newBands.join(ok, Seq("bk")).as("y")
-    val cand = x.join(y, col("x.bk") === col("y.bk") &&
-        col("x.id") =!= col("y.id") &&
-        (!col("x.is_new") || col("x.id") < col("y.id")))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-      .distinct()
+    val cand = Candidates.incrementalPairs(digestBands(lshBands(state, k, bands)),
+      digestBands(lshBands(newSigs, k, bands)), Seq("bk"))
     val matches = (0 until k)
       .map(i => when(col(s"sa.m$i") === col(s"sb.m$i"), 1).otherwise(0))
       .reduce(_ + _)
@@ -969,12 +860,11 @@ object Dedup {
     * brute-force result (SimhashSpec property-checks this); above 3
     * bits the bands become a recall filter, documented not hidden.
     *
-    * Same Σ bucket² skew guard as [[lshCandidates]]: band values held
-    * by more than `maxBucket` docs are dropped before the join.
+    * Candidates come from [[bandedHammingPairs]], whose band values
+    * carry the [[Candidates]] per-bucket cap (no Σ bn² budget).
     * Output (a, b, dist), a < b. */
   def simhashBandedPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxBits: Int = 3, maxBucket: Long = 10000L,
-      cjkAware: Boolean = false): DataFrame =
+      maxBits: Int = 3, cjkAware: Boolean = false): DataFrame =
     // r20: the banded kernel consumes its signature input three times
     // (cap aggregate + both self-join arms) and the simhash subtree is
     // a full shingle scan + 64-sum vote aggregate — cache the 2-long
@@ -984,7 +874,7 @@ object Dedup {
     graft.core.Materialize.withCached(
       simhash64(docs, idCol, textCol, cjkAware)
         .select(col("id"), col("simhash").as("sig"))) { s =>
-      bandedHammingPairs(s, maxBits, maxBucket)
+      bandedHammingPairs(s, maxBits)
     }
 
   /** Banded Hamming-radius self-join over ANY 64-bit signature column
@@ -993,10 +883,10 @@ object Dedup {
     * Input (id, sig); output (a, b, dist) with a < b and
     * dist = popcount(sig_a XOR sig_b) ≤ maxBits. Four 16-bit bands →
     * pairs within 3 bits cannot miss every band (pigeonhole), so the
-    * default radius is exact; the Σ bucket² cap drops degenerate band
-    * values (e.g. the all-black-image band) before the join. */
-  def bandedHammingPairs(sigs: DataFrame, maxBits: Int = 3,
-      maxBucket: Long = 10000L): DataFrame = {
+    * default radius is exact; the [[Candidates]] per-bucket cap drops
+    * degenerate band values (e.g. the all-black-image band) before the
+    * join. */
+  def bandedHammingPairs(sigs: DataFrame, maxBits: Int = 3): DataFrame = {
     require(maxBits >= 0 && maxBits <= 63, s"maxBits=$maxBits")
     // Lazy and pure by contract (plan-shape specs compose over it);
     // the band relation is consumed three times (cap aggregate + both
@@ -1009,16 +899,8 @@ object Dedup {
           expr(s"(sig >> ${16 * b}) & 65535").as("v"))): _*)).as("bv"))
       .select(col("id"), col("sig"),
         col("bv.band").as("band"), col("bv.v").as("v"))
-    val ok = bands.groupBy("band", "v").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= maxBucket)
-      .select("band", "v")
-    val capped = bands.join(ok, Seq("band", "v"))
-    val x = capped.as("x"); val y = capped.as("y")
-    x.join(y, col("x.band") === col("y.band") && col("x.v") === col("y.v") &&
-        col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"),
-        bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).as("dist"))
-      .distinct()
+    Candidates.selfPairs(bands, Seq("band", "v"),
+        Seq(bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).as("dist")))
       .filter(col("dist") <= maxBits)
   }
 }

@@ -727,18 +727,25 @@ object Multimodal {
     * maxBits ≤ 3, hot-band cap), fed by the DCT hash — structure-level
     * near-dups (recompressed, re-brightened copies) that per-cell
     * aHash can miss. Undecodable payloads drop before the join. */
-  def phashNearDupPairs(media: DataFrame, maxBits: Int = 3,
-      maxBucket: Long = 10000L): DataFrame = {
+  def phashNearDupPairs(media: DataFrame, maxBits: Int = 3): DataFrame =
+    hashNearDupPairs(media, phashBytes, maxBits)
+
+  /** The shared body of the media near-dup joins: one decode pass hashes
+    * each payload to a 64-bit (id, sig) row — undecodable payloads
+    * drop, so no hash means no pair — then the banded Hamming self-join
+    * ([[Dedup.bandedHammingPairs]]). Output (a, b, dist), a < b. */
+  private def hashNearDupPairs(media: DataFrame,
+      hash: Array[Byte] => Option[Long], maxBits: Int): DataFrame = {
     val spark = media.sparkSession
     val rdd = media.select("media_id", "content").rdd.flatMap { r =>
       Option(r.getAs[Array[Byte]]("content"))
-        .flatMap(phashBytes)
+        .flatMap(hash)
         .map(h => Row(r.getAs[Long]("media_id"), h))
     }
     val sigs = spark.createDataFrame(rdd, StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("sig", LongType, nullable = false))))
-    Dedup.bandedHammingPairs(sigs, maxBits, maxBucket)
+    Dedup.bandedHammingPairs(sigs, maxBits)
   }
 
   /** Perceptual near-duplicate image pairs — the multimodal member of
@@ -753,20 +760,9 @@ object Multimodal {
     * that exact binary dedup cannot. Undecodable payloads drop out
     * before the join (no hash ⇒ no pair). Output (a, b, dist), a < b. */
   def ahashNearDupPairs(media: DataFrame, maxBits: Int = 3,
-      maxBucket: Long = 10000L, orientationNormalize: Boolean = false): DataFrame = {
-    val spark = media.sparkSession
-    val hashFn: Array[Byte] => Option[Long] =
-      if (orientationNormalize) orientedAHashBytes else aHashBytes
-    val rdd = media.select("media_id", "content").rdd.flatMap { r =>
-      Option(r.getAs[Array[Byte]]("content"))
-        .flatMap(hashFn)
-        .map(h => Row(r.getAs[Long]("media_id"), h))
-    }
-    val sigs = spark.createDataFrame(rdd, StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("sig", LongType, nullable = false))))
-    Dedup.bandedHammingPairs(sigs, maxBits, maxBucket)
-  }
+      orientationNormalize: Boolean = false): DataFrame =
+    hashNearDupPairs(media,
+      if (orientationNormalize) orientedAHashBytes else aHashBytes, maxBits)
 
   /** Executor-side resize + feature-extract over a media table: one
     * mapPartitions pass computing the resized PNG's dimensions/bytes
@@ -865,19 +861,8 @@ object Multimodal {
     * pass, then the banded Hamming self-join shared with text SimHash
     * and image aHash ([[Dedup.bandedHammingPairs]]). Output
     * (a, b, dist), a < b. */
-  def audioNearDupPairs(media: DataFrame, maxBits: Int = 3,
-      maxBucket: Long = 10000L): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "content").rdd.flatMap { r =>
-      Option(r.getAs[Array[Byte]]("content"))
-        .flatMap(audioHashBytes)
-        .map(h => Row(r.getAs[Long]("media_id"), h))
-    }
-    val sigs = spark.createDataFrame(rdd, StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("sig", LongType, nullable = false))))
-    Dedup.bandedHammingPairs(sigs, maxBits, maxBucket)
-  }
+  def audioNearDupPairs(media: DataFrame, maxBits: Int = 3): DataFrame =
+    hashNearDupPairs(media, audioHashBytes, maxBits)
 
   /** INTEGER-EXACT audio features per row: sample count, energy
     * (Σ s² as a long — exact for any realistic clip: 16-bit² × count

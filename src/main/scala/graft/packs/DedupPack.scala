@@ -19,8 +19,8 @@ object DedupPack extends QueryPack {
   private[graft] val K = 8
   private[graft] val BANDS = 4
 
-  /** Σ bucket² verify budget for the CJK arm (Dedup.lshCandidates
-    * r21 scaladoc): the constant Korean phrases dominate enough band
+  /** Σ bucket² verify budget for the CJK arm (the graft.llm.Candidates
+    * scaladoc): the constant Korean phrases dominate enough band
     * keys that, at 10× the bench fixture, the capped buckets still
     * summed to Σ bn² = 30.8M (13M candidate pairs, ~4.3B verify rows —
     * OOM in the default 8 GiB bench JVM). 2M keeps the smallest size
@@ -492,7 +492,7 @@ object DedupPack extends QueryPack {
     * CTEs — shared by the ASCII ([[minhashSql]]) and CJK
     * ([[minhashCjkSql]]) arms, which differ ONLY in those two CTEs and
     * (r21) the CJK arm's Σ bucket² verify budget: `verifyBudget`
-    * mirrors Dedup.lshCandidates' s* size-class selection — keep the
+    * mirrors graft.llm.Candidates' s* size-class selection — keep the
     * ascending size classes whose cumulative Σ bn² fits the budget —
     * arm for arm (None = the plain ≤10000 cap, byte-identical to the
     * pre-r21 twin). */

@@ -29,16 +29,15 @@ object DocsStream {
     * `pairsOut/b<batchId>` and commits `stateBase/v<batchId>`. */
   def incrementalDedup(docs: DataFrame, initialState: DataFrame,
       stateBase: String, pairsOut: String, checkpoint: String,
-      k: Int = 8, bands: Int = 4, threshold: Double = 0.5,
-      maxBucket: Long = 10000L): StreamingQuery = {
+      k: Int = 8, bands: Int = 4,
+      threshold: Double = 0.5): StreamingQuery = {
     // Seeding is idempotent: same input → same bytes; a restart
     // overwrites v-1 with identical content before any batch reads it.
     initialState.write.mode("overwrite").parquet(s"$stateBase/v-1")
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, stateBase, pairsOut, k, bands,
-          threshold, maxBucket)
+        dedupBatch(batch, batchId, stateBase, pairsOut, k, bands, threshold)
       }
       .start()
   }
@@ -46,8 +45,7 @@ object DocsStream {
   /** One micro-batch commit (factored out for direct retry testing):
     * state_{<batchId} + batch → pairs/b<batchId> + state v<batchId>. */
   def dedupBatch(batch: DataFrame, batchId: Long, stateBase: String,
-      pairsOut: String, k: Int, bands: Int, threshold: Double,
-      maxBucket: Long): Unit = {
+      pairsOut: String, k: Int, bands: Int, threshold: Double): Unit = {
     val ss = batch.sparkSession
     val stateDir = EventsStream.currentStateVersion(ss, stateBase,
       below = batchId).getOrElse(throw new IllegalStateException(
@@ -57,8 +55,7 @@ object DocsStream {
     val sigs = Dedup.minhashState(batch, "id", "text", k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      Dedup.incrementalDupPairsFromSigs(state, sigs, k, bands, threshold,
-          maxBucket)
+      Dedup.incrementalDupPairsFromSigs(state, sigs, k, bands, threshold)
         .write.mode("overwrite").parquet(s"$pairsOut/b$batchId")
       state.unionByName(sigs)
         .write.mode("overwrite").parquet(s"$stateBase/v$batchId")

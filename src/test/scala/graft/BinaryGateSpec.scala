@@ -146,7 +146,7 @@ class BinaryGateSpec extends SparkSpec {
     val reg = Tables.load(spark, sfDir, "region")
       .select(col("r_regionkey").cast("string"), col("r_name"))
     val wb = Workbook("customer" -> cust, "region" -> reg)
-    val dir = java.nio.file.Files.createTempDirectory("binarygate_zip")
+    val dir = tempDir("binarygate_zip")
     val zip = dir.resolve("out.zip").toString
     wb.writeZip(zip, "out", "csv")(graft.packs.CoveragePack.csvBytes)
     // 1) the query's own method: streaming local-header walk

@@ -77,7 +77,7 @@ class PlanShapeSpec extends SparkSpec {
     // valid at ONE file per bucket — exactly what writeBucketed enforces).
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     try {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+      val scratch = tempDir("graft_bkt").toString
       graft.ops.Bucketing.writeBucketed(
         graft.core.Tables.load(spark, sf, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -151,13 +151,15 @@ class PlanShapeSpec extends SparkSpec {
     // in the LAZY library plan. (The dedup_minhash PACK query now
     // materializes inside withMinhashDupPairs and returns a checkpoint
     // scan — see CacheHygieneSpec — so the shape is asserted here on
-    // the library entry point, where the plan is still visible.)
+    // the library entry point, inside its callback, where the plan is
+    // still visible.)
     try {
       val d = graft.core.Tables.load(spark, sf, "documents")
         .select(org.apache.spark.sql.functions.col("doc_id").as("id"),
           org.apache.spark.sql.functions.col("text"))
-      val p = graft.llm.Dedup.minhashDupPairs(d, "id", "text", 8, 4, 0.5)
-        .queryExecution.executedPlan.toString
+      val p = graft.llm.Dedup.withMinhashDupPairs(d, "id", "text", 8, 4, 0.5) {
+        _.queryExecution.executedPlan.toString
+      }
       assert(p.contains("InMemoryTableScan"), p)
     } finally spark.catalog.clearCache()
   }
@@ -288,7 +290,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("limit pushdown reaches all three DSv2 scans (PushedLimit in the scan node)") {
-    val dir = java.nio.file.Files.createTempDirectory("limit_push")
+    val dir = tempDir("limit_push")
     // avro: 3-row limit over a written container dir
     val avroOut = dir.resolve("a").toString
     graft.avro.Avro.write(spark.range(1000).toDF("id"), avroOut)

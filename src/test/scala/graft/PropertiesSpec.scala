@@ -28,7 +28,7 @@ class PropertiesSpec extends SparkSpec {
       distinctRows.nonEmpty ==> {
         val df = distinctRows.map { case (k, a, b) => (k.toString, a.trim, b.trim) }
           .toDF("k", "a", "b")
-        val f = java.nio.file.Files.createTempDirectory("prop_csv").resolve("t.csv").toString
+        val f = tempDir("prop_csv").resolve("t.csv").toString
         graft.sinks.Csv.writeFile(df, f)
         val back = graft.sources.Text.readCsv(spark, f, Some(","))
           .orderBy(col("k").cast("int")).collect()
@@ -55,7 +55,7 @@ class PropertiesSpec extends SparkSpec {
       val distinctRows = rows.distinctBy(_._1)
       distinctRows.nonEmpty ==> {
         val df = distinctRows.map { case (k, a, b) => (k.toString, a, b) }.toDF("k", "a", "b")
-        val dir = java.nio.file.Files.createTempDirectory("prop_wb")
+        val dir = tempDir("prop_wb")
         val expect = distinctRows.sortBy(_._1).map { case (k, a, b) => (k.toString, a, b) }
         Seq("xlsx", "xls", "xlsb").forall { ext =>
           val f = dir.resolve(s"t.$ext").toString
@@ -87,7 +87,7 @@ class PropertiesSpec extends SparkSpec {
       distinctRows.nonEmpty ==> {
         val df = distinctRows.map { case (k, a, b) => (k.toString, a, b) }
           .toDF("k", "a", "b").repartition(2)
-        val dir = java.nio.file.Files.createTempDirectory("prop_xml").toString
+        val dir = tempDir("prop_xml").toString
         graft.xml.Xml.writeXmlParts(df, dir)
         val back = graft.xml.Xml.readXml(spark, dir, "row")
           .orderBy(col("k").cast("int")).collect()

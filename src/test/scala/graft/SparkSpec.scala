@@ -20,4 +20,8 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Fresh temp directory, deleted when the test JVM exits
+    * ([[graft.core.Scratch.dir]]): specs leave nothing in java.io.tmpdir. */
+  def tempDir(prefix: String): java.nio.file.Path = graft.core.Scratch.dir(prefix)
 }

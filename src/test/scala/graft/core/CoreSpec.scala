@@ -18,7 +18,7 @@ class CoreSpec extends SparkSpec {
   }
 
   test("TXT sink: value singletons raw, other schemas JSONL (K3)") {
-    val d1 = java.nio.file.Files.createTempDirectory("txtsink")
+    val d1 = tempDir("txtsink")
     CsvSink.writeTxt(Seq("one", "two").toDF("value"), d1.resolve("a").toString)
     val back = spark.read.text(d1.resolve("a").toString).as[String].collect().toSet
     assert(back == Set("one", "two"))
@@ -39,7 +39,7 @@ class CoreSpec extends SparkSpec {
     val wb = Workbook("full" -> Seq(("a")).toDF("value"),
       "empty" -> Seq.empty[String].toDF("value"))
     assert(wb.nonEmpty.names == Seq("full"))
-    val zip = java.nio.file.Files.createTempDirectory("wbzip").resolve("out.zip")
+    val zip = tempDir("wbzip").resolve("out.zip")
     wb.nonEmpty.writeZip(zip.toString, "base", "txt")(df =>
       df.collect().map(_.getString(0)).mkString("\n").getBytes("UTF-8"))
     val zis = new ZipInputStream(java.nio.file.Files.newInputStream(zip))
@@ -54,7 +54,7 @@ class CoreSpec extends SparkSpec {
     val wb = Workbook(
       "one" -> Seq(("1", "a,b"), ("2", "q\"q")).toDF("k", "v"),
       "two" -> Seq(("x", "y")).toDF("p", "q"))
-    val zip = java.nio.file.Files.createTempDirectory("wbzips").resolve("out.zip")
+    val zip = tempDir("wbzips").resolve("out.zip")
     wb.writeZipStreamed(zip.toString, "base", "csv")(graft.sinks.Csv.writeTo(_, _))
     val zis = new ZipInputStream(java.nio.file.Files.newInputStream(zip))
     val entries = Iterator.continually(zis.getNextEntry).takeWhile(_ != null).map { e =>
@@ -69,7 +69,7 @@ class CoreSpec extends SparkSpec {
   test("extension accept lists and (name,size) input dedup (P4/P5)") {
     assert(Workbook.accepted("compare", "A.JSON"))
     assert(!Workbook.accepted("excel-to-other", "a.csv"))
-    val dir = java.nio.file.Files.createTempDirectory("inputs")
+    val dir = tempDir("inputs")
     java.nio.file.Files.writeString(dir.resolve("a.csv"), "x,y\n1,2\n")
     java.nio.file.Files.writeString(dir.resolve("b.txt"), "hello\n")
     java.nio.file.Files.writeString(dir.resolve("c.pdf"), "%PDF-....")

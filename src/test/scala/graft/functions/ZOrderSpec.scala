@@ -101,7 +101,7 @@ class ZOrderSpec extends SparkSpec {
       boxes.count { case (dlo, dhi, hlo, hhi) =>
         dhi >= 5 && dlo <= 10 && hhi >= 6 && hlo <= 11 }
 
-    val scratch = java.nio.file.Files.createTempDirectory("graft_zorder_spec").toString
+    val scratch = tempDir("graft_zorder_spec").toString
     dims.withColumn("zk", ZOrderKey(col("dom"), col("hod")))
       .repartitionByRange(16, col("zk")).sortWithinPartitions("zk").drop("zk")
       .write.parquet(s"$scratch/zorder")

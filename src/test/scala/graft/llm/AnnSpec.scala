@@ -217,7 +217,7 @@ class AnnSpec extends SparkSpec {
 
   test("persisted index: reload + query == in-memory ivfTopK; probe prunes files") {
     val corpus = clustered
-    val idx = java.nio.file.Files.createTempDirectory("ann_idx_spec").toString
+    val idx = tempDir("ann_idx_spec").toString
     Ann.writeIndex(corpus, idx, nClusters, iters = 2, files = 5)
     val q = corpus.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("ce").as("qe"))
@@ -247,7 +247,7 @@ class AnnSpec extends SparkSpec {
 
   test("persisted IVF+PQ index: reload + ADC query == in-memory ivfpqTopK; probe prunes files") {
     val corpus = clustered
-    val idx = java.nio.file.Files.createTempDirectory("ann_pq_idx_spec").toString
+    val idx = tempDir("ann_pq_idx_spec").toString
     Ann.writeIndexPq(corpus, idx, nClusters, m = 4, ksub = 8, iters = 2, files = 5)
     Ann.verifyIndex(spark, idx, corpus)
     val q = corpus.filter(col("vec_id") % 100 === 0)
@@ -284,7 +284,7 @@ class AnnSpec extends SparkSpec {
     val corpus = clustered
     val base = corpus.filter(col("vec_id") % 5 =!= 0)
     val fresh = corpus.filter(col("vec_id") % 5 === 0)
-    val idx = java.nio.file.Files.createTempDirectory("ann_pq_inc_spec").toString
+    val idx = tempDir("ann_pq_inc_spec").toString
     Ann.writeIndexPq(base, idx, nClusters, m = 4, ksub = 8, iters = 2, files = 5)
     val filesBefore = graft.ops.FileIndex.indexedFileCount(spark, s"$idx/encoded")
     Ann.appendIndexPq(fresh, idx, files = 2)
@@ -318,7 +318,7 @@ class AnnSpec extends SparkSpec {
   test("appendIndexPq rejects a re-appended vec_id (fingerprint XOR-cancel guard)") {
     val corpus = clustered
     val base = corpus.filter(col("vec_id") % 5 =!= 0)
-    val idx = java.nio.file.Files.createTempDirectory("ann_pq_dup_spec").toString
+    val idx = tempDir("ann_pq_dup_spec").toString
     Ann.writeIndexPq(base, idx, nClusters, m = 4, ksub = 8, iters = 2, files = 5)
     // re-appending rows already in the index would serve them twice
     // AND XOR-cancel their checksum contribution — the guard fails
@@ -340,7 +340,7 @@ class AnnSpec extends SparkSpec {
     val base = corpus.filter(col("vec_id") % 5 =!= 0)
     val freshA = corpus.filter(col("vec_id") % 5 === 0 && col("vec_id") % 10 =!= 0)
     val freshB = corpus.filter(col("vec_id") % 10 === 0)
-    val idx = java.nio.file.Files.createTempDirectory("ann_pq_cmp_spec").toString
+    val idx = tempDir("ann_pq_cmp_spec").toString
     Ann.writeIndexPq(base, idx, nClusters, m = 4, ksub = 8, iters = 2, files = 5)
     Ann.appendIndexPq(freshA, idx, files = 2)
     Ann.appendIndexPq(freshB, idx, files = 2)
@@ -375,7 +375,7 @@ class AnnSpec extends SparkSpec {
     val corpus = clustered
     val base = corpus.filter(col("vec_id") % 5 =!= 0)
     val fresh = corpus.filter(col("vec_id") % 5 === 0)
-    val idx = java.nio.file.Files.createTempDirectory("ann_pq_torn_spec").toString
+    val idx = tempDir("ann_pq_torn_spec").toString
     Ann.writeIndexPq(base, idx, nClusters, m = 4, ksub = 8, iters = 2, files = 5)
     Ann.appendIndexPq(fresh, idx, files = 2)
     val q = corpus.filter(col("vec_id") % 100 === 0)
@@ -409,7 +409,7 @@ class AnnSpec extends SparkSpec {
 
   test("persisted index: staleness fingerprint accepts the built corpus, rejects a refresh") {
     val corpus = clustered
-    val idx = java.nio.file.Files.createTempDirectory("ann_idx_fp").toString
+    val idx = tempDir("ann_idx_fp").toString
     Ann.writeIndex(corpus, idx, nClusters, iters = 2, files = 5)
     // the corpus that was indexed verifies clean — row order must not
     // matter (the checksum is an XOR, partitioning-independent)

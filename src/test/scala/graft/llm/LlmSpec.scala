@@ -20,8 +20,8 @@ class LlmSpec extends SparkSpec {
   }
 
   test("minhash LSH surfaces near-dup pair, jaccard in (0,1] (no all-pairs)") {
-    val pairs = Dedup.minhashDupPairs(docs, "id", "text", threshold = 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val pairs = Dedup.withMinhashDupPairs(docs, "id", "text", threshold = 0.3)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.exists(p => p._1 == 1 && p._2 == 2))
     assert(pairs.forall(p => p._3 > 0 && p._3 <= 10000))
     assert(!pairs.exists(p => p._2 == 3)) // dissimilar doc not paired
@@ -81,12 +81,11 @@ class LlmSpec extends SparkSpec {
       (1L, "대규모한국어말뭉치중복제거파이프라인검사"),
       (2L, "대규모한국어말뭉치중복제거파이프라인검사갑"),
       (3L, "완전히다른내용의문서이며겹치지않는다")).toDF("id", "text")
-    val cjk = Dedup.minhashDupPairs(ko, "id", "text", threshold = 0.5,
-      cjkAware = true).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val cjk = Dedup.withMinhashDupPairs(ko, "id", "text", threshold = 0.5,
+      cjkAware = true)(_.collect()).map(r => (r.getLong(0), r.getLong(1)))
     assert(cjk.contains((1L, 2L)), "near-dup must surface under cjkAware")
     assert(!cjk.exists(p => p._2 == 3L), "dissimilar doc must not pair")
-    val plain = Dedup.minhashDupPairs(ko, "id", "text", threshold = 0.1)
-      .collect()
+    val plain = Dedup.withMinhashDupPairs(ko, "id", "text", threshold = 0.1)(_.collect())
     assert(plain.isEmpty, "space-split shingles cannot see the near-dup")
   }
 
@@ -255,20 +254,21 @@ class LlmSpec extends SparkSpec {
 
   test("LSH bucket cap drops degenerate hot buckets (skew guard)") {
     // 3000 identical docs collapse into one band bucket per band — the
-    // uncapped self-join would be ~4 * 3000^2 = 36M pairs. With the cap
-    // they are dropped (they belong to exact dedup); a small near-dup
-    // cluster under the cap still pairs.
+    // uncapped self-join would be ~4 * 3000^2 = 36M pairs. With a cap of
+    // 100 (the candidate join's test seam) they are dropped (they belong
+    // to exact dedup); a small near-dup cluster under the cap still
+    // pairs.
     val hot = (1L to 3000L).map(i => (i, "the same exact boilerplate text repeated"))
     val near = Seq((100001L, "a rare document about spark engines"),
       (100002L, "a rare document about spark engines zzz"))
     val docs = (hot ++ near).toDF("id", "text")
     val sh = Dedup.shingles(docs, "id", "text")
     val bands = Dedup.lshBands(Dedup.minhashSignatures(sh), 8, 4)
-    val cand = Dedup.lshCandidates(bands, maxBucket = 100).collect()
+    val cand = new Candidates(100).selfPairs(bands, Seq("bk")).collect()
     assert(cand.length < 10, s"cap failed: ${cand.length} candidate pairs")
     assert(cand.exists(r => r.getLong(0) == 100001L && r.getLong(1) == 100002L))
-    // sanity: uncapped candidates on just the hot set would be quadratic
-    val hotPairs = Dedup.lshCandidates(bands, maxBucket = 10000L)
+    // sanity: under the production cap the hot set pairs quadratically
+    val hotPairs = Dedup.lshCandidates(bands)
     assert(hotPairs.count() > 3000L * 2999L / 2)
   }
 
@@ -590,7 +590,7 @@ class LlmSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getSeq[String](2), r.getInt(3)))
       .sortBy(_._1).toSeq
     // byte-level artifact
-    val dirB = java.nio.file.Files.createTempDirectory("bpe_tok_b").toString
+    val dirB = tempDir("bpe_tok_b").toString
     Bpe.writeTokenizer(hist, 20, dirB, byteLevel = true)
     val (mB, flagB) = Bpe.loadTokenizer(spark, dirB)
     assert(flagB)
@@ -600,7 +600,7 @@ class LlmSpec extends SparkSpec {
     assert(enc(Bpe.encodeWithTokenizer(hist, dirB)) ==
       enc(Bpe.encode(hist, mB, byteLevel = true)))
     // char-level artifact: the mode flag routes to the char replay
-    val dirC = java.nio.file.Files.createTempDirectory("bpe_tok_c").toString
+    val dirC = tempDir("bpe_tok_c").toString
     Bpe.writeTokenizer(hist, 20, dirC, byteLevel = false)
     val (mC, flagC) = Bpe.loadTokenizer(spark, dirC)
     assert(!flagC)
@@ -994,13 +994,66 @@ class LlmSpec extends SparkSpec {
   }
 
   test("simhash band bucket cap: fully saturated identical docs drop to exact dedup") {
-    val docs = (0 until 50).map(i => (i.toLong, "all docs identical text here"))
+    def identical(n: Int) = (0 until n).map(i => (i.toLong, "all docs identical text here"))
       .toDF("id", "text")
-    // every band bucket holds all 50 docs -> over an maxBucket of 10,
-    // all four bands drop and no pair survives (exact dedup's job)
-    assert(Dedup.simhashBandedPairs(docs, "id", "text", maxBucket = 10).count() == 0)
-    // uncapped, the same corpus pairs completely at distance 0
-    assert(Dedup.simhashBandedPairs(docs, "id", "text").count() == 50L * 49 / 2)
+    // every band bucket holds all 10001 docs -> one over the 10000-doc
+    // cap, all four bands drop and no pair survives (exact dedup's job)
+    assert(Dedup.simhashBandedPairs(identical(10001), "id", "text").count() == 0)
+    // under the cap, 50 such docs pair completely at distance 0
+    assert(Dedup.simhashBandedPairs(identical(50), "id", "text").count() == 50L * 49 / 2)
+  }
+
+  /** 16 distinct words: a one-token edit keeps shingle Jaccard at 14/15. */
+  private val plantBase = (1 to 16).map(i => s"w$i").mkString(" ")
+
+  test("prefixFilterPairs bucket cap: a prefix token held by more than 10000 docs yields no pair") {
+    // 10001 identical docs put the same rarest shingles in every
+    // prefix: each such posting list is one over the cap, so it drops
+    // before the self-join (the copies are exact dedup's job). A
+    // planted near-dup pair on its own vocabulary still pairs.
+    val hot = (1L to 10001L).map(i => (i, "the same exact boilerplate text"))
+    val near = Seq((200001L, plantBase), (200002L, plantBase + " tail"))
+    val sh = Dedup.shingles((hot ++ near).toDF("id", "text"), "id", "text")
+    val got = Dedup.prefixFilterPairs(sh, 5000L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((200001L, 200002L, 9333L)), s"got $got")
+  }
+
+  test("crossCorpusPairs bucket cap: the 10000-doc cap applies per side") {
+    // train: 10000 copies of hotA (at the cap) and 10001 of hotB (one
+    // over); eval: one copy of each. hotA's buckets exceed the cap only
+    // when both sides are counted, so every train copy pairs with it;
+    // hotB's train side is over the cap, so nothing pairs with it.
+    val hotA = "alpha beta gamma delta epsilon zeta"
+    val hotB = "one two three four five six"
+    val train = ((1L to 10000L).map(i => (i, hotA)) ++
+      (10001L to 20001L).map(i => (i, hotB)) :+ ((30000L, plantBase)))
+      .toDF("id", "text")
+    val eval = Seq((1000001L, hotA), (1000002L, hotB),
+      (1000003L, plantBase + " tail")).toDF("id", "text")
+    val got = Dedup.crossCorpusPairs(train, eval, "id", "text", 8, 4, 5000L)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.count(_._2 == 1000001L) == 10000)
+    assert(!got.exists(_._2 == 1000002L), "over-cap train bucket must not pair")
+    assert(got.contains((30000L, 1000003L)), "planted near-dup must pair")
+    spark.catalog.clearCache()
+  }
+
+  test("incrementalDupPairs bucket cap: the 10000-doc cap counts old ∪ new") {
+    // 10000 state docs share every band with one new copy: the state
+    // side is at the cap and the batch side far under it, but their
+    // union is one over, so the copy pairs with none of them. A planted
+    // one-token edit of another state doc still pairs.
+    val hot = "the same exact boilerplate text repeated"
+    val old = ((1L to 10000L).map(i => (i, hot)) :+ ((20000L, plantBase)))
+      .toDF("id", "text")
+    val fresh = Seq((1000001L, hot), (1000002L, plantBase + " tail"))
+      .toDF("id", "text")
+    val got = Dedup.incrementalDupPairs(Dedup.minhashState(old, "id", "text"),
+        fresh, "id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(!got.exists(_._2 == 1000001L), "over-cap union bucket must not pair")
+    assert(got.contains((20000L, 1000002L)), "planted near-dup must pair")
   }
 
   test("property: prefixFilterPairs equals brute-force exact Jaccard (lossless recall)") {

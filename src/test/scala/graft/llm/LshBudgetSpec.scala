@@ -54,13 +54,13 @@ class LshBudgetSpec extends SparkSpec {
     val sumSq = sizes.map(s => s.toLong * s).sum
     val budget = sumSq / 3 // force the budget to bind
     assert(budget >= 1, s"degenerate fixture: sumSq=$sumSq")
-    val got = Dedup.lshCandidates(bandsDf, 10000L, budget)
+    val got = Dedup.lshCandidates(bandsDf, budget)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = reference(rows, 10000L, budget)
+    val want = reference(rows, Candidates.MaxBucket, budget)
     assert(got == want,
       s"only-engine=${(got -- want).take(3)} only-ref=${(want -- got).take(3)}")
     assert(got.nonEmpty, "budget dropped everything — fixture too hot")
-    val unbudgeted = Dedup.lshCandidates(bandsDf, 10000L)
+    val unbudgeted = Dedup.lshCandidates(bandsDf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.subsetOf(unbudgeted) && got != unbudgeted,
       "binding budget must strictly shrink the candidate set")
@@ -70,12 +70,12 @@ class LshBudgetSpec extends SparkSpec {
     val bandsDf = docs.toDF("id", "text")
       .transform(d => Dedup.lshBands(
         Dedup.minhashSignatures(Dedup.shingles(d, "id", "text"), 8), 8, 4))
-    val plain = Dedup.lshCandidates(bandsDf, 10000L)
+    val plain = Dedup.lshCandidates(bandsDf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val loose = Dedup.lshCandidates(bandsDf, 10000L, Long.MaxValue / 2)
+    val loose = Dedup.lshCandidates(bandsDf, Long.MaxValue / 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(loose == plain)
-    val none = Dedup.lshCandidates(bandsDf, 10000L, 0L).collect()
+    val none = Dedup.lshCandidates(bandsDf, 0L).collect()
     assert(none.isEmpty)
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 class CompactSpec extends SparkSpec {
 
   test("compaction shrinks the file count to the size-derived target and loses nothing") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_spec").toString
+    val base = tempDir("graft_compact_spec").toString
     val src = Tables.load(spark, sf, "documents").select("doc_id", "source", "n_chars")
     src.repartition(32).write.parquet(s"$base/frag")
 

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -8,7 +7,7 @@ class FileIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private def indexed(n: Int, parts: Int): String = {
-    val dir = Files.createTempDirectory("fidx").resolve("t").toString
+    val dir = tempDir("fidx").resolve("t").toString
     val df = spark.range(n).select(col("id"), (col("id") % 7).as("v"))
     FileIndex.writeIndexed(df.toDF("id", "v"), dir, "id", parts)
     dir
@@ -64,7 +63,7 @@ class FileIndexSpec extends SparkSpec {
   }
 
   private def bloomIndexed(n: Int, parts: Int): String = {
-    val dir = Files.createTempDirectory("fbloom").resolve("t").toString
+    val dir = tempDir("fbloom").resolve("t").toString
     // cluster by id; the lookup column `u` is id-scrambled so each
     // value lands in exactly one file but min/max on id can't see it
     val df = spark.range(n)
@@ -74,7 +73,7 @@ class FileIndexSpec extends SparkSpec {
   }
 
   test("footer stats agree with the bytes: row counts sum to the table, lo/hi match a recompute") {
-    val dir = Files.createTempDirectory("ffoot").resolve("t").toString
+    val dir = tempDir("ffoot").resolve("t").toString
     spark.range(5000).select(col("id"), (col("id") % 3).as("v"))
       .repartitionByRange(5, col("id")).sortWithinPartitions("id")
       .write.parquet(dir)

@@ -10,7 +10,7 @@ class LedgerSpec extends SparkSpec {
   import spark.implicits._
 
   test("uncommitted files resurface; committed files never do; empty dir is a no-op") {
-    val base = java.nio.file.Files.createTempDirectory("ledger_spec")
+    val base = tempDir("ledger_spec")
     val in = base.resolve("in").toString
     val led = base.resolve("ledger").toString
 

@@ -11,7 +11,7 @@ class WapSpec extends SparkSpec {
   import spark.implicits._
 
   test("a failing audit blocks publication; staging is not promoted") {
-    val base = java.nio.file.Files.createTempDirectory("wap_neg")
+    val base = tempDir("wap_neg")
     val staging = base.resolve("staging")
     val published = base.resolve("published")
     // candidate with a duplicate key AND a bad status value
@@ -30,7 +30,7 @@ class WapSpec extends SparkSpec {
   }
 
   test("optimistic commit race: exactly ONE of two concurrent stagers promotes") {
-    val table = java.nio.file.Files.createTempDirectory("wap_cas").toString
+    val table = tempDir("wap_cas").toString
     val a = Wap.stage(Seq((1L, "A")).toDF("k", "who"), table, "writerA")
     val b = Wap.stage(Seq((2L, "B")).toDF("k", "who"), table, "writerB")
     // both writers observed the same head before either committed
@@ -66,7 +66,7 @@ class WapSpec extends SparkSpec {
   }
 
   test("a claimed-but-unpublished lock keeps the previous snapshot live; retry is bounded") {
-    val table = java.nio.file.Files.createTempDirectory("wap_lock").toString
+    val table = tempDir("wap_lock").toString
     val p1 = Wap.stage(Seq((1L, "x")).toDF("k", "v"), table, "w1")
     assert(Wap.tryPublish(table, 0L, p1) == 1L)
     // simulate a writer that claimed v2 and crashed before the manifest
@@ -80,7 +80,7 @@ class WapSpec extends SparkSpec {
   }
 
   test("time travel reads any published version; unpublished versions fail loud") {
-    val table = java.nio.file.Files.createTempDirectory("wap_tt").toString
+    val table = tempDir("wap_tt").toString
     Wap.publishWithRetry(table, Wap.stage(Seq((1L, "a")).toDF("k", "v"), table, "v1"))
     Wap.publishWithRetry(table,
       Wap.stage(Seq((1L, "a2"), (2L, "b")).toDF("k", "v"), table, "v2"))
@@ -99,7 +99,7 @@ class WapSpec extends SparkSpec {
   }
 
   test("rollback re-publishes an old snapshot as a NEW head; history stays append-only") {
-    val table = java.nio.file.Files.createTempDirectory("wap_rb").toString
+    val table = tempDir("wap_rb").toString
     Wap.publishWithRetry(table, Wap.stage(Seq((1L, "good")).toDF("k", "v"), table, "v1"))
     Wap.publishWithRetry(table, Wap.stage(Seq((9L, "bad")).toDF("k", "v"), table, "v2"))
     val head = Wap.rollbackTo(table, 1L)
@@ -112,7 +112,7 @@ class WapSpec extends SparkSpec {
   }
 
   test("change feed classifies insert/delete/update/unchanged; NULL flips are updates") {
-    val table = java.nio.file.Files.createTempDirectory("wap_cdf").toString
+    val table = tempDir("wap_cdf").toString
     val v1 = Seq((1L, Option("keep"), 10), (2L, Option("old"), 20),
       (3L, Option("gone"), 30), (5L, None: Option[String], 50))
       .toDF("k", "s", "n")

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,7 +10,7 @@ class AvroSpec extends SparkSpec {
   import spark.implicits._
 
   private def scratch(name: String): String =
-    Files.createTempDirectory(s"avro_spec_$name").resolve("out").toString
+    tempDir(s"avro_spec_$name").resolve("out").toString
 
   test("schema mapping round-trips all supported types and nullability") {
     val st = StructType(Seq(

@@ -7,7 +7,7 @@ class FwfSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).resolve("out").toString
+    tempDir(name).resolve("out").toString
 
   test("fwf roundtrip: values, nulls, empties; offsets are prefix sums of widths") {
     val df = Seq(

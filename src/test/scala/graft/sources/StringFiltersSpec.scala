@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class StringFiltersSpec extends SparkSpec {
 
   private def writeXml(rows: Seq[(String, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("sfprop")
+    val d = tempDir("sfprop")
     val sb = new StringBuilder("<rows>")
     rows.foreach { case (a, b) =>
       sb.append("<row><a>").append(graft.xml.Xml.esc(a)).append("</a><b>")

@@ -6,7 +6,7 @@ import graft.SparkSpec
 class TextSpec extends SparkSpec {
 
   private def tmpFile(name: String, content: Array[Byte]): String = {
-    val d = Files.createTempDirectory("textspec")
+    val d = tempDir("textspec")
     val f = d.resolve(name)
     Files.write(f, content)
     f.toString

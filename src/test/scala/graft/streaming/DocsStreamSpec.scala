@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.llm.Dedup
@@ -16,7 +15,7 @@ class DocsStreamSpec extends SparkSpec {
   }
 
   test("dedupBatch retry is idempotent: a torn batch re-run reproduces identical output") {
-    val base = Files.createTempDirectory("docs_retry")
+    val base = tempDir("docs_retry")
     val stateBase = base.resolve("state").toString
     val pairs = base.resolve("pairs").toString
     val a = corpus(15)
@@ -24,13 +23,13 @@ class DocsStreamSpec extends SparkSpec {
       .write.parquet(s"$stateBase/v-1")
     val batch = a.select((col("id") + 100).as("id"), col("text")) // exact copies
     // first attempt commits pairs/b0 and state v0...
-    DocsStream.dedupBatch(batch, 0L, stateBase, pairs, 8, 4, 0.5, 10000L)
+    DocsStream.dedupBatch(batch, 0L, stateBase, pairs, 8, 4, 0.5)
     val firstPairs = spark.read.parquet(s"$pairs/b0")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val firstState = spark.read.parquet(s"$stateBase/v0").count()
     // ...then the checkpoint commit "fails" and the batch re-runs:
     // it must read v-1 again (strictly below 0), not its own v0
-    DocsStream.dedupBatch(batch, 0L, stateBase, pairs, 8, 4, 0.5, 10000L)
+    DocsStream.dedupBatch(batch, 0L, stateBase, pairs, 8, 4, 0.5)
     val retryPairs = spark.read.parquet(s"$pairs/b0")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(retryPairs == firstPairs)
@@ -40,14 +39,14 @@ class DocsStreamSpec extends SparkSpec {
   }
 
   test("vacuumStateVersions keeps the newest N, deletes the rest, respects v-1 seeds") {
-    val base = Files.createTempDirectory("docs_vacuum")
+    val base = tempDir("docs_vacuum")
     val stateBase = base.resolve("state").toString
     val a = corpus(8)
     Dedup.minhashState(a, "id", "text").write.parquet(s"$stateBase/v-1")
     DocsStream.dedupBatch(a.select((col("id") + 100).as("id"), col("text")),
-      0L, stateBase, base.resolve("p").toString, 8, 4, 0.5, 10000L)
+      0L, stateBase, base.resolve("p").toString, 8, 4, 0.5)
     DocsStream.dedupBatch(a.select((col("id") + 200).as("id"), col("text")),
-      1L, stateBase, base.resolve("p").toString, 8, 4, 0.5, 10000L)
+      1L, stateBase, base.resolve("p").toString, 8, 4, 0.5)
     // three versions on disk: v-1, v0, v1 -> keep 2 deletes only v-1
     val deleted = EventsStream.vacuumStateVersions(spark, stateBase, keep = 2)
     assert(deleted.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("v-1"))
@@ -62,7 +61,7 @@ class DocsStreamSpec extends SparkSpec {
   }
 
   test("two-batch stream state accumulates: batch 1 pairs against batch 0's docs") {
-    val base = Files.createTempDirectory("docs_accum")
+    val base = tempDir("docs_accum")
     val stateBase = base.resolve("state").toString
     val pairs = base.resolve("pairs").toString
     val a = corpus(10)
@@ -71,8 +70,8 @@ class DocsStreamSpec extends SparkSpec {
     val b0 = corpus(10).select((col("id") + 500).as("id"),
       concat(lit("novel "), col("text"), lit(" words")).as("text"))
     val b1 = b0.select((col("id") + 100).as("id"), col("text"))
-    DocsStream.dedupBatch(b0, 0L, stateBase, pairs, 8, 4, 0.5, 10000L)
-    DocsStream.dedupBatch(b1, 1L, stateBase, pairs, 8, 4, 0.5, 10000L)
+    DocsStream.dedupBatch(b0, 0L, stateBase, pairs, 8, 4, 0.5)
+    DocsStream.dedupBatch(b1, 1L, stateBase, pairs, 8, 4, 0.5)
     val got = spark.read.parquet(s"$pairs/b1")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // each b1 copy must have found its b0 original — which lives only

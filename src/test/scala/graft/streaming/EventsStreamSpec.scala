@@ -121,7 +121,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("materializeLatest never regresses a key to an older row (out-of-order redelivery)") {
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("cdc_spec")
+    val base = tempDir("cdc_spec")
     val src = MemoryStream[Event]
     val q = EventsStream.materializeLatest(src.toDF(),
       base.resolve("state").toString, base.resolve("ckpt").toString)
@@ -145,7 +145,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("materializeLatest restarts from its checkpoint: old batches never re-run, new files process") {
     import org.apache.spark.sql.functions.{col, lit}
-    val base = java.nio.file.Files.createTempDirectory("cdc_restart")
+    val base = tempDir("cdc_restart")
     val in = base.resolve("in"); java.nio.file.Files.createDirectories(in)
     val state = base.resolve("state").toString
     val ckpt = base.resolve("ckpt").toString
@@ -189,7 +189,7 @@ class EventsStreamSpec extends SparkSpec {
     // and overwrite the same path (Spark refuses, and the query would
     // fail identically on every restart). Simulated by invoking the
     // extracted per-batch commit directly, twice with the same id.
-    val base = java.nio.file.Files.createTempDirectory("cdc_retry")
+    val base = tempDir("cdc_retry")
     val state = base.resolve("state").toString
     def batchDf(rows: (Long, String, Long, Double)*) =
       rows.map { case (eid, t, uid, v) => Event(eid, ts(t), uid, "view", v) }
@@ -214,7 +214,7 @@ class EventsStreamSpec extends SparkSpec {
   }
 
   test("kmv sketch state: redelivery is absorbed, merge accumulates, torn-batch retry is idempotent") {
-    val base = java.nio.file.Files.createTempDirectory("kmv_retry")
+    val base = tempDir("kmv_retry")
     val state = base.resolve("state").toString
     def batchDf(rows: (Long, String, Long)*) =
       rows.map { case (eid, t, uid) => Event(eid, ts(t), uid, "view", 1.0) }.toDF()
@@ -246,7 +246,7 @@ class EventsStreamSpec extends SparkSpec {
     import graft.functions.Cms
     import org.apache.spark.sql.functions.{col, explode}
     val w = 1024
-    val base = java.nio.file.Files.createTempDirectory("cms_retry")
+    val base = tempDir("cms_retry")
     val state = base.resolve("state").toString
     def batchDf(rows: (Long, String, String)*) =
       rows.map { case (eid, t, typ) => Event(eid, ts(t), 1L, typ, 1.0) }.toDF()
@@ -299,7 +299,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("moments state: disjoint batches add exactly, torn-batch retry is idempotent") {
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("mom_retry")
+    val base = tempDir("mom_retry")
     val state = base.resolve("state").toString
     def batchDf(rows: (Long, String, Double)*) =
       rows.map { case (eid, t, v) => Event(eid, ts(t), 1L, "view", v) }.toDF()
@@ -322,7 +322,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("cusum state: calibrate-then-monitor fold carries its place; torn retry idempotent") {
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("cusum_retry")
+    val base = tempDir("cusum_retry")
     val state = base.resolve("state").toString
     def batchDf(rows: (Long, String)*) =
       rows.zipWithIndex.map { case ((_, t), i) =>
@@ -349,7 +349,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("cusum/holt state: an initial empty micro-batch is a no-op, not a crash") {
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("cusum_empty")
+    val base = tempDir("cusum_empty")
     val cusumState = base.resolve("cusum").toString
     val holtState = base.resolve("holt").toString
     val empty = Seq.empty[Event].toDF()
@@ -374,7 +374,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("holt stream state: fold continuity — two batches equal the single shot; retry idempotent") {
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("holt_retry")
+    val base = tempDir("holt_retry")
     val state = base.resolve("state").toString
     // hourly counts 1,3,2,4 on hours 10..13, split 2+2 across batches
     def hourEvents(hour: Int, k: Int): Seq[Event] =
@@ -397,7 +397,7 @@ class EventsStreamSpec extends SparkSpec {
   }
 
   test("runToFiles: deployable file-source → parquet-sink pipeline (§2.11)") {
-    val base = java.nio.file.Files.createTempDirectory("evstream")
+    val base = tempDir("evstream")
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
     // The streaming file source takes a directory — stage the fixture

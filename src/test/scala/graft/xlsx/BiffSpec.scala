@@ -8,7 +8,7 @@ class BiffSpec extends SparkSpec {
   test(".xls write → read round-trips multiple sheets (P4 legacy path)") {
     val s1 = Seq(("1", "a&<b>", ""), ("2", "plain", "x")).toDF("id", "v", "w")
     val s2 = Seq(("only", "row")).toDF("p", "q")
-    val f = java.nio.file.Files.createTempDirectory("biffspec").resolve("wb.xls").toString
+    val f = tempDir("biffspec").resolve("wb.xls").toString
     Biff.writeWorkbook(Seq("first" -> s1, "second" -> s2), f)
     val back = Biff.readWorkbook(spark, f)
     assert(back.map(_._1) == Seq("first", "second"))
@@ -39,7 +39,7 @@ class BiffSpec extends SparkSpec {
       numberRec(1, 0, 3.0) ++ numberRec(1, 1, 2.5) ++
       mulrk ++ boolRec ++
       Biff.rec(0x000A, Array.empty)
-    val f = java.nio.file.Files.createTempDirectory("biffnum").resolve("n.xls").toString
+    val f = tempDir("biffnum").resolve("n.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f),
       Biff.cfbBytes(Biff.workbookStream(Seq("nums" -> sheet))))
     val rows = Biff.readWorkbook(spark, f).head._2.orderBy("a").collect()
@@ -72,7 +72,7 @@ class BiffSpec extends SparkSpec {
       formulaRec(1, 2, specialNum(1, 1)) ++        // boolean TRUE
       formulaRec(1, 3, specialNum(2, 0x2A)) ++     // error → no value → ''
       Biff.rec(0x000A, Array.empty)
-    val f = java.nio.file.Files.createTempDirectory("bifffml").resolve("f.xls").toString
+    val f = tempDir("bifffml").resolve("f.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f),
       Biff.cfbBytes(Biff.workbookStream(Seq("fml" -> sheet))))
     val rows = Biff.readWorkbook(spark, f).head._2.collect()
@@ -98,7 +98,7 @@ class BiffSpec extends SparkSpec {
       Biff.rec(0x0207, strPayload) ++
       Biff.rec(0x003C, contPayload) ++
       Biff.rec(0x000A, Array.empty)
-    val f = java.nio.file.Files.createTempDirectory("biffstrc").resolve("c.xls").toString
+    val f = tempDir("biffstrc").resolve("c.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f),
       Biff.cfbBytes(Biff.workbookStream(Seq("s" -> sheet))))
     val rows = Biff.readWorkbook(spark, f).head._2.collect()
@@ -127,7 +127,7 @@ class BiffSpec extends SparkSpec {
     val stream = Biff.bof(0x0005) ++ Biff.boundsheet(globalsSize, "s") ++
       Biff.rec(0x00FC, sstPayload) ++ Biff.rec(0x003C, continuePayload) ++
       Biff.rec(0x000A, Array.empty) ++ sheet
-    val f = java.nio.file.Files.createTempDirectory("biffsst").resolve("s.xls").toString
+    val f = tempDir("biffsst").resolve("s.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f), Biff.cfbBytes(stream))
     val df = Biff.readWorkbook(spark, f).head._2
     // header row = "alpha"; one data row = "long-tail"
@@ -158,7 +158,7 @@ class BiffSpec extends SparkSpec {
       Biff.rec(0x00FC, sstPayload).length + Biff.rec(0x000A, Array.empty).length
     val stream = Biff.bof(0x0005) ++ Biff.boundsheet(globalsSize, "s") ++
       Biff.rec(0x00FC, sstPayload) ++ Biff.rec(0x000A, Array.empty) ++ sheet
-    val f = java.nio.file.Files.createTempDirectory("biffrs").resolve("r.xls").toString
+    val f = tempDir("biffrs").resolve("r.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f), Biff.cfbBytes(stream))
     val rows = Biff.readWorkbook(spark, f).head._2.collect()
     assert(rows.length == 1)
@@ -170,7 +170,7 @@ class BiffSpec extends SparkSpec {
     // overflows into chained DIFAT sectors, which the reader follows.
     val df = spark.range(30000).selectExpr(
       ("CAST(id AS STRING) AS id" +: (1 to 9).map(i => s"repeat('x', 30) AS c$i")): _*)
-    val f = java.nio.file.Files.createTempDirectory("biffdifat").resolve("big.xls").toString
+    val f = tempDir("biffdifat").resolve("big.xls").toString
     Biff.writeWorkbook(Seq("big" -> df), f)
     assert(java.nio.file.Files.size(java.nio.file.Paths.get(f)) > 109 * 128 * 512L)
     val back = Biff.readWorkbook(spark, f).head._2
@@ -181,7 +181,7 @@ class BiffSpec extends SparkSpec {
 
   test("dispatcher routes .xls through Biff and rejects unknown extensions") {
     val s1 = Seq(("1", "x")).toDF("id", "v")
-    val xls = java.nio.file.Files.createTempDirectory("anyxls").resolve("wb.xls").toString
+    val xls = tempDir("anyxls").resolve("wb.xls").toString
     Biff.writeWorkbook(Seq("s" -> s1), xls)
     assert(Xlsx.readAnyWorkbook(spark, xls).head._2.count() == 1)
     intercept[IllegalArgumentException] {

@@ -14,7 +14,7 @@ class InteropSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeTmp(ext: String)(write: String => Unit): Array[Byte] = {
-    val f = Files.createTempDirectory("interop").resolve(s"wb.$ext")
+    val f = tempDir("interop").resolve(s"wb.$ext")
     write(f.toString)
     Files.readAllBytes(f)
   }
@@ -152,13 +152,13 @@ class InteropSpec extends SparkSpec {
     // 65535 data rows + 1 header row = 65536 grid rows: the exact BIFF8
     // ceiling — must succeed. One more data row must fail loud.
     val fits = spark.range(65535).selectExpr("CAST(id AS STRING) AS id")
-    val f = Files.createTempDirectory("xlscap").resolve("cap.xls").toString
+    val f = tempDir("xlscap").resolve("cap.xls").toString
     Biff.writeWorkbook(Seq("cap" -> fits), f)
     assert(Files.size(Paths.get(f)) > 0)
     val over = spark.range(65536).selectExpr("CAST(id AS STRING) AS id")
     val e = intercept[IllegalArgumentException] {
       Biff.writeWorkbook(Seq("over" -> over),
-        Files.createTempDirectory("xlscap2").resolve("over.xls").toString)
+        tempDir("xlscap2").resolve("over.xls").toString)
     }
     assert(e.getMessage.contains("65536"), s"error must name the format cap: ${e.getMessage}")
   }

@@ -8,7 +8,7 @@ class XlsbSpec extends SparkSpec {
   test(".xlsb write → read round-trips multiple sheets through the dispatcher (P4)") {
     val s1 = Seq(("1", "a&<b>", ""), ("2", "plain", "x")).toDF("id", "v", "w")
     val s2 = Seq(("only", "row")).toDF("p", "q")
-    val f = java.nio.file.Files.createTempDirectory("xlsbspec").resolve("wb.xlsb").toString
+    val f = tempDir("xlsbspec").resolve("wb.xlsb").toString
     Xlsb.writeWorkbook(Seq("first" -> s1, "second" -> s2), f)
     val back = Xlsx.readAnyWorkbook(spark, f)
     assert(back.map(_._1) == Seq("first", "second"))
@@ -28,7 +28,7 @@ class XlsbSpec extends SparkSpec {
     val n = 200000
     val big = spark.range(1, n + 1L)
       .selectExpr("CAST(id AS STRING) AS id", "concat('v&', id) AS v", "repeat('x', 20) AS pad")
-    val f = java.nio.file.Files.createTempDirectory("xlsbbig").resolve("big.xlsb").toString
+    val f = tempDir("xlsbbig").resolve("big.xlsb").toString
     Xlsb.writeWorkbook(Seq("big" -> big), f)
     val zis = new java.util.zip.ZipInputStream(new java.io.FileInputStream(f))
     var rows = -1L
@@ -88,7 +88,7 @@ class XlsbSpec extends SparkSpec {
       Xlsb.rec(19, Array(0.toByte) ++ Xlsb.wide("shared1")) ++
       Xlsb.rec(19, Array(0.toByte) ++ Xlsb.wide("shared2")) ++
       Xlsb.rec(160, Array.empty)
-    val d = java.nio.file.Files.createTempDirectory("xlsbrec")
+    val d = tempDir("xlsbrec")
     val f = d.resolve("wb.xlsb").toString
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(f))
     def put(name: String, content: Array[Byte]): Unit = {
@@ -108,7 +108,7 @@ class XlsbSpec extends SparkSpec {
     // module's defined error, never a raw ArrayIndexOutOfBoundsException.
     val wb = Xlsb.workbookBin(Seq("sheet_with_a_name"))
     val truncated = wb.take(wb.length - 7)
-    val f = java.nio.file.Files.createTempDirectory("xlsbtrunc").resolve("wb.xlsb").toString
+    val f = tempDir("xlsbtrunc").resolve("wb.xlsb").toString
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(f))
     zos.putNextEntry(new java.util.zip.ZipEntry("xl/workbook.bin")); zos.write(truncated); zos.closeEntry()
     zos.close()
@@ -118,7 +118,7 @@ class XlsbSpec extends SparkSpec {
 
   test("written [Content_Types].xml carries per-part Overrides (workbook + sheets)") {
     val df = Seq(("1", "a")).toDF("id", "v")
-    val f = java.nio.file.Files.createTempDirectory("xlsbct").resolve("wb.xlsb").toString
+    val f = tempDir("xlsbct").resolve("wb.xlsb").toString
     Xlsb.writeWorkbook(Seq("s1" -> df, "s2" -> df), f)
     val entries = Xlsx.readZipBytes(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))
@@ -133,7 +133,7 @@ class XlsbSpec extends SparkSpec {
     // two-byte length. Round-trip through the writer's framing.
     val longName = "s" * 100 // wide() → 4 + 200 bytes payload > 127
     val wb = Xlsb.workbookBin(Seq(longName))
-    val f = java.nio.file.Files.createTempDirectory("xlsbframe").resolve("wb.xlsb").toString
+    val f = tempDir("xlsbframe").resolve("wb.xlsb").toString
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(f))
     zos.putNextEntry(new java.util.zip.ZipEntry("xl/workbook.bin")); zos.write(wb); zos.closeEntry()
     zos.close()

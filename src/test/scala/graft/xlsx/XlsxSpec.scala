@@ -9,7 +9,7 @@ class XlsxSpec extends SparkSpec {
   test("workbook write → read round-trips multiple sheets (S7/K5)") {
     val s1 = Seq(("1", "a&<b>", ""), ("2", "plain", "x")).toDF("id", "v", "w")
     val s2 = Seq(("only", "row")).toDF("p", "q")
-    val f = java.nio.file.Files.createTempDirectory("xlsxspec").resolve("wb.xlsx").toString
+    val f = tempDir("xlsxspec").resolve("wb.xlsx").toString
     Xlsx.writeWorkbook(Seq("first" -> s1, "second" -> s2), f)
     val back = Xlsx.readWorkbook(spark, f)
     assert(back.map(_._1) == Seq("first", "second"))
@@ -28,7 +28,7 @@ class XlsxSpec extends SparkSpec {
     val n = 200000
     val big = spark.range(1, n + 1L)
       .selectExpr("CAST(id AS STRING) AS id", "concat('v&', id) AS v", "repeat('x', 20) AS pad")
-    val f = java.nio.file.Files.createTempDirectory("xlsxbig").resolve("big.xlsx").toString
+    val f = tempDir("xlsxbig").resolve("big.xlsx").toString
     Xlsx.writeWorkbook(Seq("big" -> big), f)
     val zis = new java.util.zip.ZipInputStream(new java.io.FileInputStream(f))
     var rows = -1L
@@ -55,7 +55,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("DSv2 table read: directory of workbooks, executor parse, pruning (SURVEY §4)") {
-    val d = java.nio.file.Files.createTempDirectory("xlsxdsv2")
+    val d = tempDir("xlsxdsv2")
     (1 to 3).foreach { i =>
       val df = Seq((s"$i-1", s"v$i", "x"), (s"$i-2", s"w$i", "y")).toDF("id", "v", "extra")
       Xlsx.writeWorkbook(Seq("data" -> df), d.resolve(s"f$i.xlsx").toString)

@@ -66,7 +66,7 @@ class XmlSpec extends SparkSpec {
   test("distributed read after file write round-trips (S8+K4)") {
     import spark.implicits._
     val df = Seq(("1", "x&y"), ("2", "<z>")).toDF("id", "v")
-    val f = java.nio.file.Files.createTempDirectory("xmlspec").resolve("out.xml").toString
+    val f = tempDir("xmlspec").resolve("out.xml").toString
     Xml.writeXmlFile(df, f)
     val back = Xml.readXml(spark, f, "row").orderBy("id")
       .collect().map(r => (r.getString(0), r.getString(1)))
@@ -76,7 +76,7 @@ class XmlSpec extends SparkSpec {
   test("distributed multi-part write round-trips through readXml (K4 scale path)") {
     import spark.implicits._
     val df = (1 to 30).map(i => (i.toString, s"v$i&")).toDF("id", "v").repartition(3)
-    val dir = java.nio.file.Files.createTempDirectory("xmlparts").toString
+    val dir = tempDir("xmlparts").toString
     Xml.writeXmlParts(df, dir)
     // genuinely multi-part: one well-formed document per partition
     val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
@@ -94,7 +94,7 @@ class XmlSpec extends SparkSpec {
     intercept[Exception] { Xml.parseRows(doc, "row") }
     val probed = Xml.parseRowsIter(doc, "row").take(1000).toSeq
     assert(probed.size == 1000 && probed.last == Map("a" -> "1000"))
-    val d = java.nio.file.Files.createTempDirectory("xmllazy")
+    val d = tempDir("xmllazy")
     java.nio.file.Files.writeString(d.resolve("doc.xml"), doc)
     val schema = XmlDataSource.sampleSchema(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("path", d.toString, "rowTag", "row")))
@@ -104,7 +104,7 @@ class XmlSpec extends SparkSpec {
   test("DSv2 scan prunes columns into the source (SURVEY §4)") {
     val doc = "<rows>" + (1 to 50).map(i =>
       s"<row><a>$i</a><b>b$i</b><c>c$i</c><d>d$i</d></row>").mkString + "</rows>"
-    val d = java.nio.file.Files.createTempDirectory("xmlprune")
+    val d = tempDir("xmlprune")
     java.nio.file.Files.writeString(d.resolve("doc.xml"), doc)
     val df = Xml.readXml(spark, d.toString, "row")
     assert(df.columns.toSeq == Seq("a", "b", "c", "d"))
@@ -124,7 +124,7 @@ class XmlSpec extends SparkSpec {
       s"<row><a>$i</a><seg>${if (i % 3 == 0) "HOT" else "COLD"}</seg><v>v$i</v></row>") ++
       // a row with a MISSING seg cell — pushdown must read it as ""
       Seq("<row><a>99</a><v>v99</v></row>")).mkString + "</rows>"
-    val d = java.nio.file.Files.createTempDirectory("xmlpush")
+    val d = tempDir("xmlpush")
     java.nio.file.Files.writeString(d.resolve("doc.xml"), doc)
     val df = Xml.readXml(spark, d.toString, "row")
     // equality on a column the projection then DROPS (keep-for-filter)
@@ -163,7 +163,7 @@ class XmlSpec extends SparkSpec {
 
   test("DSv2 short name: spark.read.format(\"graft-xml\") resolves") {
     val doc = "<rows><row><a>1</a></row><row><a>2</a></row></rows>"
-    val d = java.nio.file.Files.createTempDirectory("xmlshort")
+    val d = tempDir("xmlshort")
     java.nio.file.Files.writeString(d.resolve("doc.xml"), doc)
     val df = spark.read.format("graft-xml").option("rowTag", "row").load(d.toString)
     assert(df.orderBy("a").collect().map(_.getString(0)).toSeq == Seq("1", "2"))
@@ -172,7 +172,7 @@ class XmlSpec extends SparkSpec {
   test("readAutoDetected: detect → per-table distributed read (S9 end-to-end)") {
     val doc = "<db><items><item><a>1</a><b>x</b></item><item><a>2</a><b>y</b></item></items>" +
       "<tags><tag>t1</tag><tag>t2</tag><tag>t3</tag></tags></db>"
-    val d = java.nio.file.Files.createTempDirectory("xmlauto")
+    val d = tempDir("xmlauto")
     java.nio.file.Files.writeString(d.resolve("doc.xml"), doc)
     val wb = Xml.readAutoDetected(spark, d.toString)
     assert(wb.names.toSet == Set("db_items_item", "db_tags_tag"))
@@ -183,12 +183,12 @@ class XmlSpec extends SparkSpec {
   }
 
   test("readAutoDetected fallbacks: #text sheet and error sheet (S9)") {
-    val d1 = java.nio.file.Files.createTempDirectory("xmlauto1")
+    val d1 = tempDir("xmlauto1")
     java.nio.file.Files.writeString(d1.resolve("doc.xml"), "<note>just text</note>")
     val wb1 = Xml.readAutoDetected(spark, d1.toString)
     assert(wb1.names == Seq("doc"))
     assert(wb1("doc").collect().map(_.getAs[String]("#text")).toSeq == Seq("just text"))
-    val d2 = java.nio.file.Files.createTempDirectory("xmlauto2")
+    val d2 = tempDir("xmlauto2")
     java.nio.file.Files.writeString(d2.resolve("doc.xml"), "<broken><unclosed>")
     val wb2 = Xml.readAutoDetected(spark, d2.toString)
     val err = wb2("doc").collect().head
