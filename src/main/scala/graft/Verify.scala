@@ -20,16 +20,24 @@ object Verify {
     // driver's path — dumps everything.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      .flatMap { case (name, fn) =>
+      val out = s"$outDir/$name"
+      // An earlier dump's parquet must not pass for this run's result:
+      // a query that throws before its write starts would leave it.
+      graft.core.Scratch.delete(Paths.get(out))
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out)
+        None
+      }
       // Only NonFatal: a VM error (OOM) ends the dump loudly.
       catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
+    println(s"[verify] ${failed.size} failed: ${failed.mkString(" ")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -14,20 +14,21 @@ import org.apache.spark.sql.functions._
   *    qid-partitioned window rank. Cost O(|q|·|corpus|) — correct for
   *    small |q|, the exact-recall baseline.
   *  - `ivfTopK` — the scale path, a real IVF built in-engine:
-  *      1. `seedCentroids`: deterministic init — the n corpus vectors
-  *         with the smallest keyed md5 (top-n by hash compiles to
-  *         TakeOrderedAndProject, no global sort);
-  *      2. `lloydStep` × iters: k-means refinement as DataFrame
-  *         aggregations. Component sums accumulate in **integer
-  *         fixed-point** (floor(v·1e6) summed as longs) — integer
-  *         addition is order-independent, so centroids are bit-identical
+  *      1. `ivfCentroids`: k-means through the one trainer, [[kMeans]]
+  *         (shared with the PQ codebooks) — deterministic init from
+  *         the n corpus vectors with the smallest keyed md5 (top-n by
+  *         hash compiles to TakeOrderedAndProject, no global sort),
+  *         then `iters` Lloyd refinements as DataFrame aggregations.
+  *         Component sums accumulate in **integer fixed-point**
+  *         (floor(v·1e6) summed as longs) — integer addition is
+  *         order-independent, so centroids are bit-identical
   *         regardless of partitioning, task retries, or which engine
   *         (Spark vs the DuckDB oracle) computes them;
-  *      3. `assignBuckets`: argmax-cosine bucket per vector as a
+  *      2. `assignBuckets`: argmax-cosine bucket per vector as a
   *         NARROW codegen'd expression over the collected centroid
   *         matrix (no Exchange — every assignment pass is a pure
   *         per-row projection);
-  *      4. `probeBuckets`: multi-probe — each query searches its
+  *      3. `probeBuckets`: multi-probe — each query searches its
   *         `nprobe` nearest buckets, recovering recall at bucket edges.
   *    Cost drops to O(|q|·nprobe·|corpus|/n); the bucket join shuffles
   *    on the bucket key only.
@@ -89,29 +90,38 @@ object Ann {
            |  round(CAST(x AS DOUBLE) / _qscale))) AS TINYINT)) END""".stripMargin))
       .drop("_qscale")
 
+  /** Integer dot product of two tinyint arrays, on the codegen'd
+    * [[graft.functions.ArrayDotInt8]]. */
+  private def dotInt8(a: Column, b: Column): Column = {
+    import graft.functions.{ArrayDotInt8, F}
+    F.toColumn(ArrayDotInt8(F.toExpr(a), F.toExpr(b)))
+  }
+
+  /** `keep` beside `vec` int8-quantized into `q` and its integer
+    * self-dot `${q}q` — computed once per row like [[cosScaledPre]]. */
+  private def int8Side(df: DataFrame, vec: String, q: String,
+      keep: String*): DataFrame =
+    quantizeInt8(df, vec, q).select(keep.map(col) ++ Seq(col(q),
+      dotInt8(col(q), col(q)).as(s"${q}q")): _*)
+
+  /** [[rankTopK]] under the quantized cosine iab / sqrt(iaa·ibb), over
+    * pairs of an [[int8Side]] query (qq, qqq) and corpus (cq, cqq) row:
+    * the pair loop is one integer dot. Zero vectors (self-dot 0) score
+    * null and rank last, on both engines. */
+  private def rankTopKInt8(pairs: DataFrame, k: Int): DataFrame =
+    topKPerQuery(pairs.select(col("qid"), col("vec_id"),
+      when(col("qqq") === 0L || col("cqq") === 0L, lit(null))
+        .otherwise(graft.functions.F.scale4(
+          dotInt8(col("qq"), col("cq")).cast("double")
+            / sqrt((col("qqq") * col("cqq")).cast("double"))))
+        .as("cos_x1e4")), "cos_x1e4", k)
+
   /** Brute-force cosine top-k over int8-QUANTIZED vectors — the same
     * contract and plan shape as [[cosineTopK]] (broadcast query side,
-    * per-query window rank) at a quarter of the candidate-side bytes.
-    * Self-dots precompute per row like [[cosScaledPre]]; the pair loop
-    * is one integer dot. Zero vectors (self-dot 0) score null and rank
-    * last, on both engines. */
-  def cosineTopKInt8(queries: DataFrame, corpus: DataFrame, k: Int = 10): DataFrame = {
-    import graft.functions.{ArrayDotInt8, F}
-    def dotq(a: Column, b: Column): Column =
-      F.toColumn(ArrayDotInt8(F.toExpr(a), F.toExpr(b)))
-    val q = quantizeInt8(queries, "qe", "qq")
-      .select(col("qid"), col("qq"), dotq(col("qq"), col("qq")).as("qqq"))
-    val c = quantizeInt8(corpus, "ce", "cq")
-      .select(col("vec_id"), col("cq"), dotq(col("cq"), col("cq")).as("cqq"))
-    val scored = broadcast(q).crossJoin(c)
-      .select(col("qid"), col("vec_id"),
-        when(col("qqq") === 0L || col("cqq") === 0L, lit(null))
-          .otherwise(F.scale4(dotq(col("qq"), col("cq")).cast("double")
-            / sqrt((col("qqq") * col("cqq")).cast("double"))))
-          .as("cos_x1e4"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_x1e4"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+    * per-query window rank) at a quarter of the candidate-side bytes. */
+  def cosineTopKInt8(queries: DataFrame, corpus: DataFrame, k: Int = 10): DataFrame =
+    rankTopKInt8(broadcast(int8Side(queries, "qe", "qq", "qid"))
+      .crossJoin(int8Side(corpus, "ce", "cq", "vec_id")), k)
 
   /** queries(qid, qe) × corpus(vec_id, ce) → top-k by cosine. */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, k: Int = 10): DataFrame = {
@@ -122,33 +132,50 @@ object Ann {
     rankTopK(joined, k)
   }
 
+  /** The one per-query top-k: rank each qid's rows by `score`
+    * descending, ties to the smaller `tie`, into column `rank`, and keep
+    * ranks ≤ k. */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int,
+      tie: String = "vec_id", rank: String = "rank"): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(desc(score), asc(tie))
+    scored.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** Run `fa` on its own thread; the returned function waits for its
+    * result (rethrowing its failure). Independent driver-side actions —
+    * metadata reads, bounded collects, per-slice seeding scans — overlap
+    * this way: local-mode jobs run concurrently when slots are free, so
+    * k read-only actions cost ≈ one scheduling floor instead of k. The
+    * thread is started by the caller's, so it inherits the caller's
+    * Spark local properties (job group, scheduler pool). */
+  private def inBackground[A](fa: => A): () => A = {
+    val task = new java.util.concurrent.FutureTask[A](() => fa)
+    val t = new Thread(task, "ann-background")
+    t.setDaemon(true)
+    t.start()
+    () => try task.get() catch {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    }
+  }
+
+  /** `f` over `df` persisted for its duration. */
+  private def withPersisted[A](df: DataFrame)(f: DataFrame => A): A = {
+    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(cached) finally cached.unpersist(blocking = false)
+  }
+
   // -------------------------------------------------------------------
   // IVF index build
   // -------------------------------------------------------------------
 
-  /** Deterministic seeded init: the n corpus vectors with the smallest
-    * md5(vec_id ":" seed), cid = 0..n-1 in hash order. orderBy+limit
-    * compiles to TakeOrderedAndProject (per-partition heap + driver
-    * merge); the rank over the surviving n rows goes through the
-    * scale-safe Rank helper. Output (cid, cemb: array<double>). */
-  def seedCentroids(corpus: DataFrame, n: Int, seed: String = "ivf"): DataFrame = {
-    val h = md5(concat(col("vec_id").cast("string"), lit(s":$seed")))
-    val top = corpus.select(col("vec_id"), col("ce"), h.as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(n)
-    graft.ops.Rank.globalRowNumber(top, Seq(col("h"), col("vec_id")), "rn")
-      .select((col("rn") - 1).cast("int").as("cid"),
-        expr("transform(ce, x -> CAST(x AS DOUBLE))").as("cemb"))
-  }
-
-  /** [[seedCentroids]] collapsed to ONE job: the ≤n winning rows come
-    * back through the same TakeOrderedAndProject (per-partition heap +
-    * driver merge), and the 0..n-1 cid rank — a total order over ≤n
-    * driver-local rows — is assigned driver-side instead of through a
-    * zipWithIndex round-trip (which costs an extra per-partition count
-    * job plus a second collect). Values are identical: the hash column
-    * sorts as lowercase-hex ASCII, which String ordering and Spark's
-    * UTF8 binary ordering agree on, and CAST(float AS DOUBLE) is the
-    * same exact widening as `toDouble`. */
+  /** Deterministic seeded init in ONE job: the n corpus vectors with
+    * the smallest md5(vec_id ":" seed), cid = 0..n-1 in hash order.
+    * The ≤n winning rows come back through TakeOrderedAndProject
+    * (per-partition heap + driver merge), and the 0..n-1 cid rank — a
+    * total order over ≤n driver-local rows — is assigned driver-side.
+    * The hash column sorts as lowercase-hex ASCII, which String
+    * ordering and Spark's UTF8 binary ordering agree on, and CAST(float
+    * AS DOUBLE) is the same exact widening as `toDouble`. */
   private def seedCentroidArrays(corpus: DataFrame, n: Int,
       seed: String): Array[(Int, Array[Double])] = {
     val h = md5(concat(col("vec_id").cast("string"), lit(s":$seed")))
@@ -173,113 +200,109 @@ object Ann {
     * the corpus twice per assignment pass.) Highest cosine wins, ties
     * to the smallest cid. Output (vec_id, ce, ce2, bucket). */
   def assignBuckets(corpus: DataFrame, centroids: DataFrame,
-      keep: Seq[String] = Nil): DataFrame =
-    assignBucketsArr(corpus, collectCentArrays(centroids), keep)
-
-  /** Centroid table → driver arrays, sorted by cid (the literal form
-    * the codegen'd assignment expressions compile against). */
-  private def collectCentArrays(centroids: DataFrame): Array[(Int, Array[Double])] =
-    centroids.select(col("cid"), col("cemb")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-
-  /** [[assignBuckets]] against driver-local centroid arrays — the form
-    * the build loop uses so a step's collected result feeds the next
-    * assignment with zero extra jobs. */
-  private def assignBucketsArr(corpus: DataFrame,
-      cents: Array[(Int, Array[Double])],
       keep: Seq[String] = Nil): DataFrame = {
-    import graft.functions.{ArgmaxBucket, F}
+    val cents = centroids.select(col("cid"), col("cemb")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     require(cents.nonEmpty, "assignBuckets: empty centroid set")
     // `keep` columns ride through the narrow projection (the pqEncode
     // rationale: re-attaching a value the row already carries costs a
     // corpus-wide join).
     corpus.select((col("vec_id") +: keep.map(col)) ++ Seq(col("ce"),
       dotExpr("ce", "ce").as("ce2"),
-      F.toColumn(ArgmaxBucket(F.toExpr(col("ce")),
-        cents.map(_._1), cents.map(_._2))).as("bucket")): _*)
+      ivfAssignExpr(col("ce"), cents).as("bucket")): _*)
   }
 
-  /** One Lloyd iteration: reassign, then recompute each centroid as the
-    * component-wise mean of its members. Sums run in integer
-    * fixed-point (exact, order-independent); the final division is one
-    * IEEE double op, identical everywhere. Buckets that lose all
-    * members disappear (their vectors reassign next step).
-    *
-    * The component sums run as ONE wide hash aggregate — `dim` sum
-    * columns over `element_at` — instead of posexplode + groupBy
-    * (bucket, pos): same values (integer sums commute), but the shuffle
-    * carries |buckets| rows of partial sums rather than N×dim exploded
-    * rows, and the second collect_list aggregate disappears. */
-  def lloydStep(corpus: DataFrame, centroids: DataFrame, dim: Int): DataFrame =
-    assignBuckets(corpus, centroids)
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"),
-        (0 until dim).map(p =>
-          sum(floor(element_at(col("ce"), p + 1).cast("double") * 1000000d)
-            .cast("long")).as(s"s$p")): _*)
-      .select(col("bucket").as("cid"),
-        array((0 until dim).map(p =>
-          col(s"s$p").cast("double") / (col("n") * 1000000L).cast("double")): _*)
-          .as("cemb"))
+  /** The IVF assignment metric over driver centroid arrays (sorted by
+    * cid): the codegen'd [[graft.functions.ArgmaxBucket]] — highest
+    * cosine wins, ties to the smallest cid. */
+  private def ivfAssignExpr(vec: Column,
+      cents: Array[(Int, Array[Double])]): Column = {
+    import graft.functions.{ArgmaxBucket, F}
+    F.toColumn(ArgmaxBucket(F.toExpr(vec), cents.map(_._1), cents.map(_._2)))
+  }
 
-  /** Full index build: seeded init + `iters` Lloyd refinements. The
-    * result materializes to the driver and returns as a local
-    * DataFrame — the centroid set is small by construction (n rows),
-    * this is the "index build" boundary every IVF system has, and it
-    * keeps the search plans flat: assignment and probing each
-    * broadcast a literal table instead of re-reading a cached
-    * multi-stage lineage. */
-  def ivfCentroids(corpus: DataFrame, n: Int, iters: Int = 2,
-      seed: String = "ivf"): DataFrame = {
-    // The build scans the corpus iters+1 times (seeding + one
-    // assignment per Lloyd step). Each step's ≤n-row result collects
-    // to the driver and feeds the next assignment as a literal — a
-    // lazily-folded chain would re-execute 1+2+…+iters assignment
-    // passes. r20: the whole loop is driver arrays (seeding is the
-    // one-job [[seedCentroidArrays]], the dimensionality comes from
-    // the seed rows instead of a separate probe job, and each Lloyd
-    // step is one aggregate + collect) — iters+1 jobs total, down
-    // from 2·(iters+1)+2 with the localize/zipWithIndex round-trips.
-    val cached = corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cents = seedCentroidArrays(cached, n, seed)
-      require(cents.nonEmpty, "ivfCentroids: empty corpus")
-      val dim = cents.head._2.length
-      (0 until iters).foreach { _ =>
-        // identical values to [[lloydStep]]: same assignment
-        // expression, same order-independent fixed-point sums, same
-        // single IEEE division per component.
-        cents = assignBucketsArr(cached, cents)
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("n"),
-            (0 until dim).map(p =>
-              sum(floor(element_at(col("ce"), p + 1).cast("double") * 1000000d)
-                .cast("long")).as(s"s$p")): _*)
-          .collect()
-          .map { r =>
-            val n0 = r.getLong(1)
-            (r.getInt(0), Array.tabulate(dim)(p =>
-              r.getLong(2 + p).toDouble / (n0 * 1000000L).toDouble))
-          }
-          .sortBy(_._1)
+  /** The one k-means trainer, under [[ivfCentroids]] and
+    * [[pqCodebooks]]: an independent k-centroid k-means per vector
+    * slice — IVF trains one slice, the whole `ce`; PQ trains its m
+    * subvectors — over a relation the caller has persisted.
+    *  - Seeding: [[seedCentroidArrays]] under `seeds(s)`, the slices'
+    *    jobs run concurrently ([[inBackground]]).
+    *  - `iters` Lloyd steps: each row takes its bucket under `assign`,
+    *    a codegen'd expression over the driver centroid arrays, then
+    *    each centroid becomes the component-wise mean of its members.
+    *    Sums run in integer fixed-point (floor(v·1e6) summed as longs:
+    *    exact and order-independent) and the mean is one IEEE division,
+    *    so centroids are identical on every partitioning and engine.
+    *    All slices share ONE wide hash aggregate per step: each row
+    *    emits one (sub, bucket, subvector) arm per slice, map-side
+    *    partial aggregation collapses them to ≤ slices·k groups per
+    *    task before the exchange, and the collected sums feed the next
+    *    step as literals (a lazily folded chain would re-run every
+    *    earlier assignment). Buckets that lose all members disappear.
+    * Jobs: one seed job per slice, then one aggregate per step. Output:
+    * per slice, the centroids sorted by cid. */
+  private def kMeans(cached: DataFrame, slices: IndexedSeq[String], k: Int,
+      iters: Int, seeds: IndexedSeq[String],
+      assign: (Column, Array[(Int, Array[Double])]) => Column)
+      : IndexedSeq[Array[(Int, Array[Double])]] = {
+    val init = slices.indices.map(s => inBackground(seedCentroidArrays(
+      cached.selectExpr("vec_id", s"${slices(s)} AS ce"), k, seeds(s))))
+      .map(_())
+    require(init.forall(_.nonEmpty), "kMeans: empty corpus")
+    val d = init.head.head._2.length
+    (0 until iters).foldLeft(init) { (cents, _) =>
+      val arms = slices.indices.map(s => struct(lit(s).as("sub"),
+        assign(expr(slices(s)), cents(s)).as("bucket"),
+        expr(slices(s)).as("sv")))
+      // a single slice needs no explode
+      val agg = cached
+        .select((if (arms.length == 1) arms.head else explode(array(arms: _*))).as("e"))
+        .select(col("e.sub").as("sub"), col("e.bucket").as("bucket"),
+          col("e.sv").as("sv"))
+        .groupBy("sub", "bucket")
+        .agg(count(lit(1)).as("n"),
+          (0 until d).map(p =>
+            sum(floor(element_at(col("sv"), p + 1).cast("double") * 1000000d)
+              .cast("long")).as(s"s$p")): _*)
+        .collect()
+      slices.indices.map { s =>
+        agg.filter(_.getInt(0) == s).map { r =>
+          val n = r.getLong(2)
+          (r.getInt(1), Array.tabulate(d)(p =>
+            r.getLong(3 + p).toDouble / (n * 1000000L).toDouble))
+        }.sortBy(_._1)
       }
-      localCentDf(corpus.sparkSession, cents)
-    } finally cached.unpersist(blocking = false)
+    }
   }
 
-  /** Driver centroid arrays → the local literal (cid, cemb) DataFrame
-    * every search/assignment entry point consumes. */
-  private def localCentDf(spark: org.apache.spark.sql.SparkSession,
-      cents: Array[(Int, Array[Double])]): DataFrame = {
+  /** Trained centroid arrays → the local literal (cid, cemb, sub)
+    * table every search/assignment entry point consumes, `sub` naming
+    * the slice. */
+  private def centroidTable(spark: org.apache.spark.sql.SparkSession,
+      books: IndexedSeq[Array[(Int, Array[Double])]]): DataFrame = {
     import org.apache.spark.sql.types._
-    val rows = cents.map { case (cid, c) =>
-      org.apache.spark.sql.Row(cid, c.toSeq) }
+    val rows = for ((cents, s) <- books.zipWithIndex; (cid, c) <- cents)
+      yield org.apache.spark.sql.Row(cid, c.toSeq, s)
     spark.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(Seq(
         StructField("cid", IntegerType, nullable = false),
         StructField("cemb", ArrayType(DoubleType, containsNull = false),
-          nullable = false))))
+          nullable = false),
+        StructField("sub", IntegerType, nullable = false))))
   }
+
+  /** Full index build: [[kMeans]] over the whole vector, `iters` Lloyd
+    * refinements — the corpus is scanned iters+1 times, one job each.
+    * The result returns as a local (cid, cemb) DataFrame — the
+    * centroid set is small by construction (n rows), this is the
+    * "index build" boundary every IVF system has, and it keeps the
+    * search plans flat: assignment and probing each broadcast a literal
+    * table instead of re-reading a cached multi-stage lineage. */
+  def ivfCentroids(corpus: DataFrame, n: Int, iters: Int = 2,
+      seed: String = "ivf"): DataFrame =
+    withPersisted(corpus)(cached => centroidTable(corpus.sparkSession,
+      kMeans(cached, IndexedSeq("ce"), n, iters, IndexedSeq(seed), ivfAssignExpr)))
+      .drop("sub")
 
   /** Multi-probe: each query pairs with its `nprobe` nearest centroids
     * (qid-partitioned window over |centroids| rows per query).
@@ -291,8 +314,7 @@ object Ann {
       .crossJoin(broadcast(cents))
       .select(col("qid"), col("qe"), col("qe2"), col("cid"),
         cosScaledPre("qe", "cemb", col("qe2"), col("cemb2")).as("c"))
-    val w = Window.partitionBy("qid").orderBy(desc("c"), asc("cid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= nprobe)
+    topKPerQuery(scored, "c", nprobe, tie = "cid", rank = "rn")
       .select(col("qid"), col("qe"), col("qe2"), col("cid").as("bucket"))
   }
 
@@ -323,34 +345,21 @@ object Ann {
     * contract as [[ivfTopK]]; scores carry the quantized cosine. */
   def ivfTopKInt8(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       k: Int = 10, nprobe: Int = 2): DataFrame = {
-    import graft.functions.{ArrayDotInt8, F}
-    def dotq(a: Column, b: Column): Column =
-      F.toColumn(ArrayDotInt8(F.toExpr(a), F.toExpr(b)))
-    val cass = quantizeInt8(assignBuckets(corpus, centroids), "ce", "cq")
-      .select(col("vec_id"), col("bucket"), col("cq"),
-        dotq(col("cq"), col("cq")).as("cqq"))
-    val probes = quantizeInt8(probeBuckets(queries, centroids, nprobe), "qe", "qq")
-      .select(col("qid"), col("bucket"), col("qq"),
-        dotq(col("qq"), col("qq")).as("qqq"))
-    val scored = broadcast(probes).join(cass, Seq("bucket"))
-      .select(col("qid"), col("vec_id"),
-        when(col("qqq") === 0L || col("cqq") === 0L, lit(null))
-          .otherwise(F.scale4(dotq(col("qq"), col("cq")).cast("double")
-            / sqrt((col("qqq") * col("cqq")).cast("double"))))
-          .as("cos_x1e4"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_x1e4"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val cass = int8Side(assignBuckets(corpus, centroids), "ce", "cq",
+      "vec_id", "bucket")
+    val probes = int8Side(probeBuckets(queries, centroids, nprobe), "qe", "qq",
+      "qid", "bucket")
+    rankTopKInt8(broadcast(probes).join(cass, Seq("bucket")), k)
   }
 
-  /** Expects qe2/ce2 (the per-side self-dots) already projected onto
-    * `joined` — see [[cosScaledPre]] for why this is value-identical
-    * to the inline cosine. */
-  private def rankTopK(joined: DataFrame, k: Int): DataFrame = {
-    val scored = joined.select(col("qid"), col("vec_id"),
-      cosScaledPre("qe", "ce", col("qe2"), col("ce2")).as("cos_x1e4"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_x1e4"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+  /** Per-query top-k by cosine over (query, corpus) pairs. Expects
+    * qe2/ce2 (the per-side self-dots) already projected onto `joined` —
+    * see [[cosScaledPre]] for why this is value-identical to the inline
+    * cosine. */
+  private def rankTopK(joined: DataFrame, k: Int): DataFrame =
+    topKPerQuery(joined.select(col("qid"), col("vec_id"),
+      cosScaledPre("qe", "ce", col("qe2"), col("ce2")).as("cos_x1e4")),
+      "cos_x1e4", k)
 
   /** Embedding-cosine near-duplicate pairs (a < b, cosine ≥
     * threshold/1e4), bucket-restricted through the IVF assignment: the
@@ -430,20 +439,6 @@ object Ann {
         graft.functions.F.scale4(col("n_hits").cast("double") / k).as("recall_x1e4"))
   }
 
-  /** Per-query recall of `approx` against `exact` (both shaped
-    * (qid, vec_id, ..., rank), rank ≤ k). Output
-    * (qid, n_hits, recall_x1e4). */
-  def recallVsBrute(approx: DataFrame, exact: DataFrame, k: Int = 10): DataFrame = {
-    val a = approx.select(col("qid"), col("vec_id"))
-    val e = exact.select(col("qid"), col("vec_id"))
-    e.join(a, Seq("qid", "vec_id"), "left_semi")
-      .groupBy("qid").agg(count(lit(1)).as("n_hits"))
-      .join(e.select("qid").distinct(), Seq("qid"), "right_outer")
-      .na.fill(0, Seq("n_hits"))
-      .select(col("qid"), col("n_hits"),
-        graft.functions.F.scale4(col("n_hits").cast("double") / k).as("recall_x1e4"))
-  }
-
   // ---- index persistence (the serving boundary) ------------------------
 
   /** Materialize an IVF index as two parquet tables under `dir`: the
@@ -487,9 +482,9 @@ object Ann {
     * deploy/refresh boundaries, not per query. */
   def verifyIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       corpus: DataFrame): Unit = {
-    val (rec, cur) = inParallel2(
-      spark.read.parquet(s"$dir/fingerprint").head(),
-      corpusFingerprint(corpus).head())
+    val recorded = inBackground(spark.read.parquet(s"$dir/fingerprint").head())
+    val cur = corpusFingerprint(corpus).head()
+    val rec = recorded()
     if (rec.getLong(0) != cur.getLong(0) || rec.getLong(1) != cur.getLong(1))
       throw new IllegalStateException(
         s"stale IVF index at $dir: recorded corpus (n=${rec.getLong(0)}, " +
@@ -498,63 +493,74 @@ object Ann {
           "the corpus changed since writeIndex; rebuild the index")
   }
 
-  /** Run independent driver-side actions (metadata reads, bounded
-    * collects) CONCURRENTLY: local-mode jobs overlap when slots are
-    * free, so k read-only actions cost ≈ one scheduling floor instead
-    * of k (r21 — the persisted-index paths load centroids, codebooks,
-    * manifest and fingerprint as a serial chain of tiny jobs). Results
-    * are position-stable; each thunk is independent by contract. */
-  private def inParallel2[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try { val f = Future(fb); val a = fa; (a, Await.result(f, Duration.Inf)) }
-    finally pool.shutdown()
-  }
-
-  private def inParallel3[A, B, C](fa: => A, fb: => B, fc: => C): (A, B, C) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val f1 = Future(fb); val f2 = Future(fc); val a = fa
-      (a, Await.result(f1, Duration.Inf), Await.result(f2, Duration.Inf))
-    } finally pool.shutdown()
-  }
-
-  /** The persisted centroid table as a LOCAL literal DataFrame (≤n
-    * rows — the same localization the build uses, keeping downstream
-    * search plans flat). */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/centroids")
+  /** A small persisted table as a LOCAL literal DataFrame — the
+    * localization the build uses, keeping downstream search plans
+    * flat. */
+  private def localTable(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val df = spark.read.parquet(path)
     spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
   }
 
-  /** IVF search against a PERSISTED index: load centroids, probe, prune
-    * the assignment table's FILES to those whose bucket span intersects
-    * a probed bucket (one manifest read — driver-side metadata, the
-    * planning step every indexed system has), then the usual
-    * bucket-restricted join + per-query top-k. The only cluster work is
-    * the pruned scan and the search joins — zero re-clustering, which
-    * is the point: ≡ [[ivfTopK]] output over the same build. */
+  /** The persisted centroid table as a LOCAL literal DataFrame (≤n
+    * rows). */
+  def loadCentroids(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    localTable(spark, s"$dir/centroids")
+
+  /** The metadata a persisted index is read through: the centroid
+    * table, the residual codebooks (IVF+PQ only) and the
+    * [[graft.ops.FileIndex]] manifest of the bucket-clustered `table` —
+    * (file, lo, hi) bucket span per file. */
+  private[llm] final case class IndexMeta(cent: DataFrame,
+      codebooks: Option[DataFrame], spans: Array[(String, Int, Int)])
+
+  /** The one metadata loader: the tables of [[IndexMeta]], read
+    * concurrently ([[inBackground]]) — each is a tiny job, so a serial
+    * chain would pay one scheduling floor per table. */
+  private[llm] def loadMeta(spark: org.apache.spark.sql.SparkSession,
+      dir: String, table: String, codebooks: Boolean): IndexMeta = {
+    val cb = if (codebooks) Some(inBackground(localTable(spark, s"$dir/codebooks")))
+      else None
+    val spans = inBackground(spark.read.parquet(s"$table/_index")
+      .select("file", "lo", "hi").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))))
+    IndexMeta(loadCentroids(spark, dir), cb.map(_()), spans())
+  }
+
+  /** The one bucket-span pruner: the files whose [lo, hi] bucket span
+    * holds one of `buckets` — the only files rows of those buckets can
+    * be in. */
+  private[llm] def spanFiles(spans: Array[(String, Int, Int)],
+      buckets: Set[Int]): IndexedSeq[String] =
+    spans.collect {
+      case (f, lo, hi) if buckets.exists(b => b >= lo && b <= hi) => f
+    }.toIndexedSeq
+
+  /** The serving read of a persisted index: probe each query's
+    * `nprobe` buckets, collect the distinct probed buckets (≤
+    * |queries|·nprobe values — metadata-sized), and read `table` from
+    * only the files whose bucket span holds one (the planning step
+    * every indexed system has). Returns (probes, rows). */
+  private[llm] def probedRows(spark: org.apache.spark.sql.SparkSession,
+      queries: DataFrame, meta: IndexMeta, table: String,
+      nprobe: Int): (DataFrame, DataFrame) = {
+    val probes = probeBuckets(queries, meta.cent, nprobe)
+    val buckets = probes.select("bucket").distinct().collect().map(_.getInt(0)).toSet
+    val keep = spanFiles(meta.spans, buckets)
+    (probes, if (keep.isEmpty) spark.read.parquet(table).limit(0)
+      else spark.read.parquet(keep: _*))
+  }
+
+  /** IVF search against a PERSISTED index: [[probedRows]] over the
+    * assignment table, then the usual bucket-restricted join +
+    * per-query top-k. The only cluster work is the pruned scan and the
+    * search joins — zero re-clustering, which is the point: ≡
+    * [[ivfTopK]] output over the same build. */
   def ivfTopKPersisted(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
       dir: String, k: Int = 10, nprobe: Int = 2): DataFrame = {
-    val (cent, manifest) = inParallel2(
-      loadCentroids(spark, dir),
-      spark.read.parquet(s"$dir/assigned/_index")
-        .select("file", "lo", "hi").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getInt(2))))
-    val probes = probeBuckets(queries, cent, nprobe)
-    // distinct probed buckets: ≤ |queries|·nprobe values — metadata-sized
-    val buckets = probes.select("bucket").distinct().collect().map(_.getInt(0)).toSet
-    val keep = manifest.collect {
-      case (f, lo, hi) if buckets.exists(b => b >= lo && b <= hi) => f
-    }
-    val assigned =
-      if (keep.isEmpty) spark.read.parquet(s"$dir/assigned").limit(0)
-      else spark.read.parquet(keep.toIndexedSeq: _*)
+    val table = s"$dir/assigned"
+    val (probes, assigned) = probedRows(spark, queries,
+      loadMeta(spark, dir, table, codebooks = false), table, nprobe)
     rankTopK(broadcast(probes).join(assigned, Seq("bucket")), k)
   }
 
@@ -577,41 +583,23 @@ object Ann {
     * `pq<s>`), refined by `iters` Lloyd steps whose assignment metric
     * is squared L2 (PQ approximates dot products from reconstructed
     * subvectors, so subspace geometry — not direction — is what must
-    * be preserved; cosine stays the IVF routing metric). Mean updates
-    * run in the same order-independent integer fixed-point as
-    * [[lloydStep]].
+    * be preserved; cosine stays the IVF routing metric). Training is
+    * the one trainer, [[kMeans]], with the m subvectors as its slices:
+    * the m subspaces share one exploded aggregate per Lloyd step (the
+    * vector is ONE parquet array column, so slicing prunes nothing at
+    * the scan) in the same order-independent integer fixed-point.
     *
-    * The build scans the cached corpus m·(iters+1) times and each step
-    * localizes to a ≤ksub-row driver table (the [[ivfCentroids]]
-    * lifecycle); the result is metadata-sized: m·ksub rows of dim/m
-    * doubles. Output (sub, cid, cemb). */
+    * The result is metadata-sized: m·ksub rows of dim/m doubles.
+    * Output (cid, cemb, sub). */
   def pqCodebooks(corpus: DataFrame, m: Int, ksub: Int, iters: Int = 2,
-      seed: String = "pq"): DataFrame = {
-    val cached = corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try pqCodebooksCached(cached, m, ksub, iters, seed)
-    finally cached.unpersist(blocking = false)
-  }
+      seed: String = "pq"): DataFrame =
+    withPersisted(corpus)(pqCodebooksCached(_, m, ksub, iters, seed))
 
   /** [[pqCodebooks]] over an input the CALLER has already persisted
     * (or that is cheap to rescan) — [[writeIndexPq]] trains from the
     * persisted residual relation and must not double-cache a second
-    * projected copy of a corpus-sized table.
-    *
-    * r20 build shape (values unchanged, passes divided by m): the m
-    * per-subspace Lloyd refinements each re-read the whole `ce`
-    * column anyway (parquet stores the vector as ONE array column —
-    * slicing prunes nothing at the scan), so the m independent
-    * aggregations now run as ONE exploded aggregate per iteration:
-    * each row emits its m (sub, bucket, subvector) arms, map-side
-    * partial aggregation collapses them to ≤ m·ksub groups per task
-    * before the exchange, and the collected (sub, bucket) sums split
-    * back into per-subspace codebooks driver-side. Assignment stays
-    * the same per-subspace codegen'd argmin-L2; component sums stay
-    * order-independent fixed-point integers; the mean is the same
-    * single IEEE division — bit-identical codebooks (AnnSpec pins
-    * determinism, the oracle pins values). Seeding runs the one-job
-    * [[seedCentroidArrays]] per subspace: m + iters jobs total,
-    * down from m·(2·(iters+1)) + 1. */
+    * projected copy of a corpus-sized table. One job probes the
+    * dimensionality, then [[kMeans]]: m + iters jobs. */
   def pqCodebooksCached(cached: DataFrame, m: Int, ksub: Int,
       iters: Int = 2, seed: String = "pq"): DataFrame = {
     val probe = cached.select(size(col("ce")).as("d")).limit(1).collect()
@@ -619,58 +607,9 @@ object Ann {
     val dim = probe(0).getInt(0)
     require(dim % m == 0, s"pqCodebooks: dim $dim not divisible by m $m")
     val d = dim / m
-    // The m per-subspace seed jobs are INDEPENDENT TakeOrderedAndProject
-    // scans of the same cached relation — submit them concurrently so
-    // their per-job scheduling floors overlap (m jobs of wall-clock ≈
-    // one when slots are free; each job is deterministic on its own, so
-    // submission order cannot affect values). r21: was a sequential
-    // m-job loop.
-    val seeds: IndexedSeq[Array[(Int, Array[Double])]] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(
-        Future.sequence((0 until m).map { s =>
-          Future(seedCentroidArrays(cached.select(col("vec_id"),
-            expr(s"slice(ce, ${s * d + 1}, $d)").as("ce")), ksub, s"$seed$s"))
-        }), Duration.Inf)
-      finally pool.shutdown()
-    }
-    val fin = (0 until iters).foldLeft(seeds) { (cents, _) =>
-      val arms = (0 until m).map { s =>
-        struct(lit(s).as("sub"),
-          pqAssignExpr(expr(s"slice(ce, ${s * d + 1}, $d)"), cents(s)).as("bucket"),
-          expr(s"slice(ce, ${s * d + 1}, $d)").as("sv"))
-      }
-      val agg = cached
-        .select(explode(array(arms: _*)).as("e"))
-        .select(col("e.sub").as("sub"), col("e.bucket").as("bucket"),
-          col("e.sv").as("sv"))
-        .groupBy("sub", "bucket")
-        .agg(count(lit(1)).as("n"),
-          (0 until d).map(p =>
-            sum(floor(element_at(col("sv"), p + 1).cast("double") * 1000000d)
-              .cast("long")).as(s"s$p")): _*)
-        .collect()
-      (0 until m).map { s =>
-        agg.filter(_.getInt(0) == s).map { r =>
-          val n0 = r.getLong(2)
-          (r.getInt(1), Array.tabulate(d)(p =>
-            r.getLong(3 + p).toDouble / (n0 * 1000000L).toDouble))
-        }.sortBy(_._1)
-      }
-    }
-    import org.apache.spark.sql.types._
-    val rows = fin.zipWithIndex.flatMap { case (cs, s) =>
-      cs.map { case (cid, c) => org.apache.spark.sql.Row(cid, c.toSeq, s) }
-    }
-    cached.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("cid", IntegerType, nullable = false),
-        StructField("cemb", ArrayType(DoubleType, containsNull = false),
-          nullable = false),
-        StructField("sub", IntegerType, nullable = false))))
+    centroidTable(cached.sparkSession, kMeans(cached,
+      (0 until m).map(s => s"slice(ce, ${s * d + 1}, $d)"), ksub, iters,
+      (0 until m).map(s => s"$seed$s"), pqAssignExpr))
   }
 
   /** PQ encode: per subspace, the argmin-L2 code — ONE narrow
@@ -724,7 +663,7 @@ object Ann {
     * its codes; the approximate cosine divides by sqrt(qe2 · x2hat).
     * Table entries are ×1e6-scaled integers BEFORE the sum — m partial
     * aggregates land in arbitrary order, and integer addition is the
-    * established order-independence device (the lloydStep trick), so
+    * established order-independence device (the [[kMeans]] sums), so
     * scores are bit-identical across partitionings and engines.
     * The corpus-side scan reads only (vec_id, codes, x2hat) — the
     * 4×-to-64×-smaller representation IS the speed at 100 TB; the
@@ -736,15 +675,9 @@ object Ann {
     * ADC math itself. Output (qid, vec_id, cos_x1e4, rank ≤ k). */
   def pqTopK(queries: DataFrame, encoded: DataFrame, codebooks: DataFrame,
       k: Int = 10): DataFrame = {
-    val d = codebooks.select(size(col("cemb")).as("d")).head.getInt(0)
-    val qt = queries
-      .select(col("qid"), col("qe"), dotExpr("qe", "qe").as("qe2"))
-      .crossJoin(broadcast(codebooks))
-      .select(col("qid"), col("qe2"), col("sub"), col("cid"),
-        floor(graft.functions.F.toColumn(graft.functions.ArrayDot(
-          graft.functions.F.toExpr(expr(s"slice(qe, sub * $d + 1, $d)")),
-          graft.functions.F.toExpr(col("cemb")))) * lit(1000000d) + lit(0.5d))
-          .cast("long").as("tdot6"))
+    val qt = adcTable(
+      queries.select(col("qid"), col("qe"), dotExpr("qe", "qe").as("qe2")),
+      codebooks, "qid", "qe2")
     val codes = encoded.select(col("vec_id"), col("x2hat"),
       posexplode(col("codes")).as(Seq("sub", "cid")))
     val scored = codes
@@ -754,9 +687,24 @@ object Ann {
       .select(col("qid"), col("vec_id"),
         graft.functions.F.scale4((col("adot6").cast("double") / lit(1000000d))
           / sqrt(col("qe2") * col("x2hat"))).as("cos_x1e4"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_x1e4"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topKPerQuery(scored, "cos_x1e4", k)
   }
+
+  /** The ADC lookup table: per (query, codebook entry), tdot6 =
+    * dot(q_sub, cb(sub, cid)) as a [[fixed6]] integer, beside the
+    * `keep` query columns. */
+  private def adcTable(queries: DataFrame, codebooks: DataFrame,
+      keep: String*): DataFrame = {
+    val d = codebooks.select(size(col("cemb")).as("d")).head.getInt(0)
+    queries.crossJoin(broadcast(codebooks))
+      .select(keep.map(col) ++ Seq(col("sub"), col("cid"),
+        fixed6(dotExpr(s"slice(qe, sub * $d + 1, $d)", "cemb")).as("tdot6")): _*)
+  }
+
+  /** x·1e6 rounded to a long: ADC terms become integers BEFORE any
+    * aggregation, so their sums are order-independent. */
+  private def fixed6(x: Column): Column =
+    floor(x * lit(1000000d) + lit(0.5d)).cast("long")
 
   /** Per-vector IVF residual: r = ce − centroid(bucket), the vector
     * PQ actually quantizes in the composed IVF+PQ architecture —
@@ -790,22 +738,12 @@ object Ann {
   def ivfpqTopK(queries: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, encoded: DataFrame, k: Int = 10,
       nprobe: Int = 2): DataFrame = {
-    import graft.functions.{ArrayDot, F}
-    val d = codebooks.select(size(col("cemb")).as("d")).head.getInt(0)
+    val qt = adcTable(queries.select(col("qid"), col("qe")), codebooks, "qid")
     val probes = probeBuckets(queries, centroids, nprobe)
     val qc = probes
       .join(broadcast(centroids.select(col("cid").as("bucket"), col("cemb"))),
         Seq("bucket"))
-      .select(col("qid"), col("bucket"),
-        floor(dotExpr("qe", "cemb") * lit(1000000d) + lit(0.5d))
-          .cast("long").as("qcdot6"))
-    val qt = queries.select(col("qid"), col("qe"))
-      .crossJoin(broadcast(codebooks))
-      .select(col("qid"), col("sub"), col("cid"),
-        floor(F.toColumn(ArrayDot(
-          F.toExpr(expr(s"slice(qe, sub * $d + 1, $d)")),
-          F.toExpr(col("cemb")))) * lit(1000000d) + lit(0.5d))
-          .cast("long").as("tdot6"))
+      .select(col("qid"), col("bucket"), fixed6(dotExpr("qe", "cemb")).as("qcdot6"))
     val scored = encoded
       .join(probes.select("qid", "bucket"), Seq("bucket"))
       .select(col("qid"), col("vec_id"), col("bucket"),
@@ -816,8 +754,7 @@ object Ann {
       .join(qc, Seq("qid", "bucket"))
       .select(col("qid"), col("vec_id"),
         (col("rdot6") + col("qcdot6")).as("dot_x1e6"))
-    val w = Window.partitionBy("qid").orderBy(desc("dot_x1e6"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topKPerQuery(scored, "dot_x1e6", k)
   }
 
   /** Materialize the composed IVF+PQ index under `dir` — the
@@ -840,9 +777,7 @@ object Ann {
     // — previously its (scan + assignment + broadcast join + zip_with)
     // lineage recomputed per consumer and the bucket was re-attached
     // through a corpus-wide shuffle join on vec_id.
-    val res = ivfResiduals(corpus, cent)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withPersisted(ivfResiduals(corpus, cent)) { res =>
       val rv = res.select(col("vec_id"), col("re").as("ce"))
       val cb = pqCodebooksCached(rv, m, ksub, iters, pqSeed)
       cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
@@ -853,7 +788,7 @@ object Ann {
       graft.ops.FileIndex.writeIndexed(enc, s"$dir/encoded", "bucket", files)
       corpusFingerprint(corpus)
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/fingerprint")
-    } finally res.unpersist(blocking = false)
+    }
   }
 
   /** INCREMENTAL add to a persisted IVF+PQ index: encode a delta
@@ -879,16 +814,11 @@ object Ann {
     * check costs a column scan of the overlap, not the archive. */
   def appendIndexPq(delta: DataFrame, dir: String, files: Int = 4): Unit = {
     val spark = delta.sparkSession
-    val (cent, cb, rec) = inParallel3(
-      loadCentroids(spark, dir),
-      {
-        val cbDf = spark.read.parquet(s"$dir/codebooks")
-        spark.createDataFrame(
-          java.util.Arrays.asList(cbDf.collect(): _*), cbDf.schema)
-      },
-      // the OLD fingerprint read is independent of everything before
-      // the roll-forward write at the end
-      spark.read.parquet(s"$dir/fingerprint").head())
+    val encDir = encodedDir(dir)
+    // the OLD fingerprint read is independent of everything before the
+    // roll-forward write at the end
+    val recorded = inBackground(spark.read.parquet(s"$dir/fingerprint").head())
+    val meta = loadMeta(spark, dir, encDir, codebooks = true)
     // The per-row fingerprint hash (xxhash64(vec_id, ce) — the
     // corpusFingerprint term) rides the narrow residual+encode
     // projections, so ONE aggregate over the checkpointed encode
@@ -898,9 +828,9 @@ object Ann {
     val enc = pqEncode(
         ivfResiduals(
             delta.withColumn("fp", xxhash64(col("vec_id"), col("ce"))),
-            cent, keep = Seq("fp"))
+            meta.cent, keep = Seq("fp"))
           .select(col("vec_id"), col("fp"), col("bucket"), col("re").as("ce")),
-        cb, keep = Seq("bucket", "fp"))
+        meta.codebooks.get, keep = Seq("bucket", "fp"))
       .select(col("vec_id"), col("bucket"), col("codes"), col("fp"))
       .localCheckpoint(true)
     try {
@@ -916,21 +846,14 @@ object Ann {
       // archive. (A re-append under a CHANGED embedding is a plain
       // duplicate-id ingest bug upstream; its checksum does NOT
       // cancel, so verifyIndex still catches that corpus.)
-      val encDir = encodedDir(dir)
       val aggRow = enc.agg(count(lit(1)).as("n"),
           coalesce(expr("bit_xor(fp)"), lit(0L)).as("checksum"),
           collect_set(col("bucket")).as("buckets")).head()
       val deltaN = aggRow.getLong(0)
       val deltaChecksum = aggRow.getLong(1)
-      val deltaBuckets = aggRow.getSeq[Int](2).toSet
-      val manifest = spark.read.parquet(s"$encDir/_index")
-        .select("file", "lo", "hi").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
-      val overlap = manifest.collect {
-        case (f, lo, hi) if deltaBuckets.exists(b => b >= lo && b <= hi) => f
-      }
+      val overlap = spanFiles(meta.spans, aggRow.getSeq[Int](2).toSet)
       if (overlap.nonEmpty) {
-        val dup = spark.read.parquet(overlap.toIndexedSeq: _*)
+        val dup = spark.read.parquet(overlap: _*)
           .select("vec_id")
           .join(enc.select("vec_id"), Seq("vec_id"), "left_semi")
           .limit(1).collect()
@@ -942,6 +865,7 @@ object Ann {
       }
       graft.ops.FileIndex.appendIndexed(
         enc.select("vec_id", "bucket", "codes"), encDir, "bucket", files)
+      val rec = recorded()
       val merged = org.apache.spark.sql.Row(
         rec.getLong(0) + deltaN, rec.getLong(1) ^ deltaChecksum)
       spark.createDataFrame(java.util.Arrays.asList(merged),
@@ -1017,38 +941,17 @@ object Ann {
     graft.ops.Wap.publishWithRetry(gens, staged)
   }
 
-  /** IVF+PQ search against a PERSISTED index: load centroids and
-    * codebooks (both metadata-sized, localized like
-    * [[loadCentroids]]), probe, prune the encoded table's files to
-    * the probed bucket spans via the manifest (driver-side planning,
-    * the [[ivfTopKPersisted]] step), then the [[ivfpqTopK]] ADC
-    * scoring over only the pruned (vec_id, bucket, codes) rows —
-    * output ≡ ivfpqTopK over the same build, with zero training
-    * passes at serve time. */
+  /** IVF+PQ search against a PERSISTED index: [[probedRows]] over the
+    * live encoded table, then the [[ivfpqTopK]] ADC scoring over only
+    * the pruned (vec_id, bucket, codes) rows — output ≡ ivfpqTopK over
+    * the same build, with zero training passes at serve time. */
   def ivfpqTopKPersisted(spark: org.apache.spark.sql.SparkSession,
       queries: DataFrame, dir: String, k: Int = 10,
       nprobe: Int = 2): DataFrame = {
-    val encDir = encodedDir(dir)
-    val (cent, cb, manifest) = inParallel3(
-      loadCentroids(spark, dir),
-      {
-        val cbDf = spark.read.parquet(s"$dir/codebooks")
-        spark.createDataFrame(
-          java.util.Arrays.asList(cbDf.collect(): _*), cbDf.schema)
-      },
-      spark.read.parquet(s"$encDir/_index")
-        .select("file", "lo", "hi").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getInt(2))))
-    val probes = probeBuckets(queries, cent, nprobe)
-    val buckets = probes.select("bucket").distinct().collect()
-      .map(_.getInt(0)).toSet
-    val keep = manifest.collect {
-      case (f, lo, hi) if buckets.exists(b => b >= lo && b <= hi) => f
-    }
-    val encoded =
-      if (keep.isEmpty) spark.read.parquet(encDir).limit(0)
-      else spark.read.parquet(keep.toIndexedSeq: _*)
-    ivfpqTopK(queries, cent, cb, encoded, k, nprobe)
+    val table = encodedDir(dir)
+    val meta = loadMeta(spark, dir, table, codebooks = true)
+    val (_, encoded) = probedRows(spark, queries, meta, table, nprobe)
+    ivfpqTopK(queries, meta.cent, meta.codebooks.get, encoded, k, nprobe)
   }
 
   // ---- Random-hyperplane LSH (Charikar 2002) -------------------------

@@ -50,9 +50,9 @@ class PlanShapeSpec extends SparkSpec {
     val df = graft.llm.Ann.assignBuckets(
       graft.core.Tables.load(spark, sf, "embeddings")
         .selectExpr("vec_id", "embedding AS ce"),
-      graft.llm.Ann.seedCentroids(
+      graft.llm.Ann.ivfCentroids(
         graft.core.Tables.load(spark, sf, "embeddings")
-          .selectExpr("vec_id", "embedding AS ce"), 4))
+          .selectExpr("vec_id", "embedding AS ce"), 4, iters = 0))
     val p = df.queryExecution.executedPlan.toString
     // The centroid matrix compiles into the argmax_bucket expression,
     // so the assignment subtree is scan → project — at 100 TB a Lloyd

@@ -1,6 +1,7 @@
 package graft.llm
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -31,6 +32,41 @@ class AnnSpec extends SparkSpec {
     rows.toDF("vec_id", "ce")
   }
 
+  /** Per-query recall of `approx` against `exact` (both shaped
+    * (qid, vec_id, ..., rank), rank ≤ k). Output
+    * (qid, n_hits, recall_x1e4). */
+  private def recallVsBrute(approx: DataFrame, exact: DataFrame, k: Int): DataFrame = {
+    val a = approx.select(col("qid"), col("vec_id"))
+    val e = exact.select(col("qid"), col("vec_id"))
+    e.join(a, Seq("qid", "vec_id"), "left_semi")
+      .groupBy("qid").agg(count(lit(1)).as("n_hits"))
+      .join(e.select("qid").distinct(), Seq("qid"), "right_outer")
+      .na.fill(0, Seq("n_hits"))
+      .select(col("qid"), col("n_hits"),
+        graft.functions.F.scale4(col("n_hits").cast("double") / k).as("recall_x1e4"))
+  }
+
+  /** Spark jobs `body` runs, those of the threads it starts included
+    * (they inherit its job group). A fence job in a second group
+    * orders the count after every earlier job event: the status store
+    * records events in submission order. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"annspec-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    val fence = s"$group-fence"
+    sc.setJobGroup(fence, fence)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    def fenced = tracker.getJobIdsForGroup(fence).exists(id =>
+      tracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(fenced, "job events did not drain")
+    tracker.getJobIdsForGroup(group).length
+  }
+
   test("IVF recall >= 0.9 on clustered embeddings (nprobe=2, 10 buckets)") {
     val corpus = clustered
     val cent = Ann.ivfCentroids(corpus, nClusters, iters = 2).cache()
@@ -38,7 +74,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("qid"), col("ce").as("qe"))
     val ivf = Ann.ivfTopK(q, corpus, cent, k = 10, nprobe = 2)
     val brute = Ann.cosineTopK(q, corpus, k = 10)
-    val rec = Ann.recallVsBrute(ivf, brute, k = 10)
+    val rec = recallVsBrute(ivf, brute, k = 10)
       .agg(avg(col("recall_x1e4"))).head().getDouble(0) / 10000.0
     assert(rec >= 0.9, s"avg recall $rec < 0.9")
   }
@@ -51,7 +87,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("qid"), col("ce").as("qe"))
     val pq = Ann.pqTopK(q, enc, cb, k = 10)
     val brute = Ann.cosineTopK(q, corpus, k = 10)
-    val rec = Ann.recallVsBrute(pq, brute, k = 10)
+    val rec = recallVsBrute(pq, brute, k = 10)
       .agg(avg(col("recall_x1e4"))).head().getDouble(0) / 10000.0
     info(s"PQ ADC recall@10: $rec")
     // Within a tight cluster PQ collapses members onto a handful of
@@ -76,7 +112,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("qid"), col("ce").as("qe"))
     val rr = Ann.pqTopKReranked(q, enc, cb, corpus, k = 10, shortlist = 50)
     val brute = Ann.cosineTopK(q, corpus, k = 10)
-    val rec = Ann.recallVsBrute(rr, brute, k = 10)
+    val rec = recallVsBrute(rr, brute, k = 10)
       .agg(avg(col("recall_x1e4"))).head().getDouble(0) / 10000.0
     info(s"PQ+rerank recall@10: $rec")
     assert(rec >= 0.9, s"PQ+rerank recall $rec < 0.9")
@@ -265,17 +301,15 @@ class AnnSpec extends SparkSpec {
     val mem = Ann.ivfpqTopK(q, cent, cb, enc, k = 10, nprobe = 2)
       .select("qid", "vec_id", "dot_x1e6", "rank").orderBy("qid", "rank").collect()
     assert(persisted.toSeq == mem.toSeq)
-    // serving scans a strict subset of the encoded files: replay the
-    // manifest pruning for a 1-query probe (input_file_name can't
+    // serving scans a strict subset of the encoded files: the serving
+    // read's pruned scan for a 1-query probe (input_file_name can't
     // survive the ADC aggregate, so assert at the scan level)
     val one = q.limit(1)
-    val probed = Ann.probeBuckets(one, Ann.loadCentroids(spark, idx), 2)
-      .select("bucket").distinct().collect().map(_.getInt(0)).toSet
-    val manifest = spark.read.parquet(s"$idx/encoded/_index")
-      .select("file", "lo", "hi").collect()
-    val keep = manifest.count(r =>
-      probed.exists(b => b >= r.getInt(1) && b <= r.getInt(2)))
-    val total = graft.ops.FileIndex.indexedFileCount(spark, s"$idx/encoded")
+    val table = s"$idx/encoded"
+    val meta = Ann.loadMeta(spark, idx, table, codebooks = true)
+    val (_, rows) = Ann.probedRows(spark, one, meta, table, 2)
+    val keep = rows.inputFiles.length
+    val total = graft.ops.FileIndex.indexedFileCount(spark, table)
     assert(keep < total, s"1-query probe kept $keep of $total files")
     assert(keep >= 1, "probe pruned everything — manifest spans broken")
   }
@@ -443,5 +477,25 @@ class AnnSpec extends SparkSpec {
       floats.select(F.toColumn(ArrayDotInt8(F.toExpr(col("a")), F.toExpr(col("b"))))).collect()
     }
     assert(ex.getMessage.toLowerCase.contains("type"))
+  }
+
+  test("IVF/PQ build and persisted IVF+PQ serving stay within their Spark job counts") {
+    val corpus = clustered
+    val idx = tempDir("ann_jobs_spec").toString
+    Ann.writeIndexPq(corpus, idx, nClusters, m = 4, ksub = 8, iters = 2, files = 5)
+    val q = corpus.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("qid"), col("ce").as("qe"))
+    val ivf = jobsOf(Ann.ivfCentroids(corpus, nClusters, iters = 2))
+    val pq = jobsOf(Ann.pqCodebooks(corpus, m = 4, ksub = 8, iters = 2))
+    val serve = jobsOf(Ann.ivfpqTopKPersisted(spark, q, idx, k = 10, nprobe = 2).collect())
+    info(s"jobs: ivfCentroids $ivf, pqCodebooks $pq, ivfpqTopKPersisted + collect $serve")
+    // One seed job per slice, then per Lloyd step one aggregate (AQE
+    // runs its shuffle stage as a job of its own): 1 + 2·2 for IVF,
+    // the dimensionality probe + 4 + 2·2 for PQ. Serving's bound is
+    // its measured count: the metadata reads, the probed-bucket
+    // collect and the ADC query's own jobs.
+    assert(ivf <= 5, s"ivfCentroids ran $ivf jobs")
+    assert(pq <= 9, s"pqCodebooks ran $pq jobs")
+    assert(serve <= 20, s"ivfpqTopKPersisted + collect ran $serve jobs")
   }
 }
