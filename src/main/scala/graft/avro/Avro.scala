@@ -87,7 +87,9 @@ object Avro {
 
   /** Distributed write: one Avro container file per non-empty partition
     * (`part-NNNNN.avro`), rows encoded inside the task — the driver
-    * never sees a row. Existing output is replaced. */
+    * never sees a row. A DataFrame with no rows gets one header-only
+    * container, so the read-back has the written schema and 0 rows.
+    * Existing output is replaced. */
   def write(df: DataFrame, path: String): Unit = {
     val schema = df.schema
     val schemaJson = avroSchema(schema).toString // Schema isn't Serializable
@@ -95,19 +97,27 @@ object Avro {
     val fs = dir.getFileSystem(new Configuration())
     if (fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    val written = df.rdd.mapPartitionsWithIndex { (idx, rows) =>
       if (rows.hasNext) {
         val avro = new Schema.Parser().parse(schemaJson)
-        val file = new Path(path, f"part-$idx%05d.avro")
-        val out = file.getFileSystem(new Configuration()).create(file, true)
-        val w = new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](avro))
-        w.create(avro, out)
-        try rows.foreach(r => w.append(toRecord(r, schema, avro)))
-        finally w.close() // closes the stream too
+        writeContainer(new Path(path, f"part-$idx%05d.avro"), avro,
+          rows.map(toRecord(_, schema, avro)))
         Iterator.single(1)
       } else Iterator.empty
-    }.count(): Unit
+    }.count()
+    if (written == 0)
+      writeContainer(new Path(path, "part-00000.avro"), avroSchema(schema), Iterator.empty)
+  }
+
+  /** One container file at `file`: the header, then `records`. */
+  private def writeContainer(file: Path, avro: Schema,
+      records: Iterator[GenericRecord]): Unit = {
+    val out = file.getFileSystem(new Configuration()).create(file, true)
+    val w = new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](avro))
+    w.create(avro, out)
+    try records.foreach(w.append)
+    finally w.close() // closes the stream too
   }
 
   private def toRecord(r: Row, schema: StructType, avro: Schema): GenericRecord = {

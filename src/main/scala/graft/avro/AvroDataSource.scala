@@ -1,6 +1,5 @@
 package graft.avro
 
-import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileReader
@@ -10,12 +9,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.{FileSource, Pushed}
 
 /** DataSource V2 Avro reader (SURVEY §4 source family; the row-format
   * interchange sibling of the ORC gate).
@@ -34,73 +32,31 @@ import org.apache.spark.unsafe.types.UTF8String
   * the pruned Spark schema is re-projected onto the file's own writer
   * schema and installed as the GenericDatumReader's expected schema,
   * so Avro schema resolution skips non-required fields during decode
-  * (`.explain` shows the pruned ReadSchema). Predicates are not pushed
-  * — Avro blocks carry no min/max statistics to prune with, so a
-  * post-scan filter costs the same either way. */
-class AvroDataSource extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+  * (`.explain` shows the pruned ReadSchema). The pushed limit caps
+  * each split (the [[graft.sources.FileSource]] contract). Predicates
+  * are not pushed — Avro blocks carry no min/max statistics to prune
+  * with, so a post-scan filter costs the same either way. */
+class AvroDataSource extends FileSource {
   override def shortName(): String = "graft-avro"
-  override def supportsExternalMetadata(): Boolean = true
+  override protected def pushesFilters: Boolean = false
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Avro.sparkSchema(Avro.fileSchema(
-      AvroDataSource.listFiles(options.get("path")).head._1))
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new AvroTable(schema, new CaseInsensitiveStringMap(properties))
-}
+    Avro.sparkSchema(Avro.fileSchema(files(options).head._1))
 
-object AvroDataSource {
-  /** (path, length) for each non-empty file under `path`. */
-  private[avro] def listFiles(path: String): Seq[(String, Long)] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    val st = fs.getFileStatus(p)
-    if (st.isDirectory)
-      fs.listStatus(p).filter(s => s.isFile && s.getLen > 0)
-        .map(s => (s.getPath.toString, s.getLen)).sortBy(_._1).toSeq
-    else Seq((path, st.getLen))
-  }
-}
-
-private[avro] class AvroTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-avro:${options.get("path")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new AvroScanBuilder(tableSchema, options)
-}
-
-private[avro] class AvroScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownLimit {
-  private var required: StructType = full
-  private var limit: Int = -1
-  override def pruneColumns(r: StructType): Unit = required = r
-  /** Per-SPLIT cap: each byte-range reader stops decoding after `l`
-    * records; Spark keeps the global Limit (hence false). */
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-  override def build(): Scan = new AvroScan(required, limit, options)
-}
-
-private[avro] class AvroScan(required: StructType, limit: Int,
-    options: CaseInsensitiveStringMap) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-avro ${options.get("path")} " +
-      (if (limit >= 0) s"PushedLimit: $limit, " else "") +
-      s"ReadSchema: ${required.catalogString}"
-  override def planInputPartitions(): Array[InputPartition] = {
-    val splitBytes = options.getLong("maxSplitBytes", 32L << 20)
-    AvroDataSource.listFiles(options.get("path")).flatMap { case (f, len) =>
-      (0L until len by splitBytes).map(start =>
-        AvroSplitPartition(f, start, math.min(splitBytes, len - start)))
-    }.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AvroReaderFactory(required, limit)
+  override protected def scan(options: CaseInsensitiveStringMap, pushed: Pushed): Scan =
+    new Scan with Batch {
+      override def readSchema(): StructType = pushed.required
+      override def toBatch: Batch = this
+      override def description(): String = describe(options, pushed)
+      override def planInputPartitions(): Array[InputPartition] = {
+        val splitBytes = options.getLong("maxSplitBytes", 32L << 20)
+        files(options).flatMap { case (f, len) =>
+          (0L until len by splitBytes).map(start =>
+            AvroSplitPartition(f, start, math.min(splitBytes, len - start)))
+        }.toArray
+      }
+      override def createReaderFactory(): PartitionReaderFactory =
+        new AvroReaderFactory(pushed.required, pushed.limit)
+    }
 }
 
 private[avro] case class AvroSplitPartition(file: String, start: Long, length: Long)

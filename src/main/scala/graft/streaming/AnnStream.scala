@@ -54,7 +54,7 @@ object AnnStream {
       .option("maxFilesPerTrigger", "1").parquet(g.in)
     try g.run(retrieve(stream, assigned, centroids, g.out, g.checkpoint, k, nprobe))
     finally assigned.unpersist(blocking = false): Unit
-    g.ss.read.parquet(s"${g.keep(g.out)}/b*")
+    g.ss.read.option("recursiveFileLookup", "true").parquet(g.keep(g.out))
       .select("qid", "vec_id", "cos_x1e4", "rank")
       .orderBy("qid", "rank")
   }

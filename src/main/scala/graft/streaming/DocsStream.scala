@@ -86,6 +86,7 @@ object DocsStream {
       Dedup.minhashState(d.select(col("doc_id").as("id"), col("text")),
         "id", "text"),
       g.dir("state"), pairs, g.checkpoint))
-    g.ss.read.parquet(s"${g.keep(pairs)}/b*").orderBy("a", "b")
+    g.ss.read.option("recursiveFileLookup", "true").parquet(g.keep(pairs))
+      .orderBy("a", "b")
   }
 }

@@ -159,10 +159,8 @@ object Xlsb {
       .map(b => Xlsx.parseRels(new String(b, "UTF-8"))).getOrElse(Map.empty)
     val bundle = parseBundle(entries.getOrElse("xl/workbook.bin",
       throw new IllegalArgumentException(s"no xl/workbook.bin in $file — not a .xlsb workbook")))
-    bundle.zipWithIndex.map { case ((name, rid), i) =>
-      val target = rels.getOrElse(rid, s"worksheets/sheet${i + 1}.bin")
-      val path = if (target.startsWith("/")) target.drop(1) else s"xl/$target"
-      val cells = entries.get(path).map(parseSheet(_, sst)).getOrElse(Nil)
+    Xlsx.sheetParts(bundle, rels, "bin").map { case (name, part) =>
+      val cells = entries.get(part).map(parseSheet(_, sst)).getOrElse(Nil)
       // 0-based rows → the 1-based convention cellsToDf expects
       name -> Xlsx.cellsToDf(spark, cells.map(c => (c._1 + 1, c._2, c._3)))
     }

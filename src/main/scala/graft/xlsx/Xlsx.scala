@@ -143,17 +143,33 @@ object Xlsx {
     * directory is parsed on the driver (workbook-sized input by
     * definition); per-sheet row materialization is deferred to Spark. */
   def readWorkbook(spark: SparkSession, file: String): Seq[(String, DataFrame)] = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
-    val entries = readZip(bytes)
-    val shared = entries.get("xl/sharedStrings.xml").map(parseSharedStrings).getOrElse(Vector.empty)
-    val sheetNames = entries.get("xl/workbook.xml").map(parseSheetNames).getOrElse(Nil)
-    val rels = entries.get("xl/_rels/workbook.xml.rels").map(parseRels).getOrElse(Map.empty)
-    sheetNames.zipWithIndex.map { case ((name, rid), i) =>
-      val target = rels.getOrElse(rid, s"worksheets/sheet${i + 1}.xml")
-      val path = if (target.startsWith("/")) target.drop(1) else s"xl/$target"
-      val cells = entries.get(path).map(parseSheetCells(_, shared)).getOrElse(Nil)
-      name -> cellsToDf(spark, cells)
+    val book = new Book(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
+    book.sheets.map { case (name, part) => name -> cellsToDf(spark, book.cells(part)) }
+  }
+
+  /** (sheet name, zip path of its part) in tab order, from a workbook's
+    * sheet directory (name, rel id) and its rels (id → target). A
+    * target is absolute or relative to `xl/`; a sheet with no rel
+    * falls back to `xl/worksheets/sheet{i+1}.{ext}`. The one resolver
+    * under the `.xlsx` and `.xlsb` readers. */
+  private[xlsx] def sheetParts(sheets: Seq[(String, String)],
+      rels: Map[String, String], ext: String): Seq[(String, String)] =
+    sheets.zipWithIndex.map { case ((name, rid), i) =>
+      val target = rels.getOrElse(rid, s"worksheets/sheet${i + 1}.$ext")
+      name -> (if (target.startsWith("/")) target.drop(1) else s"xl/$target")
     }
+
+  /** An `.xlsx` byte image: its parts, shared strings and sheets. */
+  private final class Book(bytes: Array[Byte]) {
+    private val entries = readZip(bytes)
+    private val shared =
+      entries.get("xl/sharedStrings.xml").map(parseSharedStrings).getOrElse(Vector.empty)
+    val sheets: Seq[(String, String)] = sheetParts(
+      entries.get("xl/workbook.xml").map(parseSheetNames).getOrElse(Nil),
+      entries.get("xl/_rels/workbook.xml.rels").map(parseRels).getOrElse(Map.empty),
+      "xml")
+    def cells(part: String): Seq[(Int, Int, String)] =
+      entries.get(part).map(parseSheetCells(_, shared)).getOrElse(Nil)
   }
 
   /** All zip entries as raw bytes — the one entry walker shared by the
@@ -326,18 +342,14 @@ object Xlsx {
     * `sheet` = None → first sheet. */
   private[xlsx] def parseSheetGrid(bytes: Array[Byte],
       sheet: Option[String]): (Seq[String], Seq[Seq[String]]) = {
-    val entries = readZip(bytes)
-    val shared = entries.get("xl/sharedStrings.xml").map(parseSharedStrings).getOrElse(Vector.empty)
-    val sheetNames = entries.get("xl/workbook.xml").map(parseSheetNames).getOrElse(Nil)
-    val rels = entries.get("xl/_rels/workbook.xml.rels").map(parseRels).getOrElse(Map.empty)
-    val idx = sheet.fold(0) { s =>
-      val i = sheetNames.indexWhere(_._1 == s)
-      require(i >= 0, s"no sheet '$s' (sheets: ${sheetNames.map(_._1).mkString(", ")})")
-      i
+    val book = new Book(bytes)
+    val part = sheet match {
+      case None => book.sheets.headOption.fold("xl/worksheets/sheet1.xml")(_._2)
+      case Some(s) =>
+        val found = book.sheets.find(_._1 == s)
+        require(found.nonEmpty, s"no sheet '$s' (sheets: ${book.sheets.map(_._1).mkString(", ")})")
+        found.get._2
     }
-    val (_, rid) = sheetNames.lift(idx).getOrElse(("", ""))
-    val target = rels.getOrElse(rid, s"worksheets/sheet${idx + 1}.xml")
-    val path = if (target.startsWith("/")) target.drop(1) else s"xl/$target"
-    cellGrid(entries.get(path).map(parseSheetCells(_, shared)).getOrElse(Nil))
+    cellGrid(book.cells(part))
   }
 }

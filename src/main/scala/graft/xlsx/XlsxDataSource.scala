@@ -1,77 +1,31 @@
 package graft.xlsx
 
-import java.util
-import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.{FileSource, StringFileSource, StringFormat}
 
-/** DataSource V2 XLSX reader (SURVEY §4: `SupportsPushDownRequiredColumns`
-  * + `SupportsPushDownFilters` for the custom sources).
+/** DataSource V2 XLSX reader on the shared file scan
+  * ([[graft.sources.FileSource]] holds the pruning, filter and limit
+  * contract).
   *
   * Where `Xlsx.readWorkbook` parses one workbook on the driver (the
   * workbook-export path), this connector reads a *directory of
-  * workbooks* as one table: one InputPartition per file, zip + StAX
-  * parse inside executors, schema from the first file's chosen sheet,
-  * and column pruning pushed into the scan — a select over a wide
-  * sheet materializes only the required columns. Accepted string
-  * predicates (see [[graft.sources.StringFilters]]) evaluate inside
-  * the sheet parse, before any row materializes.
+  * workbooks* as one table: only the `.xlsx` files in it, one partition
+  * per workbook, zip + StAX parse inside executors, schema = the
+  * header row of the first workbook's chosen sheet.
   *
   * Options: `path`, `sheet` (name; default = each file's first sheet).
   */
-class XlsxDataSource extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+class XlsxDataSource extends StringFileSource {
   override def shortName(): String = "graft-xlsx"
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    XlsxDataSource.sampleSchema(options)
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new XlsxTable(schema, new CaseInsensitiveStringMap(properties))
+  override protected def accept(name: String): Boolean =
+    name.toLowerCase.endsWith(".xlsx")
+  override protected def format(options: CaseInsensitiveStringMap): StringFormat =
+    XlsxFormat(Option(options.get("sheet")).filter(_.nonEmpty))
 }
 
 object XlsxDataSource {
-
-  private[xlsx] def listFiles(path: String): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val st = fs.getFileStatus(p)
-    if (st.isDirectory)
-      fs.listStatus(p).filter(s => s.isFile && s.getLen > 0 &&
-        s.getPath.getName.toLowerCase.endsWith(".xlsx"))
-        .map(_.getPath.toString).sorted.toSeq
-    else Seq(path)
-  }
-
-  private[xlsx] def readBytes(file: String): Array[Byte] = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
-  }
-
-  private[xlsx] def sheetOpt(options: CaseInsensitiveStringMap): Option[String] =
-    Option(options.get("sheet")).filter(_.nonEmpty)
-
-  private[xlsx] def sampleSchema(options: CaseInsensitiveStringMap): StructType = {
-    val (header, _) = Xlsx.parseSheetGrid(
-      readBytes(listFiles(options.get("path")).head), sheetOpt(options))
-    StructType(header.map(h => StructField(h, StringType, nullable = false)))
-  }
 
   /** Read a file/directory of workbooks as one table through the DSv2
     * connector (pruning-capable scan). */
@@ -82,98 +36,19 @@ object XlsxDataSource {
   }
 }
 
-private[xlsx] class XlsxTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-xlsx:${options.get("path")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new XlsxScanBuilder(tableSchema, options)
-}
+private case class XlsxFormat(sheet: Option[String]) extends StringFormat {
 
-private[xlsx] class XlsxScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = full
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var limit: Int = -1
-  override def pruneColumns(r: StructType): Unit = required = r
-  /** Per-partition cap, same contract as the XML builder: each sheet's
-    * row cursor stops after `l` surviving rows; Spark keeps the global
-    * Limit (hence false). */
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-  /** Same contract as the XML builder: accepted filters are FULLY
-    * handled (rows die inside the sheet parse), residual goes back to
-    * Spark. Evaluation semantics in [[graft.sources.StringFilters]]. */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    val names = full.fieldNames.toSet
-    val (ok, residual) =
-      filters.partition(graft.sources.StringFilters.supported(_, names))
-    pushed = ok
-    residual
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def build(): Scan = new XlsxScan(required, pushed, limit, options)
-}
+  private def grid(file: String) = Xlsx.parseSheetGrid(FileSource.readBytes(file), sheet)
 
-private[xlsx] class XlsxScan(required: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter], limit: Int,
-    options: CaseInsensitiveStringMap) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-xlsx ${options.get("path")} " +
-      s"PushedFilters: [${pushed.mkString(", ")}], " +
-      (if (limit >= 0) s"PushedLimit: $limit, " else "") +
-      s"ReadSchema: ${required.catalogString}"
-  override def planInputPartitions(): Array[InputPartition] =
-    XlsxDataSource.listFiles(options.get("path"))
-      .map(f => XlsxFilePartition(f): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XlsxReaderFactory(required.fieldNames, pushed, limit,
-      XlsxDataSource.sheetOpt(options).orNull)
-}
+  override def schema(file: String): StructType =
+    StructType(grid(file)._1.map(h => StructField(h, StringType, nullable = false)))
 
-private[xlsx] case class XlsxFilePartition(file: String) extends InputPartition
-
-private[xlsx] class XlsxReaderFactory(cols: Array[String],
-    pushed: Array[org.apache.spark.sql.sources.Filter], limit: Int,
-    sheetOrNull: String) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val file = p.asInstanceOf[XlsxFilePartition].file
-    new PartitionReader[InternalRow] {
-      // (header→required-index mapping, data rows) parsed lazily in the
-      // executor; only required columns materialize into rows. Pushed
-      // filters read cells through the FULL header (their columns may
-      // be pruned from the projection), so rows fail inside the parse
-      // iterator before any InternalRow materializes.
-      private lazy val (idx, it): (Array[Int], Iterator[Seq[String]]) = {
-        val (header, rows) = Xlsx.parseSheetGrid(
-          XlsxDataSource.readBytes(file), Option(sheetOrNull))
-        val base = rows.iterator
-        val filtered =
-          if (pushed.isEmpty) base
-          else {
-            val at = header.zipWithIndex.toMap
-            base.filter { r =>
-              val get = (c: String) => at.get(c)
-                .collect { case i if i < r.length => r(i) }.getOrElse("")
-              pushed.forall(graft.sources.StringFilters.eval(_, get))
-            }
-          }
-        val capped = if (limit >= 0) filtered.take(limit) else filtered
-        (cols.map(header.indexOf), capped)
-      }
-      private var cur: Seq[String] = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow =
-        new GenericInternalRow(idx.map(i =>
-          UTF8String.fromString(if (i >= 0 && i < cur.length) cur(i) else ""))
-          .toArray[Any])
-      override def close(): Unit = ()
+  override def rows(file: String, keep: Set[String]): Iterator[String => String] = {
+    val (header, rows) = grid(file)
+    // first occurrence wins, as in the schema's column order
+    val at = header.zipWithIndex.reverseIterator.toMap
+    rows.iterator.map { r => (c: String) =>
+      at.get(c).collect { case i if i < r.length => r(i) }.getOrElse("")
     }
   }
 }

@@ -1,175 +1,53 @@
 package graft.xml
 
-import java.util
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.{FileSource, StringFileSource, StringFormat}
 
-/** DataSource V2 XML reader (SURVEY §4: `SupportsPushDownRequiredColumns`
-  * + `SupportsPushDownFilters` for the custom sources).
+/** DataSource V2 XML reader on the shared file scan
+  * ([[graft.sources.FileSource]] holds the pruning, filter and limit
+  * contract).
   *
-  * Shape: XML is not block-splittable, so the unit of parallelism is
-  * the file — one InputPartition per file, StAX parse inside the
-  * executor. Column pruning reaches the source: Catalyst hands the
-  * required schema to `pruneColumns`, the reader materializes only
-  * those columns into rows (`.explain` shows the pruned ReadSchema),
-  * and the parser skips storing non-required keys — a
-  * `select(one_col)` over wide XML no longer pays memory for every
-  * column. String predicates push the same way: accepted filters
-  * (see [[graft.sources.StringFilters]]) drop rows inside the parse
-  * loop and vanish from the post-scan plan — a selective predicate
-  * over a big extract no longer materializes every row.
+  * XML is not block-splittable, so each file is one partition, StAX-
+  * parsed inside the executor. The parser skips storing keys outside
+  * the required and filter-referenced columns, so a `select(one_col)`
+  * over wide XML does not pay memory for every column.
   *
   * Schema = union keys of the first 1000 rows of the first file (P2
   * sampling, driver-side pre-pass — mirroring the reference's
   * two-phase collectTables), all StringType, missing cells ''.
+  *
+  * Options: `path`, `rowTag`, `flatten` (nested elements → dot-path
+  * columns).
   */
-class XmlDataSource extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+class XmlDataSource extends StringFileSource {
   override def shortName(): String = "graft-xml"
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    XmlDataSource.sampleSchema(options)
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new XmlTable(schema, new CaseInsensitiveStringMap(properties))
+  override protected def format(options: CaseInsensitiveStringMap): StringFormat =
+    XmlFormat(options.get("rowTag"), options.getBoolean("flatten", false))
 }
 
 object XmlDataSource {
+  private[xml] def sampleSchema(options: CaseInsensitiveStringMap): StructType =
+    new XmlDataSource().inferSchema(options)
+}
 
-  private[xml] def listFiles(path: String): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val st = fs.getFileStatus(p)
-    if (st.isDirectory)
-      fs.listStatus(p).filter(s => s.isFile && s.getLen > 0)
-        .map(_.getPath.toString).sorted.toSeq
-    else Seq(path)
-  }
+private case class XmlFormat(rowTag: String, flatten: Boolean) extends StringFormat {
 
-  private[xml] def readFile(file: String): String = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8")
-    } finally in.close()
-  }
+  private def parse(file: String, keep: Option[Set[String]]) =
+    Xml.parseRowsIter(new String(FileSource.readBytes(file), UTF_8), rowTag,
+      flatten, keep)
 
   /** P2 schema probe: union keys of the first 1000 rows. The lazy
-    * parseRowsIter cursor stops at row 1000 — a 1 GB document costs a
-    * 1000-row parse here, not a full-file materialization. */
-  private[xml] def sampleSchema(options: CaseInsensitiveStringMap): StructType = {
-    val rows = Xml.parseRowsIter(
-      readFile(listFiles(options.get("path")).head),
-      options.get("rowTag"),
-      options.getBoolean("flatten", false)).take(1000)
+    * parseRowsIter cursor stops at row 1000 — a 1 GB document is read
+    * whole but parsed only to row 1000. */
+  override def schema(file: String): StructType = {
     val keys = mutable.LinkedHashSet.empty[String]
-    rows.foreach(_.keys.foreach(keys.add))
+    parse(file, None).take(1000).foreach(_.keys.foreach(keys.add))
     StructType(keys.toSeq.map(k => StructField(k, StringType, nullable = false)))
   }
-}
 
-private[xml] class XmlTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-xml:${options.get("path")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new XmlScanBuilder(tableSchema, options)
-}
-
-private[xml] class XmlScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = full
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var limit: Int = -1
-  override def pruneColumns(r: StructType): Unit = required = r
-  /** Per-PARTITION cap: each file's parse cursor stops after `l`
-    * surviving rows, so a preview over a huge extract parses a handful
-    * of rows instead of the document. Returns false — the source spans
-    * many files, so Spark keeps the global Limit node; the win is the
-    * parse work saved inside each partition, not plan surgery. */
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-  /** Accept the filters [[graft.sources.StringFilters]] evaluates with
-    * exactly Spark's semantics; they are FULLY handled (rows die inside
-    * the StAX parse loop), so only the residual returns for post-scan
-    * evaluation. */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    val names = full.fieldNames.toSet
-    val (ok, residual) =
-      filters.partition(graft.sources.StringFilters.supported(_, names))
-    pushed = ok
-    residual
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def build(): Scan = new XmlScan(required, pushed, limit, options)
-}
-
-private[xml] class XmlScan(required: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter], limit: Int,
-    options: CaseInsensitiveStringMap) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-xml ${options.get("path")} " +
-      s"PushedFilters: [${pushed.mkString(", ")}], " +
-      (if (limit >= 0) s"PushedLimit: $limit, " else "") +
-      s"ReadSchema: ${required.catalogString}"
-  override def planInputPartitions(): Array[InputPartition] =
-    XmlDataSource.listFiles(options.get("path"))
-      .map(f => XmlFilePartition(f): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XmlReaderFactory(required.fieldNames, pushed, limit,
-      options.get("rowTag"), options.getBoolean("flatten", false))
-}
-
-private[xml] case class XmlFilePartition(file: String) extends InputPartition
-
-private[xml] class XmlReaderFactory(cols: Array[String],
-    pushed: Array[org.apache.spark.sql.sources.Filter], limit: Int,
-    rowTag: String, flatten: Boolean) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val file = p.asInstanceOf[XmlFilePartition].file
-    new PartitionReader[InternalRow] {
-      // The parser must retain filter-referenced columns even when the
-      // projection pruned them away (a fully-pushed predicate's column
-      // drops out of readSchema); output rows still carry only `cols`.
-      // The pushed limit caps SURVIVING rows (it sits after the filter
-      // in the iterator chain), stopping the StAX cursor early.
-      private lazy val it: Iterator[Map[String, String]] = {
-        val keep = cols.toSet ++ pushed.flatMap(_.references)
-        val rows = Xml.parseRowsIter(XmlDataSource.readFile(file), rowTag,
-          flatten, keep = Some(keep))
-        val filtered = if (pushed.isEmpty) rows
-        else rows.filter { r =>
-          val get = (c: String) => r.getOrElse(c, "")
-          pushed.forall(graft.sources.StringFilters.eval(_, get))
-        }
-        if (limit >= 0) filtered.take(limit) else filtered
-      }
-      private var cur: Map[String, String] = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow =
-        new GenericInternalRow(
-          cols.map(c => UTF8String.fromString(cur.getOrElse(c, ""))).toArray[Any])
-      override def close(): Unit = ()
-    }
-  }
+  override def rows(file: String, keep: Set[String]): Iterator[String => String] =
+    parse(file, Some(keep)).map(r => (c: String) => r.getOrElse(c, ""))
 }

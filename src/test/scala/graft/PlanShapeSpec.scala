@@ -314,6 +314,17 @@ class PlanShapeSpec extends SparkSpec {
       .option("rowTag", "row").load()
       .filter(org.apache.spark.sql.functions.col("id") === "97").limit(5)
     assert(fq.collect().map(_.getString(0)).toSeq == Seq("97"))
+    // xlsx: the same two checks over a workbook from the engine's writer
+    val xlsxOut = dir.resolve("w.xlsx").toString
+    graft.xlsx.Xlsx.writeWorkbook(
+      Seq("data" -> spark.range(100).selectExpr("CAST(id AS STRING) AS id")), xlsxOut)
+    val wq = graft.xlsx.XlsxDataSource.readTable(spark, xlsxOut).limit(5)
+    assert(wq.queryExecution.executedPlan.toString.contains("PushedLimit: 5"),
+      wq.queryExecution.executedPlan.toString)
+    assert(wq.count() == 5)
+    val wfq = graft.xlsx.XlsxDataSource.readTable(spark, xlsxOut)
+      .filter(org.apache.spark.sql.functions.col("id") === "97").limit(5)
+    assert(wfq.collect().map(_.getString(0)).toSeq == Seq("97"))
   }
 
   test("xml_pushdown_filter: predicate lives in the graft-xml scan, nothing filters post-scan") {
@@ -675,7 +686,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
     // both source formats present in the same physical plan: the
-    // DSv2 xlsx scan (BatchScan over XlsxScan) and the parquet scan
+    // DSv2 xlsx scan (BatchScan graft-xlsx) and the parquet scan
     assert(p.contains("BatchScan"), p)
     assert(p.contains("FileScan parquet"), p)
   }

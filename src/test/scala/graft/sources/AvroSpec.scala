@@ -110,4 +110,20 @@ class AvroSpec extends SparkSpec {
     Avro.write(df.toDF("id"), out)
     assert(Avro.read(spark, out).count() == 10L)
   }
+
+  test("zero-row write reads back as 0 rows with the written schema") {
+    val out = scratch("zero")
+    val df = spark.range(10).select(col("id"), concat(lit("v"), col("id")).as("s"))
+      .filter(col("id") < 0)
+    Avro.write(df, out)
+    val back = Avro.read(spark, out)
+    assert(back.schema == df.schema)
+    assert(back.count() == 0L)
+  }
+
+  test("a directory with no input file fails naming graft-avro and the path") {
+    val dir = tempDir("avro_spec_nofile").toString
+    val e = intercept[IllegalArgumentException](Avro.read(spark, dir))
+    assert(e.getMessage.contains("graft-avro") && e.getMessage.contains(dir), e.getMessage)
+  }
 }

@@ -75,6 +75,14 @@ class XlsxSpec extends SparkSpec {
     assert(named.count() == 2)
   }
 
+  test("a directory with no .xlsx file fails naming graft-xlsx and the path") {
+    val d = tempDir("xlsxnofile")
+    java.nio.file.Files.writeString(d.resolve("notes.txt"), "not a workbook")
+    val e = intercept[IllegalArgumentException](XlsxDataSource.readTable(spark, d.toString))
+    assert(e.getMessage.contains("graft-xlsx") && e.getMessage.contains(d.toString),
+      e.getMessage)
+  }
+
   test("sheet-name sanitizer: strip, 31-char cap, _N dedup (K5)") {
     val used = mutable.Set.empty[String]
     assert(Xlsx.sanitizeSheetName("a/b:c*?[x]", used) == "a b c   x")

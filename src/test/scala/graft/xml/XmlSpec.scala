@@ -101,6 +101,12 @@ class XmlSpec extends SparkSpec {
     assert(schema.fieldNames.toSeq == Seq("a"))
   }
 
+  test("an empty input directory fails naming graft-xml and the path") {
+    val d = tempDir("xmlnofile").toString
+    val e = intercept[IllegalArgumentException](Xml.readXml(spark, d, "row"))
+    assert(e.getMessage.contains("graft-xml") && e.getMessage.contains(d), e.getMessage)
+  }
+
   test("DSv2 scan prunes columns into the source (SURVEY §4)") {
     val doc = "<rows>" + (1 to 50).map(i =>
       s"<row><a>$i</a><b>b$i</b><c>c$i</c><d>d$i</d></row>").mkString + "</rows>"
