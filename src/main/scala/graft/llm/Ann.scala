@@ -521,7 +521,7 @@ object Ann {
       dir: String, table: String, codebooks: Boolean): IndexMeta = {
     val cb = if (codebooks) Some(inBackground(localTable(spark, s"$dir/codebooks")))
       else None
-    val spans = inBackground(spark.read.parquet(s"$table/_index")
+    val spans = inBackground(graft.ops.FileIndex.manifest(spark, table)
       .select("file", "lo", "hi").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2))))
     IndexMeta(loadCentroids(spark, dir), cb.map(_()), spans())
@@ -923,7 +923,7 @@ object Ann {
     // one manifest collect serves both the file list and the row-total
     // audit baseline (was two reads of the same tiny parquet — one
     // scheduling floor each)
-    val man = spark.read.parquet(s"$cur/_index")
+    val man = graft.ops.FileIndex.manifest(spark, cur)
       .select("file", "rows").collect()
     val live = man.map(_.getString(0)).toIndexedSeq
     val liveRows = man.map(_.getLong(1)).sum
@@ -933,7 +933,7 @@ object Ann {
     graft.ops.FileIndex.writeIndexed(rows, staged, "bucket", files)
     // audit before publish: compaction moves bytes, never rows — the
     // staged manifest must account for exactly the live row total
-    val stagedRows = spark.read.parquet(s"$staged/_index")
+    val stagedRows = graft.ops.FileIndex.manifest(spark, staged)
       .agg(sum(col("rows"))).head().getLong(0)
     require(stagedRows == liveRows,
       s"compactIndexPq: staged generation at $staged holds $stagedRows " +

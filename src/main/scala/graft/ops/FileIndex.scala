@@ -65,7 +65,7 @@ object FileIndex {
     val spark = df.sparkSession
     // collect the manifest BEFORE overwriting it (a lazy self-read
     // would make the _index overwrite read its own input)
-    val knownDf = spark.read.parquet(s"$dir/_index")
+    val knownDf = manifest(spark, dir)
       .select("file", "lo", "hi", "rows")
     val knownSchema = knownDf.schema
     val known = knownDf.collect()
@@ -95,6 +95,21 @@ object FileIndex {
       .write.mode("overwrite").parquet(s"$dir/_index")
   }
 
+  /** The one manifest reader: the `_index` manifest of `dir`, read
+    * through its part files. The underscore name is what hides the
+    * manifest from a scan of the data directory; for the same reason
+    * Spark's DataSource logs "All paths were ignored" on every read of
+    * that root itself, so the reader lists the parts and reads them. */
+  private[graft] def manifest(spark: SparkSession, dir: String): DataFrame = {
+    val root = new Path(s"$dir/_index")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(root).collect {
+      case st if st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".") => st.getPath.toString
+    }
+    spark.read.parquet(parts.toIndexedSeq: _*)
+  }
+
   /** Scan of `dir` pruned to files whose [lo, hi] span intersects
     * [lower, upper] on the indexed column. The manifest collect is
     * driver-side by design (it IS the planning step — the same place
@@ -114,13 +129,13 @@ object FileIndex {
     * introspection for tests and ops tooling. */
   def survivingFiles(spark: SparkSession, dir: String, lower: Column,
       upper: Column): Seq[String] =
-    spark.read.parquet(s"$dir/_index")
+    manifest(spark, dir)
       .filter(!(col("hi") < lower || col("lo") > upper))
       .select("file").collect().map(_.getString(0)).toIndexedSeq
 
   /** Total file count recorded in the manifest. */
   def indexedFileCount(spark: SparkSession, dir: String): Long =
-    spark.read.parquet(s"$dir/_index").count()
+    manifest(spark, dir).count()
 
   // ---- footer-only manifests ----------------------------------------
 
@@ -233,7 +248,7 @@ object FileIndex {
     * bounded by manifest size, it IS the metadata-layer consult. */
   def bloomSurvivingFiles(spark: SparkSession, dir: String,
       key: Long): Seq[String] =
-    spark.read.parquet(s"$dir/_index").select("file", "bloom").collect()
+    manifest(spark, dir).select("file", "bloom").collect()
       .filter(r => graft.functions.BloomOps.mightContain(
         r.getAs[Array[Byte]]("bloom"), key))
       .map(_.getString(0)).toIndexedSeq

@@ -9,13 +9,13 @@ import scala.collection.mutable
   * reference's JS semantics — including parseInt's numeric-prefix
   * parsing and min/max range normalization. Merge/split operate on a
   * minimal COS object model (SURVEY §7.4 risk #2 documents the
-  * subset): object scan by syntax (no xref dependence), FlateDecode
-  * `/ObjStm` compressed object streams expanded (so PDF 1.5+ files
-  * with xref streams — essentially all modern writers — parse), with
-  * /DecodeParms TIFF and PNG Sub/Up/Average/Paeth predictors undone
-  * after inflate; xref streams themselves ignored on READ (the object
-  * scan never needs them, predictor-compressed or not). Encrypted
-  * files decrypt via PdfCrypt. Objects are re-numbered with an offset
+  * subset): object scan by syntax (no xref dependence), `/ObjStm`
+  * compressed object streams expanded (so PDF 1.5+ files with xref
+  * streams — essentially all modern writers — parse) after decoding
+  * through the same /Filter chain and /DecodeParms predictors as
+  * content streams ([[streamData]]); xref streams themselves ignored
+  * on READ (the object scan never needs them, predictor-compressed or
+  * not). Encrypted files decrypt via PdfCrypt. Objects are re-numbered with an offset
   * per source document and page trees rebuilt; output serializes to
   * classic 1.4 xref for classic sources and to the PDF 1.5 compressed
   * form (ObjStm + xref stream) when a source carried an xref stream.
@@ -352,12 +352,24 @@ object Pdf {
     out.toByteArray
   }
 
-  private val objStmHeadRe =
-    """(?s)(\d+)\s+0\s+obj\s*(<<(?:[^<>]|<<[^<>]*>>)*>>)\s*stream\r?\n""".r
-  private def dictInt(dict: String, key: String): Option[Int] =
-    (key + """\s+(\d+)""").r.findFirstMatchIn(dict).map(_.group(1).toInt)
+  /** The one dictionary-integer reader (shared with [[PdfCrypt]], whose
+    * `/P` is negative): the signed integer after `key`, or None when
+    * there is none or it is outside Int range. */
+  private[ops] def dictInt(dict: String, key: String): Option[Int] =
+    (key + """\s+(-?\d+)""").r.findFirstMatchIn(dict).flatMap(_.group(1).toIntOption)
 
-  /** Expand every `/Type /ObjStm` compressed object stream: inflate,
+  /** The one stream framer ([PDF 32000] 7.3.8): the end of a payload
+    * that starts at `dataStart` of `s`, taken from the direct /Length in
+    * `dict` — None when that entry is absent, negative or runs past the
+    * end of `s`, and the caller falls back to the `endstream` token.
+    * The bound is `len <= s.length - dataStart`: the sum form
+    * overflows for a /Length near Int.MaxValue and jumps backwards. */
+  private def framedEnd(dict: String, s: String, dataStart: Int): Option[Int] =
+    dictInt(dict, "/Length").filter(len => len >= 0 && len <= s.length - dataStart)
+      .map(dataStart + _)
+
+  /** Expand one `/Type /ObjStm` compressed object stream: decode its
+    * payload through [[streamData]] (the content-stream filter chain),
     * read the N (objnum, offset) header pairs, and surface the embedded
     * objects as top-level bodies. Modern writers put the catalog, page
     * dicts, and most non-content objects inside these; this pass is
@@ -365,47 +377,24 @@ object Pdf {
     * readable by the subset parser — which never needed the xref table
     * to begin with (it scans objects), so xref *streams* need no
     * parsing either. */
-  private def expandObjectStreams(text: String,
+  private def expandObjectStream(body: String,
       objects: mutable.LinkedHashMap[Int, String]): Unit = {
-    objStmHeadRe.findAllMatchIn(text).foreach { m =>
-      val dict = m.group(2)
-      if ("""/Type\s*/ObjStm""".r.findFirstIn(dict).isDefined) {
-        val dataStart = m.end
-        val dataEnd = dictInt(dict, "/Length") match {
-          case Some(len) if dataStart + len <= text.length => dataStart + len
-          case _ => text.indexOf("endstream", dataStart) match {
-            case -1 => text.length
-            case e => e
-          }
+    val decoded = streamData(body).fold("")(new String(_, "ISO-8859-1"))
+    (dictInt(body, "/N"), dictInt(body, "/First")) match {
+      case (Some(n), Some(first)) =>
+        val header = decoded.take(first).trim.split("\\s+").filter(_.nonEmpty)
+          .map(t => t.toIntOption.getOrElse(throw new IllegalArgumentException(
+            s"malformed /ObjStm header token '$t'")))
+        val pairs = header.grouped(2).collect { case Array(num, off) => (num, off) }.toSeq.take(n)
+        pairs.zipWithIndex.foreach { case ((num, off), i) =>
+          // Long sums: offsets come from the file and may be anything
+          val start = first.toLong + off
+          val end = if (i + 1 < pairs.length) first.toLong + pairs(i + 1)._2 else decoded.length
+          if (off < 0 || start > end || end > decoded.length)
+            throw new IllegalArgumentException(s"malformed /ObjStm offset $off for object $num")
+          objects(num) = " " + decoded.substring(start.toInt, end.toInt).trim + " "
         }
-        val raw = text.substring(dataStart, dataEnd).getBytes("ISO-8859-1")
-        val decoded =
-          if ("""/Filter\s*/FlateDecode""".r.findFirstIn(dict).isDefined) {
-            // Writers may predictor-compress any Flate stream via
-            // /DecodeParms (xref streams almost always; ObjStm legally).
-            // Both the inline-dict form and the single-element array
-            // form `[<<...>>]` (legal, and required when /Filter is an
-            // array) are accepted; indirect-reference parms stay out of
-            // the documented subset.
-            val parms = """/DecodeParms\s*\[?\s*(<<[^<>]*>>)""".r
-              .findFirstMatchIn(dict).map(_.group(1))
-            val predictor = parms.flatMap(dictInt(_, "/Predictor")).getOrElse(1)
-            val columns = parms.flatMap(dictInt(_, "/Columns")).getOrElse(1)
-            val colors = parms.flatMap(dictInt(_, "/Colors")).getOrElse(1)
-            val bpc = parms.flatMap(dictInt(_, "/BitsPerComponent")).getOrElse(8)
-            new String(unpredict(inflate(raw), predictor, columns, colors, bpc), "ISO-8859-1")
-          } else new String(raw, "ISO-8859-1")
-        (dictInt(dict, "/N"), dictInt(dict, "/First")) match {
-          case (Some(n), Some(first)) =>
-            val header = decoded.take(first).trim.split("\\s+").filter(_.nonEmpty).map(_.toInt)
-            val pairs = header.grouped(2).collect { case Array(num, off) => (num, off) }.toSeq.take(n)
-            pairs.zipWithIndex.foreach { case ((num, off), i) =>
-              val end = if (i + 1 < pairs.length) first + pairs(i + 1)._2 else decoded.length
-              objects(num) = " " + decoded.substring(first + off, end).trim + " "
-            }
-          case _ =>
-        }
-      }
+      case _ =>
     }
   }
 
@@ -451,10 +440,8 @@ object Pdf {
               text.startsWith("stream\r\n", i)) &&
               (i == bodyStart || !text.charAt(i - 1).isLetter) =>
             val dataStart = i + (if (text.charAt(i + 6) == '\r') 8 else 7)
-            val skipTo = dictInt(text.substring(bodyStart, i), "/Length") match {
-              case Some(len) if dataStart + len <= text.length => dataStart + len
-              case _ => dataStart // fall back to the endstream token
-            }
+            val skipTo = framedEnd(text.substring(bodyStart, i), text, dataStart)
+              .getOrElse(dataStart) // fall back to the endstream token
             val es = text.indexOf("endstream", skipTo)
             i = if (es < 0) text.length else es + "endstream".length
           case '(' =>
@@ -506,13 +493,10 @@ object Pdf {
       case None => transformStrings(body, fString)
       case Some(m) =>
         val dataStart = m.end
-        val dataEnd = dictInt(body.substring(0, m.start), "/Length") match {
-          case Some(len) if dataStart + len <= body.length => dataStart + len
-          case Some(len) => throw new IllegalArgumentException(
-            s"stream /Length $len overruns object body (${body.length - dataStart} bytes left)")
-          case None => throw new IllegalArgumentException(
-            "stream without direct /Length unsupported in crypt transform")
-        }
+        val dataEnd = framedEnd(body.substring(0, m.start), body, dataStart)
+          .getOrElse(throw new IllegalArgumentException(
+            "crypt transform needs a direct stream /Length within the object body " +
+              s"(${body.length - dataStart} bytes left)"))
         val out = fStream(body.substring(dataStart, dataEnd).getBytes("ISO-8859-1"))
         val pre = setLength(transformStrings(body.substring(0, m.start), fString), out.length)
         val post = body.substring(dataEnd).dropWhile(c => c == '\r' || c == '\n')
@@ -520,24 +504,15 @@ object Pdf {
     }
 
   private def transformStrings(s: String, f: Array[Byte] => Array[Byte]): String = {
-    def hexOf(b: Array[Byte]) = "<" + b.map(x => f"${x & 0xFF}%02x").mkString + ">"
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
       s.charAt(i) match {
-        case '(' =>
-          val (bytes, next) = PdfCrypt.readLiteralString(s, i)
-          sb.append(hexOf(f(bytes))); i = next
         case '<' if i + 1 < s.length && s.charAt(i + 1) == '<' =>
           sb.append("<<"); i += 2
-        case '<' =>
-          val end = s.indexOf('>', i)
-          require(end >= 0, "unterminated hex string")
-          val hx = s.substring(i + 1, end).filterNot(_.isWhitespace)
-          val padded = if (hx.length % 2 == 1) hx + "0" else hx
-          sb.append(hexOf(f(padded.grouped(2)
-            .map(h => Integer.parseInt(h, 16).toByte).toArray)))
-          i = end + 1
+        case '(' | '<' =>
+          val (bytes, next) = PdfCrypt.readStringAt(s, i)
+          sb.append(PdfCrypt.hex(f(bytes))); i = next
         case c => sb.append(c); i += 1
       }
     }
@@ -571,16 +546,19 @@ object Pdf {
         else transformStreamsAndStrings(b, d => h.decrypt(n, 0, d), s => h.decrypt(n, 0, s)))
     }
     val objects = mutable.LinkedHashMap.empty[Int, String]
+    val objStms = Seq.newBuilder[String]
     scanObjects(text).foreach { case (n, bs, be) =>
       val body = text.substring(bs, be)
-      // container/bookkeeping streams are expanded (ObjStm) or ignored
-      // (XRef) rather than carried as opaque objects; a decrypted
-      // /Encrypt dict is bookkeeping too
-      if ("""/Type\s*/(ObjStm|XRef)""".r.findFirstIn(body).isEmpty &&
-          !encNum.contains(n))
-        objects(n) = body
+      // container/bookkeeping streams are expanded (ObjStm, after the
+      // top-level objects) or ignored (XRef) rather than carried as
+      // opaque objects; a decrypted /Encrypt dict is bookkeeping too
+      """/Type\s*/(ObjStm|XRef)""".r.findFirstMatchIn(body) match {
+        case Some(m) if m.group(1) == "ObjStm" => objStms += body
+        case Some(_) =>
+        case None => if (!encNum.contains(n)) objects(n) = body
+      }
     }
-    expandObjectStreams(text, objects)
+    objStms.result().foreach(expandObjectStream(_, objects))
     // Token-anchored type tests: the catalog also CONTAINS "/Pages 2 0 R",
     // so a bare substring test would misidentify it as the page tree.
     val typeCatalog = """/Type\s*/Catalog""".r
@@ -612,10 +590,22 @@ object Pdf {
   def describeFiles(files: Seq[(String, Array[Byte])], password: String = "")
       : Seq[(String, Boolean, Option[Int], String)] =
     files.map { case (name, bytes) =>
-      if (bytes.isEmpty) (name, false, None, "size 0B")
-      else if (!hasPdfHeader(bytes)) (name, false, None, "no %PDF- header")
-      else try (name, true, Some(pageCount(bytes, password)), "")
-      catch { case e: IllegalArgumentException => (name, false, None, e.getMessage) }
+      perFile(bytes)((name, true, Option(pageCount(bytes, password)), ""))(
+        err => (name, false, None, err))
+    }
+
+  /** The one per-file guard of the batch flows ([[describeFiles]],
+    * [[PdfText.extractTextDf]], [[PdfText.extractImagesDf]]): size-0
+    * and headerless inputs are rejected up front (the reference's
+    * add-flow rejects), and any non-fatal failure of `run` becomes
+    * `error(message)`, so a malformed file is always its own error row
+    * and never fails its batch. */
+  private[ops] def perFile[T](bytes: Array[Byte])(run: => T)(error: String => T): T =
+    if (bytes == null || bytes.isEmpty) error("size 0B")
+    else if (!hasPdfHeader(bytes)) error("no %PDF- header")
+    else try run catch {
+      case scala.util.control.NonFatal(e) =>
+        error(Option(e.getMessage).getOrElse(e.getClass.getName))
     }
 
   /** Garbage-collect before writing: keep only objects reachable from
@@ -705,10 +695,8 @@ object Pdf {
       }
       val flate = deflate((header.toString + data).getBytes("ISO-8859-1"))
       offsets(objStmNum) = sb.length
-      sb.append(s"$objStmNum 0 obj << /Type /ObjStm /N ${packable.size} " +
-        s"/First ${header.length} /Filter /FlateDecode /Length ${flate.length} >> stream\n")
-      sb.append(new String(flate, "ISO-8859-1"))
-      sb.append("\nendstream endobj\n")
+      sb.append(s"$objStmNum 0 obj").append(streamObj(flate, pre = s"/Type /ObjStm " +
+        s"/N ${packable.size} /First ${header.length} /Filter /FlateDecode ")).append("endobj\n")
     }
     // xref stream: W = [1 4 2] — type byte, 4-byte offset/objstm-num,
     // 2-byte gen/index — covering every object 0..xrefNum
@@ -732,90 +720,122 @@ object Pdf {
         }
       }
     }
-    val xdata = deflate(entries.toByteArray)
-    sb.append(s"$xrefNum 0 obj << /Type /XRef /Size ${xrefNum + 1} /W [1 4 2] " +
-      s"/Root $rootNum 0 R /Filter /FlateDecode /Length ${xdata.length} >> stream\n")
-    sb.append(new String(xdata, "ISO-8859-1"))
-    sb.append("\nendstream endobj\n")
+    sb.append(s"$xrefNum 0 obj").append(streamObj(deflate(entries.toByteArray),
+      pre = s"/Type /XRef /Size ${xrefNum + 1} /W [1 4 2] /Root $rootNum 0 R /Filter /FlateDecode "))
+      .append("endobj\n")
     sb.append(s"startxref\n$xrefPos\n%%EOF\n")
     sb.result().getBytes("ISO-8859-1")
   }
+
+  /** The catalog (1) and page-tree root (2) every written document
+    * starts with: `kids` under one /Pages node. */
+  private def pageTree(kids: Seq[Int], catalogTail: String = " "): Seq[(Int, String)] = Seq(
+    1 -> s" << /Type /Catalog /Pages 2 0 R$catalogTail>> ",
+    2 -> s" << /Type /Pages /Kids [${kids.map(n => s"$n 0 R").mkString(" ")}] /Count ${kids.size} >> ")
+
+  /** The one fixture document writer. Objects are laid out as the
+    * catalog (1), the pages node (2), one page dict per page (3 …
+    * 2 + np), one content stream per page when `streams` is non-empty
+    * (3 + np …), then `extra`, which callers number from 3 + 2·np.
+    * `resources(i)` lands in page i's dict ahead of its /Contents. */
+  private def writeDoc(np: Int, streams: Seq[String],
+      resources: Int => String = _ => "", extra: Seq[(Int, String)] = Nil,
+      catalogTail: String = " ", xrefStream: Boolean = false): Array[Byte] = {
+    val pageNums = (0 until np).map(3 + _)
+    val pages = pageNums.zipWithIndex.map { case (n, i) =>
+      val contents = if (streams.isEmpty) "" else s" /Contents ${n + np} 0 R"
+      n -> s" << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]${resources(i)}$contents >> "
+    }
+    serialize(pageTree(pageNums, catalogTail) ++ pages ++
+      streams.zipWithIndex.map { case (st, i) => (3 + np + i) -> st } ++ extra,
+      1, xrefStream)
+  }
+
+  /** The one stream-object writer (fixtures and the 1.5 serializer):
+    * ` << {pre}/Length n{post} >> stream\n…\nendstream `. */
+  private def streamObj(data: Array[Byte], pre: String = "", post: String = ""): String =
+    s" << $pre/Length ${data.length}$post >> stream\n" +
+      new String(data, "ISO-8859-1") + "\nendstream "
+
+  /** A text stream object, deflated under /FlateDecode when `flate`. */
+  private def textStream(text: String, flate: Boolean = false): String = {
+    val plain = text.getBytes("ISO-8859-1")
+    if (flate) streamObj(deflate(plain), post = " /Filter /FlateDecode")
+    else streamObj(plain)
+  }
+
+  /** Page resources naming one font, `/F1`, object `fontNum`. */
+  private def fontResources(fontNum: Int): Int => String =
+    _ => s" /Resources << /Font << /F1 $fontNum 0 R >> >>"
 
   /** Generate a minimal n-page PDF (test fixture + writer baseline).
     * `withContent` adds a /Contents stream and a catalog string so the
     * crypt transforms have both lexical classes to act on. */
   def makePdf(nPages: Int, withContent: Boolean = false,
-      xrefStream: Boolean = false): Array[Byte] = {
-    val pageNums = (0 until nPages).map(3 + _)
-    val contentNums = pageNums.map(_ + nPages)
-    val catalogTag = if (withContent) " /GraftTag (fixture) " else ""
-    val objs = Seq(
-      1 -> s" << /Type /Catalog /Pages 2 0 R$catalogTag>> ",
-      2 -> s" << /Type /Pages /Kids [${pageNums.map(n => s"$n 0 R").mkString(" ")}] /Count $nPages >> ") ++
-      pageNums.zipWithIndex.map { case (n, i) =>
-        val contents = if (withContent) s" /Contents ${contentNums(i)} 0 R" else ""
-        n -> s" << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]$contents >> "
-      } ++
-      (if (withContent) contentNums.zipWithIndex.map { case (n, i) =>
-        val cs = s"BT /F1 12 Tf 72 720 Td (Page ${i + 1}) Tj ET"
-        n -> s" << /Length ${cs.length} >> stream\n$cs\nendstream "
-      } else Nil)
-    serialize(objs, 1, xrefStream)
+      xrefStream: Boolean = false): Array[Byte] =
+    writeDoc(nPages,
+      if (withContent) (1 to nPages).map(p => textStream(s"BT /F1 12 Tf 72 720 Td (Page $p) Tj ET"))
+      else Nil,
+      catalogTail = if (withContent) " /GraftTag (fixture) " else "",
+      xrefStream = xrefStream)
+
+  /** The one renumbering behind [[merge]] and [[extractPages]]: each
+    * part's objects except its catalog and page-tree root move up by
+    * the object count of the parts before it (from 2, after the new
+    * catalog and root), its pages re-parent to the new root, and its
+    * selected pages become the new root's kids in part order. Any 1.5+
+    * part keeps the output 1.5+. */
+  private def assemble(parts: Seq[(CosDoc, Seq[Int])]): Array[Byte] = {
+    val shifts = parts.scanLeft(2) { case (off, (d, _)) => off + d.objects.keys.max }
+    val objs = parts.zip(shifts).flatMap { case ((d, _), shift) =>
+      d.objects.toSeq.collect {
+        case (n, body) if n != d.catalogNum && n != d.pagesNum =>
+          val shifted = refRe.replaceAllIn(body, m => s"${m.group(1).toInt + shift} 0 R")
+          // old Pages parent now dangles → point pages at the new root
+          (n + shift, shifted.replaceAll(
+            s"/Parent\\s+${d.pagesNum + shift}\\s+0\\s+R", "/Parent 2 0 R"))
+      }
+    }
+    val kids = parts.zip(shifts).flatMap { case ((_, pages), shift) => pages.map(_ + shift) }
+    serialize(pageTree(kids) ++ objs, 1, xrefStream = parts.exists(_._1.usedXrefStream))
   }
 
   /** J5: N-way merge in caller order — objects of each source renumbered
     * by an offset, page kids concatenated under one new /Pages. */
-  def merge(docs: Seq[Array[Byte]], password: String = ""): Array[Byte] = {
-    var offset = 2 // 1 = new catalog, 2 = new pages root
-    var anyXrefStream = false // any 1.5+ source keeps the output 1.5+
-    val outObjs = Seq.newBuilder[(Int, String)]
-    val allPageRefs = Seq.newBuilder[Int]
-    docs.foreach { bytes =>
+  def merge(docs: Seq[Array[Byte]], password: String = ""): Array[Byte] =
+    assemble(docs.map { bytes =>
       val d = parse(bytes, password)
-      anyXrefStream ||= d.usedXrefStream
-      val shift = offset
-      d.objects.foreach { case (n, body) =>
-        if (n != d.catalogNum && n != d.pagesNum) {
-          val shifted = refRe.replaceAllIn(body,
-            m => s"${m.group(1).toInt + shift} 0 R")
-          // old Pages parent now dangles → point pages at the new root
-          val fixed = shifted.replaceAll(s"/Parent\\s+${d.pagesNum + shift}\\s+0\\s+R", "/Parent 2 0 R")
-          outObjs += ((n + shift, fixed))
-        }
-      }
-      allPageRefs ++= d.pageNums.map(_ + shift)
-      offset += d.objects.keys.max
-    }
-    val pages = allPageRefs.result()
-    val head = Seq(
-      1 -> " << /Type /Catalog /Pages 2 0 R >> ",
-      2 -> s" << /Type /Pages /Kids [${pages.map(n => s"$n 0 R").mkString(" ")}] /Count ${pages.size} >> ")
-    serialize(head ++ outObjs.result(), 1, xrefStream = anyXrefStream)
+      (d, d.pageNums)
+    })
+
+  /** J6: extract one group of (1-based, pre-clamped) pages as a new doc. */
+  def extractPages(bytes: Array[Byte], group: Seq[Int], password: String = ""): Array[Byte] = {
+    val d = parse(bytes, password)
+    assemble(Seq((d, group.flatMap(p => d.pageNums.lift(p - 1)))))
   }
 
   // ---- page TEXT extraction (S11 → text-family bridge) ---------------
 
-  /** A /ToUnicode CMap ([PDF 32000] 9.10.3; Adobe CMap spec): maps
-    * show-string character codes (1–4 bytes, framed by the codespace
-    * ranges) to Unicode text (the dst hex is UTF-16BE, so surrogate
-    * pairs — one bfchar entry of 4 dst bytes — decode to supplementary
-    * code points exactly). `ranges` = (byteLen, lo, hi) codespace
-    * extents; `map` keys are (byteLen, code). */
-  private[ops] case class ToUnicodeCMap(ranges: Seq[(Int, Long, Long)],
-      map: Map[(Int, Long), String]) {
-    private val lens: Seq[Int] =
-      (ranges.map(_._1) ++ map.keys.map(_._1)).distinct.sorted match {
+  /** The codespace both CMap kinds frame show strings by: (byteLen,
+    * lo, hi) extents plus each kind's own mapped codes as further
+    * framing evidence. */
+  private[ops] sealed trait Codespace {
+    def ranges: Seq[(Int, Long, Long)]
+    /** Byte lengths and membership of the kind's mapped codes. */
+    protected def mappedLens: Iterable[Int]
+    protected def maps(len: Int, code: Long): Boolean
+    private lazy val lens: Seq[Int] =
+      (ranges.map(_._1) ++ mappedLens).distinct.sorted match {
         case Nil => Seq(2) // Identity-H convention when sections are empty
         case ls => ls
       }
-    /** Decode one show string's bytes. Code framing follows the
-      * codespace ranges (shortest matching length wins, per the CMap
-      * spec's prefix rule); a byte run outside every range falls back
-      * to the shortest declared length so the lexer always advances.
-      * Returns (text, sawUnmappedCode). */
-    def decode(b: Array[Byte]): (String, Boolean) = {
-      val sb = new StringBuilder
-      var unmapped = false
+    /** The one codespace tokenizer: frame a show string into (len,
+      * code) tokens. The shortest length whose code lies in a codespace
+      * range or is mapped wins (the CMap spec's prefix rule); a byte
+      * run outside every range falls back to the shortest declared
+      * length so the lexer always advances. */
+    def tokenize(b: Array[Byte]): Seq[(Int, Long)] = {
+      val out = Seq.newBuilder[(Int, Long)]
       var i = 0
       while (i < b.length) {
         def codeAt(l: Int): Long = {
@@ -826,49 +846,62 @@ object Pdf {
         val len = lens.find { l =>
           i + l <= b.length && {
             val c = codeAt(l)
-            ranges.exists { case (rl, lo, hi) => rl == l && c >= lo && c <= hi } ||
-              map.contains((l, c))
+            ranges.exists { case (rl, lo, hi) => rl == l && c >= lo && c <= hi } || maps(l, c)
           }
         }.getOrElse(math.min(lens.head, b.length - i))
-        map.get((len, codeAt(len))) match {
-          case Some(s) => sb.append(s)
-          case None => unmapped = true
-        }
+        out += ((len, codeAt(len)))
         i += len
       }
-      (sb.result(), unmapped)
+      out.result()
+    }
+  }
+
+  /** A /ToUnicode CMap ([PDF 32000] 9.10.3; Adobe CMap spec): maps
+    * show-string character codes (1–4 bytes, framed by the codespace
+    * ranges) to Unicode text (the dst hex is UTF-16BE, so surrogate
+    * pairs — one bfchar entry of 4 dst bytes — decode to supplementary
+    * code points exactly). `map` keys are (byteLen, code). */
+  private[ops] case class ToUnicodeCMap(ranges: Seq[(Int, Long, Long)],
+      map: Map[(Int, Long), String]) extends Codespace {
+    protected def mappedLens: Iterable[Int] = map.keys.map(_._1)
+    protected def maps(len: Int, code: Long): Boolean = map.contains((len, code))
+    /** Decode one show string's bytes: [[tokenize]], then the map.
+      * Returns (text, sawUnmappedCode). */
+    def decode(b: Array[Byte]): (String, Boolean) = {
+      val codes = tokenize(b)
+      (codes.flatMap(map.get).mkString, codes.exists(c => !map.contains(c)))
     }
   }
 
   private val hexTokRe = """<([0-9A-Fa-f \t\r\n]*)>""".r
+  private def hexValue(h: String): Long = java.lang.Long.parseLong(h, 16)
+  private def hexTokens(s: String): Seq[String] =
+    hexTokRe.findAllMatchIn(s).map(_.group(1).filterNot(_.isWhitespace)).toSeq
 
-  /** Parse a /ToUnicode CMap stream's text: every codespacerange,
-    * bfchar, and bfrange section (multiple sections are legal and
-    * concatenate). bfrange destinations are either a start hex whose
+  /** Every begincodespacerange section of a CMap's text (multiple
+    * sections are legal and concatenate), as (byteLen, lo, hi). */
+  private def parseCodespace(text: String): Seq[(Int, Long, Long)] =
+    """(?s)begincodespacerange(.*?)endcodespacerange""".r.findAllMatchIn(text).toSeq
+      .flatMap(m => hexTokens(m.group(1)).grouped(2).collect {
+        case Seq(lo, hi) => (lo.length / 2, hexValue(lo), hexValue(hi))
+      })
+
+  /** Parse a /ToUnicode CMap stream's text: its codespace
+    * ([[parseCodespace]]) and every bfchar and bfrange section.
+    * bfrange destinations are either a start hex whose
     * LAST UTF-16 code unit increments across the range (the spec's
     * rule — ranges never cross a 256-boundary, so only the low unit
     * moves) or an explicit `[ <dst> ... ]` array, one per code. */
   private[ops] def parseToUnicode(text: String): ToUnicodeCMap = {
-    def hv(h: String): Long = java.lang.Long.parseLong(h, 16)
     def hstr(h0: String): String = {
       val h = if (h0.length % 2 == 1) h0 + "0" else h0
       new String(h.grouped(2).map(x => Integer.parseInt(x, 16).toByte).toArray,
         "UTF-16BE")
     }
-    def toks(s: String): Seq[String] =
-      hexTokRe.findAllMatchIn(s).map(_.group(1).filterNot(_.isWhitespace)).toSeq
-    val ranges = Seq.newBuilder[(Int, Long, Long)]
-    """(?s)begincodespacerange(.*?)endcodespacerange""".r.findAllMatchIn(text)
-      .foreach { m =>
-        toks(m.group(1)).grouped(2).foreach {
-          case Seq(lo, hi) => ranges += ((lo.length / 2, hv(lo), hv(hi)))
-          case _ =>
-        }
-      }
     val map = Map.newBuilder[(Int, Long), String]
     """(?s)beginbfchar(.*?)endbfchar""".r.findAllMatchIn(text).foreach { m =>
-      toks(m.group(1)).grouped(2).foreach {
-        case Seq(src, dst) => map += (((src.length / 2, hv(src)), hstr(dst)))
+      hexTokens(m.group(1)).grouped(2).foreach {
+        case Seq(src, dst) => map += (((src.length / 2, hexValue(src)), hstr(dst)))
         case _ =>
       }
     }
@@ -880,11 +913,11 @@ object Pdf {
       entryRe.findAllMatchIn(body).foreach { e =>
         val loH = e.group(1).filterNot(_.isWhitespace)
         val len = loH.length / 2
-        val lo = hv(loH)
-        val hi = hv(e.group(2).filterNot(_.isWhitespace))
+        val lo = hexValue(loH)
+        val hi = hexValue(e.group(2).filterNot(_.isWhitespace))
         val dst = e.group(3)
         if (dst.startsWith("[")) {
-          val dsts = toks(dst)
+          val dsts = hexTokens(dst)
           (lo to math.min(hi, lo + dsts.length - 1)).zip(dsts).foreach {
             case (c, d) => map += (((len, c), hstr(d)))
           }
@@ -901,7 +934,7 @@ object Pdf {
         }
       }
     }
-    ToUnicodeCMap(ranges.result(), map.result())
+    ToUnicodeCMap(parseCodespace(text), map.result())
   }
 
   /** A CID CMap — the /Encoding-as-STREAM form of a Type0 font
@@ -915,80 +948,42 @@ object Pdf {
     * file, so OVERRIDDEN codes flag; codes that fall through to a
     * predefined UCS-2/UTF-16 base ARE big-endian UTF-16 code units
     * and decode directly (the r18 predefined-name rule, applied
-    * per-code). cids entries: (byteLen, lo, hi, cidStart). */
+    * per-code). cids entries: (byteLen, lo, hi, cidStart); they are
+    * also framing evidence for [[tokenize]]. */
   private[ops] case class CidCMap(ranges: Seq[(Int, Long, Long)],
-      cids: Seq[(Int, Long, Long, Long)], base: Option[String]) {
-    private val lens: Seq[Int] =
-      (ranges.map(_._1) ++ cids.map(_._1)).distinct.sorted match {
-        case Nil => Seq(2) // 2-byte convention when sections are empty
-        case ls => ls
-      }
+      cids: Seq[(Int, Long, Long, Long)], base: Option[String]) extends Codespace {
+    protected def mappedLens: Iterable[Int] = cids.map(_._1)
+    protected def maps(len: Int, code: Long): Boolean = covers(len, code)
     /** Does the embedded table override this (len, code)? */
     def covers(len: Int, code: Long): Boolean =
       cids.exists { case (l, lo, hi, _) => l == len && code >= lo && code <= hi }
-    /** Frame a show string into (len, code) tokens by the codespace
-      * ranges — the same shortest-match prefix rule as
-      * [[ToUnicodeCMap.decode]], with the cid sections also accepted
-      * as framing evidence and the shortest declared length as the
-      * always-advance fallback. */
-    def tokenize(b: Array[Byte]): Seq[(Int, Long)] = {
-      val out = Seq.newBuilder[(Int, Long)]
-      var i = 0
-      while (i < b.length) {
-        def codeAt(l: Int): Long = {
-          var v = 0L
-          (0 until l).foreach(k => v = (v << 8) | (b(i + k) & 0xFF))
-          v
-        }
-        val len = lens.find { l =>
-          i + l <= b.length && {
-            val c = codeAt(l)
-            ranges.exists { case (rl, lo, hi) => rl == l && c >= lo && c <= hi } ||
-              cids.exists { case (cl, lo, hi, _) => cl == l && c >= lo && c <= hi }
-          }
-        }.getOrElse(math.min(lens.head, b.length - i))
-        out += ((len, codeAt(len)))
-        i += len
-      }
-      out.result()
-    }
   }
 
-  /** Parse a CID CMap stream's text: codespacerange sections (same
-    * grammar as /ToUnicode), cidrange entries `<lo> <hi> N`, cidchar
+  /** Parse a CID CMap stream's text: its codespace
+    * ([[parseCodespace]]), cidrange entries `<lo> <hi> N`, cidchar
     * entries `<code> N` (N a PLAIN integer, not hex — the one
     * grammatical difference from the bf* sections), and the
     * `/Name usecmap` base reference. */
   private[ops] def parseCidCMap(text: String): CidCMap = {
-    def hv(h: String): Long = java.lang.Long.parseLong(h, 16)
-    val ranges = Seq.newBuilder[(Int, Long, Long)]
-    """(?s)begincodespacerange(.*?)endcodespacerange""".r.findAllMatchIn(text)
-      .foreach { m =>
-        hexTokRe.findAllMatchIn(m.group(1))
-          .map(_.group(1).filterNot(_.isWhitespace)).grouped(2).foreach {
-            case Seq(lo, hi) => ranges += ((lo.length / 2, hv(lo), hv(hi)))
-            case _ =>
-          }
-      }
     val cids = Seq.newBuilder[(Int, Long, Long, Long)]
     """(?s)begincidrange(.*?)endcidrange""".r.findAllMatchIn(text).foreach { m =>
       """<([0-9A-Fa-f \t\r\n]*)>\s*<([0-9A-Fa-f \t\r\n]*)>\s*(\d+)""".r
         .findAllMatchIn(m.group(1)).foreach { e =>
           val loH = e.group(1).filterNot(_.isWhitespace)
-          cids += ((loH.length / 2, hv(loH),
-            hv(e.group(2).filterNot(_.isWhitespace)), e.group(3).toLong))
+          cids += ((loH.length / 2, hexValue(loH),
+            hexValue(e.group(2).filterNot(_.isWhitespace)), e.group(3).toLong))
         }
     }
     """(?s)begincidchar(.*?)endcidchar""".r.findAllMatchIn(text).foreach { m =>
       """<([0-9A-Fa-f \t\r\n]*)>\s*(\d+)""".r
         .findAllMatchIn(m.group(1)).foreach { e =>
           val h = e.group(1).filterNot(_.isWhitespace)
-          cids += ((h.length / 2, hv(h), hv(h), e.group(2).toLong))
+          cids += ((h.length / 2, hexValue(h), hexValue(h), e.group(2).toLong))
         }
     }
     val base = """/([A-Za-z0-9\-]+)\s+usecmap""".r
       .findFirstMatchIn(text).map(_.group(1))
-    CidCMap(ranges.result(), cids.result(), base)
+    CidCMap(parseCodespace(text), cids.result(), base)
   }
 
   /** Adobe Glyph List subset: the names real Type1/TrueType
@@ -1164,55 +1159,59 @@ object Pdf {
     }
   }
 
-  /** Resource-name → font map for one page: /Resources (inline or
-    * indirect) → /Font → one [[PdfFont]] per `/Fn N G R` entry. A page
-    * WITHOUT its own /Resources inherits the /Pages tree node's
-    * ([PDF 32000] 7.7.3.4 — many writers hoist shared resources to the
-    * parent; without the fallback their fonts would silently not
-    * resolve and Type0 text would decode as WinAnsi garbage). Pages
-    * with neither extract with the WinAnsi default. */
-  private def pageFonts(objects: collection.Map[Int, String],
-      pageBody: String, parentBody: Option[String] = None): Map[String, PdfFont] = {
-    val fontDict = resolveDictValue(objects, pageBody, "Resources")
+  /** The `/Name N G R` entries of one page's /Resources sub-dict
+    * `category` (/Font, /XObject), in dictionary order; inline entries
+    * stay out of the subset. /Resources is inline or indirect, and a
+    * page WITHOUT its own inherits the /Pages tree node's ([PDF 32000]
+    * 7.7.3.4 — many writers hoist shared resources to the parent;
+    * without the fallback their fonts would silently not resolve and
+    * Type0 text would decode as WinAnsi garbage). */
+  private def pageResources(objects: collection.Map[Int, String], pageBody: String,
+      parentBody: Option[String], category: String): Seq[(String, Int)] =
+    resolveDictValue(objects, pageBody, "Resources")
       .orElse(parentBody.flatMap(resolveDictValue(objects, _, "Resources")))
-      .flatMap(res => resolveDictValue(objects, res, "Font"))
-    fontDict.toSeq.flatMap { fd =>
-      // entries: /Name N G R (inline font dicts stay out of subset)
-      """/([^\s/<>\[\]()]+)\s+(\d+)\s+\d+\s+R""".r.findAllMatchIn(fd).flatMap { m =>
-        objects.get(m.group(2).toInt).map { fb =>
-          val isType0 = """/Subtype\s*/Type0""".r.findFirstIn(fb).isDefined
-          val cmap = """/ToUnicode\s+(\d+)\s+\d+\s+R""".r.findFirstMatchIn(fb)
-            .flatMap(r => objects.get(r.group(1).toInt))
-            .flatMap(streamData)
-            .map(b => parseToUnicode(new String(b, "ISO-8859-1")))
-          // simple-font /Encoding dict (inline or indirect) may carry
-          // a /Differences override table atop the base encoding
-          val diffs =
-            if (isType0) Map.empty[Int, Option[String]]
-            else resolveDictValue(objects, fb, "Encoding")
-              .map(parseDifferences).getOrElse(Map.empty)
-          // Type0 /Encoding as a NAME selects a predefined CMap; the
-          // UCS2/UTF16 family decodes without any table (see
-          // ucs2EncodingRe). /ToUnicode still wins when present.
-          val ucs2 = isType0 &&
-            ("/Encoding\\s*/([A-Za-z0-9\\-]+)").r.findFirstMatchIn(fb)
-              .exists(e => ucs2EncodingRe.pattern.matcher(e.group(1)).matches())
-          val isType3 = ("/Subtype\\s*/Type3").r.findFirstIn(fb).isDefined
-          // Type0 /Encoding as an indirect STREAM is an embedded CID
-          // CMap (subsetted CJK fonts) — parsed for codespace framing,
-          // override flagging, and the usecmap fall-through base.
-          val encCmap =
-            if (isType0)
-              """/Encoding\s+(\d+)\s+\d+\s+R""".r.findFirstMatchIn(fb)
-                .flatMap(r => objects.get(r.group(1).toInt))
-                .flatMap(streamData)
-                .map(b => parseCidCMap(new String(b, "ISO-8859-1")))
-            else None
-          m.group(1) -> PdfFont(isType0, cmap, diffs, ucs2, isType3, encCmap)
-        }
+      .flatMap(res => resolveDictValue(objects, res, category)).toSeq
+      .flatMap(d => """/([^\s/<>\[\]()]+)\s+(\d+)\s+\d+\s+R""".r.findAllMatchIn(d)
+        .map(m => (m.group(1), m.group(2).toInt)))
+
+  /** Resource-name → font map for one page: one [[PdfFont]] per /Font
+    * entry of [[pageResources]]. Pages with no fonts extract with the
+    * WinAnsi default. */
+  private def pageFonts(objects: collection.Map[Int, String],
+      pageBody: String, parentBody: Option[String] = None): Map[String, PdfFont] =
+    pageResources(objects, pageBody, parentBody, "Font").flatMap { case (name, ref) =>
+      objects.get(ref).map { fb =>
+        val isType0 = """/Subtype\s*/Type0""".r.findFirstIn(fb).isDefined
+        val cmap = """/ToUnicode\s+(\d+)\s+\d+\s+R""".r.findFirstMatchIn(fb)
+          .flatMap(r => objects.get(r.group(1).toInt))
+          .flatMap(streamData)
+          .map(b => parseToUnicode(new String(b, "ISO-8859-1")))
+        // simple-font /Encoding dict (inline or indirect) may carry
+        // a /Differences override table atop the base encoding
+        val diffs =
+          if (isType0) Map.empty[Int, Option[String]]
+          else resolveDictValue(objects, fb, "Encoding")
+            .map(parseDifferences).getOrElse(Map.empty)
+        // Type0 /Encoding as a NAME selects a predefined CMap; the
+        // UCS2/UTF16 family decodes without any table (see
+        // ucs2EncodingRe). /ToUnicode still wins when present.
+        val ucs2 = isType0 &&
+          ("/Encoding\\s*/([A-Za-z0-9\\-]+)").r.findFirstMatchIn(fb)
+            .exists(e => ucs2EncodingRe.pattern.matcher(e.group(1)).matches())
+        val isType3 = ("/Subtype\\s*/Type3").r.findFirstIn(fb).isDefined
+        // Type0 /Encoding as an indirect STREAM is an embedded CID
+        // CMap (subsetted CJK fonts) — parsed for codespace framing,
+        // override flagging, and the usecmap fall-through base.
+        val encCmap =
+          if (isType0)
+            """/Encoding\s+(\d+)\s+\d+\s+R""".r.findFirstMatchIn(fb)
+              .flatMap(r => objects.get(r.group(1).toInt))
+              .flatMap(streamData)
+              .map(b => parseCidCMap(new String(b, "ISO-8859-1")))
+          else None
+        name -> PdfFont(isType0, cmap, diffs, ucs2, isType3, encCmap)
       }
     }.toMap
-  }
 
   /** WinAnsiEncoding byte→text table (cp1252; [PDF 32000] Annex D):
     * printable ASCII identity, 0x80–0x9F Windows specials, 0xA0–0xFF
@@ -1392,16 +1391,8 @@ object Pdf {
       if (c == ' ' || c == '\t' || c == '\r' || c == '\n' || c == '\f' || c == 0) i += 1
       else if (c == '%') { while (i < n && cs.charAt(i) != '\n' && cs.charAt(i) != '\r') i += 1 }
       else if (c == '(') { i += 1; ops += parseLiteral() }
-      else if (c == '<' && i + 1 < n && cs.charAt(i + 1) == '<') {
-        // dictionary (BDC properties etc.): skip balanced << >>
-        var depth = 0
-        var done = false
-        while (i < n && !done) {
-          if (cs.startsWith("<<", i)) { depth += 1; i += 2 }
-          else if (cs.startsWith(">>", i)) { depth -= 1; i += 2; done = depth == 0 }
-          else i += 1
-        }
-      }
+      else if (c == '<' && i + 1 < n && cs.charAt(i + 1) == '<')
+        i += balancedDict(cs, i).length // dictionary (BDC properties etc.)
       else if (c == '<') { i += 1; ops += parseHex() }
       else if (c == '[') { ops += Mark; i += 1 }
       else if (c == ']') {
@@ -1548,13 +1539,11 @@ object Pdf {
     streamTokenRe.findFirstMatchIn(body).map { m =>
       val dict = body.substring(0, m.start)
       val dataStart = m.end
-      val end = dictInt(dict, "/Length") match {
-        case Some(len) if dataStart + len <= body.length => dataStart + len
-        case _ => body.lastIndexOf("endstream") match {
+      val end = framedEnd(dict, body, dataStart).getOrElse(
+        body.lastIndexOf("endstream") match {
           case -1 => body.length
           case e => e
-        }
-      }
+        })
       (dict, body.substring(dataStart, end).getBytes("ISO-8859-1"))
     }
 
@@ -1642,18 +1631,11 @@ object Pdf {
     val d = parse(bytes, password)
     val parentBody = d.objects.get(d.pagesNum)
     d.pageNums.zipWithIndex.flatMap { case (pn, pidx) =>
-      val xdict = d.objects.get(pn).flatMap { b =>
-        resolveDictValue(d.objects, b, "Resources")
-          .orElse(parentBody.flatMap(resolveDictValue(d.objects, _, "Resources")))
-          .flatMap(res => resolveDictValue(d.objects, res, "XObject"))
-      }
-      val imgs = xdict.toSeq.flatMap { xd =>
-        """/([^\s/<>\[\]()]+)\s+(\d+)\s+\d+\s+R""".r.findAllMatchIn(xd)
-          .map(m => (m.group(1), m.group(2).toInt)).toSeq
-      }.filter { case (_, ref) =>
-        d.objects.get(ref).exists(
-          """/Subtype\s*/Image""".r.findFirstIn(_).isDefined)
-      }
+      val imgs = d.objects.get(pn).toSeq
+        .flatMap(pageResources(d.objects, _, parentBody, "XObject"))
+        .filter { case (_, ref) =>
+          d.objects.get(ref).exists("""/Subtype\s*/Image""".r.findFirstIn(_).isDefined)
+        }
       imgs.zipWithIndex.map { case ((nm, ref), i) =>
         val ob = d.objects(ref)
         val w = dictInt(ob, "/Width").getOrElse(0)
@@ -1737,8 +1719,6 @@ object Pdf {
   def makeImagePdf(pages: Seq[Seq[(String, Int, Int)]]): Array[Byte] = {
     val np = pages.size
     var next = 3 + 2 * np
-    val pageNums = (0 until np).map(3 + _)
-    val contentNums = pageNums.map(_ + np)
     val imgObjs = Seq.newBuilder[(Int, String)]
     val pageImgRefs = pages.map { specs =>
       specs.zipWithIndex.map { case ((kind, w, h), i) =>
@@ -1763,31 +1743,17 @@ object Pdf {
             throw new IllegalArgumentException(s"makeImagePdf: kind $other")
         }
         val n = next; next += 1
-        imgObjs += (n -> (s" << /Type /XObject /Subtype /Image /Width $w /Height $h" +
-          s" /ColorSpace $cs /BitsPerComponent 8 /Filter $filter" +
-          s" /Length ${payload.length} >> stream\n" +
-          new String(payload, "ISO-8859-1") + "\nendstream "))
+        imgObjs += (n -> streamObj(payload, pre = s"/Type /XObject /Subtype /Image" +
+          s" /Width $w /Height $h /ColorSpace $cs /BitsPerComponent 8 /Filter $filter "))
         (s"Im$i", n, w, h)
       }
     }
-    val objs = Seq(
-      1 -> " << /Type /Catalog /Pages 2 0 R >> ",
-      2 -> (s" << /Type /Pages /Kids [${pageNums.map(n => s"$n 0 R").mkString(" ")}]" +
-        s" /Count $np >> ")) ++
-      pageNums.zipWithIndex.map { case (n, i) =>
-        val res = pageImgRefs(i).map { case (nm, on, _, _) => s"/$nm $on 0 R" }
-          .mkString(" ")
-        n -> (s" << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]" +
-          s" /Resources << /XObject << $res >> >>" +
-          s" /Contents ${contentNums(i)} 0 R >> ")
-      } ++
-      contentNums.zipWithIndex.map { case (n, i) =>
-        val cs = pageImgRefs(i).map { case (nm, _, w, h) =>
-          s"q $w 0 0 $h 72 500 cm /$nm Do Q"
-        }.mkString(" ")
-        n -> s" << /Length ${cs.length} >> stream\n$cs\nendstream "
-      } ++ imgObjs.result()
-    serialize(objs, 1)
+    writeDoc(np,
+      pageImgRefs.map(refs => textStream(
+        refs.map { case (nm, _, w, h) => s"q $w 0 0 $h 72 500 cm /$nm Do Q" }.mkString(" "))),
+      i => " /Resources << /XObject << " +
+        pageImgRefs(i).map { case (nm, on, _, _) => s"/$nm $on 0 R" }.mkString(" ") + " >> >>",
+      imgObjs.result())
   }
 
   /** Fixture builder for the extraction gates: one page per raw
@@ -1795,26 +1761,8 @@ object Pdf {
     * extractor's inflate path is exercised; `xrefStream` emits the
     * PDF 1.5 compressed form. */
   def makeTextPdf(contents: Seq[String], flate: Boolean = false,
-      xrefStream: Boolean = false): Array[Byte] = {
-    val np = contents.size
-    val pageNums = (0 until np).map(3 + _)
-    val contentNums = pageNums.map(_ + np)
-    val objs = Seq(
-      1 -> " << /Type /Catalog /Pages 2 0 R >> ",
-      2 -> s" << /Type /Pages /Kids [${pageNums.map(n => s"$n 0 R").mkString(" ")}] /Count $np >> ") ++
-      pageNums.zipWithIndex.map { case (n, i) =>
-        n -> s" << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents ${contentNums(i)} 0 R >> "
-      } ++
-      contentNums.zip(contents).map { case (n, cs) =>
-        if (flate) {
-          val data = deflate(cs.getBytes("ISO-8859-1"))
-          n -> (s" << /Length ${data.length} /Filter /FlateDecode >> stream\n" +
-            new String(data, "ISO-8859-1") + "\nendstream ")
-        } else
-          n -> s" << /Length ${cs.length} >> stream\n$cs\nendstream "
-      }
-    serialize(objs, 1, xrefStream)
-  }
+      xrefStream: Boolean = false): Array[Byte] =
+    writeDoc(contents.size, contents.map(textStream(_, flate)), xrefStream = xrefStream)
 
   // fixture-side encoders (the writer halves of the decode filters)
   private def asciiHexEncode(d: Array[Byte]): Array[Byte] =
@@ -1840,43 +1788,33 @@ object Pdf {
     out.toByteArray
   }
 
-  /** Fixture builder exercising the full decode-filter surface: one
-    * page per content stream, each encoded through `filters` (the
-    * list in DECODE order, so encoding applies the chain from the
-    * inside out — `[/ASCII85Decode /FlateDecode]` stores ASCII armor
-    * around deflate, the classic transport form). */
-  def makeFilteredTextPdf(contents: Seq[String], filters: Seq[String]): Array[Byte] = {
-    def encodeChain(plain: Array[Byte]): Array[Byte] =
-      filters.reverse.foldLeft(plain) { (d, f) =>
-        f match {
-          case "FlateDecode" => deflate(d)
-          case "LZWDecode" => lzwEncode(d)
-          case "ASCIIHexDecode" => asciiHexEncode(d)
-          case "ASCII85Decode" => ascii85Encode(d)
-          case "RunLengthDecode" => runLengthEncode(d)
-          case other => throw new IllegalArgumentException(s"no fixture encoder for /$other")
-        }
+  /** The one fixture encoder chain, the inverse of [[applyFilterChain]]:
+    * `filters` is the list in DECODE order, so encoding applies the
+    * chain from the inside out — `[/ASCII85Decode /FlateDecode]` stores
+    * ASCII armor around deflate, the classic transport form. */
+  private def encodeChain(filters: Seq[String], plain: Array[Byte]): Array[Byte] =
+    filters.reverse.foldLeft(plain) { (d, f) =>
+      f match {
+        case "FlateDecode" => deflate(d)
+        case "LZWDecode" => lzwEncode(d)
+        case "ASCIIHexDecode" => asciiHexEncode(d)
+        case "ASCII85Decode" => ascii85Encode(d)
+        case "RunLengthDecode" => runLengthEncode(d)
+        case other => throw new IllegalArgumentException(s"no fixture encoder for /$other")
       }
-    val np = contents.size
-    val pageNums = (0 until np).map(3 + _)
-    val contentNums = pageNums.map(_ + np)
+    }
+
+  /** Fixture builder exercising the full decode-filter surface: one
+    * page per content stream, each encoded through `filters` (in
+    * DECODE order, [[encodeChain]]). */
+  def makeFilteredTextPdf(contents: Seq[String], filters: Seq[String]): Array[Byte] = {
     val filterVal =
       if (filters.size == 1) s"/${filters.head}"
       else filters.map("/" + _).mkString("[ ", " ", " ]")
-    val objs = Seq(
-      1 -> " << /Type /Catalog /Pages 2 0 R >> ",
-      2 -> s" << /Type /Pages /Kids [${pageNums.map(n => s"$n 0 R").mkString(" ")}] /Count $np >> ") ++
-      pageNums.zipWithIndex.map { case (n, i) =>
-        n -> s" << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents ${contentNums(i)} 0 R >> "
-      } ++
-      contentNums.zip(contents).map { case (n, cs) =>
-        val data = encodeChain(cs.getBytes("ISO-8859-1"))
-        // /Filter deliberately BEFORE /Length: locks the one-name (not
-        // greedy multi-name) parse against the following key
-        n -> (s" << /Filter $filterVal /Length ${data.length} >> stream\n" +
-          new String(data, "ISO-8859-1") + "\nendstream ")
-      }
-    serialize(objs, 1)
+    // /Filter deliberately BEFORE /Length: locks the one-name (not
+    // greedy multi-name) parse against the following key
+    writeDoc(contents.size, contents.map(cs =>
+      streamObj(encodeChain(filters, cs.getBytes("ISO-8859-1")), pre = s"/Filter $filterVal ")))
   }
 
   /** Fixture builder for the simple-font /Differences gates: a Type1
@@ -1886,28 +1824,10 @@ object Pdf {
     * verbatim and their show-string bytes decode through the map. */
   def makeDiffPdf(contents: Seq[String], differences: String,
       flate: Boolean = false): Array[Byte] = {
-    val np = contents.size
-    val pageNums = (0 until np).map(3 + _)
-    val contentNums = pageNums.map(_ + np)
-    val fontNum = 3 + 2 * np
-    val objs = Seq(
-      1 -> " << /Type /Catalog /Pages 2 0 R >> ",
-      2 -> s" << /Type /Pages /Kids [${pageNums.map(n => s"$n 0 R").mkString(" ")}] /Count $np >> ") ++
-      pageNums.zipWithIndex.map { case (n, i) =>
-        n -> (s" << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]" +
-          s" /Resources << /Font << /F1 $fontNum 0 R >> >>" +
-          s" /Contents ${contentNums(i)} 0 R >> ")
-      } ++
-      contentNums.zip(contents).map { case (n, cs) =>
-        if (flate) {
-          val z = deflate(cs.getBytes("ISO-8859-1"))
-          n -> (s" << /Length ${z.length} /Filter /FlateDecode >> stream\n" +
-            new String(z, "ISO-8859-1") + "\nendstream ")
-        } else n -> s" << /Length ${cs.length} >> stream\n$cs\nendstream "
-      } ++ Seq(
-        fontNum -> (" << /Type /Font /Subtype /Type1 /BaseFont /Helvetica" +
-          s" /Encoding << /BaseEncoding /WinAnsiEncoding /Differences [ $differences ] >> >> "))
-    serialize(objs, 1)
+    val fontNum = 3 + 2 * contents.size
+    writeDoc(contents.size, contents.map(textStream(_, flate)), fontResources(fontNum),
+      Seq(fontNum -> (" << /Type /Font /Subtype /Type1 /BaseFont /Helvetica" +
+        s" /Encoding << /BaseEncoding /WinAnsiEncoding /Differences [ $differences ] >> >> ")))
   }
 
   /** Fixture builder for the Type3 extraction gate: glyphs are
@@ -1919,10 +1839,7 @@ object Pdf {
     * Differences names (the spec's extraction preference). */
   def makeType3Pdf(contents: Seq[String], differences: String,
       withToUnicode: Boolean = false): Array[Byte] = {
-    val np = contents.size
-    val pageNums = (0 until np).map(3 + _)
-    val contentNums = pageNums.map(_ + np)
-    val fontNum = 3 + 2 * np
+    val fontNum = 3 + 2 * contents.size
     val procNum = fontNum + 1
     val touNum = fontNum + 2
     val names = ("/([^\\s/<>\\[\\]()]+)").r
@@ -1933,28 +1850,15 @@ object Pdf {
       "1 beginbfchar\n<41> <005A>\nendbfchar\n" +
       "endcmap\nCMapName currentdict /CMap defineresource pop\nend\nend"
     val touEntry = if (withToUnicode) s" /ToUnicode $touNum 0 R" else ""
-    val proc = "0 0 d0"
-    val objs = Seq(
-      1 -> " << /Type /Catalog /Pages 2 0 R >> ",
-      2 -> s" << /Type /Pages /Kids [${pageNums.map(n => s"$n 0 R").mkString(" ")}] /Count $np >> ") ++
-      pageNums.zipWithIndex.map { case (n, i) =>
-        n -> (s" << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]" +
-          s" /Resources << /Font << /F1 $fontNum 0 R >> >>" +
-          s" /Contents ${contentNums(i)} 0 R >> ")
-      } ++
-      contentNums.zip(contents).map { case (n, cs) =>
-        n -> s" << /Length ${cs.length} >> stream\n$cs\nendstream "
-      } ++ Seq(
+    writeDoc(contents.size, contents.map(textStream(_)), fontResources(fontNum),
+      Seq(
         fontNum -> (" << /Type /Font /Subtype /Type3" +
           " /FontBBox [0 0 1000 1000] /FontMatrix [0.001 0 0 0.001 0 0]" +
           s" /CharProcs << $charProcs >>" +
           s" /Encoding << /Differences [ $differences ] >>" +
           s" /FirstChar 0 /LastChar 255$touEntry >> "),
-        procNum -> s" << /Length ${proc.length} >> stream\n$proc\nendstream ") ++
-      (if (withToUnicode)
-        Seq(touNum -> s" << /Length ${tou.length} >> stream\n$tou\nendstream ")
-      else Nil)
-    serialize(objs, 1)
+        procNum -> textStream("0 0 d0")) ++
+        (if (withToUnicode) Seq(touNum -> textStream(tou)) else Nil))
   }
 
   /** Fixture builder for the composite-font extraction gates: a PDF
@@ -1975,10 +1879,7 @@ object Pdf {
   def makeCidPdf(pages: Seq[String], withToUnicode: Boolean = true,
       flate: Boolean = false, encoding: String = "Identity-H",
       embeddedCmap: Option[String] = None): Array[Byte] = {
-    val np = pages.size
-    val pageNums = (0 until np).map(3 + _)
-    val contentNums = pageNums.map(_ + np)
-    val fontNum = 3 + 2 * np
+    val fontNum = 3 + 2 * pages.size
     val descNum = fontNum + 1
     val touNum = fontNum + 2
     val encNum = fontNum + 3
@@ -2011,47 +1912,18 @@ object Pdf {
         else "") +
         "endcmap\nCMapName currentdict /CMap defineresource pop\nend\nend"
     }
-    def streamObj(data: String): String =
-      if (flate) {
-        val z = deflate(data.getBytes("ISO-8859-1"))
-        s" << /Length ${z.length} /Filter /FlateDecode >> stream\n" +
-          new String(z, "ISO-8859-1") + "\nendstream "
-      } else s" << /Length ${data.length} >> stream\n$data\nendstream "
     val touEntry = if (withToUnicode) s" /ToUnicode $touNum 0 R" else ""
-    val objs = Seq(
-      1 -> " << /Type /Catalog /Pages 2 0 R >> ",
-      2 -> s" << /Type /Pages /Kids [${pageNums.map(n => s"$n 0 R").mkString(" ")}] /Count $np >> ") ++
-      pageNums.zipWithIndex.map { case (n, i) =>
-        n -> (s" << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]" +
-          s" /Resources << /Font << /F1 $fontNum 0 R >> >>" +
-          s" /Contents ${contentNums(i)} 0 R >> ")
-      } ++
-      contentNums.zip(pageCids).map { case (n, cids) =>
-        val hex = cids.map(c => f"$c%04X").mkString
-        n -> streamObj(s"BT /F1 12 Tf 72 720 Td <$hex> Tj ET")
-      } ++ Seq(
+    writeDoc(pages.size,
+      pageCids.map(cids =>
+        textStream(s"BT /F1 12 Tf 72 720 Td <${cids.map(c => f"$c%04X").mkString}> Tj ET", flate)),
+      fontResources(fontNum),
+      Seq(
         fontNum -> (" << /Type /Font /Subtype /Type0 /BaseFont /Graft-CID" +
           embeddedCmap.fold(s" /Encoding /$encoding")(_ => s" /Encoding $encNum 0 R") +
           s" /DescendantFonts [$descNum 0 R]$touEntry >> "),
         descNum -> (" << /Type /Font /Subtype /CIDFontType2 /BaseFont /Graft-CID" +
           " /CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) /Supplement 0 >> >> ")) ++
-      (if (withToUnicode) Seq(touNum -> streamObj(tou)) else Nil) ++
-      embeddedCmap.map(c => encNum -> streamObj(c)).toSeq
-    serialize(objs, 1)
-  }
-
-  /** J6: extract one group of (1-based, pre-clamped) pages as a new doc. */
-  def extractPages(bytes: Array[Byte], group: Seq[Int], password: String = ""): Array[Byte] = {
-    val d = parse(bytes, password)
-    val picked = group.flatMap(p => d.pageNums.lift(p - 1))
-    val kept = d.objects.toSeq.collect {
-      case (n, body) if n != d.catalogNum && n != d.pagesNum =>
-        val shifted = refRe.replaceAllIn(body, m => s"${m.group(1).toInt + 2} 0 R")
-        (n + 2, shifted.replaceAll(s"/Parent\\s+${d.pagesNum + 2}\\s+0\\s+R", "/Parent 2 0 R"))
-    }
-    val head = Seq(
-      1 -> " << /Type /Catalog /Pages 2 0 R >> ",
-      2 -> s" << /Type /Pages /Kids [${picked.map(n => s"${n + 2} 0 R").mkString(" ")}] /Count ${picked.size} >> ")
-    serialize(head ++ kept, 1, xrefStream = d.usedXrefStream)
+        (if (withToUnicode) Seq(touNum -> textStream(tou, flate)) else Nil) ++
+        embeddedCmap.map(c => encNum -> textStream(c, flate)).toSeq)
   }
 }

@@ -96,6 +96,11 @@ object PdfCrypt {
   private def xorKey(key: Array[Byte], i: Int): Array[Byte] =
     key.map(b => (b ^ i).toByte)
 
+  /** RC4 under `key` XOR i for each i of `rounds` in turn: the R3/R4
+    * 20-pass cascade of Algorithms 3, 5 and 7 (i = 0 is `key` itself). */
+  private def rc4Cascade(key: Array[Byte], data: Array[Byte], rounds: Range): Array[Byte] =
+    rounds.foldLeft(data)((x, i) => rc4(xorKey(key, i), x))
+
   sealed trait Algo
   case object Rc4 extends Algo
   case object AesV2 extends Algo // AES-128-CBC, per-object key
@@ -192,10 +197,8 @@ object PdfCrypt {
   private[ops] def pdfString(body: String, key: String): Option[Array[Byte]] =
     (key + """\s*""").r.findFirstMatchIn(body).map(m => readStringAt(body, m.end)._1)
 
-  private def dictInt(body: String, key: String): Option[Int] =
-    (key + """\s+(-?\d+)""").r.findFirstMatchIn(body).map(_.group(1).toInt)
-
   private def parseEncDict(body: String): EncDict = {
+    import Pdf.dictInt
     if ("""/Filter\s*/Standard""".r.findFirstIn(body).isEmpty)
       throw new IllegalArgumentException(
         "encrypted PDF: only the /Standard security handler is supported")
@@ -233,11 +236,7 @@ object PdfCrypt {
   /** Algorithms 4/5: does `fileKey` open this document (user pw check)? */
   private def userPwMatches(d: EncDict, id0: Array[Byte], key: Array[Byte]): Boolean =
     if (d.r == 2) java.util.Arrays.equals(rc4(key, PAD), d.u.take(32))
-    else {
-      var x = rc4(key, md5(PAD, id0))
-      (1 to 19).foreach(i => x = rc4(xorKey(key, i), x))
-      java.util.Arrays.equals(x, d.u.take(16))
-    }
+    else java.util.Arrays.equals(rc4Cascade(key, md5(PAD, id0), 0 to 19), d.u.take(16))
 
   /** Algorithm 3 steps a-d: the RC4 key derived from the OWNER
     * password, used both to produce /O (encrypt side) and to recover
@@ -255,11 +254,7 @@ object PdfCrypt {
   private def recoverUserPw(d: EncDict, ownerPw: Array[Byte]): Array[Byte] = {
     val ok = ownerRc4Key(d, ownerPw)
     if (d.r == 2) rc4(ok, d.o.take(32))
-    else {
-      var x = d.o.take(32)
-      (19 to 0 by -1).foreach(i => x = rc4(xorKey(ok, i), x))
-      x
-    }
+    else rc4Cascade(ok, d.o.take(32), 19 to 0 by -1)
   }
 
   private def pwError(supplied: Boolean): Nothing =
@@ -333,54 +328,24 @@ object PdfCrypt {
     * /Encrypt dict and a deterministic /ID land in the trailer. */
   def encrypt(bytes: Array[Byte], aes128: Boolean = false,
       ownerPw: String = "owner", userPw: String = ""): Array[Byte] = {
-    val text = new String(bytes, "ISO-8859-1")
-    val id0 = md5(bytes, "fixture-id".getBytes("ISO-8859-1"))
-    val n = 16 // 128-bit
-    val p = -3904 // print allowed, typical owner-locked bits
-    val r = if (aes128) 4 else 3
-    val userPad = pad32(userPw.getBytes("ISO-8859-1"))
+    val id0 = fixtureId(bytes)
+    // 128-bit key; /P -3904 = print allowed, typical owner-locked bits
+    val d0 = EncDict(if (aes128) 4 else 2, if (aes128) 4 else 3, 128, -3904,
+      Array.empty, Array.empty, Array.empty, Array.empty, encryptMetadata = true,
+      if (aes128) "AESV2" else "")
+    val userBytes = userPw.getBytes("ISO-8859-1")
     // Algorithm 3: /O from the owner password
-    var okey = md5(pad32(ownerPw.getBytes("ISO-8859-1")))
-    (0 until 50).foreach(_ => okey = md5(okey))
-    val rc4OKey = okey.take(n)
-    var o = rc4(rc4OKey, userPad)
-    (1 to 19).foreach(i => o = rc4(xorKey(rc4OKey, i), o))
-    // Algorithm 2 file key for the user password
-    var key = md5(userPad, o, intLE(p), id0).take(n)
-    (0 until 50).foreach(_ => key = md5(key).take(n))
-    // Algorithm 5: /U
-    var u = rc4(key, md5(PAD, id0))
-    (1 to 19).foreach(i => u = rc4(xorKey(key, i), u))
-    val u32 = u ++ Array.fill(16)(0.toByte)
-    val h = Handler(key, if (aes128) AesV2 else Rc4)
-
-    val hex = (b: Array[Byte]) => "<" + b.map(x => f"${x & 0xFF}%02x").mkString + ">"
+    val d = d0.copy(o = rc4Cascade(ownerRc4Key(d0, ownerPw.getBytes("ISO-8859-1")),
+      pad32(userBytes), 0 to 19))
+    // Algorithm 2 file key for the user password, Algorithm 5 /U
+    val key = fileKeyR234(d, id0, userBytes)
+    val u32 = rc4Cascade(key, md5(PAD, id0), 0 to 19) ++ Array.fill(16)(0.toByte)
     val cryptSuffix =
       if (aes128) " /CF << /StdCF << /CFM /AESV2 /AuthEvent /DocOpen /Length 16 >> >> /StmF /StdCF /StrF /StdCF"
       else ""
-    val encNum = """(\d+)\s+0\s+obj""".r.findAllMatchIn(text)
-      .map(_.group(1).toInt).max + 1
-    val encBody =
-      s" << /Filter /Standard /V ${if (aes128) 4 else 2} /R $r /Length 128 " +
-        s"/P $p /O ${hex(o)} /U ${hex(u32)}$cryptSuffix >> "
-
-    // Encrypt each object's stream section and strings, drop the old
-    // xref + trailer, then append the /Encrypt dict and a trailer
-    // carrying /Encrypt + /ID. (Fixture PDFs are parsed by object
-    // scan — no xref table needed.)
-    val rebuilt = Pdf.transformObjects(text, (num, body) =>
-      Pdf.transformStreamsAndStrings(body,
-        data => h.encrypt(num, 0, data), s => h.encrypt(num, 0, s)))
-    val bodyOnly = rebuilt.indexOf("xref\n") match {
-      case -1 => rebuilt
-      case i => rebuilt.substring(0, i)
-    }
-    val rootNum = """/Root\s+(\d+)\s+0\s+R""".r.findFirstMatchIn(text)
-      .map(_.group(1).toInt).getOrElse(1)
-    (bodyOnly + s"$encNum 0 obj$encBody endobj\n" +
-      s"trailer\n<< /Size ${encNum + 1} /Root $rootNum 0 R " +
-      s"/Encrypt $encNum 0 R /ID [${hex(id0)} ${hex(id0)}] >>\n%%EOF\n")
-      .getBytes("ISO-8859-1")
+    sealDoc(bytes, id0, Handler(key, if (aes128) AesV2 else Rc4),
+      s" << /Filter /Standard /V ${d.v} /R ${d.r} /Length ${d.length} " +
+        s"/P ${d.p} /O ${hex(d.o)} /U ${hex(u32)}$cryptSuffix >> ")
   }
 
   /** Encrypt a plaintext classic-xref PDF with AES-256 (V5/R6 /AESV3)
@@ -390,7 +355,6 @@ object PdfCrypt {
     * document via [[forDocument]]'s Algorithm 11/12 checks. */
   def encryptV5(bytes: Array[Byte], ownerPw: String = "owner",
       userPw: String = ""): Array[Byte] = {
-    val text = new String(bytes, "ISO-8859-1")
     // Deterministic "random" material (fixture reproducibility).
     val fileKey = sha(256, bytes, "v5-file-key".getBytes("ISO-8859-1"))
     def salt(tag: String) = md5(tag.getBytes("ISO-8859-1"), bytes).take(8)
@@ -405,14 +369,31 @@ object PdfCrypt {
       new Array[Byte](16), fileKey)
     val h = Handler(fileKey, AesV3)
 
-    val hex = (b: Array[Byte]) => "<" + b.map(x => f"${x & 0xFF}%02x").mkString + ">"
-    val encNum = """(\d+)\s+0\s+obj""".r.findAllMatchIn(text)
-      .map(_.group(1).toInt).max + 1
-    val encBody =
+    sealDoc(bytes, fixtureId(bytes), h,
       s" << /Filter /Standard /V 5 /R 6 /Length 256 /P -3904 " +
         s"/O ${hex(o)} /U ${hex(u)} /OE ${hex(oe)} /UE ${hex(ue)} " +
         "/CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen /Length 32 >> >> " +
-        "/StmF /StdCF /StrF /StdCF >> "
+        "/StmF /StdCF /StrF /StdCF >> ")
+  }
+
+  /** A PDF hex string `<…>` of `b`. */
+  private[ops] def hex(b: Array[Byte]): String =
+    "<" + b.map(x => f"${x & 0xFF}%02x").mkString + ">"
+
+  /** The deterministic fixture /ID of a plaintext document. */
+  private def fixtureId(bytes: Array[Byte]): Array[Byte] =
+    md5(bytes, "fixture-id".getBytes("ISO-8859-1"))
+
+  /** The tail both encryptors share: encrypt each object's stream
+    * section and strings with `h`'s per-object key, drop the old xref
+    * and trailer, then append the /Encrypt object `encBody` and a
+    * trailer carrying /Encrypt and the /ID pair. (Fixture PDFs are
+    * parsed by object scan — no xref table needed.) */
+  private def sealDoc(bytes: Array[Byte], id0: Array[Byte], h: Handler,
+      encBody: String): Array[Byte] = {
+    val text = new String(bytes, "ISO-8859-1")
+    val encNum = """(\d+)\s+0\s+obj""".r.findAllMatchIn(text)
+      .map(_.group(1).toInt).max + 1
     val rebuilt = Pdf.transformObjects(text, (num, body) =>
       Pdf.transformStreamsAndStrings(body,
         data => h.encrypt(num, 0, data), s => h.encrypt(num, 0, s)))
@@ -420,7 +401,6 @@ object PdfCrypt {
       case -1 => rebuilt
       case i => rebuilt.substring(0, i)
     }
-    val id0 = md5(bytes, "fixture-id".getBytes("ISO-8859-1"))
     val rootNum = """/Root\s+(\d+)\s+0\s+R""".r.findFirstMatchIn(text)
       .map(_.group(1).toInt).getOrElse(1)
     (bodyOnly + s"$encNum 0 obj$encBody endobj\n" +

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * executors with zero driver involvement and no shuffle at all; the
   * output is a narrow flatMap. At 100 TB of PDFs the cost is one pass
   * over the bytes, embarrassingly parallel by file. Per-file failures
-  * degrade to defined error rows (`error` non-empty, page 0), the
-  * same catch-and-log semantics as [[Pdf.describeFiles]] — one
+  * degrade to defined error rows (`error` non-empty, page 0) through
+  * the per-file guard [[Pdf.describeFiles]] also uses — one
   * corrupt document never fails a corpus-wide extraction job.
   */
 object PdfText {
@@ -38,15 +38,9 @@ object PdfText {
       .select(col(nameCol).cast("string").as("name"), col(contentCol).as("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (name, bytes) =>
-        // same up-front rejects + error vocabulary as Pdf.describeFiles
-        if (bytes == null || bytes.isEmpty) Seq((name, 0, "", "", "size 0B"))
-        else if (!Pdf.hasPdfHeader(bytes)) Seq((name, 0, "", "", "no %PDF- header"))
-        else
-          try Pdf.extractTextPages(bytes, password)
-            .map { case (p, t, w) => (name, p, t, w, "") }
-          catch {
-            case e: Exception => Seq((name, 0, "", "", String.valueOf(e.getMessage)))
-          }
+        Pdf.perFile(bytes)(Pdf.extractTextPages(bytes, password)
+          .map { case (p, t, w) => (name, p, t, w, "") })(
+          err => Seq((name, 0, "", "", err)))
       }
       .toDF("name", "page", "text", "warn", "error")
   }
@@ -70,19 +64,9 @@ object PdfText {
       .select(col(nameCol).cast("string").as("name"), col(contentCol).as("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (name, bytes) =>
-        if (bytes == null || bytes.isEmpty)
-          Seq((name, 0, 0, "", "", 0, 0, Array.empty[Byte], "", "size 0B"))
-        else if (!Pdf.hasPdfHeader(bytes))
-          Seq((name, 0, 0, "", "", 0, 0, Array.empty[Byte], "", "no %PDF- header"))
-        else
-          try Pdf.extractImages(bytes, password).map {
-            case (p, i, nm, fmt, w, h, c, warn) =>
-              (name, p, i, nm, fmt, w, h, c, warn, "")
-          } catch {
-            case e: Exception =>
-              Seq((name, 0, 0, "", "", 0, 0, Array.empty[Byte], "",
-                String.valueOf(e.getMessage)))
-          }
+        Pdf.perFile(bytes)(Pdf.extractImages(bytes, password).map {
+          case (p, i, nm, fmt, w, h, c, warn) => (name, p, i, nm, fmt, w, h, c, warn, "")
+        })(err => Seq((name, 0, 0, "", "", 0, 0, Array.empty[Byte], "", err)))
       }
       .toDF("name", "page", "img_idx", "xname", "fmt", "width", "height",
         "content", "warn", "error")

@@ -1,8 +1,10 @@
 package graft.ops
 
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
-class PdfSpec extends AnyFunSuite {
+class PdfSpec extends AnyFunSuite with TimeLimits {
 
   test("parsePages: ranges, swaps, junk, prefix parseInt (J6/R2 reference parity)") {
     assert(Pdf.parsePages("1,3,5-7") == Seq(Seq(1), Seq(3), Seq(5, 6, 7)))
@@ -37,10 +39,38 @@ class PdfSpec extends AnyFunSuite {
     assert(Pdf.hasPdfHeader(m) && Pdf.hasPdfHeader(part))
   }
 
+  private def deflate(data: Array[Byte]): Array[Byte] = {
+    val deflater = new java.util.zip.Deflater()
+    deflater.setInput(data); deflater.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](8192)
+    while (!deflater.finished()) out.write(buf, 0, deflater.deflate(buf))
+    out.toByteArray
+  }
+
+  /** ASCII85 armor ([PDF 32000] 7.4.3), `z` for all-zero groups. */
+  private def ascii85(d: Array[Byte]): Array[Byte] = {
+    val sb = new StringBuilder
+    d.grouped(4).foreach { g =>
+      var v = 0L
+      (0 until 4).foreach(i => v = (v << 8) | (if (i < g.length) g(i) & 0xFF else 0))
+      if (v == 0 && g.length == 4) sb.append('z')
+      else {
+        val cs = new Array[Char](5)
+        (4 to 0 by -1).foreach { i => cs(i) = ('!' + (v % 85)).toChar; v /= 85 }
+        (0 to g.length).foreach(i => sb.append(cs(i)))
+      }
+    }
+    (sb.result() + "~>").getBytes("ISO-8859-1")
+  }
+
   /** A modern-style PDF: catalog, pages node and page dicts all live
-    * inside one FlateDecode /ObjStm; the xref is an xref *stream*
-    * object (never parsed — present to mirror real 1.5+ files). */
-  private def makeCompressedPdf(nPages: Int): Array[Byte] = {
+    * inside one /ObjStm stored under `filter` (FlateDecode by default;
+    * the text after /Filter, so it may carry /DecodeParms too) with
+    * `encode` its writer half; the xref is an xref *stream* object
+    * (never parsed — present to mirror real 1.5+ files). */
+  private def makeCompressedPdf(nPages: Int, filter: String = "/FlateDecode",
+      encode: Array[Byte] => Array[Byte] = deflate): Array[Byte] = {
     val pageNums = (0 until nPages).map(3 + _)
     val inner = Seq(
       1 -> "<< /Type /Catalog /Pages 2 0 R >>",
@@ -50,17 +80,12 @@ class PdfSpec extends AnyFunSuite {
     val offsets = bodies.scanLeft(0)((acc, b) => acc + b.length + 1)
     val header = inner.map(_._1).zip(offsets).map { case (n, o) => s"$n $o" }.mkString(" ") + " "
     val payload = header + bodies.mkString("\n") + "\n"
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(payload.getBytes("ISO-8859-1")); deflater.finish()
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!deflater.finished()) out.write(buf, 0, deflater.deflate(buf))
-    val flate = out.toByteArray
+    val data = encode(payload.getBytes("ISO-8859-1"))
     val sb = new java.io.ByteArrayOutputStream()
     sb.write("%PDF-1.5\n".getBytes("ISO-8859-1"))
     sb.write((s"8 0 obj << /Type /ObjStm /N ${inner.size} /First ${header.length} " +
-      s"/Filter /FlateDecode /Length ${flate.length} >> stream\n").getBytes("ISO-8859-1"))
-    sb.write(flate)
+      s"/Filter $filter /Length ${data.length} >> stream\n").getBytes("ISO-8859-1"))
+    sb.write(data)
     sb.write("\nendstream endobj\n".getBytes("ISO-8859-1"))
     sb.write(("9 0 obj << /Type /XRef /Size 10 /W [1 2 2] >> stream\nxxxx\nendstream endobj\n" +
       "startxref\n0\n%%EOF\n").getBytes("ISO-8859-1"))
@@ -132,39 +157,13 @@ class PdfSpec extends AnyFunSuite {
   }
 
   test("predictor-compressed ObjStm decodes: PNG Sub/Up/Average/Paeth row filters") {
-    val nPages = 3
-    val pageNums = (0 until nPages).map(3 + _)
-    val inner = Seq(
-      1 -> "<< /Type /Catalog /Pages 2 0 R >>",
-      2 -> s"<< /Type /Pages /Kids [${pageNums.map(n => s"$n 0 R").mkString(" ")}] /Count $nPages >>") ++
-      pageNums.map(n => n -> "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>")
-    val bodies = inner.map(_._2)
-    val offsets = bodies.scanLeft(0)((acc, b) => acc + b.length + 1)
-    val header = inner.map(_._1).zip(offsets).map { case (n, o) => s"$n $o" }.mkString(" ") + " "
-    val payload = header + bodies.mkString("\n") + "\n"
     val columns = 24
-    val filtered = pngEncode(payload.getBytes("ISO-8859-1"), columns)
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(filtered); deflater.finish()
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!deflater.finished()) out.write(buf, 0, deflater.deflate(buf))
-    val flate = out.toByteArray
     // both legal DecodeParms shapes: inline dict and 1-element array
     // (the array form is required when /Filter is itself an array)
-    def doc(parms: String): Array[Byte] = {
-      val sb = new java.io.ByteArrayOutputStream()
-      sb.write("%PDF-1.5\n".getBytes("ISO-8859-1"))
-      sb.write((s"8 0 obj << /Type /ObjStm /N ${inner.size} /First ${header.length} " +
-        s"/Filter /FlateDecode /DecodeParms $parms " +
-        s"/Length ${flate.length} >> stream\n").getBytes("ISO-8859-1"))
-      sb.write(flate)
-      sb.write(("\nendstream endobj\nstartxref\n0\n%%EOF\n").getBytes("ISO-8859-1"))
-      sb.toByteArray
-    }
     Seq(s"<< /Predictor 12 /Columns $columns >>",
         s"[<< /Predictor 12 /Columns $columns >>]").foreach { parms =>
-      val d = doc(parms)
+      val d = makeCompressedPdf(3, s"/FlateDecode /DecodeParms $parms",
+        p => deflate(pngEncode(p, columns)))
       assert(Pdf.pageCount(d) == 3, parms)
       assert(Pdf.pageCount(Pdf.extractPages(d, Seq(2, 3))) == 2, parms)
       assert(Pdf.pageCount(Pdf.merge(Seq(d, Pdf.makePdf(1)))) == 4, parms)
@@ -220,5 +219,69 @@ class PdfSpec extends AnyFunSuite {
       ("ok.pdf", true, Some(1), ""),
       ("empty.pdf", false, None, "size 0B"),
       ("x.txt", false, None, "no %PDF- header")))
+  }
+
+  test("object streams decode through the content-stream filter chain") {
+    // ASCII85 armor around Flate — the classic transport chain, here
+    // on the /ObjStm that holds the catalog and page tree
+    val armored = makeCompressedPdf(3, "[/ASCII85Decode /FlateDecode]",
+      d => ascii85(deflate(d)))
+    assert(Pdf.pageCount(armored) == 3)
+    val part = Pdf.extractPages(armored, Seq(1, 3))
+    assert(Pdf.pageCount(part) == 2)
+    assert(Pdf.pageCount(Pdf.merge(Seq(armored, part, Pdf.makePdf(1)))) == 6)
+    // an unsupported filter on an ObjStm is the same defined error a
+    // content stream under it gives
+    val dct = makeCompressedPdf(2, "/DCTDecode", identity)
+    val ex = intercept[IllegalArgumentException](Pdf.pageCount(dct))
+    assert(ex.getMessage == "unsupported stream filter /DCTDecode")
+  }
+
+  /** Run `body` on a daemon thread and fail the test if it has not
+    * returned within 20 s: a framing loop that never ends cannot be
+    * interrupted, so the limit waits on the thread, not the loop. */
+  private def bounded[T](body: => T): T = {
+    @volatile var result: Either[Throwable, T] = null
+    val t = new Thread(() => result = try Right(body) catch { case e: Throwable => Left(e) })
+    t.setDaemon(true)
+    t.start()
+    implicit val signaler: Signaler = ThreadSignaler
+    failAfter(20.seconds) { t.join() }
+    result.fold(e => throw e, identity)
+  }
+
+  private def withObjStmLength(pdf: Array[Byte], len: String): String =
+    """(/Type /ObjStm [^>]*/Length )\d+""".r
+      .replaceFirstIn(new String(pdf, "ISO-8859-1"), "$1" + len)
+
+  test("a /Length of 2147483647 cannot overflow the stream framer") {
+    // the SECOND content stream declares it: framing must fall back to
+    // its endstream token, not jump backwards to the first stream's
+    val text = new String(Pdf.makePdf(2, withContent = true), "ISO-8859-1")
+    val last = """/Length \d+""".r.findAllMatchIn(text).toSeq.last
+    val content = text.substring(0, last.start) + "/Length 2147483647" +
+      text.substring(last.end)
+    assert(bounded(Pdf.pageCount(content.getBytes("ISO-8859-1"))) == 2)
+    assert(bounded(Pdf.extractText(content.getBytes("ISO-8859-1"))).map(_._2) ==
+      Seq("Page 1", "Page 2"))
+    // the same /Length on the /ObjStm that holds the catalog
+    val objStm = withObjStmLength(Pdf.makePdf(3, xrefStream = true), "2147483647")
+    assert(bounded(Pdf.pageCount(objStm.getBytes("ISO-8859-1"))) == 3)
+    // a negative /Length never frames either
+    val negative = withObjStmLength(Pdf.makePdf(3, xrefStream = true), "-7")
+    assert(bounded(Pdf.pageCount(negative.getBytes("ISO-8859-1"))) == 3)
+  }
+
+  test("describeFiles: a malformed file is its own error row, whatever it throws") {
+    // an /ObjStm whose /Length 2147483647 runs past a file truncated
+    // inside the stream (no endstream, no xref)
+    val full = withObjStmLength(Pdf.makePdf(3, xrefStream = true), "2147483647")
+    val truncated = full.substring(0, full.indexOf("endstream"))
+      .getBytes("ISO-8859-1")
+    val rows = Pdf.describeFiles(Seq(("ok.pdf", Pdf.makePdf(2)),
+      ("objstm_overflow.pdf", truncated)))
+    assert(rows.map { case (n, ok, pages, _) => (n, ok, pages) } == Seq(
+      ("ok.pdf", true, Some(2)), ("objstm_overflow.pdf", false, None)))
+    assert(rows(1)._4.nonEmpty)
   }
 }
