@@ -1,13 +1,16 @@
 package graft.avro
 
 import scala.jdk.CollectionConverters._
-import org.apache.avro.{Schema, SchemaBuilder}
+import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftshim.ExprShim
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Avro container-file interchange (the row-oriented sibling of the
   * parquet/ORC columnar pair — the standard landing format for log
@@ -17,10 +20,21 @@ import org.apache.spark.sql.types._
   * on this classpath — only the core `org.apache.avro` runtime is — so
   * the engine carries its own: a distributed per-partition writer here
   * and a DSv2 reader ([[AvroDataSource]]) that splits container files
-  * on sync markers and prunes columns through Avro schema resolution.
+  * on sync markers and decodes only the required columns.
   *
-  * Scale notes: the writer runs inside `foreachPartition` (one
-  * container file per task, no driver funnel); the reader's unit of
+  * Codec: both directions work on Spark's `InternalRow` directly. The
+  * writer reads `queryExecution.toRdd` and encodes each row with
+  * [[RowDatumWriter]] (no `Row`, no `GenericRecord`); the reader
+  * decodes with [[RowDatumReader]] into one reused row per split.
+  * `DataFileWriter` and `DataFileReader` frame the blocks, so the
+  * container layout, codecs and sync handling are Avro's own.
+  *
+  * Hadoop conf: the session's (`sessionState.newHadoopConf`), built
+  * once on the driver and broadcast once per write or scan, so a
+  * scheme or setting registered on the session applies.
+  *
+  * Scale notes: the writer runs one task per partition (one container
+  * file per task, no driver funnel); the reader's unit of
   * parallelism is the sync-delimited byte range, so ONE big Avro file
   * still fans out across executors — the property that makes the
   * format survive a 100 TB directory of unevenly-sized files.
@@ -61,19 +75,21 @@ object Avro {
       s"graft-avro: top-level schema must be a record, got ${schema.getType}")
     StructType(schema.getFields.asScala.toSeq.map { f =>
       val (s, nullable) = unwrapNullable(f.schema())
-      val dt = s.getType match {
-        case Schema.Type.BOOLEAN => BooleanType
-        case Schema.Type.INT     => IntegerType
-        case Schema.Type.LONG    => LongType
-        case Schema.Type.FLOAT   => FloatType
-        case Schema.Type.DOUBLE  => DoubleType
-        case Schema.Type.STRING  => StringType
-        case Schema.Type.BYTES   => BinaryType
-        case other => throw new IllegalArgumentException(
-          s"graft-avro: unsupported Avro type $other for field '${f.name}'")
-      }
-      StructField(f.name, dt, nullable)
+      StructField(f.name, sparkType(s, f.name), nullable)
     })
+  }
+
+  /** The Spark type of the non-union Avro type `s` of field `field`. */
+  private[avro] def sparkType(s: Schema, field: String): DataType = s.getType match {
+    case Schema.Type.BOOLEAN => BooleanType
+    case Schema.Type.INT     => IntegerType
+    case Schema.Type.LONG    => LongType
+    case Schema.Type.FLOAT   => FloatType
+    case Schema.Type.DOUBLE  => DoubleType
+    case Schema.Type.STRING  => StringType
+    case Schema.Type.BYTES   => BinaryType
+    case other => throw new IllegalArgumentException(
+      s"graft-avro: unsupported Avro type $other for field '$field'")
   }
 
   private[avro] def unwrapNullable(s: Schema): (Schema, Boolean) =
@@ -92,60 +108,44 @@ object Avro {
     * Existing output is replaced. */
   def write(df: DataFrame, path: String): Unit = {
     val schema = df.schema
-    val schemaJson = avroSchema(schema).toString // Schema isn't Serializable
+    avroSchema(schema) // rejects an unsupported column before any task runs
+    val conf = ExprShim.hadoopConf(df.sparkSession, Map.empty)
     val dir = new Path(path)
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(conf)
     if (fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
-    val written = df.rdd.mapPartitionsWithIndex { (idx, rows) =>
-      if (rows.hasNext) {
-        val avro = new Schema.Parser().parse(schemaJson)
-        writeContainer(new Path(path, f"part-$idx%05d.avro"), avro,
-          rows.map(toRecord(_, schema, avro)))
-        Iterator.single(1)
-      } else Iterator.empty
-    }.count()
+    val taskConf = df.sparkSession.sparkContext.broadcast(new SerializableConfiguration(conf))
+    val written =
+      try df.queryExecution.toRdd.mapPartitionsWithIndex { (idx, rows) =>
+        if (rows.hasNext) {
+          writeContainer(new Path(path, f"part-$idx%05d.avro"), schema, rows, taskConf.value.value)
+          Iterator.single(1)
+        } else Iterator.empty
+      }.count()
+      finally taskConf.destroy()
     if (written == 0)
-      writeContainer(new Path(path, "part-00000.avro"), avroSchema(schema), Iterator.empty)
+      writeContainer(new Path(path, "part-00000.avro"), schema, Iterator.empty, conf)
   }
 
-  /** One container file at `file`: the header, then `records`. */
-  private def writeContainer(file: Path, avro: Schema,
-      records: Iterator[GenericRecord]): Unit = {
-    val out = file.getFileSystem(new Configuration()).create(file, true)
-    val w = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](avro))
-    w.create(avro, out)
-    try records.foreach(w.append)
+  /** One container file at `file`: the header, then `rows`. */
+  private def writeContainer(file: Path, schema: StructType,
+      rows: Iterator[InternalRow], conf: Configuration): Unit = {
+    val out = file.getFileSystem(conf).create(file, true)
+    val w = new DataFileWriter[InternalRow](new RowDatumWriter(schema))
+    w.create(avroSchema(schema), out)
+    try rows.foreach(w.append)
     finally w.close() // closes the stream too
-  }
-
-  private def toRecord(r: Row, schema: StructType, avro: Schema): GenericRecord = {
-    val rec = new GenericData.Record(avro)
-    var i = 0
-    while (i < schema.length) {
-      val v = if (r.isNullAt(i)) null else schema.fields(i).dataType match {
-        case BinaryType => java.nio.ByteBuffer.wrap(r.getAs[Array[Byte]](i))
-        case _          => r.get(i).asInstanceOf[AnyRef]
-      }
-      rec.put(i, v)
-      i += 1
-    }
-    rec
   }
 
   /** Read through the DSv2 source (pruning + sync-splitting apply). */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format("graft-avro").option("path", path).load()
 
-  /** Driver-side header probe: the writer schema of the first file. */
-  private[avro] def fileSchema(file: String): Schema = {
+  /** Driver-side header probe: the writer schema of `file`. */
+  private[avro] def fileSchema(file: String, conf: Configuration): Schema = {
     val p = new Path(file)
-    val in = p.getFileSystem(new Configuration()).open(p)
-    try {
-      val s = new DataFileStream[GenericRecord](in,
-        new GenericDatumReader[GenericRecord]())
-      try s.getSchema finally s.close()
-    } finally () // DataFileStream.close closes `in`
+    val s = new DataFileStream[GenericRecord](p.getFileSystem(conf).open(p),
+      new GenericDatumReader[GenericRecord]())
+    try s.getSchema finally s.close() // closes the file too
   }
 }

@@ -152,19 +152,25 @@ object PdfCrypt {
 
   /** Decode the literal string starting at `(`-index `at`; returns
     * (bytes, index past the closing paren). [PDF 32000] 7.3.4.2
-    * escapes: named, octal, balanced nested parens. */
+    * escapes: named, octal, backslash-EOL (LF, CR or CRLF; dropped),
+    * balanced nested parens. A string with no closing paren fails with
+    * `unterminated literal string`. */
   private[ops] def readLiteralString(body: String, at: Int): (Array[Byte], Int) = {
     val out = new java.io.ByteArrayOutputStream()
     var i = at + 1; var depth = 1
     while (depth > 0) {
+      require(i < body.length, "unterminated literal string")
       body.charAt(i) match {
         case '\\' =>
+          require(i + 1 < body.length, "unterminated literal string")
           body.charAt(i + 1) match {
             case 'n' => out.write('\n'); i += 2
             case 'r' => out.write('\r'); i += 2
             case 't' => out.write('\t'); i += 2
             case 'b' => out.write('\b'); i += 2
             case 'f' => out.write('\f'); i += 2
+            case '\n' => i += 2
+            case '\r' => i += (if (i + 2 < body.length && body.charAt(i + 2) == '\n') 3 else 2)
             case d if d >= '0' && d <= '7' =>
               val oct = body.substring(i + 1, i + 1 + 3.min(body.length - i - 1))
                 .takeWhile(c => c >= '0' && c <= '7').take(3)

@@ -4,15 +4,19 @@ import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.graftshim.ExprShim
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** The DataSource V2 frame under the three custom file sources
   * (`graft-xml`, `graft-xlsx`, `graft-avro`): one input lister, one
@@ -35,7 +39,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the global Limit; the win is the parse work saved inside each
   *    partition, not plan surgery.
   *
-  * Each source supplies its schema and its [[Scan]]; the all-string
+  * File system: every call goes through the session's Hadoop conf
+  * (`sessionState.newHadoopConfWithOptions` of the read's options), so
+  * a scheme or setting registered on the session reaches these sources
+  * as it reaches `parquet`. The driver builds the conf once per
+  * planning call; a [[FileScan]] ships it to the executors as ONE
+  * broadcast `SerializableConfiguration` per scan, so no split or
+  * partition builds a conf of its own.
+  *
+  * Each source supplies its schema and its [[FileScan]]; the all-string
   * formats go through [[StringFileSource]]. */
 abstract class FileSource extends TableProvider with DataSourceRegister {
 
@@ -48,15 +60,20 @@ abstract class FileSource extends TableProvider with DataSourceRegister {
   /** The scan over the input at `options`' path, given the pushdown. */
   protected def scan(options: CaseInsensitiveStringMap, pushed: Pushed): Scan
 
+  /** The session's Hadoop conf with the read's options on top. */
+  protected final def hadoopConf(options: CaseInsensitiveStringMap): Configuration =
+    ExprShim.hadoopConf(SparkSession.active, options.asCaseSensitiveMap.asScala.toMap)
+
   /** (path, length) of each input file: the non-empty files directly
     * under the `path` option whose names [[accept]] allows, sorted by
     * path; `path` itself when it is a file. A directory with no such
     * file fails here, naming the source and the path, rather than as
     * an empty scan or a bare `head`. */
-  protected final def files(options: CaseInsensitiveStringMap): Seq[(String, Long)] = {
+  protected final def files(options: CaseInsensitiveStringMap,
+      conf: Configuration): Seq[(String, Long)] = {
     val path = options.get("path")
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
     if (!st.isDirectory) Seq((path, st.getLen))
     else {
@@ -69,14 +86,27 @@ abstract class FileSource extends TableProvider with DataSourceRegister {
     }
   }
 
-  /** The scan description `.explain` prints, e.g. `graft-xml /in
-    * PushedFilters: [...], PushedLimit: 5, ReadSchema: struct<...>`;
-    * a source that pushes no filters omits `PushedFilters`. */
-  protected final def describe(options: CaseInsensitiveStringMap, pushed: Pushed): String =
-    s"${shortName()} ${options.get("path")} " +
-      (if (pushesFilters) s"PushedFilters: [${pushed.filters.mkString(", ")}], " else "") +
-      (if (pushed.limit >= 0) s"PushedLimit: ${pushed.limit}, " else "") +
-      s"ReadSchema: ${pushed.required.catalogString}"
+  /** One batch scan of the input at `options`' path: the session conf
+    * is built once, lists the files and goes to the reader factory as
+    * [[broadcastConf]]. */
+  protected abstract class FileScan(options: CaseInsensitiveStringMap, pushed: Pushed)
+      extends Scan with Batch {
+    protected val conf: Configuration = hadoopConf(options)
+    protected def inputFiles: Seq[(String, Long)] = files(options, conf)
+    /** The conf as one broadcast for this scan's readers. */
+    protected def broadcastConf(): Broadcast[SerializableConfiguration] =
+      SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
+    override def readSchema(): StructType = pushed.required
+    override def toBatch: Batch = this
+    /** What `.explain` prints, e.g. `graft-xml /in PushedFilters: [...],
+      * PushedLimit: 5, ReadSchema: struct<...>`; a source that pushes no
+      * filters omits `PushedFilters`. */
+    override def description(): String =
+      s"${shortName()} ${options.get("path")} " +
+        (if (pushesFilters) s"PushedFilters: [${pushed.filters.mkString(", ")}], " else "") +
+        (if (pushed.limit >= 0) s"PushedLimit: ${pushed.limit}, " else "") +
+        s"ReadSchema: ${pushed.required.catalogString}"
+  }
 
   override def supportsExternalMetadata(): Boolean = true
 
@@ -103,9 +133,9 @@ object FileSource {
 
   /** The whole of `file`: a [[StringFormat]] cannot be split, so its
     * partition reads the file in one go. */
-  def readBytes(file: String): Array[Byte] = {
+  def readBytes(file: String, conf: Configuration): Array[Byte] = {
     val p = new Path(file)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     val len = fs.getFileStatus(p).getLen
     require(len <= Int.MaxValue, s"$file: $len bytes is too big to read whole")
     val out = new Array[Byte](len.toInt)
@@ -143,12 +173,12 @@ private class PushdownBuilder(full: StructType, pushesFilters: Boolean,
 /** One all-string file format: every cell a string, a missing cell "". */
 trait StringFormat extends Serializable {
 
-  /** The table schema, probed from the first input file. */
-  def schema(file: String): StructType
+  /** The table schema, probed from the bytes of the first input file. */
+  def schema(file: Array[Byte]): StructType
 
-  /** The rows of one file, each as a cell getter (column name → cell,
-    * "" when absent). Columns outside `keep` may read as "". */
-  def rows(file: String, keep: Set[String]): Iterator[String => String]
+  /** The rows of one file's bytes, each as a cell getter (column name →
+    * cell, "" when absent). Columns outside `keep` may read as "". */
+  def rows(file: Array[Byte], keep: Set[String]): Iterator[String => String]
 }
 
 /** A source whose files are [[StringFormat]] tables: one partition per
@@ -161,33 +191,31 @@ abstract class StringFileSource extends FileSource {
 
   override protected def pushesFilters: Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    format(options).schema(files(options).head._1)
-
-  override protected def scan(options: CaseInsensitiveStringMap, pushed: Pushed): Scan = {
-    val fmt = format(options)
-    new Scan with Batch {
-      override def readSchema(): StructType = pushed.required
-      override def toBatch: Batch = this
-      override def description(): String = describe(options, pushed)
-      override def planInputPartitions(): Array[InputPartition] =
-        files(options).map(f => FilePartition(f._1): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new StringReaderFactory(fmt, pushed)
-    }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val conf = hadoopConf(options)
+    format(options).schema(FileSource.readBytes(files(options, conf).head._1, conf))
   }
+
+  override protected def scan(options: CaseInsensitiveStringMap, pushed: Pushed): Scan =
+    new FileScan(options, pushed) {
+      override def planInputPartitions(): Array[InputPartition] =
+        inputFiles.map(f => FilePartition(f._1): InputPartition).toArray
+      override def createReaderFactory(): PartitionReaderFactory =
+        new StringReaderFactory(format(options), pushed, broadcastConf())
+    }
 }
 
 private case class FilePartition(file: String) extends InputPartition
 
-private class StringReaderFactory(format: StringFormat, pushed: Pushed)
-    extends PartitionReaderFactory {
+private class StringReaderFactory(format: StringFormat, pushed: Pushed,
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val file = p.asInstanceOf[FilePartition].file
     val cols = pushed.required.fieldNames
     new PartitionReader[InternalRow] {
       private lazy val it: Iterator[String => String] = {
-        val rows = format.rows(file, cols.toSet ++ pushed.filters.flatMap(_.references))
+        val rows = format.rows(FileSource.readBytes(file, conf.value.value),
+          cols.toSet ++ pushed.filters.flatMap(_.references))
         val kept =
           if (pushed.filters.isEmpty) rows
           else rows.filter(get => pushed.filters.forall(StringFilters.eval(_, get)))

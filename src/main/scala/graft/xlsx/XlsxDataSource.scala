@@ -3,7 +3,7 @@ package graft.xlsx
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.{FileSource, StringFileSource, StringFormat}
+import graft.sources.{StringFileSource, StringFormat}
 
 /** DataSource V2 XLSX reader on the shared file scan
   * ([[graft.sources.FileSource]] holds the pruning, filter and limit
@@ -38,12 +38,12 @@ object XlsxDataSource {
 
 private case class XlsxFormat(sheet: Option[String]) extends StringFormat {
 
-  private def grid(file: String) = Xlsx.parseSheetGrid(FileSource.readBytes(file), sheet)
+  private def grid(file: Array[Byte]) = Xlsx.parseSheetGrid(file, sheet)
 
-  override def schema(file: String): StructType =
+  override def schema(file: Array[Byte]): StructType =
     StructType(grid(file)._1.map(h => StructField(h, StringType, nullable = false)))
 
-  override def rows(file: String, keep: Set[String]): Iterator[String => String] = {
+  override def rows(file: Array[Byte], keep: Set[String]): Iterator[String => String] = {
     val (header, rows) = grid(file)
     // first occurrence wins, as in the schema's column order
     val at = header.zipWithIndex.reverseIterator.toMap

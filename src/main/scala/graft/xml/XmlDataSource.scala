@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.{FileSource, StringFileSource, StringFormat}
+import graft.sources.{StringFileSource, StringFormat}
 
 /** DataSource V2 XML reader on the shared file scan
   * ([[graft.sources.FileSource]] holds the pruning, filter and limit
@@ -35,19 +35,18 @@ object XmlDataSource {
 
 private case class XmlFormat(rowTag: String, flatten: Boolean) extends StringFormat {
 
-  private def parse(file: String, keep: Option[Set[String]]) =
-    Xml.parseRowsIter(new String(FileSource.readBytes(file), UTF_8), rowTag,
-      flatten, keep)
+  private def parse(file: Array[Byte], keep: Option[Set[String]]) =
+    Xml.parseRowsIter(new String(file, UTF_8), rowTag, flatten, keep)
 
   /** P2 schema probe: union keys of the first 1000 rows. The lazy
     * parseRowsIter cursor stops at row 1000 — a 1 GB document is read
     * whole but parsed only to row 1000. */
-  override def schema(file: String): StructType = {
+  override def schema(file: Array[Byte]): StructType = {
     val keys = mutable.LinkedHashSet.empty[String]
     parse(file, None).take(1000).foreach(_.keys.foreach(keys.add))
     StructType(keys.toSeq.map(k => StructField(k, StringType, nullable = false)))
   }
 
-  override def rows(file: String, keep: Set[String]): Iterator[String => String] =
+  override def rows(file: Array[Byte], keep: Set[String]): Iterator[String => String] =
     parse(file, Some(keep)).map(r => (c: String) => r.getOrElse(c, ""))
 }

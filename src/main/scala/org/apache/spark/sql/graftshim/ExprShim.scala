@@ -26,4 +26,10 @@ object ExprShim {
     * (`sharedState` is `private[sql]`, hence the shim). */
   def cacheIsEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
     spark.sharedState.cacheManager.isEmpty
+
+  /** The session's Hadoop conf with `options` on top, as Spark's own
+    * file sources build it (`sessionState` is `private[sql]`). */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession,
+      options: Map[String, String]): org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConfWithOptions(options)
 }

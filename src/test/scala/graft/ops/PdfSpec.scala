@@ -284,4 +284,22 @@ class PdfSpec extends AnyFunSuite with TimeLimits {
       ("ok.pdf", true, Some(2)), ("objstm_overflow.pdf", false, None)))
     assert(rows(1)._4.nonEmpty)
   }
+
+  test("literal strings drop a backslash-EOL (LF, CR or CRLF), as the content lexer does") {
+    for (eol <- Seq("\n", "\r", "\r\n")) {
+      val body = s"x (a\\${eol}b) y"
+      val (bytes, end) = PdfCrypt.readLiteralString(body, 2)
+      assert(bytes.toSeq == "ab".getBytes.toSeq, s"EOL ${eol.map(_.toInt)}")
+      assert(body.substring(end) == " y")
+    }
+    // a plain EOL inside the string is kept
+    assert(PdfCrypt.readLiteralString("(a\nb)", 0)._1.toSeq == Seq[Byte](97, 10, 98))
+  }
+
+  test("an unterminated literal string is a defined error") {
+    for (body <- Seq("(abc", "(a(b)c", "(abc\\")) {
+      val e = intercept[IllegalArgumentException](PdfCrypt.readLiteralString(body, 0))
+      assert(e.getMessage.contains("unterminated literal string"), body)
+    }
+  }
 }

@@ -55,19 +55,35 @@ class AvroSpec extends SparkSpec {
 
   test("sync-split read: one big file fans out and every block is read once") {
     val out = scratch("split")
+    val n = 50000
     // one partition -> ONE container file, big enough for many sync blocks
-    val df = spark.range(50000)
+    val df = spark.range(n)
       .select(col("id"), concat(lit("v"), col("id")).as("s"))
       .coalesce(1)
     Avro.write(df, out)
-    val read = spark.read.format("graft-avro").option("path", out)
-      .option("maxSplitBytes", 16L << 10).load()
-    // the split plan really is multi-partition over the single file
-    assert(read.rdd.getNumPartitions > 4)
-    // exactly-once block ownership: no row lost, none duplicated
-    assert(read.count() == 50000L)
-    assert(read.agg(sum("id")).head().getLong(0) == 50000L * 49999 / 2)
-    assert(read.select("s").distinct().count() == 50000L)
+    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".avro"))
+    assert(files.length == 1)
+    val len = files.head.length()
+    // 1 KB to 64 KB splits, and the whole file as one split
+    for (split <- Seq(1L << 10, 4L << 10, 16L << 10, 64L << 10, len)) {
+      val read = spark.read.format("graft-avro").option("path", out)
+        .option("maxSplitBytes", split).load()
+      // the split plan really is multi-partition over the single file
+      assert(read.rdd.getNumPartitions == (len + split - 1) / split)
+      // exactly-once block ownership: no row lost, none duplicated
+      val all = read.collect()
+      assert(all.length == n && all.map(_.getLong(0)).toSet == (0L until n).toSet, s"split $split")
+      assert(all.forall(r => r.getString(1) == "v" + r.getLong(0)))
+      // a pushed limit caps each split; the rows it lets through are still distinct
+      for (limit <- Seq(777, n + 3)) {
+        val q = read.limit(limit)
+        val plan = q.queryExecution.executedPlan.toString
+        assert(plan.contains(s"PushedLimit: $limit"), plan)
+        val got = q.collect().map(_.getLong(0))
+        assert(got.length == math.min(limit, n), s"split $split, limit $limit")
+        assert(got.distinct.length == got.length && got.forall(id => id >= 0 && id < n))
+      }
+    }
   }
 
   test("column pruning reaches the scan (pruned ReadSchema in the plan)") {
