@@ -25,7 +25,7 @@ import org.apache.spark.util.SerializableConfiguration
   * Codec: both directions work on Spark's `InternalRow` directly. The
   * writer reads `queryExecution.toRdd` and encodes each row with
   * [[RowDatumWriter]] (no `Row`, no `GenericRecord`); the reader
-  * decodes with [[RowDatumReader]] into one reused row per split.
+  * decodes with [[RowDatumReader]] into one reused row per partition.
   * `DataFileWriter` and `DataFileReader` frame the blocks, so the
   * container layout, codecs and sync handling are Avro's own.
   *
@@ -34,10 +34,11 @@ import org.apache.spark.util.SerializableConfiguration
   * scheme or setting registered on the session applies.
   *
   * Scale notes: the writer runs one task per partition (one container
-  * file per task, no driver funnel); the reader's unit of
-  * parallelism is the sync-delimited byte range, so ONE big Avro file
-  * still fans out across executors — the property that makes the
-  * format survive a 100 TB directory of unevenly-sized files.
+  * file per task, no driver funnel); the reader's unit of work is
+  * the sync-delimited byte range, packed into partitions by Spark's
+  * file-source rule, so ONE big Avro file still fans out across
+  * executors — the property that makes the format survive a 100 TB
+  * directory of unevenly-sized files.
   *
   * Type surface: the core primitive set (boolean/int/long/float/
   * double/string/bytes), nullable as `union(null, T)`. Temporal and

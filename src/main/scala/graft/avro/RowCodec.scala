@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the decoder. `union(null, T)` reads in either branch order. A
   * string is copied once, from the reused `Utf8` into its
   * `UTF8String`; `read` fills `reuse` when given one, so
-  * `reader.next(row)` decodes a whole split into one row.
+  * `reader.next(row)` decodes a whole partition into one row.
   *
   * A required column the file lacks, or one whose type in the file
   * differs from the table's, fails in [[setSchema]] with an

@@ -118,9 +118,15 @@ object SourcesPack extends QueryPack {
     // files on sync markers and prunes to the aggregate's columns →
     // re-aggregate. The oracle recomputes from the parquet original,
     // so the whole encode/split/resolve/decode path must be lossless.
-    // maxSplitBytes=64k forces multi-split reads even at sf0.001 — the
+    // maxSplitBytes=64k plans several sync ranges even at sf0.001 — the
     // sync-ownership contract (each block read exactly once) is load-
-    // bearing in the gate, not just in the spec.
+    // bearing in the gate, not just in the spec. The ranges are packed
+    // into partitions by Spark's file-source rule: at sf0.001 (2 ranges
+    // in 1 file) each range is its own partition, so the gate crosses a
+    // mid-file partition boundary; at sf0.1 (165 ranges in 3 files on
+    // local[3]) 6 partitions each read runs of ranges, so it crosses
+    // range boundaries inside a run and file boundaries inside a
+    // partition as well.
     "avro_roundtrip" -> ((s, dir) => {
       val out = scratch("avro_lineitem")
       graft.avro.Avro.write(

@@ -5,12 +5,14 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.graftshim.ExprShim
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
@@ -65,10 +67,12 @@ abstract class FileSource extends TableProvider with DataSourceRegister {
     ExprShim.hadoopConf(SparkSession.active, options.asCaseSensitiveMap.asScala.toMap)
 
   /** (path, length) of each input file: the non-empty files directly
-    * under the `path` option whose names [[accept]] allows, sorted by
-    * path; `path` itself when it is a file. A directory with no such
-    * file fails here, naming the source and the path, rather than as
-    * an empty scan or a bare `head`. */
+    * under the `path` option that Spark's own listing keeps (no `_`/`.`
+    * prefix, so no `_SUCCESS` or `.crc`; no `._COPYING_` suffix) and
+    * whose names [[accept]] allows, sorted by path; `path` itself when
+    * it is a file. A directory with no such file fails here, naming the
+    * source and the path, rather than as an empty scan or a bare
+    * `head`. */
   protected final def files(options: CaseInsensitiveStringMap,
       conf: Configuration): Seq[(String, Long)] = {
     val path = options.get("path")
@@ -78,7 +82,10 @@ abstract class FileSource extends TableProvider with DataSourceRegister {
     if (!st.isDirectory) Seq((path, st.getLen))
     else {
       val found = fs.listStatus(p)
-        .filter(s => s.isFile && s.getLen > 0 && accept(s.getPath.getName))
+        .filter { s =>
+          val name = s.getPath.getName
+          s.isFile && s.getLen > 0 && !ExprShim.isHiddenFile(name) && accept(name)
+        }
         .map(s => (s.getPath.toString, s.getLen)).sortBy(_._1).toSeq
       if (found.isEmpty)
         throw new IllegalArgumentException(s"${shortName()}: no input file under $path")
@@ -131,15 +138,18 @@ private class FileTable(source: FileSource, tableSchema: StructType,
 
 object FileSource {
 
-  /** The whole of `file`: a [[StringFormat]] cannot be split, so its
-    * partition reads the file in one go. */
-  def readBytes(file: String, conf: Configuration): Array[Byte] = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
+  /** Bytes [start, start + length) of `file`, which is `fileSize`
+    * long: the unit a scan's partitions are made of. */
+  def range(file: String, fileSize: Long, start: Long, length: Long): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(file), start, length,
+      fileSize = fileSize)
+
+  /** The whole of `file`, `len` bytes as listed: a [[StringFormat]]
+    * cannot be split, so its partition reads the file in one go. */
+  def readBytes(file: Path, len: Long, conf: Configuration): Array[Byte] = {
     require(len <= Int.MaxValue, s"$file: $len bytes is too big to read whole")
     val out = new Array[Byte](len.toInt)
-    val in = fs.open(p)
+    val in = file.getFileSystem(conf).open(file)
     try in.readFully(0L, out) finally in.close()
     out
   }
@@ -193,28 +203,29 @@ abstract class StringFileSource extends FileSource {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val conf = hadoopConf(options)
-    format(options).schema(FileSource.readBytes(files(options, conf).head._1, conf))
+    val (file, len) = files(options, conf).head
+    format(options).schema(FileSource.readBytes(new Path(file), len, conf))
   }
 
   override protected def scan(options: CaseInsensitiveStringMap, pushed: Pushed): Scan =
     new FileScan(options, pushed) {
       override def planInputPartitions(): Array[InputPartition] =
-        inputFiles.map(f => FilePartition(f._1): InputPartition).toArray
+        inputFiles.zipWithIndex.map { case ((f, len), i) =>
+          FilePartition(i, Array(FileSource.range(f, len, 0, len))): InputPartition
+        }.toArray
       override def createReaderFactory(): PartitionReaderFactory =
         new StringReaderFactory(format(options), pushed, broadcastConf())
     }
 }
 
-private case class FilePartition(file: String) extends InputPartition
-
 private class StringReaderFactory(format: StringFormat, pushed: Pushed,
     conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val file = p.asInstanceOf[FilePartition].file
+    val file = p.asInstanceOf[FilePartition].files.head
     val cols = pushed.required.fieldNames
     new PartitionReader[InternalRow] {
       private lazy val it: Iterator[String => String] = {
-        val rows = format.rows(FileSource.readBytes(file, conf.value.value),
+        val rows = format.rows(FileSource.readBytes(file.toPath, file.length, conf.value.value),
           cols.toSet ++ pushed.filters.flatMap(_.references))
         val kept =
           if (pushed.filters.isEmpty) rows

@@ -3,6 +3,8 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge to the `private[sql]` Column ⇄ Expression converters in Spark
   * 4.x's classic API. Lives inside the `org.apache.spark.sql` package
@@ -32,4 +34,22 @@ object ExprShim {
   def hadoopConf(spark: org.apache.spark.sql.SparkSession,
       options: Map[String, String]): org.apache.hadoop.conf.Configuration =
     spark.sessionState.newHadoopConfWithOptions(options)
+
+  /** Does Spark's file listing skip a file of this name (`_`/`.`
+    * prefixes such as `_SUCCESS` and checksum `.crc` files, and
+    * `._COPYING_` uploads)? (`HadoopFSUtils` is `private[spark]`.) */
+  def isHiddenFile(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** `files`, in the given order, packed into partitions by Spark's
+    * file-source rule: a partition closes when adding the next file
+    * would pass `min(spark.sql.files.maxPartitionBytes, max(openCost,
+    * Σ(length + openCost) / leaf parallelism))`, each file counting its
+    * length plus `spark.sql.files.openCostInBytes`. Unlike Spark's scans,
+    * no sort by size comes first, so the files keep their order. */
+  def filePartitions(spark: org.apache.spark.sql.SparkSession,
+      files: Seq[PartitionedFile]): Seq[FilePartition] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    FilePartition.getFilePartitions(spark, files,
+      FilePartition.maxSplitBytes(spark, files.map(_.length + openCost).sum))
+  }
 }

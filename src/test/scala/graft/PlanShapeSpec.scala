@@ -285,8 +285,12 @@ class PlanShapeSpec extends SparkSpec {
     // them — pruning must reach the graft-avro scan's ReadSchema
     assert(p.contains("graft-avro"), p)
     assert(p.contains("ReadSchema: struct<l_quantity:double,l_returnflag:string>"), p)
-    // 64k maxSplitBytes at sf0.001 still yields multi-split parallelism
-    assert(df.rdd.getNumPartitions >= 1, p)
+    // 64k maxSplitBytes at sf0.001 still plans several sync ranges,
+    // packed into partitions by Spark's file-source rule
+    val parts = graft.avro.AvroPackingSpec.partitions(df)
+    val ranges = parts.flatMap(_.files)
+    assert(ranges.length >= 2, ranges)
+    assert(parts.length == graft.avro.AvroPackingSpec.packedCount(spark, ranges.map(_.length)), parts)
   }
 
   test("limit pushdown reaches all three DSv2 scans (PushedLimit in the scan node)") {

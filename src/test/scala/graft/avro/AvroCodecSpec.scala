@@ -219,7 +219,9 @@ class AvroCodecSpec extends SparkSpec {
     // and through the split DSv2 scan, with the table schema given
     val read = spark.read.format("graft-avro").schema(required)
       .option("maxSplitBytes", 4096L).load(dir.toString)
-    assert(read.rdd.getNumPartitions > 4)
+    val parts = AvroPackingSpec.partitions(read)
+    assert(parts.flatMap(_.files).length > 4)
+    assert(parts.length == AvroPackingSpec.packedCount(spark, parts.flatMap(_.files).map(_.length)))
     val viaScan = read.collect().map(_.toSeq).sortBy(_(3).asInstanceOf[Long]).toSeq
     assert(norm(viaScan) == expected)
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
-import graft.avro.Avro
+import graft.avro.{Avro, AvroPackingSpec}
 
 class AvroSpec extends SparkSpec {
   import spark.implicits._
@@ -68,13 +68,18 @@ class AvroSpec extends SparkSpec {
     for (split <- Seq(1L << 10, 4L << 10, 16L << 10, 64L << 10, len)) {
       val read = spark.read.format("graft-avro").option("path", out)
         .option("maxSplitBytes", split).load()
-      // the split plan really is multi-partition over the single file
-      assert(read.rdd.getNumPartitions == (len + split - 1) / split)
+      // the scan really plans ceil(len / split) ranges over the single
+      // file, packed into partitions by Spark's file-source rule
+      val parts = AvroPackingSpec.partitions(read)
+      val ranges = parts.flatMap(_.files)
+      assert(ranges.length == (len + split - 1) / split)
+      assert(parts.length == AvroPackingSpec.packedCount(spark, ranges.map(_.length)))
+      assert(read.rdd.getNumPartitions == parts.length)
       // exactly-once block ownership: no row lost, none duplicated
       val all = read.collect()
       assert(all.length == n && all.map(_.getLong(0)).toSet == (0L until n).toSet, s"split $split")
       assert(all.forall(r => r.getString(1) == "v" + r.getLong(0)))
-      // a pushed limit caps each split; the rows it lets through are still distinct
+      // a pushed limit caps each partition; the rows it lets through are still distinct
       for (limit <- Seq(777, n + 3)) {
         val q = read.limit(limit)
         val plan = q.queryExecution.executedPlan.toString
