@@ -83,7 +83,7 @@ object FormatsPack extends QueryPack {
         .filter(col("c_custkey") <= 60000)
         .select(col("c_custkey").cast("string"), col("c_name"), col("c_mktsegment"))
       graft.xlsx.Biff.writeWorkbook(Seq("customer" -> slice), file)
-      graft.xlsx.Xlsx.readAnyWorkbook(s, file).toMap.apply("customer").orderBy("c_name")
+      graft.xlsx.Xlsx.readWorkbook(s, file).toMap.apply("customer").orderBy("c_name")
     }),
     // F4+F5 writer branch: a column whose name fails the XML name rule
     // serializes as <col name="..."> with & < > escaped in BOTH the
@@ -102,7 +102,7 @@ object FormatsPack extends QueryPack {
     "xlsb_roundtrip" -> ((s, dir) => {
       val file = scratchFile("workbook.xlsb")
       graft.xlsx.Xlsb.writeWorkbook(Seq("customer" -> custSlice(s, dir)), file)
-      Xlsx.readAnyWorkbook(s, file).toMap.apply("customer").orderBy("c_name")
+      Xlsx.readWorkbook(s, file).toMap.apply("customer").orderBy("c_name")
     }),
     // S9: auto-detected multi-table document through readAutoDetected —
     // both discovered tables (path_tag names) feed the output.

@@ -49,14 +49,10 @@ object Csv {
     * streams through the driver via toLocalIterator (O(row) memory,
     * same boundary as the XML/XLSX export writers). */
   def writeFile(df: DataFrame, file: String, naive: Boolean = false): Unit = {
-    val lines = toCsvLines(df, naive)
     val p = java.nio.file.Paths.get(file)
     Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    val w = java.nio.file.Files.newBufferedWriter(p)
-    try {
-      w.write(headerLine(df, naive)); w.newLine()
-      lines.toLocalIterator().forEachRemaining { r => w.write(r.getString(0)); w.newLine() }
-    } finally w.close()
+    val out = java.nio.file.Files.newOutputStream(p)
+    try writeTo(df, out, naive) finally out.close()
   }
 
   /** Stream CSV (header + rows) into an already-open byte stream

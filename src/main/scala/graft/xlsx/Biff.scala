@@ -1,7 +1,7 @@
 package graft.xlsx
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Minimal legacy `.xls` (BIFF8 inside a CFB compound file) reader and
   * writer — no external library (SURVEY §2.3 P4: the Compare tool's
@@ -21,10 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * records); only the run formatting itself is dropped, matching the
   * reference's plain-value reads.
   * Writer emits inline LABEL cells only (no SST), one sheet per
-  * DataFrame, row records ENCODED on executors (see encodedRows).
+  * DataFrame, rows streamed from the driver ([[Xlsx.rowStrings]]).
   *
   * Like the OOXML module, `.xls` is a workbook-export format: the
-  * container parses on the driver; bulk data paths stay parquet/CSV.
+  * container parses on the driver (read through [[Xlsx.readWorkbook]]);
+  * bulk data paths stay parquet/CSV.
   */
 object Biff {
 
@@ -318,18 +319,10 @@ object Biff {
     }
   }
 
-  /** Read every sheet of a legacy `.xls` workbook: sheetName →
-    * all-string DataFrame, row 1 = header, missing cells '' — the same
-    * contract as Xlsx.readWorkbook. */
-  def readWorkbook(spark: SparkSession, file: String): Seq[(String, DataFrame)] = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
-    val wb = new Cfb(bytes).stream(Set("Workbook", "Book"))
-    parseWorkbook(wb).map { case (name, cells) =>
-      // BIFF rows/cols are 0-based; the shared grid builder expects the
-      // 1-based convention the OOXML parser produces.
-      name -> Xlsx.cellsToDf(spark, cells.map(c => (c._1 + 1, c._2, c._3)))
-    }
-  }
+  /** Every sheet of a legacy `.xls` byte image, (name, 0-based cells),
+    * in tab order. */
+  private[xlsx] def sheets(bytes: Array[Byte]): Seq[(String, Seq[(Int, Int, String)])] =
+    parseWorkbook(new Cfb(bytes).stream(Set("Workbook", "Book")))
 
   // -------------------------------------------------------------------
   // Write (fixtures + legacy export): CFB with one Workbook stream,
@@ -357,14 +350,7 @@ object Biff {
       Array((if (ascii) 0 else 1).toByte) ++ chars)
   }
 
-  /** Stream one worksheet substream record-by-record into `out` —
-    * memory stays O(row), never O(sheet) (pre-encoded row bytes arrive via
-    * toLocalIterator, one partition at a time). */
-  /** One row's BIFF8 bytes: a LABEL record per non-empty cell. The
-    * 16-bit row index is the only global state — what lets encoding
-    * distribute (the executor-side require is the safety net; the
-    * caller pre-checks the count so the cap error surfaces as a plain
-    * IllegalArgumentException on the driver). */
+  /** One row's BIFF8 bytes: a LABEL record per non-empty cell. */
   private[xlsx] def encodeRowXls(r: Int, vs: Seq[String]): Array[Byte] = {
     // BIFF8 row index is 16-bit: the format's own 65536-row ceiling.
     // Silently wrapping would corrupt the grid — fail loud instead
@@ -376,25 +362,15 @@ object Biff {
     out.toByteArray
   }
 
-  /** Distributed sheet encoding, the BIFF8 twin of Xlsb.encodedRows:
-    * one zipWithIndex pass assigns absolute row indexes, each
-    * partition encodes its rows to LABEL-record bytes in the executor,
-    * and the driver spools the ordered byte stream. */
-  private def encodedRows(df: DataFrame): Iterator[Array[Byte]] = {
-    val n = df.columns.length
-    df.rdd.zipWithIndex().mapPartitions { it =>
-      it.map { case (row, idx) =>
-        encodeRowXls((idx + 1).toInt,
-          (0 until n).map(j => Option(row.get(j)).map(_.toString).getOrElse("")))
-      }
-    }.toLocalIterator
-  }
-
+  /** Stream one worksheet substream record-by-record into `out` —
+    * memory stays O(row), never O(sheet): the header is row 0, data
+    * rows follow from 1. */
   private def writeSheet(out: java.io.OutputStream, header: Seq[String],
-      rows: Iterator[Array[Byte]]): Unit = {
+      rows: Iterator[Seq[String]]): Unit = {
     out.write(bof(0x0010))
     header.zipWithIndex.foreach { case (h, c) => out.write(labelCell(0, c, h)) }
-    rows.foreach(out.write)
+    var r = 1
+    rows.foreach { vs => out.write(encodeRowXls(r, vs)); r += 1 }
     out.write(rec(0x000A, Array.empty))
   }
 
@@ -405,20 +381,25 @@ object Biff {
     rec(0x0085, w32(pos) ++ w16(0) ++ Array(s.length.toByte, (if (ascii) 0 else 1).toByte) ++ chars)
   }
 
-  /** Assemble the Workbook stream: globals (BOF + BOUNDSHEETs + EOF)
-    * then one worksheet substream per sheet, lbPlyPos patched in. */
-  private[xlsx] def workbookStream(sheets: Seq[(String, Array[Byte])]): Array[Byte] = {
-    val globalsSize = bof(0x0005).length +
-      sheets.map { case (n, _) => boundsheet(0, n).length }.sum +
+  /** The globals substream (BOF, a BOUNDSHEET per sheet, EOF) for
+    * sheets of these names and substream lengths, in order: each
+    * BOUNDSHEET's lbPlyPos is the absolute offset of its substream,
+    * the substreams following the globals back to back. */
+  private def globals(sheets: Seq[(String, Long)]): Array[Byte] = {
+    val size = bof(0x0005).length + sheets.map(s => boundsheet(0, s._1).length).sum +
       rec(0x000A, Array.empty).length
-    val offsets = sheets.scanLeft(globalsSize) { case (acc, (_, b)) => acc + b.length }
+    val offsets = sheets.scanLeft(size.toLong)(_ + _._2)
     val out = new java.io.ByteArrayOutputStream()
     out.write(bof(0x0005))
-    sheets.zip(offsets).foreach { case ((n, _), pos) => out.write(boundsheet(pos, n)) }
+    sheets.zip(offsets).foreach { case ((n, _), pos) => out.write(boundsheet(pos.toInt, n)) }
     out.write(rec(0x000A, Array.empty))
-    sheets.foreach { case (_, b) => out.write(b) }
     out.toByteArray
   }
+
+  /** Assemble the Workbook stream: globals then one worksheet
+    * substream per sheet. */
+  private[xlsx] def workbookStream(sheets: Seq[(String, Array[Byte])]): Array[Byte] =
+    globals(sheets.map { case (n, b) => n -> b.length.toLong }) ++ sheets.flatMap(_._2)
 
   /** Wrap a stream in a minimal CFB: header, n FAT sectors, chained
     * DIFAT sectors when the FAT outgrows the header's 109 slots
@@ -527,57 +508,35 @@ object Biff {
 
   /** Write a multi-sheet `.xls` workbook (same naming rules as the
     * OOXML writer). O(row) driver memory like Xlsx.writeWorkbook: each
-    * sheet substream (rows encoded DISTRIBUTED, see encodedRows) pours into a spooled temp
-    * file (CFB needs every stream length BEFORE the first container
-    * byte — the FAT, the directory entry, and each BOUNDSHEET's
-    * lbPlyPos all encode absolute offsets), then the container
-    * assembles by streaming the spool files through [[cfbWrite]].
-    * Driver DISK carries one workbook copy transiently; memory never
-    * holds more than a row and the FAT. */
+    * sheet substream pours into a spooled temp file (CFB needs every
+    * stream length BEFORE the first container byte — the FAT, the
+    * directory entry, and each BOUNDSHEET's lbPlyPos all encode
+    * absolute offsets), then the container assembles by streaming the
+    * spool files through [[cfbWrite]]. So every sheet has encoded —
+    * and a sheet past the 65536-row cap has failed — before `file` is
+    * opened. Driver DISK carries one workbook copy transiently; memory
+    * never holds more than a row and the FAT. */
   def writeWorkbook(sheets: Seq[(String, DataFrame)], file: String): Unit = {
     import java.nio.file.Files
-    val used = mutable.LinkedHashSet.empty[String]
     val spools = mutable.ArrayBuffer.empty[(String, java.nio.file.Path)]
     try {
-      sheets.foreach { case (n, df) =>
-        val name = Xlsx.sanitizeSheetName(n, used)
-        // driver-side pre-check keeps the cap error a plain
-        // IllegalArgumentException (not a wrapped task failure); the
-        // count is cheap relative to a legacy-format export
-        require(df.count() <= 0xFFFF,
-          ".xls sheets cap at 65536 rows (BIFF8 16-bit row index); use the .xlsx writer for larger sheets")
+      Xlsx.named(sheets).foreach { case (name, df) =>
         val p = Files.createTempFile("graft_xls_sheet", ".bin")
-        val os = new java.io.BufferedOutputStream(Files.newOutputStream(p), 1 << 16)
-        try writeSheet(os, df.columns.toSeq, encodedRows(df))
-        finally os.close()
         spools += name -> p
+        val os = new java.io.BufferedOutputStream(Files.newOutputStream(p), 1 << 16)
+        try { val (header, rows) = Xlsx.rowStrings(df); writeSheet(os, header, rows) }
+        finally os.close()
       }
-      val sizes = spools.map(s => Files.size(s._2))
-      val globalsSize = bof(0x0005).length +
-        spools.map { case (n, _) => boundsheet(0, n).length }.sum +
-        rec(0x000A, Array.empty).length
-      val offsets = sizes.scanLeft(globalsSize.toLong)(_ + _)
-      val streamLen = globalsSize + sizes.sum
+      val sized = spools.toSeq.map { case (n, p) => n -> Files.size(p) }
+      val head = globals(sized)
+      val streamLen = head.length + sized.map(_._2).sum
       require(streamLen <= Int.MaxValue - 4096,
         s".xls workbook stream would be $streamLen bytes — beyond what one CFB stream holds")
-      val globals = new java.io.ByteArrayOutputStream()
-      globals.write(bof(0x0005))
-      spools.zip(offsets).foreach { case ((n, _), pos) =>
-        globals.write(boundsheet(pos.toInt, n))
-      }
-      globals.write(rec(0x000A, Array.empty))
       val fileOut = new java.io.BufferedOutputStream(
         new java.io.FileOutputStream(file), 1 << 16)
       try cfbWrite(fileOut, streamLen.toInt, { os =>
-        os.write(globals.toByteArray)
-        val buf = new Array[Byte](1 << 16)
-        spools.foreach { case (_, p) =>
-          val in = Files.newInputStream(p)
-          try {
-            var n = in.read(buf)
-            while (n > 0) { os.write(buf, 0, n); n = in.read(buf) }
-          } finally in.close()
-        }
+        os.write(head)
+        spools.foreach { case (_, p) => Files.copy(p, os) }
       }) finally fileOut.close()
     } finally spools.foreach(s => Files.deleteIfExists(s._2))
   }

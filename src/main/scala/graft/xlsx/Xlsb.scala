@@ -1,8 +1,7 @@
 package graft.xlsx
 
-import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Minimal `.xlsb` (BIFF12 binary parts inside an OOXML zip) reader and
   * writer — no external library (SURVEY §2.3 P4: the Compare tool's
@@ -15,13 +14,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (RK, real, bool, inline string, shared string, and the cached
   * results of the four formula-cell records) plus the SST and the
   * workbook sheet directory; writer emits inline-string cells only,
-  * one sheet per DataFrame, row records ENCODED on executors, byte stream spooled through the driver.
+  * one sheet per DataFrame, rows streamed from the driver into the
+  * OOXML package that `.xlsx` uses ([[Xlsx.writePackage]]).
   *
   * BIFF12 framing ([MS-XLSB] 2.1.4): record id is 1-2 bytes (7 bits
   * per byte, high bit = continuation), record length is 1-4 bytes of
   * 7-bit chunks, then the payload. Like `.xls`/`.xlsx`, this is a
-  * workbook-export container parsed on the driver; bulk data paths
-  * stay parquet/CSV.
+  * workbook-export container parsed on the driver (read through
+  * [[Xlsx.readWorkbook]]); bulk data paths stay parquet/CSV.
   */
 object Xlsb {
 
@@ -147,22 +147,18 @@ object Xlsb {
     cells.toSeq
   }
 
-  /** Read every sheet of a `.xlsb` workbook: sheetName → all-string
-    * DataFrame, row 1 = header, missing cells '' — the same contract as
-    * Xlsx.readWorkbook / Biff.readWorkbook. */
-  def readWorkbook(spark: SparkSession, file: String): Seq[(String, DataFrame)] = {
-    val entries = Xlsx.readZipBytes(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
+  /** Every sheet of a `.xlsb` byte image, (name, 0-based cells), in
+    * tab order. */
+  private[xlsx] def sheets(bytes: Array[Byte]): Seq[(String, Seq[(Int, Int, String)])] = {
+    val entries = Xlsx.readZipBytes(bytes)
     val sst = entries.get("xl/sharedStrings.bin").map(parseSst).getOrElse(Vector.empty)
     // the rels part is plain OOXML relationship XML even in .xlsb
     val rels = entries.get("xl/_rels/workbook.bin.rels")
       .map(b => Xlsx.parseRels(new String(b, "UTF-8"))).getOrElse(Map.empty)
     val bundle = parseBundle(entries.getOrElse("xl/workbook.bin",
-      throw new IllegalArgumentException(s"no xl/workbook.bin in $file — not a .xlsb workbook")))
+      throw new IllegalArgumentException("no xl/workbook.bin — not a .xlsb workbook")))
     Xlsx.sheetParts(bundle, rels, "bin").map { case (name, part) =>
-      val cells = entries.get(part).map(parseSheet(_, sst)).getOrElse(Nil)
-      // 0-based rows → the 1-based convention cellsToDf expects
-      name -> Xlsx.cellsToDf(spark, cells.map(c => (c._1 + 1, c._2, c._3)))
+      name -> entries.get(part).map(parseSheet(_, sst)).getOrElse(Nil)
     }
   }
 
@@ -195,9 +191,7 @@ object Xlsb {
     rec(CellSt, w32(col) ++ w32(0) ++ wide(v))
 
   /** One row's BIFF12 bytes: the row header record plus a string cell
-    * per non-empty value. The row index is the record's ONLY global
-    * state, which is what lets encoding distribute (each executor
-    * task encodes its rows against pre-assigned absolute indexes). */
+    * per non-empty value. */
   private[xlsx] def encodeRow(r: Int, vs: Seq[String]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write(rec(RowHdr, w32(r)))
@@ -206,36 +200,19 @@ object Xlsb {
   }
 
   /** Stream one worksheet part record-by-record into `out` — memory
-    * stays O(row), never O(sheet), mirroring Xlsx.writeSheetXml.
-    * `rows` yields PRE-ENCODED per-row byte records (computed on the
-    * executors); the driver's remaining work is framing + byte copy. */
-  private def writeSheet(out: java.io.OutputStream, header: Seq[String],
-      rows: Iterator[Array[Byte]]): Unit = {
+    * stays O(row), never O(sheet): the header is row 0, data rows
+    * follow from 1. */
+  private def writeSheet(out0: java.io.OutputStream, header: Seq[String],
+      rows: Iterator[Seq[String]]): Unit = {
+    val out = new java.io.BufferedOutputStream(out0, 1 << 16)
     out.write(rec(BeginSheet, Array.empty))
     out.write(rec(BeginSheetData, Array.empty))
     out.write(encodeRow(0, header))
-    rows.foreach(out.write)
+    var r = 1
+    rows.foreach { vs => out.write(encodeRow(r, vs)); r += 1 }
     out.write(rec(EndSheetData, Array.empty))
     out.write(rec(EndSheet, Array.empty))
-  }
-
-  /** Distributed sheet encoding: absolute row indexes come from ONE
-    * zipWithIndex pass (a count job per partition boundary — the price
-    * of a single-file format with global row numbers), then each
-    * partition encodes its own rows to BIFF12 bytes in the executor.
-    * What crosses to the driver is the encoded byte stream in order,
-    * not cells — the toLocalIterator spool that remains is IO-bound
-    * concatenation, the irreducible driver share of a one-file export.
-    * Byte-identical to the previous driver-side encoder by
-    * construction (same records, same order). */
-  private def encodedRows(df: DataFrame): Iterator[Array[Byte]] = {
-    val n = df.columns.length
-    df.rdd.zipWithIndex().mapPartitions { it =>
-      it.map { case (row, idx) =>
-        encodeRow((idx + 1).toInt,
-          (0 until n).map(j => Option(row.get(j)).map(_.toString).getOrElse("")))
-      }
-    }.toLocalIterator
+    out.flush() // through to `out0`, which the package owns
   }
 
   private[xlsx] def workbookBin(names: Seq[String]): Array[Byte] = {
@@ -250,49 +227,18 @@ object Xlsb {
     out.toByteArray
   }
 
-  /** Write a multi-sheet `.xlsb` workbook (same naming rules as the
-    * OOXML writer; row encoding distributed, see encodedRows). */
-  def writeWorkbook(sheets: Seq[(String, DataFrame)], file: String): Unit = {
-    val used = mutable.LinkedHashSet.empty[String]
-    val named = sheets.map { case (n, df) => (Xlsx.sanitizeSheetName(n, used), df) }
-    val zos = new ZipOutputStream(new java.io.FileOutputStream(file))
-    def put(name: String, content: Array[Byte]): Unit = {
-      zos.putNextEntry(new ZipEntry(name)); zos.write(content); zos.closeEntry()
-    }
-    try {
-      // Per-part Override content types (what Excel itself writes): the
-      // workbook part carries the binary-workbook main type and each
-      // worksheet part the binary-worksheet type — one Default mapping
-      // every .bin to the workbook type misidentifies the sheets to
-      // content-type-aware consumers.
-      put("[Content_Types].xml",
-        ("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-          """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
-          """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
-          """<Default Extension="bin" ContentType="application/vnd.ms-excel.sheet.binary.macroEnabled.main"/>""" +
-          """<Override PartName="/xl/workbook.bin" ContentType="application/vnd.ms-excel.sheet.binary.macroEnabled.main"/>""" +
-          named.indices.map(i =>
-            s"""<Override PartName="/xl/worksheets/sheet${i + 1}.bin" ContentType="application/vnd.ms-excel.worksheet"/>""").mkString +
-          "</Types>").getBytes("UTF-8"))
-      put("_rels/.rels",
-        ("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-          """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-          """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.bin"/>""" +
-          "</Relationships>").getBytes("UTF-8"))
-      put("xl/workbook.bin", workbookBin(named.map(_._1)))
-      put("xl/_rels/workbook.bin.rels",
-        ("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-          """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-          named.indices.map(i =>
-            s"""<Relationship Id="rId${i + 1}" Type="http://schemas.microsoft.com/office/2006/relationships/xlBinaryWorksheet" Target="worksheets/sheet${i + 1}.bin"/>""").mkString +
-          "</Relationships>").getBytes("UTF-8"))
-      named.zipWithIndex.foreach { case ((_, df), i) =>
-        zos.putNextEntry(new ZipEntry(s"xl/worksheets/sheet${i + 1}.bin"))
-        val buf = new java.io.BufferedOutputStream(zos, 1 << 16)
-        writeSheet(buf, df.columns.toSeq, encodedRows(df))
-        buf.flush() // flush through to the zip stream, but do NOT close it
-        zos.closeEntry()
-      }
-    } finally zos.close()
-  }
+  /** Write a multi-sheet `.xlsb` workbook (same naming rules and
+    * package as the OOXML writer). Each part carries its own Override
+    * content type (what Excel itself writes): the workbook part the
+    * binary-workbook main type and each worksheet part the
+    * binary-worksheet type — one Default mapping every .bin to the
+    * workbook type misidentifies the sheets to content-type-aware
+    * consumers. */
+  def writeWorkbook(sheets: Seq[(String, DataFrame)], file: String): Unit =
+    Xlsx.writePackage(file, sheets, "bin",
+      "application/vnd.ms-excel.sheet.binary.macroEnabled.main",
+      "application/vnd.ms-excel.sheet.binary.macroEnabled.main",
+      "application/vnd.ms-excel.worksheet",
+      "http://schemas.microsoft.com/office/2006/relationships/xlBinaryWorksheet",
+      workbookBin)(writeSheet)
 }

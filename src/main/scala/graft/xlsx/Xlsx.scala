@@ -1,11 +1,14 @@
 package graft.xlsx
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, StringReader}
+import java.io.{ByteArrayInputStream, StringReader}
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import scala.collection.mutable
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftshim.ExprShim
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.sources.FileSource
 
 /** Minimal OOXML (.xlsx) reader/writer — no external library, just
   * java.util.zip + StAX (SURVEY §2.1 S7, §2.2 K5; reference
@@ -20,6 +23,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * not formatted dates. XLSX is a workbook-export format — the writer
   * assembles on the driver via toLocalIterator (bounded memory); bulk
   * data paths stay parquet/CSV.
+  *
+  * Also the parts the `.xlsb` ([[Xlsb]]) and `.xls` ([[Biff]]) modules
+  * share: the sheet-naming pass, the row source ([[rowStrings]]), the
+  * OOXML package writer and the one workbook reader, which dispatches
+  * on the file extension.
   */
 object Xlsx {
 
@@ -39,9 +47,18 @@ object Xlsx {
     s
   }
 
+  /** The sheets with their names sanitized and de-duplicated in one
+    * pass, in order — the naming rule of all three workbook writers. */
+  private[xlsx] def named(sheets: Seq[(String, DataFrame)]): Seq[(String, DataFrame)] = {
+    val used = mutable.Set.empty[String]
+    sheets.map { case (n, df) => (sanitizeSheetName(n, used), df) }
+  }
+
   // -------------------------------------------------------------------
   // Writer
   // -------------------------------------------------------------------
+
+  private val XmlDecl = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
 
   private def colRef(c: Int): String = { // 0-based → A, B, ..., AA
     var n = c + 1; val sb = new StringBuilder
@@ -49,19 +66,18 @@ object Xlsx {
     sb.result()
   }
 
-  /** Stream one worksheet part row-by-row into `w` — memory stays
+  /** Stream one worksheet part row-by-row into `out` — memory stays
     * O(row), never O(sheet), so a sheet bigger than the heap still
-    * writes (rows arrive via toLocalIterator, one partition at a
-    * time). */
-  private def writeSheetXml(w: java.io.Writer, header: Seq[String],
+    * writes. */
+  private def writeSheetXml(out: java.io.OutputStream, header: Seq[String],
       rows: Iterator[Seq[String]]): Unit = {
-    w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(out, "UTF-8"), 1 << 16)
+    w.write(XmlDecl)
     w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
     def row(r: Int, vs: Seq[String]): Unit = {
       w.write(s"""<row r="$r">""")
       vs.zipWithIndex.foreach { case (v, c) =>
-        val t = graft.xml.Xml.esc(Option(v).getOrElse(""))
-        w.write(s"""<c r="${colRef(c)}$r" t="inlineStr"><is><t xml:space="preserve">$t</t></is></c>""")
+        w.write(s"""<c r="${colRef(c)}$r" t="inlineStr"><is><t xml:space="preserve">${graft.xml.Xml.esc(v)}</t></is></c>""")
       }
       w.write("</row>")
     }
@@ -69,82 +85,118 @@ object Xlsx {
     var r = 2
     rows.foreach { vs => row(r, vs); r += 1 }
     w.write("</sheetData></worksheet>")
+    w.flush() // through to `out`, which the package owns
   }
 
   /** Write a multi-sheet workbook. Sheet order preserved; names
     * sanitized + deduped. */
-  def writeWorkbook(sheets: Seq[(String, DataFrame)], file: String): Unit = {
-    val used = mutable.LinkedHashSet.empty[String]
-    val named = sheets.map { case (n, df) => (sanitizeSheetName(n, used), df) }
+  def writeWorkbook(sheets: Seq[(String, DataFrame)], file: String): Unit =
+    writePackage(file, sheets, "xml", "application/xml",
+      "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml",
+      "application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml",
+      "http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet",
+      names => (XmlDecl +
+        """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>""" +
+        names.zipWithIndex.map { case (name, i) =>
+          s"""<sheet name="${graft.xml.Xml.esc(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
+        }.mkString + "</sheets></workbook>").getBytes("UTF-8"))(writeSheetXml)
+
+  /** The OOXML package under `.xlsx` and `.xlsb`: `[Content_Types].xml`
+    * (a Default for `.rels` and one for the part extension `ext`, an
+    * Override for the workbook part and one per worksheet), the package
+    * rels, `xl/workbook.{ext}` from `workbook` of the [[named]] sheets,
+    * its rels (one `sheetRel` relationship per sheet) and
+    * `xl/worksheets/sheet{i}.{ext}`, each written by `sheet` from
+    * [[rowStrings]]. Sheets stream straight into the zip, one at a time. */
+  private[xlsx] def writePackage(file: String, sheets: Seq[(String, DataFrame)], ext: String,
+      extType: String, bookType: String, sheetType: String, sheetRel: String,
+      workbook: Seq[String] => Array[Byte])(
+      sheet: (java.io.OutputStream, Seq[String], Iterator[Seq[String]]) => Unit): Unit = {
     val zos = new ZipOutputStream(new java.io.FileOutputStream(file))
-    def put(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8")); zos.closeEntry()
+    def put(name: String, content: Array[Byte]): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(content); zos.closeEntry()
     }
+    def rels(targets: Seq[String]): Array[Byte] = (XmlDecl +
+      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+      targets.mkString + "</Relationships>").getBytes("UTF-8")
+    val renamed = named(sheets)
+    val parts = renamed.indices.map(i => s"sheet${i + 1}.$ext")
     try {
-      val n = named.size
-      put("[Content_Types].xml",
-        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-          """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
-          """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
-          """<Default Extension="xml" ContentType="application/xml"/>""" +
-          """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""" +
-          (1 to n).map(i =>
-            s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""").mkString +
-          "</Types>")
-      put("_rels/.rels",
-        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-          """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-          """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>""" +
-          "</Relationships>")
-      put("xl/workbook.xml",
-        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-          """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>""" +
-          named.zipWithIndex.map { case ((name, _), i) =>
-            s"""<sheet name="${graft.xml.Xml.esc(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
-          }.mkString + "</sheets></workbook>")
-      put("xl/_rels/workbook.xml.rels",
-        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-          """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-          named.indices.map(i =>
-            s"""<Relationship Id="rId${i + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet${i + 1}.xml"/>""").mkString +
-          "</Relationships>")
-      named.zipWithIndex.foreach { case ((_, df), i) =>
-        val (header, it) = rowStrings(df)
-        zos.putNextEntry(new ZipEntry(s"xl/worksheets/sheet${i + 1}.xml"))
-        val w = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(zos, "UTF-8"), 1 << 16)
-        writeSheetXml(w, header, it)
-        w.flush() // flush through to the zip stream, but do NOT close it
+      put("[Content_Types].xml", (XmlDecl +
+        """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
+        """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
+        s"""<Default Extension="$ext" ContentType="$extType"/>""" +
+        s"""<Override PartName="/xl/workbook.$ext" ContentType="$bookType"/>""" +
+        parts.map(p => s"""<Override PartName="/xl/worksheets/$p" ContentType="$sheetType"/>""").mkString +
+        "</Types>").getBytes("UTF-8"))
+      put("_rels/.rels", rels(Seq(
+        s"""<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.$ext"/>""")))
+      put(s"xl/workbook.$ext", workbook(renamed.map(_._1)))
+      put(s"xl/_rels/workbook.$ext.rels", rels(parts.zipWithIndex.map { case (p, i) =>
+        s"""<Relationship Id="rId${i + 1}" Type="$sheetRel" Target="worksheets/$p"/>"""
+      }))
+      renamed.zip(parts).foreach { case ((_, df), p) =>
+        val (header, rows) = rowStrings(df)
+        zos.putNextEntry(new ZipEntry(s"xl/worksheets/$p"))
+        sheet(zos, header, rows)
         zos.closeEntry()
       }
     } finally zos.close()
+  }
+
+  /** (header, rows-as-strings via toLocalIterator: null → "", anything
+    * else its `toString`) — the one row source of the three workbook
+    * writers. Rows arrive one partition at a time, in order, on the
+    * driver. */
+  private[xlsx] def rowStrings(df: DataFrame): (Seq[String], Iterator[Seq[String]]) = {
+    val header = df.columns.toSeq
+    val it = new Iterator[Seq[String]] {
+      private val rows = df.toLocalIterator()
+      def hasNext: Boolean = rows.hasNext
+      def next(): Seq[String] = {
+        val r = rows.next()
+        header.indices.map(j => Option(r.get(j)).map(_.toString).getOrElse(""))
+      }
+    }
+    (header, it)
   }
 
   // -------------------------------------------------------------------
   // Reader
   // -------------------------------------------------------------------
 
-  /** P4 dispatch for the Compare accept-list, which admits `.xlsx`,
-    * `.xls` AND `.xlsb` (reference compare/page.tsx:638,674): OOXML,
-    * BIFF8, and BIFF12 all read natively — every extension passing the
-    * filter yields data. */
-  def readAnyWorkbook(spark: SparkSession, file: String): Seq[(String, DataFrame)] = {
+  /** Read every sheet of a `.xlsx`, `.xlsb` (BIFF12) or `.xls` (BIFF8)
+    * workbook — the Compare accept-list admits all three (P4, reference
+    * compare/page.tsx:638,674) — as sheetName → all-string DataFrame
+    * with row 1 as header, missing cells '' (sheet_to_json with
+    * defval:'' — reference FileUploader.tsx:206-225). The file is read
+    * once, through the session's Hadoop conf; its parts are parsed on
+    * the driver (workbook-sized input by definition), and per-sheet row
+    * materialization is deferred to Spark. */
+  def readWorkbook(spark: SparkSession, file: String): Seq[(String, DataFrame)] = {
     val lower = file.toLowerCase
-    if (lower.endsWith(".xlsx")) readWorkbook(spark, file)
-    else if (lower.endsWith(".xls")) Biff.readWorkbook(spark, file)
-    else if (lower.endsWith(".xlsb")) Xlsb.readWorkbook(spark, file)
-    else throw new IllegalArgumentException(s"not a workbook extension: $file")
+    val parse: Array[Byte] => Seq[(String, Seq[(Int, Int, String)])] =
+      if (lower.endsWith(".xlsx")) sheets
+      else if (lower.endsWith(".xls")) Biff.sheets
+      else if (lower.endsWith(".xlsb")) Xlsb.sheets
+      else throw new IllegalArgumentException(s"not a workbook extension: $file")
+    val path = new Path(file)
+    val conf = ExprShim.hadoopConf(spark, Map.empty)
+    val bytes = FileSource.readBytes(path, path.getFileSystem(conf).getFileStatus(path).getLen, conf)
+    // a parser names what is wrong; this adds which file
+    val parsed =
+      try parse(bytes)
+      catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"$file: ${e.getMessage}", e)
+      }
+    parsed.map { case (name, cells) => name -> cellsToDf(spark, cells) }
   }
 
-  /** Read every sheet of a workbook: sheetName → all-string DataFrame
-    * with row 1 as header, missing cells '' (sheet_to_json with
-    * defval:'' — reference FileUploader.tsx:206-225). The zip central
-    * directory is parsed on the driver (workbook-sized input by
-    * definition); per-sheet row materialization is deferred to Spark. */
-  def readWorkbook(spark: SparkSession, file: String): Seq[(String, DataFrame)] = {
-    val book = new Book(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
-    book.sheets.map { case (name, part) => name -> cellsToDf(spark, book.cells(part)) }
+  /** Every sheet of a `.xlsx` byte image, (name, 0-based cells), in
+    * tab order. */
+  private def sheets(bytes: Array[Byte]): Seq[(String, Seq[(Int, Int, String)])] = {
+    val book = new Book(bytes)
+    book.sheets.map { case (name, part) => name -> book.cells(part) }
   }
 
   /** (sheet name, zip path of its part) in tab order, from a workbook's
@@ -161,7 +213,7 @@ object Xlsx {
 
   /** An `.xlsx` byte image: its parts, shared strings and sheets. */
   private final class Book(bytes: Array[Byte]) {
-    private val entries = readZip(bytes)
+    private val entries = readZipBytes(bytes).view.mapValues(new String(_, "UTF-8")).toMap
     private val shared =
       entries.get("xl/sharedStrings.xml").map(parseSharedStrings).getOrElse(Vector.empty)
     val sheets: Seq[(String, String)] = sheetParts(
@@ -180,36 +232,11 @@ object Xlsx {
     try {
       var e = zis.getNextEntry
       while (e != null) {
-        if (!e.isDirectory) {
-          val bos = new ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          var n = zis.read(buf)
-          while (n > 0) { bos.write(buf, 0, n); n = zis.read(buf) }
-          out(e.getName) = bos.toByteArray
-        }
+        if (!e.isDirectory) out(e.getName) = zis.readAllBytes()
         e = zis.getNextEntry
       }
     } finally zis.close()
     out.toMap
-  }
-
-  private[xlsx] def readZip(bytes: Array[Byte]): Map[String, String] =
-    readZipBytes(bytes).view.mapValues(new String(_, "UTF-8")).toMap
-
-  /** (header, rows-as-strings via toLocalIterator) — the one
-    * Row-stringify adapter shared by the three workbook writers, so
-    * their null/toString semantics stay provably identical. */
-  private[xlsx] def rowStrings(df: DataFrame): (Seq[String], Iterator[Seq[String]]) = {
-    val header = df.columns.toSeq
-    val it = new Iterator[Seq[String]] {
-      private val rows = df.toLocalIterator()
-      def hasNext: Boolean = rows.hasNext
-      def next(): Seq[String] = {
-        val r = rows.next()
-        header.indices.map(j => Option(r.get(j)).map(_.toString).getOrElse(""))
-      }
-    }
-    (header, it)
   }
 
   private def stax(xml: String) = {
@@ -258,11 +285,11 @@ object Xlsx {
     out.toMap
   }
 
-  /** (rowIndex, colIndex, value) triples of one worksheet. */
+  /** (row, col, value) triples of one worksheet, 0-based. */
   private[xlsx] def parseSheetCells(xml: String, shared: Vector[String]): Seq[(Int, Int, String)] = {
     val r = stax(xml)
     val out = Seq.newBuilder[(Int, Int, String)]
-    var row = 0; var colInRow = 0
+    var row = -1; var colInRow = 0
     var cellRef: Option[(Int, Int)] = None
     var cellType = ""
     var inV = false; var inIsT = false
@@ -272,7 +299,7 @@ object Xlsx {
       case XMLStreamConstants.START_ELEMENT => r.getLocalName match {
         case "row" =>
           row = (0 until r.getAttributeCount).find(i => r.getAttributeLocalName(i) == "r")
-            .map(i => r.getAttributeValue(i).toInt).getOrElse(row + 1)
+            .map(i => r.getAttributeValue(i).toInt - 1).getOrElse(row + 1)
           colInRow = 0
         case "c" =>
           cellType = (0 until r.getAttributeCount).find(i => r.getAttributeLocalName(i) == "t")
@@ -305,25 +332,26 @@ object Xlsx {
     out.result()
   }
 
-  /** "B3" → (3, 1). */
+  /** "B3" → (2, 1): OOXML's 1-based row numbers become the 0-based
+    * rows BIFF stores. */
   private def parseRef(ref: String): (Int, Int) = {
     val letters = ref.takeWhile(_.isLetter)
     val digits = ref.drop(letters.length)
     val c = letters.foldLeft(0)((acc, ch) => acc * 26 + (ch - 'A' + 1)) - 1
-    (digits.toInt, c)
+    (digits.toInt - 1, c)
   }
 
-  /** (header, data rows) from 1-based-row cell triples: row 1 = header
-    * (empty header cell c → `col{c+1}`), rows padded to grid width
-    * with ''. */
+  /** (header, data rows) from (row, col, value) cell triples, both
+    * 0-based as all three parsers yield them: row 0 = header (empty
+    * header cell c → `col{c+1}`), rows padded to grid width with ''. */
   private[xlsx] def cellGrid(cells: Seq[(Int, Int, String)]): (Seq[String], Seq[Seq[String]]) = {
     val byRow = cells.groupBy(_._1)
-    val headerCells = byRow.getOrElse(1, Nil).sortBy(_._2)
+    val headerCells = byRow.getOrElse(0, Nil).sortBy(_._2)
     val width = (cells.map(_._2).maxOption.getOrElse(-1)) + 1
     val header = (0 until width).map { c =>
       headerCells.find(_._2 == c).map(_._3).filter(_.nonEmpty).getOrElse(s"col${c + 1}")
     }
-    val dataRows = byRow.view.filterKeys(_ > 1).toSeq.sortBy(_._1).map { case (_, cs) =>
+    val dataRows = byRow.view.filterKeys(_ > 0).toSeq.sortBy(_._1).map { case (_, cs) =>
       val m = cs.map(t => t._2 -> t._3).toMap
       (0 until width).map(c => m.getOrElse(c, ""))
     }

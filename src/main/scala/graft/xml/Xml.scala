@@ -281,13 +281,14 @@ object Xml {
       xmlRowFragment(keys, keys.indices.map(i =>
         Option(r.get(i)).map(_.toString).getOrElse("")), rowTag)
     }
-    val w = new java.io.PrintWriter(new java.io.BufferedWriter(
-      new java.io.FileWriter(file)))
+    // UTF-8 as the declaration says, whatever the JVM's default
+    // charset; a failed write throws rather than truncating silently
+    val w = java.nio.file.Files.newBufferedWriter(java.nio.file.Paths.get(file))
     try {
-      w.println("""<?xml version="1.0" encoding="UTF-8"?>""")
-      w.println(s"<$rootTag>")
-      frags.toLocalIterator().forEachRemaining(f => w.println(f))
-      w.println(s"</$rootTag>")
+      w.write("""<?xml version="1.0" encoding="UTF-8"?>""" + "\n")
+      w.write(s"<$rootTag>\n")
+      frags.toLocalIterator().forEachRemaining { f => w.write(f); w.write("\n") }
+      w.write(s"</$rootTag>\n")
     } finally w.close()
   }
 }

@@ -64,7 +64,7 @@ class PropertiesSpec extends SparkSpec {
             case "xls" => graft.xlsx.Biff.writeWorkbook(Seq("s" -> df), f)
             case _ => graft.xlsx.Xlsb.writeWorkbook(Seq("s" -> df), f)
           }
-          val back = graft.xlsx.Xlsx.readAnyWorkbook(spark, f).head._2
+          val back = graft.xlsx.Xlsx.readWorkbook(spark, f).head._2
             .orderBy(col("k").cast("int")).collect()
             .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
           back == expect

@@ -37,6 +37,10 @@ class FileSourceSpec extends SparkSpec {
     graft.xml.Xml.writeXmlFile(df, xml.toString)
     val xlsx = dir.resolve("w.xlsx")
     graft.xlsx.Xlsx.writeWorkbook(Seq("data" -> df), xlsx.toString)
+    val xlsb = dir.resolve("w.xlsb")
+    graft.xlsx.Xlsb.writeWorkbook(Seq("data" -> df), xlsb.toString)
+    val xls = dir.resolve("w.xls")
+    graft.xlsx.Biff.writeWorkbook(Seq("data" -> df), xls.toString)
     withGtest {
       assert(spark.read.parquet(gtest(dir.resolve("pq"))).count() == 20) // Spark's own source
       val avro = dir.resolve("avro")
@@ -45,6 +49,10 @@ class FileSourceSpec extends SparkSpec {
       assert(spark.read.format("graft-xml").option("rowTag", "row")
         .load(gtest(xml)).count() == 20)
       assert(graft.xlsx.XlsxDataSource.readTable(spark, gtest(xlsx)).count() == 20)
+      Seq(xlsx, xlsb, xls).foreach { f =>
+        val sheets = graft.xlsx.Xlsx.readWorkbook(spark, gtest(f))
+        assert(sheets.map(_._1) == Seq("data") && sheets.head._2.count() == 20, f)
+      }
     }
   }
 

@@ -10,7 +10,7 @@ class BiffSpec extends SparkSpec {
     val s2 = Seq(("only", "row")).toDF("p", "q")
     val f = tempDir("biffspec").resolve("wb.xls").toString
     Biff.writeWorkbook(Seq("first" -> s1, "second" -> s2), f)
-    val back = Biff.readWorkbook(spark, f)
+    val back = Xlsx.readWorkbook(spark, f)
     assert(back.map(_._1) == Seq("first", "second"))
     val r1 = back.head._2.orderBy("id").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -42,7 +42,7 @@ class BiffSpec extends SparkSpec {
     val f = tempDir("biffnum").resolve("n.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f),
       Biff.cfbBytes(Biff.workbookStream(Seq("nums" -> sheet))))
-    val rows = Biff.readWorkbook(spark, f).head._2.orderBy("a").collect()
+    val rows = Xlsx.readWorkbook(spark, f).head._2.orderBy("a").collect()
     val grid = rows.map(r => (r.getString(0), r.getString(1))).toSeq
     assert(grid == Seq(("3", "2.5"), ("7", "12.5"), ("TRUE", "")))
   }
@@ -75,7 +75,7 @@ class BiffSpec extends SparkSpec {
     val f = tempDir("bifffml").resolve("f.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f),
       Biff.cfbBytes(Biff.workbookStream(Seq("fml" -> sheet))))
-    val rows = Biff.readWorkbook(spark, f).head._2.collect()
+    val rows = Xlsx.readWorkbook(spark, f).head._2.collect()
     assert(rows.length == 1)
     assert(rows.head.toSeq == Seq("42.5", "cached!", "TRUE", ""))
   }
@@ -101,7 +101,7 @@ class BiffSpec extends SparkSpec {
     val f = tempDir("biffstrc").resolve("c.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f),
       Biff.cfbBytes(Biff.workbookStream(Seq("s" -> sheet))))
-    val rows = Biff.readWorkbook(spark, f).head._2.collect()
+    val rows = Xlsx.readWorkbook(spark, f).head._2.collect()
     assert(rows.length == 1 && rows.head.getString(0) == "front-continued")
   }
 
@@ -129,7 +129,7 @@ class BiffSpec extends SparkSpec {
       Biff.rec(0x000A, Array.empty) ++ sheet
     val f = tempDir("biffsst").resolve("s.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f), Biff.cfbBytes(stream))
-    val df = Biff.readWorkbook(spark, f).head._2
+    val df = Xlsx.readWorkbook(spark, f).head._2
     // header row = "alpha"; one data row = "long-tail"
     assert(df.columns.toSeq == Seq("alpha"))
     assert(df.collect().map(_.getString(0)).toSeq == Seq("long-tail"))
@@ -160,7 +160,7 @@ class BiffSpec extends SparkSpec {
       Biff.rec(0x00FC, sstPayload) ++ Biff.rec(0x000A, Array.empty) ++ sheet
     val f = tempDir("biffrs").resolve("r.xls").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f), Biff.cfbBytes(stream))
-    val rows = Biff.readWorkbook(spark, f).head._2.collect()
+    val rows = Xlsx.readWorkbook(spark, f).head._2.collect()
     assert(rows.length == 1)
     assert(rows.head.toSeq == Seq("styled", "richsst"))
   }
@@ -173,7 +173,7 @@ class BiffSpec extends SparkSpec {
     val f = tempDir("biffdifat").resolve("big.xls").toString
     Biff.writeWorkbook(Seq("big" -> df), f)
     assert(java.nio.file.Files.size(java.nio.file.Paths.get(f)) > 109 * 128 * 512L)
-    val back = Biff.readWorkbook(spark, f).head._2
+    val back = Xlsx.readWorkbook(spark, f).head._2
     assert(back.count() == 30000)
     val row = back.filter(org.apache.spark.sql.functions.col("id") === "29999").collect()
     assert(row.length == 1 && row.head.getString(9) == "x" * 30)
@@ -183,9 +183,9 @@ class BiffSpec extends SparkSpec {
     val s1 = Seq(("1", "x")).toDF("id", "v")
     val xls = tempDir("anyxls").resolve("wb.xls").toString
     Biff.writeWorkbook(Seq("s" -> s1), xls)
-    assert(Xlsx.readAnyWorkbook(spark, xls).head._2.count() == 1)
+    assert(Xlsx.readWorkbook(spark, xls).head._2.count() == 1)
     intercept[IllegalArgumentException] {
-      Xlsx.readAnyWorkbook(spark, "/tmp/nope.ods")
+      Xlsx.readWorkbook(spark, "/tmp/nope.ods")
     }
   }
 }

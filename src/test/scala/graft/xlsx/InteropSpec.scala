@@ -156,10 +156,12 @@ class InteropSpec extends SparkSpec {
     Biff.writeWorkbook(Seq("cap" -> fits), f)
     assert(Files.size(Paths.get(f)) > 0)
     val over = spark.range(65536).selectExpr("CAST(id AS STRING) AS id")
+    val target = tempDir("xlscap2").resolve("over.xls")
     val e = intercept[IllegalArgumentException] {
-      Biff.writeWorkbook(Seq("over" -> over),
-        tempDir("xlscap2").resolve("over.xls").toString)
+      Biff.writeWorkbook(Seq("over" -> over), target.toString)
     }
     assert(e.getMessage.contains("65536"), s"error must name the format cap: ${e.getMessage}")
+    // every sheet encodes before the target is opened
+    assert(!Files.exists(target), s"a refused write must leave no file at $target")
   }
 }

@@ -10,7 +10,7 @@ class XlsbSpec extends SparkSpec {
     val s2 = Seq(("only", "row")).toDF("p", "q")
     val f = tempDir("xlsbspec").resolve("wb.xlsb").toString
     Xlsb.writeWorkbook(Seq("first" -> s1, "second" -> s2), f)
-    val back = Xlsx.readAnyWorkbook(spark, f)
+    val back = Xlsx.readWorkbook(spark, f)
     assert(back.map(_._1) == Seq("first", "second"))
     val r1 = back.head._2.orderBy("id").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -98,7 +98,7 @@ class XlsbSpec extends SparkSpec {
     put("xl/sharedStrings.bin", sst)
     put("xl/worksheets/sheet1.bin", sheet) // no rels part → index fallback
     zos.close()
-    val rows = Xlsb.readWorkbook(spark, f).head._2.collect()
+    val rows = Xlsx.readWorkbook(spark, f).head._2.collect()
     assert(rows.length == 1)
     assert(rows.head.toSeq == Seq("12.5", "2.75", "TRUE", "shared2", "7"))
   }
@@ -112,7 +112,7 @@ class XlsbSpec extends SparkSpec {
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(f))
     zos.putNextEntry(new java.util.zip.ZipEntry("xl/workbook.bin")); zos.write(truncated); zos.closeEntry()
     zos.close()
-    val ex = intercept[IllegalArgumentException](Xlsb.readWorkbook(spark, f))
+    val ex = intercept[IllegalArgumentException](Xlsx.readWorkbook(spark, f))
     assert(ex.getMessage.contains("malformed .xlsb record"))
   }
 
@@ -137,7 +137,7 @@ class XlsbSpec extends SparkSpec {
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(f))
     zos.putNextEntry(new java.util.zip.ZipEntry("xl/workbook.bin")); zos.write(wb); zos.closeEntry()
     zos.close()
-    val sheets = Xlsb.readWorkbook(spark, f)
+    val sheets = Xlsx.readWorkbook(spark, f)
     assert(sheets.map(_._1) == Seq(longName))
   }
 }

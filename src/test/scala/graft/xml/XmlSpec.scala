@@ -65,12 +65,13 @@ class XmlSpec extends SparkSpec {
 
   test("distributed read after file write round-trips (S8+K4)") {
     import spark.implicits._
-    val df = Seq(("1", "x&y"), ("2", "<z>")).toDF("id", "v")
+    // non-ASCII text must survive whatever the JVM's default charset is
+    val df = Seq(("1", "x&y"), ("2", "<z>"), ("3", "한국어 café")).toDF("id", "v")
     val f = tempDir("xmlspec").resolve("out.xml").toString
     Xml.writeXmlFile(df, f)
     val back = Xml.readXml(spark, f, "row").orderBy("id")
       .collect().map(r => (r.getString(0), r.getString(1)))
-    assert(back.toSeq == Seq(("1", "x&y"), ("2", "<z>")))
+    assert(back.toSeq == Seq(("1", "x&y"), ("2", "<z>"), ("3", "한국어 café")))
   }
 
   test("distributed multi-part write round-trips through readXml (K4 scale path)") {
